@@ -10,11 +10,20 @@ import org.apache.spark.sql.SparkSession
   * registered query). Plan construction only — nothing executes, so
   * this is safe to run alongside nothing-in-particular and cheap
   * enough to run for the full registry.
+  *
+  * The output directory has no default, so a run never overwrites
+  * committed plan evidence by accident. Exits 2 when it is unset and 1
+  * when any dump FAILED.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_OUT", "/root/repo/plans/r16")
+    val outDir = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_OUT", {
+      System.err.println(
+        "usage: SPARK_GRAFT_EXPLAIN_OUT=<dir> [SPARK_GRAFT_EXPLAIN=<names>|all] " +
+          "[SPARK_GRAFT_EXPLAIN_SUFFIX=<suffix>] [SPARK_GRAFT_SF_DIR=<dir>] graft.Explain")
+      sys.exit(2)
+    })
     val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "")
     val namesEnv = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN", "all")
     // shuffle.partitions pinned to the Bench session's 32 so dumped
@@ -29,6 +38,7 @@ object Explain {
           throw new IllegalArgumentException(s"unknown query: $n")))
       }
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    var failed = 0
     wanted.foreach { d =>
       val path = java.nio.file.Paths.get(outDir, d.name + suffix + ".txt")
       try {
@@ -39,6 +49,7 @@ object Explain {
         println(s"wrote ${path}")
       } catch {
         case t: Throwable =>
+          failed += 1
           System.err.println(s"FAILED ${d.name}: ${t.getClass.getSimpleName}: ${t.getMessage}")
       }
       // Fenced iterative operators: the outer dump collapses to `Scan
@@ -53,11 +64,16 @@ object Explain {
           println(s"wrote ${rpath}")
         } catch {
           case t: Throwable =>
+            failed += 1
             System.err.println(s"FAILED ${d.name} round plan: ${t.getClass.getSimpleName}: ${t.getMessage}")
         }
       }
     }
     spark.stop()
+    if (failed > 0) {
+      System.err.println(s"$failed plan dump(s) FAILED")
+      sys.exit(1)
+    }
   }
 
   /** Per-round inner-plan seams for the fenced iterative operators —

@@ -75,7 +75,7 @@ object Pipeline {
     val indexed = ChunkStore.addDocuments(spark, reloaded, storeDir,
       orderCols = Seq("source", "page_number", "text"))
 
-    val count = spark.read.parquet(storeDir).count()
+    val count = ChunkStore.readStore(spark, storeDir).count()
     Result(extractedNow, indexed, count)
   }
 }

@@ -163,7 +163,8 @@ object Qa {
       .getOrElse("抱歉，没有检索到相关资料。")
 
   /** Q4 — the reference's whole query lifecycle over a graft vector
-    * store: kNN retrieval (broadcast query vector + TakeOrdered), Q1
+    * store: kNN retrieval (one scan job: folded query vector +
+    * TakeOrdered, see [[graft.sources.ChunkStore.similaritySearch]]), Q1
     * context, Q2 prompt, Q3 answer (stub by default, any generator
     * pluggable), assembled response.
     */

@@ -28,6 +28,20 @@ object ChunkStore {
     StructField("total_pages", IntegerType),
     StructField("chunk_number", IntegerType)))
 
+  /** The vector store's row (FIXTURES.md §1.2): what [[addDocuments]]
+    * writes and what every store reader declares, so no read runs a
+    * schema-inference job.
+    */
+  val storeSchema: StructType = StructType(Seq(
+    StructField("id", StringType),
+    StructField("text", StringType),
+    StructField("metadata", MapType(StringType, StringType)),
+    StructField("embedding", ArrayType(DoubleType))))
+
+  /** The vector store at `storePath`, read by [[storeSchema]]. */
+  def readStore(spark: SparkSession, storePath: String): DataFrame =
+    spark.read.schema(storeSchema).parquet(storePath)
+
   /** S1/S2 — PDF directory scan (reference
     * `src/pdf_extractor.py:246-265`): list a directory, keep files whose
     * LOWERCASED name ends ".pdf" (`:251`), expose filename + raw bytes.
@@ -90,9 +104,17 @@ object ChunkStore {
                    orderCols: Seq[String],
                    embedder: graft.Embedder = graft.HashedTokenEmbedder): Boolean = {
     graft.plans.VectorExprs.register(spark) // default embedder = embed64 kernel
-    val existing =
-      try spark.read.parquet(storePath).limit(1).count() catch { case _: Exception => 0L }
-    if (existing > 0) false // reference: add is a no-op when non-empty
+    val embType = chunks.select(embedder.embed(col("text"))).schema.head.dataType
+    val storeType = storeSchema("embedding").dataType
+    require(embType.catalogString == storeType.catalogString,
+      s"embedder produces ${embType.catalogString}, the store holds ${storeType.catalogString}")
+    // a missing store is built; a present one is read, and a read that
+    // fails (corrupt or half-written files) raises instead of passing
+    // for empty and being appended to
+    val path = new org.apache.hadoop.fs.Path(storePath)
+    val present = path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+    if (present && readStore(spark, storePath).limit(1).count() > 0)
+      false // reference: add is a no-op when non-empty
     else {
       val metaCols = chunks.columns.filterNot(_ == "text").toSeq
       withPositionalIds(chunks, orderCols)
@@ -114,19 +136,21 @@ object ChunkStore {
 
   /** V3/V4 — top-k cosine similarity search over a vector store written
     * by [[addDocuments]]: embed the query text with the SAME function
-    * the store used, broadcast the 1-row query vector, score with the
-    * native codegen'd cosine, TakeOrderedAndProject the top-k. Output
-    * shape = the reference's search result (`src/vector_store.py:167-175`):
-    * text, all-string metadata, similarity ∈ [-1, 1] (may be negative).
+    * the store used, score every row with the native codegen'd cosine,
+    * TakeOrderedAndProject the top-k. The query embedding is an
+    * expression over a literal, so the optimizer folds it to one
+    * literal vector: the plan is TakeOrderedAndProject ← Project ←
+    * FileScan, one job, no join and no exchange. Output shape = the
+    * reference's search result (`src/vector_store.py:167-175`): text,
+    * all-string metadata, similarity ∈ [-1, 1] (may be negative).
     */
   def similaritySearch(spark: SparkSession, storePath: String, query: String,
                        topK: Int = 5,
                        embedder: graft.Embedder = graft.HashedTokenEmbedder): DataFrame = {
     graft.plans.VectorExprs.register(spark)
-    val store = spark.read.parquet(storePath)
-    val q = spark.range(1).select(embedder.embed(lit(query)).as("q_emb"))
-    store.crossJoin(broadcast(q))
-      .selectExpr("id", "text", "metadata", "cosine_f(embedding, q_emb) AS similarity")
+    readStore(spark, storePath)
+      .select(col("id"), col("text"), col("metadata"),
+        call_function("cosine_f", col("embedding"), embedder.embed(lit(query))).as("similarity"))
       .orderBy(desc("similarity"), col("id"))
       .limit(topK)
   }

@@ -188,6 +188,102 @@ class ChunkStoreSpec extends SparkSpec {
     assert(ctx.contains("[来源1: 文档《b.pdf》第1页第1段]")) // delta is b.pdf page 1
   }
 
+  /** The search as formulated before the query vector was folded into
+    * the scan: a one-row query relation, broadcast and cross-joined.
+    * Kept here only as the reference the folded plan must match.
+    */
+  private def crossJoinSearch(store: String, query: String, topK: Int) = {
+    import org.apache.spark.sql.functions._
+    val q = spark.range(1).select(HashedTokenEmbedder.embed(lit(query)).as("q_emb"))
+    spark.read.parquet(store).crossJoin(broadcast(q))
+      .selectExpr("id", "text", "metadata", "cosine_f(embedding, q_emb) AS similarity")
+      .orderBy(desc("similarity"), col("id"))
+      .limit(topK)
+  }
+
+  private def jobsRunBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // the listener bus is asynchronous; its drain is spark-private
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    drain()
+    sc.addSparkListener(l)
+    try { body; drain() } finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("V3/V4: similaritySearch(...).collect() runs exactly one Spark job") {
+    val store = tmp() + "/store"
+    ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "page_number", "text"))
+    val df = ChunkStore.similaritySearch(spark, store, "beta chunk text", topK = 3)
+    assert(jobsRunBy(df.collect(): Unit) == 1)
+  }
+
+  test("V3/V4: folded-query search is bit-identical to the broadcast cross-join search") {
+    import spark.implicits._
+    val words = Seq("alpha", "beta", "gamma", "delta", "chunk", "text", "store", "query")
+    val extra = (0 until 40).map { i =>
+      (Seq(words(i % 8), words((i * 3 + 1) % 8), words((i * 5 + 2) % 8)).mkString(" "),
+        s"c${i % 5}.pdf", i % 7, 1, 7, None: Option[Int])
+    }.toDF("text", "source", "page_number", "paragraph_number", "total_pages", "chunk_number")
+    val store = tmp() + "/store"
+    ChunkStore.addDocuments(spark, sampleChunks().unionByName(extra), store,
+      Seq("source", "page_number", "text"))
+    // alpha/gamma hash into the same bucket (see the Q4 test): the
+    // first two questions tie at the top and break by id
+    val questions = Seq("alpha chunk text", "gamma chunk text", "delta chunk text",
+      "beta", "chunk text store", "query query alpha", "nothing in common", "  Delta   CHUNK ")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map { r =>
+      (r.getAs[String]("id"), r.getAs[String]("text"), r.getAs[Map[String, String]]("metadata"),
+        java.lang.Double.doubleToRawLongBits(r.getAs[Double]("similarity")))
+    }
+    for (q <- questions; k <- Seq(1, 5, 44)) {
+      val got = rows(ChunkStore.similaritySearch(spark, store, q, topK = k))
+      assert(got.nonEmpty)
+      assert(got == rows(crossJoinSearch(store, q, k)), s"question '$q', top-$k")
+    }
+  }
+
+  test("V3/V4: searching a missing store path throws, not an empty answer") {
+    val missing = tmp() + "/no_such_store"
+    intercept[Exception](ChunkStore.similaritySearch(spark, missing, "alpha").collect())
+  }
+
+  test("S5: addDocuments refuses an embedder whose type is not the store's array<double>") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    object FloatEmbedder extends Embedder {
+      override val dim: Int = 1
+      override def embed(text: Column): Column = array(length(text).cast("float"))
+    }
+    val store = tmp() + "/store"
+    val e = intercept[IllegalArgumentException](
+      ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text"),
+        embedder = FloatEmbedder))
+    assert(e.getMessage.contains("array<float>"))
+    assert(!new java.io.File(store).exists())
+  }
+
+  test("S5: a store holding a corrupt parquet file makes addDocuments throw, untouched") {
+    val store = tmp() + "/store"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store))
+    java.nio.file.Files.write(java.nio.file.Paths.get(store, "part-00000-corrupt.parquet"),
+      "this is not a parquet file".getBytes("UTF-8"))
+    def listing() = new java.io.File(store).listFiles().toSeq
+      .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).sortBy(_._1)
+    val before = listing()
+    intercept[Exception](
+      ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text")))
+    assert(listing() == before, "an unreadable store was written to")
+  }
+
   test("S7/S8: JSON dump writes id/text rows; stats counts them") {
     val store = tmp() + "/store"
     ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text"))

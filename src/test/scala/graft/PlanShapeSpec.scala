@@ -39,6 +39,27 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("cosine_f"))
   }
 
+  test("similaritySearch: one scan, no join or exchange; the query vector is a literal") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("graft_store").toString + "/store"
+    val chunks = Seq(("alpha chunk text", "a.pdf"), ("beta chunk text", "b.pdf"))
+      .toDF("text", "source")
+    graft.sources.ChunkStore.addDocuments(spark, chunks, store, Seq("source", "text"))
+    val qe = graft.sources.ChunkStore.similaritySearch(spark, store, "alpha", topK = 5)
+      .queryExecution
+    val opt = qe.optimizedPlan
+    assert(opt.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty)
+    val queryVectors = opt.flatMap(_.expressions.flatMap(_.collect {
+      case graft.plans.CosineSim(_, q) => q
+    }))
+    assert(queryVectors.nonEmpty)
+    assert(queryVectors.forall(_.isInstanceOf[Literal]), s"query vector not folded: $queryVectors")
+    val p = qe.executedPlan.toString
+    assert(p.contains("TakeOrderedAndProject"))
+    assert(!p.contains("Join") && !p.contains("Exchange"), p) // no BroadcastExchange either
+  }
+
   test("q1_agg: partial aggregation before the exchange (map-side combine)") {
     val p = plan("q1_agg")
     val exchangeIdx = p.indexOf("Exchange")
