@@ -22,11 +22,6 @@ object Bench {
     // per-run warnings (e.g. the documented single-partition window in
     // s5_store_entries) would otherwise drown the JSON line in noise
     spark.sparkContext.setLogLevel("ERROR")
-    // noop sink: forces FULL evaluation of every output column —
-    // count() would let Catalyst prune projection-only work and
-    // under-measure (a fingerprint query's fold never runs under count)
-    def exhaust(d: QueryDef, dir: String): Unit =
-      d.run(spark, dir).write.mode("overwrite").format("noop").save()
     // SPARK_GRAFT_PROFILE=q1,q2: profile mode — instead of the timed
     // passes, run each named query once (after warmup) under a stage
     // listener and dump per-stage shuffle bytes, spill, and task skew
@@ -84,88 +79,19 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val benched = Registry.all.filter(_.bench)
       .filter(d => only.forall(_.contains(d.name)))
-    // warmup 1 — tiny SF: classload + codegen out of the measured numbers
-    benched.foreach { d =>
-      try exhaust(d, "/root/testdata/sf0.001")
-      catch { case _: Throwable => () }
-    }
-    // warmup 2 — the TARGET SF, untimed: page cache and JIT reach
-    // steady state at the measured scale. Without this, pass 1 ran every
-    // query cold, and because the passes used to be CONSECUTIVE
-    // per-query, best-of-3 could still record a 4× cold-start artifact
-    // (round 3: dd_ngram_jaccard 10.9 s recorded vs 2.5 s steady).
-    benched.foreach { d =>
-      try exhaust(d, sfDir)
-      catch { case _: Throwable => () }
-    }
-    // three INTERLEAVED timed passes (all queries ×1, then ×2, ×3): a
-    // transient memory-pressure episode now inflates one PASS, not all
-    // three samples of one query — min-of-3 recovers steady state. A
-    // query that fails ALL runs is reported as -1 and listed in
-    // "errors", never as a near-zero time that would inflate apparent
-    // throughput.
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
     // SPARK_GRAFT_PASSES: probe lanes only (e.g. the sf3 core-scaling
     // grid, where 3 passes × 2 core counts would cost hours for a
     // RATIO measurement). Unset — every driver invocation — keeps the
     // contract's min-of-3.
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(3)
-    for (_ <- 1 to passes) {
-      System.gc() // start each pass from comparable heap pressure
-      benched.foreach { d =>
-        // drop output-level memos (label table, BPE merges, training
-        // chain) so the timed run measures the kernel, not a cached
-        // checkpoint read left by the warmups or a prior pass; the
-        // reset itself (unpersist bookkeeping) stays outside the timer
-        try d.resetMemo.foreach(_(spark, sfDir)) catch { case _: Throwable => () }
-        val t0 = System.nanoTime()
-        try {
-          exhaust(d, sfDir)
-          samples(d.name) = ((System.nanoTime() - t0) / 1e9) :: samples.getOrElse(d.name, Nil)
-        } catch {
-          case t: Throwable =>
-            errors(d.name) = s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").take(120)}"
-        }
-      }
-    }
-    val results = benched.map { d =>
-      d.name -> samples.get(d.name).filter(_.nonEmpty).map(_.min).getOrElse(-1.0)
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    def jstr(s: String) = "\"" + s.replaceAll("[\"\\\\\n\r\t]", " ") + "\""
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"sf":"$sfDir"}"""
-    println(line)
-    // Compact summary AFTER the full line (additions-only; the full
-    // line stays the contract): the 257-query line is ~8 KB and every
-    // 2000-char stdout-tail capture r01–r15 truncated it to
-    // unparseable, losing the round-over-round totals. A short
-    // total-only line at the very end of stdout survives any tail.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"n_errors":${errors.size},"sf":"$sfDir"}""")
-    // Persist the complete line as a repo artifact: the round log keeps
-    // only a truncated tail of stdout, which loses the total and early
-    // per-query figures. The committed artifact is what
-    // tools/bench_diff.py diffs round-over-round.
-    try {
-      val sfName = new java.io.File(sfDir).getName
-      // default paths are SCRATCH (gitignored): the committed baseline
-      // bench_diff gates on (bench/bench_<sf>.json) is only ever
-      // written when a deliberate idle re-baseline run passes
-      // SPARK_GRAFT_BENCH_OUT explicitly — so neither a subset probe
-      // nor the driver's per-round (load-contaminated) run can
-      // overwrite the idle baseline and dirty the tree (the recurring
-      // r13/r14 hygiene item)
-      val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-          if (only.isDefined) s"bench/only_$sfName.json"
-          else s"bench/last_$sfName.json"))
-      Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () } // the stdout line is the contract; the artifact is best-effort
+    // default paths are SCRATCH (gitignored): the committed baseline
+    // bench_diff gates on (bench/bench_<sf>.json) is only ever written
+    // when a deliberate idle re-baseline run passes SPARK_GRAFT_BENCH_OUT
+    // explicitly — so neither a subset probe nor a routine per-round
+    // (load-contaminated) run can overwrite the idle baseline and dirty
+    // the tree (the recurring r13/r14 hygiene item)
+    timeLane(spark, sfDir, "total", benched, passes,
+      if (only.isDefined) "bench/only" else "bench/last", () => ())
     spark.stop()
   }
 
@@ -211,48 +137,23 @@ object Bench {
     * native session_window, the sharded Misra-Gries heavy-hitter
     * sketch) timed as full AvailableNow drains —
     * stage + checkpoint + drain + readback, min of 3 interleaved
-    * passes after one warmup, same discipline as the main lane.
+    * passes after the two-step warmup: the main lane's [[timeLane]].
     */
   private def streamBench(spark: SparkSession, sfDir: String): Unit = {
     // membership is the registry's streamBench flag, NOT a name list:
     // a newly registered twin is timed by construction (the r13 gap —
     // a hardcoded 9-name list silently left st_holt and 10 other
     // state-store paths without any timed row)
-    val defs = Registry.all.filter(_.streamBench)
-    def exhaust(d: QueryDef, dir: String): Unit =
-      d.run(spark, dir).write.mode("overwrite").format("noop").save()
-    defs.foreach(d => try exhaust(d, "/root/testdata/sf0.001") catch { case _: Throwable => () })
-    defs.foreach(d => try exhaust(d, sfDir) catch { case _: Throwable => () })
-    val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
-    for (_ <- 1 to 3) {
-      System.gc()
-      defs.foreach { d =>
-        val t0 = System.nanoTime()
-        try {
-          exhaust(d, sfDir)
-          samples(d.name) = ((System.nanoTime() - t0) / 1e9) :: samples.getOrElse(d.name, Nil)
-        } catch { case _: Throwable => () }
-      }
-    }
-    val results = defs.map(d =>
-      d.name -> samples.get(d.name).filter(_.nonEmpty).map(_.min).getOrElse(-1.0))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val line = s"""{"metric":"stream_total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
-    println(line)
-    val sfName = new java.io.File(sfDir).getName
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench/stream_$sfName.json"))
-    Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
+    timeLane(spark, sfDir, "stream_total", Registry.all.filter(_.streamBench), 3,
+      "bench/stream", () => ())
   }
 
   /** The side-effecting sink/source round trips (registry sinkBench
     * flag: PdfText fixture pipeline, CSV/ORC/JSONL round trips, zorder
     * rewrite + banded scans, small-file compaction, store lifecycle,
     * layout segmentation) timed as full write-then-read-back runs —
-    * min of 3 interleaved passes after the two-step warmup, same
-    * discipline as the main lane. Each plan build creates fresh
+    * min of 3 interleaved passes after the two-step warmup: the main
+    * lane's [[timeLane]]. Each plan build creates fresh
     * `graft_*` temp dirs by design (the sink IS the measured work), so
     * the lane sweeps dirs it created between passes — 5 runs per query
     * would otherwise leave 5 corpus-sized copies each on disk. The
@@ -262,37 +163,84 @@ object Bench {
     * (prefix, mtime) heuristic.
     */
   private def sinkBench(spark: SparkSession, sfDir: String): Unit = {
-    val defs = Registry.all.filter(_.sinkBench)
-    def exhaust(d: QueryDef, dir: String): Unit =
-      d.run(spark, dir).write.mode("overwrite").format("noop").save()
-    def sweepTmp(): Unit = TmpDirs.sweepCreated()
-    defs.foreach(d => try exhaust(d, "/root/testdata/sf0.001") catch { case _: Throwable => () })
-    sweepTmp()
-    defs.foreach(d => try exhaust(d, sfDir) catch { case _: Throwable => () })
+    timeLane(spark, sfDir, "sink_total", Registry.all.filter(_.sinkBench), 3,
+      "bench/sink", () => TmpDirs.sweepCreated())
+  }
+
+  /** Runs `d` on `dir` into a noop sink: forces FULL evaluation of every
+    * output column — count() would let Catalyst prune projection-only
+    * work and under-measure (a fingerprint query's fold never runs
+    * under count).
+    */
+  private def exhaust(spark: SparkSession, d: QueryDef, dir: String): Unit =
+    d.run(spark, dir).write.mode("overwrite").format("noop").save()
+
+  /** One timed lane, shared by the main, stream and sink lanes: two
+    * untimed warmups (the sf0.001 tables beside `sfDir` for classload
+    * and codegen, then the target SF so page cache and JIT reach steady
+    * state — without it best-of-3 could still record a 4× cold-start
+    * artifact), then `passes` INTERLEAVED timed passes (every query once
+    * per pass, so a transient memory-pressure episode inflates one pass,
+    * not all samples of one query), min per query. A failed run's error
+    * is listed in "errors", and a query that fails every pass is
+    * reported as -1, never as a near-zero time. `sweep` runs after the
+    * first warmup, before each pass and at the end, outside the timer.
+    *
+    * Prints the full line (`metric`), then a short `<metric>_compact`
+    * line: the full line is ~8 KB for the main lane and a stdout-tail
+    * capture truncates it to unparseable, while the compact line at the
+    * very end survives any tail. The full line is also written, best
+    * effort, to SPARK_GRAFT_BENCH_OUT or `<outPrefix>_<sf>.json`: the
+    * artifact tools/bench_diff.py diffs round-over-round.
+    */
+  private def timeLane(spark: SparkSession, sfDir: String, metric: String,
+                       defs: Seq[QueryDef], passes: Int, outPrefix: String,
+                       sweep: () => Unit): Unit = {
+    val tinySf = new java.io.File(new java.io.File(sfDir).getAbsoluteFile.getParentFile, "sf0.001")
+    defs.foreach(d => try exhaust(spark, d, tinySf.getPath) catch { case _: Throwable => () })
+    sweep()
+    defs.foreach(d => try exhaust(spark, d, sfDir) catch { case _: Throwable => () })
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
-    for (_ <- 1 to 3) {
-      sweepTmp()
-      System.gc()
+    for (_ <- 1 to passes) {
+      sweep()
+      System.gc() // start each pass from comparable heap pressure
       defs.foreach { d =>
+        // drop output-level memos (label table, BPE merges, training
+        // chain) so the timed run measures the kernel, not a cached
+        // checkpoint read left by the warmups or a prior pass; the
+        // reset itself (unpersist bookkeeping) stays outside the timer
+        try d.resetMemo.foreach(_(spark, sfDir)) catch { case _: Throwable => () }
         val t0 = System.nanoTime()
         try {
-          exhaust(d, sfDir)
+          exhaust(spark, d, sfDir)
           samples(d.name) = ((System.nanoTime() - t0) / 1e9) :: samples.getOrElse(d.name, Nil)
-        } catch { case _: Throwable => () }
+        } catch {
+          case t: Throwable =>
+            errors(d.name) = s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").take(120)}"
+        }
       }
     }
-    sweepTmp()
-    val results = defs.map(d =>
-      d.name -> samples.get(d.name).filter(_.nonEmpty).map(_.min).getOrElse(-1.0))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    sweep()
+    val results = defs.map { d =>
+      d.name -> samples.get(d.name).filter(_.nonEmpty).map(_.min).getOrElse(-1.0)
+    }
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    def jstr(s: String) = "\"" + s.replaceAll("[\"\\\\\n\r\t]", " ") + "\""
+    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+      .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val line = s"""{"metric":"sink_total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"$metric","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"sf":"$sfDir"}"""
     println(line)
-    val sfName = new java.io.File(sfDir).getName
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench/sink_$sfName.json"))
-    Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
+    println(s"""{"metric":"${metric}_compact","value":$total,"unit":"sec","n":${results.size},"n_errors":${errors.size},"sf":"$sfDir"}""")
+    try {
+      val sfName = new java.io.File(sfDir).getName
+      val out = java.nio.file.Paths.get(
+        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"${outPrefix}_$sfName.json"))
+      Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
+      java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
+    } catch { case _: Throwable => () } // the stdout line is the contract; the artifact is best-effort
   }
 
   /** Per-stage task aggregates for one profiled query run. */
@@ -337,9 +285,7 @@ object Bench {
     */
   private def profile(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
     val defs = Registry.all.filter(d => names.contains(d.name))
-    def exhaust(d: QueryDef): Unit =
-      d.run(spark, sfDir).write.mode("overwrite").format("noop").save()
-    defs.foreach(d => try exhaust(d) catch { case _: Throwable => () }) // warmup
+    defs.foreach(d => try exhaust(spark, d, sfDir) catch { case _: Throwable => () }) // warmup
     val out = new StringBuilder("{")
     defs.zipWithIndex.foreach { case (d, di) =>
       // the timed lane's memo discipline applies here too: without the
@@ -349,7 +295,7 @@ object Bench {
       val l = new ProfileListener
       spark.sparkContext.addSparkListener(l)
       val t0 = System.nanoTime()
-      val err = try { exhaust(d); None } catch { case t: Throwable => Some(t.toString.take(200)) }
+      val err = try { exhaust(spark, d, sfDir); None } catch { case t: Throwable => Some(t.toString.take(200)) }
       val sec = (System.nanoTime() - t0) / 1e9
       // the listener bus is async with no public flush; poll until the
       // task-end aggregates are stable across two consecutive snapshots

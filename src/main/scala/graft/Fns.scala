@@ -9,13 +9,36 @@ import org.apache.spark.sql.functions._
   */
 object Fns {
 
+  // E4's two patterns: whitespace runs collapse to one space, then
+  // leading/trailing whitespace is removed
+  private val SpaceRuns = "\\s{2,}"
+  private val EdgeSpace = "^\\s+|\\s+$"
+
   /** E4 whitespace normalization — reference `src/pdf_extractor.py:30`:
     * `re.sub(r'\s{2,}', ' ', paragraph).strip()`. NOT `trim()`: Python
     * strip removes tabs/newlines too, Spark/DuckDB trim only spaces —
     * the regex strip matches Python for all ASCII whitespace.
+    *
+    * The only place the rule is written out, in both dialects: this
+    * Column form and [[cleanTextSql]] (for `selectExpr`) build the same
+    * two `RegExpReplace`s; [[cleanTextDuck]] is the DuckDB oracle form.
+    * The dialects differ twice over: Spark SQL string literals unescape
+    * backslashes (the pattern `\s` is spelled `'\\s'`) while DuckDB's
+    * keep them verbatim, and DuckDB's `regexp_replace` replaces only the
+    * first match unless given the `'g'` flag, while Spark's replaces all.
     */
   def cleanText(c: Column): Column =
-    regexp_replace(regexp_replace(c, "\\s{2,}", " "), "^\\s+|\\s+$", "")
+    regexp_replace(regexp_replace(c, SpaceRuns, " "), EdgeSpace, "")
+
+  /** [[cleanText]] of the named column as a Spark SQL expression. */
+  def cleanTextSql(column: String): String = {
+    def escaped(p: String) = p.replace("\\", "\\\\")
+    s"regexp_replace(regexp_replace($column, '${escaped(SpaceRuns)}', ' '), '${escaped(EdgeSpace)}', '')"
+  }
+
+  /** [[cleanText]] of the named column as a DuckDB expression (oracle SQL). */
+  def cleanTextDuck(column: String): String =
+    s"regexp_replace(regexp_replace($column, '$SpaceRuns', ' ', 'g'), '$EdgeSpace', '', 'g')"
 
   /** Deterministic 60-bit hash of a string: the first 15 hex digits of
     * md5, parsed base-16. Chosen because BOTH Spark and DuckDB compute

@@ -1,15 +1,18 @@
 package graft
 
+import graft.operators.Chunker
 import graft.sources.ChunkStore
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end ingest orchestration — the engine twin of the reference's
   * `setup_knowledge_base` (`src/main.py:14-78`), stage for stage:
   *
-  *   [1/3] extract: documents → clean (E4) → filter (E5) → chunk (C1/C2)
-  *         → CSV sink (S3), SKIPPED if the extracted output already
-  *         exists (P1, `src/main.py:27-28`);
+  *   [1/3] extract: documents → [[Chunker.chunk]] (clean E4 → filter
+  *         E5 → chunk C1/C2) → CSV sink (S3), SKIPPED if the extracted
+  *         output already exists (P1, `src/main.py:27-28`); an
+  *         extracted output that cannot be read raises;
   *   [2/3] index: ALWAYS reload chunks from CSV (P4 — the reference
   *         discards the in-memory list and re-reads, dropping
   *         `chunk_number`, `src/main.py:44-68`), then add to the vector
@@ -32,40 +35,26 @@ object Pipeline {
     val extractedDir = s"$workDir/extracted_csv"
     val storeDir = s"$workDir/vector_store"
 
-    if (forceRebuild) {
-      val fs = new java.io.File(workDir)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      if (fs.exists()) rm(fs)
-    }
+    val extracted = new Path(extractedDir)
+    val fs = extracted.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (forceRebuild) fs.delete(new Path(workDir), true)
 
-    // ---- [1/3] extract (P1 guard: skip if output exists and non-empty)
-    val alreadyExtracted = try {
-      spark.read.option("header", "true").csv(extractedDir).limit(1).count() > 0
-    } catch { case _: Exception => false }
+    // ---- [1/3] extract (P1 guard: skip if output exists and non-empty).
+    // A missing directory is extracted; a present one is read, and a read
+    // that fails (corrupt or half-written files) raises instead of passing
+    // for "not extracted yet" and being overwritten.
+    val alreadyExtracted =
+      fs.exists(extracted) && ChunkStore.readCsv(spark, extractedDir).limit(1).count() > 0
 
     val extractedNow = if (!alreadyExtracted) {
-      val chunks = documents
-        .selectExpr("doc_id", "source",
-          "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
-        .where(s"length(tc) >= ${operators.Chunker.MinParagraph}")
-        .selectExpr("doc_id", "source",
-          s"""explode(CASE WHEN length(tc) <= ${operators.Chunker.ChunkSize}
-                           THEN array(named_struct('chunk_number', cast(null AS int), 'chunk_text', tc))
-                           ELSE filter(transform(sequence(0, length(tc) - 1, ${operators.Chunker.Stride}),
-                                       i -> named_struct('chunk_number', cast(i div ${operators.Chunker.Stride} + 1 AS int),
-                                                         'chunk_text', substring(tc, i + 1, ${operators.Chunker.ChunkSize}))),
-                                       s -> length(s.chunk_text) >= ${operators.Chunker.MinChunk})
-                      END) AS c""")
+      val chunks = Chunker.chunk(documents, "doc_id", "source")
         .select(
-          col("c.chunk_text").as("text"),
+          col("chunk_text").as("text"),
           col("source"),
           col("doc_id").cast("int").as("page_number"), // doc stands in for page
           lit(1).as("paragraph_number"),
           lit(1).as("total_pages"),
-          col("c.chunk_number").as("chunk_number"))
+          col("chunk_number"))
       ChunkStore.writeCsv(chunks, extractedDir)
       true
     } else false

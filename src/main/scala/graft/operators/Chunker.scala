@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Fns, QueryDef, Tables}
+import org.apache.spark.sql.DataFrame
 
 /** C1/C2 — the reference's core reshaping operator: fixed-size
   * overlapping chunking with metadata enrichment.
@@ -13,7 +14,7 @@ import graft.{QueryDef, Tables}
   *     trailing chunks shorter than 50 chars are dropped (`:50-51`).
   *
   * Implementation is pure Catalyst SQL — `sequence` → `transform` →
-  * `filter` → `explode` — no UDF, fully parallel per row, zero shuffle:
+  * `filter` → `inline` — no UDF, fully parallel per row, zero shuffle:
   * the plan is a single narrow map over the parquet scan, which is
   * exactly what you want when the input is 100 TB of documents.
   * Upstream: E4 clean + E5 min-length filter (pushed to the scan).
@@ -25,35 +26,34 @@ object Chunker {
   val MinChunk = 50
   val MinParagraph = 10
 
-  /** SQL fragment producing array<struct<chunk_number int, chunk_text string>>
-    * from a cleaned text column named `tc`.
+  /** C1, the one definition of chunking: clean (E4) → drop cleaned
+    * texts shorter than [[MinParagraph]] (E5) → one row per window.
+    * `docs` needs a `text` column; the result keeps the `keep` columns
+    * and adds `tc` (the cleaned text), `chunk_number` and `chunk_text`.
+    * Works on batch and streaming frames alike.
     */
-  private val chunksExpr: String =
-    s"""CASE WHEN length(tc) <= $ChunkSize
-       |     THEN array(named_struct('chunk_number', cast(null AS int), 'chunk_text', tc))
-       |     ELSE filter(
-       |            transform(sequence(0, length(tc) - 1, $Stride),
-       |                      i -> named_struct('chunk_number', cast(i div $Stride + 1 AS int),
-       |                                        'chunk_text', substring(tc, i + 1, $ChunkSize))),
-       |            s -> length(s.chunk_text) >= $MinChunk)
-       |END AS chunks""".stripMargin
+  def chunk(docs: DataFrame, keep: String*): DataFrame =
+    docs
+      .selectExpr(keep :+ s"${Fns.cleanTextSql("text")} AS tc": _*)
+      .where(s"length(tc) >= $MinParagraph")
+      .selectExpr(keep ++ Seq("tc",
+        s"""inline(CASE WHEN length(tc) <= $ChunkSize
+           |            THEN array(named_struct('chunk_number', cast(null AS int), 'chunk_text', tc))
+           |            ELSE filter(
+           |                   transform(sequence(0, length(tc) - 1, $Stride),
+           |                             i -> named_struct('chunk_number', cast(i div $Stride + 1 AS int),
+           |                                               'chunk_text', substring(tc, i + 1, $ChunkSize))),
+           |                   s -> length(s.chunk_text) >= $MinChunk)
+           |       END)""".stripMargin): _*)
 
-  def queries: Seq[QueryDef] = Seq(
-    // ---------------------------------------------------------------- C1
-    QueryDef(
-      "c1_chunk",
-      (spark, dir) =>
-        Tables.documents(spark, dir)
-          .selectExpr("doc_id", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
-          .where(s"length(tc) >= $MinParagraph")
-          .selectExpr("doc_id", chunksExpr)
-          .selectExpr("doc_id", "explode(chunks) AS c")
-          .selectExpr("doc_id", "c.chunk_number AS chunk_number", "c.chunk_text AS chunk_text"),
-      Some(s"""
+  /** [[chunk]] in DuckDB: the oracle of `c1_chunk` and of its
+    * streaming twin `st_chunk_ingest`.
+    */
+  val chunkOracle: String = s"""
         WITH ok AS (
-          SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
           FROM documents
-          WHERE length(regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g')) >= $MinParagraph
+          WHERE length(${Fns.cleanTextDuck("text")}) >= $MinParagraph
         )
         SELECT doc_id, NULL::INT AS chunk_number, tc AS chunk_text
         FROM ok WHERE length(tc) <= $ChunkSize
@@ -62,7 +62,15 @@ object Chunker {
                substring(tc, i + 1, $ChunkSize) AS chunk_text
         FROM ok, LATERAL (SELECT unnest(generate_series(0, length(tc) - 1, $Stride)) AS i) g
         WHERE length(tc) > $ChunkSize
-          AND length(substring(tc, i + 1, $ChunkSize)) >= $MinChunk"""),
+          AND length(substring(tc, i + 1, $ChunkSize)) >= $MinChunk"""
+
+  def queries: Seq[QueryDef] = Seq(
+    // ---------------------------------------------------------------- C1
+    QueryDef(
+      "c1_chunk",
+      (spark, dir) =>
+        chunk(Tables.documents(spark, dir), "doc_id").select("doc_id", "chunk_number", "chunk_text"),
+      Some(chunkOracle),
       bench = true),
 
     // ---------------------------------------------------------------- C2
@@ -74,24 +82,21 @@ object Chunker {
     QueryDef(
       "c2_chunk_meta",
       (spark, dir) =>
-        Tables.documents(spark, dir)
-          .selectExpr("doc_id", "source", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
-          .where(s"length(tc) >= $MinParagraph")
-          .selectExpr("doc_id", "source", "cast(length(tc) AS bigint) AS char_len", chunksExpr)
-          .selectExpr("doc_id", "source", "char_len", "explode(chunks) AS c")
+        chunk(Tables.documents(spark, dir), "doc_id", "source")
           .selectExpr(
-            "doc_id", "source", "char_len",
-            "c.chunk_number AS chunk_number",
-            "cast(length(c.chunk_text) AS bigint) AS chunk_len")
+            "doc_id", "source",
+            "cast(length(tc) AS bigint) AS char_len",
+            "chunk_number",
+            "cast(length(chunk_text) AS bigint) AS chunk_len")
           .withColumn(
             "total_chunks",
             org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1))
               .over(org.apache.spark.sql.expressions.Window.partitionBy("doc_id"))),
       Some(s"""
         WITH ok AS (
-          SELECT doc_id, source, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+          SELECT doc_id, source, ${Fns.cleanTextDuck("text")} AS tc
           FROM documents
-          WHERE length(regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g')) >= $MinParagraph
+          WHERE length(${Fns.cleanTextDuck("text")}) >= $MinParagraph
         ), chunks AS (
           SELECT doc_id, source, length(tc)::BIGINT AS char_len,
                  NULL::INT AS chunk_number, length(tc)::BIGINT AS chunk_len

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.graft.CheckpointOps.FenceSyntax
-import graft.{QueryDef, Tables}
+import graft.{Fns, QueryDef, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -106,7 +106,7 @@ object Curation {
   /** Cleaned text + md5 for the gate/dedup stages (shared fragment). */
   private val cleanCols =
     Seq("doc_id", "lang",
-      "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+      s"${Fns.cleanTextSql("text")} AS tc")
 
   def queries: Seq[QueryDef] = Seq(
     // ------------------------------------------- deterministic sampling
@@ -139,7 +139,7 @@ object Curation {
       (spark, dir) =>
         Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id", "pmod(doc_id, 8) AS salt",
             "cast((length(tc) + 3) div 4 AS bigint) AS n_tokens")
           .selectExpr("doc_id", "salt", "n_tokens",
@@ -153,7 +153,7 @@ object Curation {
             expr("cast(sum(n_tokens) AS bigint) AS pack_tokens"),
             expr("min(doc_id) AS first_doc"),
             expr("max(doc_id) AS last_doc")),
-      Some("""
+      Some(s"""
         SELECT pack_id::BIGINT AS pack_id, count(*) AS n_docs, sum(n_tokens)::BIGINT AS pack_tokens,
                min(doc_id) AS first_doc, max(doc_id) AS last_doc
         FROM (
@@ -162,7 +162,7 @@ object Curation {
                                                        ROWS UNBOUNDED PRECEDING) - n_tokens) // 2048 AS pack_id
           FROM (
             SELECT doc_id, doc_id % 8 AS salt,
-                   ((length(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g')) + 3) // 4)::BIGINT AS n_tokens
+                   ((length(${Fns.cleanTextDuck("text")}) + 3) // 4)::BIGINT AS n_tokens
             FROM documents))
         GROUP BY pack_id""")),
 
@@ -179,7 +179,7 @@ object Curation {
       (spark, dir) =>
         Tables.documents(spark, dir)
           .selectExpr("doc_id", "lang",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id", "lang",
             "cast((length(tc) + 3) div 4 AS bigint) AS n_tokens",
             "coalesce(element_at(map('en', 1, 'zh', 2, 'de', 4, 'fr', 4, 'es', 8), lang), 1) AS rep")
@@ -189,13 +189,13 @@ object Curation {
             expr("cast(sum(n_tokens) AS bigint) AS raw_tokens"),
             expr("cast(first(rep) AS bigint) AS repeat_factor"),
             expr("cast(sum(n_tokens * rep) AS bigint) AS effective_tokens")),
-      Some("""
+      Some(s"""
         SELECT lang, count(*)::BIGINT AS n_docs, sum(n_tokens)::BIGINT AS raw_tokens,
                first(rep)::BIGINT AS repeat_factor,
                sum(n_tokens * rep)::BIGINT AS effective_tokens
         FROM (
           SELECT doc_id, lang,
-                 ((length(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$$', '', 'g')) + 3) // 4)::BIGINT AS n_tokens,
+                 ((length(${Fns.cleanTextDuck("text")}) + 3) // 4)::BIGINT AS n_tokens,
                  CASE lang WHEN 'en' THEN 1 WHEN 'zh' THEN 2 WHEN 'de' THEN 4
                            WHEN 'fr' THEN 4 WHEN 'es' THEN 8 ELSE 1 END AS rep
           FROM documents)
@@ -237,7 +237,7 @@ object Curation {
       Some(s"""
         WITH cleaned AS (
           SELECT doc_id, length(tc) AS char_len, md5(tc) AS th
-          FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+          FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents)),
         quality AS (SELECT * FROM cleaned WHERE char_len >= 50),
         exact_kept AS (
@@ -275,7 +275,7 @@ object Curation {
         import spark.implicits._
         val items = Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("pmod(doc_id, 8) AS salt", "doc_id",
             "cast((length(tc) + 3) div 4 AS bigint) AS n_tokens")
           .as[(Long, Long, Long)]
@@ -311,7 +311,7 @@ object Curation {
       Some(s"""
         WITH RECURSIVE base AS (
           SELECT doc_id, doc_id % 8 AS salt,
-                 ((length(regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g')) + 3) // 4)::BIGINT AS n_tokens
+                 ((length(${Fns.cleanTextDuck("text")}) + 3) // 4)::BIGINT AS n_tokens
           FROM documents),
         items AS (
           SELECT salt, doc_id, n_tokens,
@@ -369,7 +369,7 @@ object Curation {
       Some(s"""
         WITH cleaned AS (
           SELECT doc_id, lang, length(tc) AS char_len, md5(tc) AS th
-          FROM (SELECT doc_id, lang, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+          FROM (SELECT doc_id, lang, ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents)
         ),
         quality AS (SELECT * FROM cleaned WHERE char_len >= 50),
@@ -413,7 +413,7 @@ object Curation {
       Some(s"""
         WITH RECURSIVE cleaned AS (
           SELECT doc_id, lang, length(tc) AS char_len, md5(tc) AS th
-          FROM (SELECT doc_id, lang, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+          FROM (SELECT doc_id, lang, ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents)
         ),
         quality AS (SELECT * FROM cleaned WHERE char_len >= 50),
@@ -848,7 +848,7 @@ object Curation {
         WITH v0 AS MATERIALIZED (
           SELECT w, count(*)::BIGINT AS wc,
                  array_to_string(list_transform(generate_series(1, length(w)), i -> w[i]), '|') || '|' AS seq
-          FROM (SELECT unnest(string_split(regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g'), ' ')) AS w
+          FROM (SELECT unnest(string_split(${Fns.cleanTextDuck("text")}, ' ')) AS w
                 FROM documents)
           WHERE w != '' GROUP BY w),
         $iters
@@ -889,7 +889,7 @@ object Curation {
         }
         Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id",
             s"cast(length($rep0) - length(replace($rep0, '|', '')) AS bigint) AS n_syms",
             s"cast(length($repN) - length(replace($repN, '|', '')) AS bigint) AS n_tokens")
@@ -918,7 +918,7 @@ object Curation {
         WITH v0 AS MATERIALIZED (
           SELECT w, count(*)::BIGINT AS wc,
                  array_to_string(list_transform(generate_series(1, length(w)), i -> w[i]), '|') || '|' AS seq
-          FROM (SELECT unnest(string_split(regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g'), ' ')) AS w
+          FROM (SELECT unnest(string_split(${Fns.cleanTextDuck("text")}, ' ')) AS w
                 FROM documents)
           WHERE w != '' GROUP BY w),
         $iters,
@@ -928,7 +928,7 @@ object Curation {
           FROM (
             SELECT doc_id,
                    array_to_string(list_transform(
-                     list_filter(string_split(regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g'), ' '), x -> x != ''),
+                     list_filter(string_split(${Fns.cleanTextDuck("text")}, ' '), x -> x != ''),
                      w -> array_to_string(list_transform(generate_series(1, length(w)), i -> w[i]), '|') || '|'), ' ') AS rep
             FROM documents)),
         $reps
@@ -984,7 +984,7 @@ object Curation {
       Some(s"""
         WITH c AS (
           SELECT doc_id, lang, n_chars,
-                 regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+                 ${Fns.cleanTextDuck("text")} AS tc
           FROM documents),
         t AS (SELECT doc_id, string_split(tc, ' ') AS toks FROM c),
         uni AS (SELECT unnest(toks) AS w FROM t),
@@ -1135,7 +1135,7 @@ object Curation {
         WITH sc AS (SELECT doc_id FROM (${graft.operators.Ml.scoreOracleSql}) WHERE margin <= 0),
         cleaned AS (
           SELECT doc_id, lang, length(tc) AS char_len, md5(tc) AS th
-          FROM (SELECT doc_id, lang, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+          FROM (SELECT doc_id, lang, ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents)),
         kept AS (SELECT c.* FROM cleaned c JOIN sc USING (doc_id)),
         ek AS (SELECT min(doc_id) AS doc_id FROM kept GROUP BY th),
@@ -1343,7 +1343,7 @@ object Curation {
       (spark, dir) => {
         val scored = Tables.documents(spark, dir)
           .selectExpr("doc_id", "n_chars",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id", "(n_chars + 3) div 4 AS tok",
             """(cast(length(tc) AS bigint) - (cast(size(split(tc, ' ')) AS bigint) - 1))
                * 1000000 div cast(size(split(tc, ' ')) AS bigint) AS score_ppm""")
@@ -1364,10 +1364,10 @@ object Curation {
           .selectExpr("doc_id", "score_ppm", "tok AS n_tok",
             "least(3L, (boff + wcum) * 4 div total) AS phase")
       },
-      Some("""
+      Some(s"""
         WITH c AS (
           SELECT doc_id, n_chars,
-                 regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+                 ${Fns.cleanTextDuck("text")} AS tc
           FROM documents),
         d AS (
           SELECT doc_id, (n_chars + 3) // 4 AS tok,
@@ -1401,7 +1401,7 @@ object Curation {
       (spark, dir) =>
         Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id", "split(tc, ' ') AS toks")
           .selectExpr("doc_id", "toks", "cast(size(toks) AS bigint) div 20 AS nblk")
           .where("nblk >= 1")
@@ -1411,10 +1411,10 @@ object Curation {
           .selectExpr("doc_id", "blk AS sentinel_id", "ss AS span_start",
             "ss + 2 AS span_end",
             "array_join(slice(toks, cast(ss AS int), 3), ' ') AS masked"),
-      Some("""
+      Some(s"""
         WITH c AS (
           SELECT doc_id,
-                 regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+                 ${Fns.cleanTextDuck("text")} AS tc
           FROM documents),
         t AS (SELECT doc_id, string_split(tc, ' ') AS toks FROM c),
         b AS (
@@ -1460,7 +1460,7 @@ object Curation {
         // through exchange-free
         val bg = Tables.spread(Tables.documents(spark, dir), "doc_id")
           .selectExpr("doc_id", "source IN ('src1', 'src2', 'src3') AS tgt",
-            "split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ') AS toks")
+            s"split(${Fns.cleanTextSql("text")}, ' ') AS toks")
           .selectExpr("doc_id", "tgt",
             "explode(transform(sequence(0, size(toks) - 2), i -> concat(toks[i], ' ', toks[i + 1]))) AS bgr")
           .selectExpr("doc_id", "tgt",
@@ -1482,10 +1482,10 @@ object Curation {
           .orderBy(col("dsir_ppm").desc, col("doc_id"))
           .limit(1000)
       },
-      Some("""
+      Some(s"""
         WITH d AS (
           SELECT doc_id, (source IN ('src1', 'src2', 'src3')) AS tgt,
-                 string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ') AS toks
+                 string_split(${Fns.cleanTextDuck("text")}, ' ') AS toks
           FROM documents),
         bg AS (
           SELECT doc_id, tgt,
@@ -1528,7 +1528,7 @@ object Curation {
       (spark, dir) => {
         val toks = Tables.documents(spark, dir)
           .selectExpr("source",
-            "cast(size(split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ')) AS bigint) AS tok")
+            s"cast(size(split(${Fns.cleanTextSql("text")}, ' ')) AS bigint) AS tok")
           .groupBy("source")
           .agg(expr("cast(count(*) AS bigint) AS n_docs"),
             expr("cast(sum(tok) AS bigint) AS tok"))
@@ -1550,10 +1550,10 @@ object Curation {
             "least(tok, coalesce(level, tok)) AS alloc_tok",
             "tok > coalesce(level, tok) AS capped")
       },
-      Some("""
+      Some(s"""
         WITH s AS (
           SELECT source, count(*)::BIGINT AS n_docs,
-                 sum(len(string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ')))::BIGINT AS tok
+                 sum(len(string_split(${Fns.cleanTextDuck("text")}, ' ')))::BIGINT AS tok
           FROM documents GROUP BY source),
         r AS (
           SELECT source, n_docs, tok,
@@ -1609,7 +1609,7 @@ object Curation {
         import spark.implicits._
         val dw = Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "explode(split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ')) AS w")
+            s"explode(split(${Fns.cleanTextSql("text")}, ' ')) AS w")
           .where("w != ''")
           .groupBy("doc_id", "w")
           .agg(expr("cast(count(*) AS bigint) AS wc"))
@@ -1661,11 +1661,11 @@ object Curation {
             expr("cast(sum(wc * c3) AS bigint) AS p3"),
             expr("cast(sum(wc * c4) AS bigint) AS p4"))
       },
-      Some("""
+      Some(s"""
         WITH RECURSIVE dw AS MATERIALIZED (
           SELECT doc_id, w, count(*)::BIGINT AS wc
           FROM (SELECT doc_id,
-                       unnest(string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ')) AS w
+                       unnest(string_split(${Fns.cleanTextDuck("text")}, ' ')) AS w
                 FROM documents)
           WHERE w != '' GROUP BY doc_id, w),
         gw AS MATERIALIZED (SELECT w, sum(wc)::BIGINT AS wc FROM dw GROUP BY w),
@@ -1759,7 +1759,7 @@ object Curation {
         import spark.implicits._
         val dw = Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "explode(split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ')) AS w")
+            s"explode(split(${Fns.cleanTextSql("text")}, ' ')) AS w")
           .where("w != ''")
           .groupBy("doc_id", "w")
           .agg(expr("cast(count(*) AS bigint) AS wc"))
@@ -1822,11 +1822,11 @@ object Curation {
             expr("cast(sum(wc * np) AS bigint) AS n_pieces"),
             expr("cast(sum(wc * cost) AS bigint) AS total_cost"))
       },
-      Some("""
+      Some(s"""
         WITH RECURSIVE dw AS MATERIALIZED (
           SELECT doc_id, w, count(*)::BIGINT AS wc
           FROM (SELECT doc_id,
-                       unnest(string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ')) AS w
+                       unnest(string_split(${Fns.cleanTextDuck("text")}, ' ')) AS w
                 FROM documents)
           WHERE w != '' GROUP BY doc_id, w),
         gw AS MATERIALIZED (SELECT w, sum(wc)::BIGINT AS wc FROM dw GROUP BY w),
@@ -1896,7 +1896,7 @@ object Curation {
       (spark, dir) =>
         Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ') AS toks")
+            s"split(${Fns.cleanTextSql("text")}, ' ') AS toks")
           .selectExpr("doc_id", "toks", "cast(size(toks) AS bigint) AS n")
           .where("n >= 8")
           .selectExpr("doc_id", "toks", "n",
@@ -1909,10 +1909,10 @@ object Curation {
             "array_join(slice(toks, cast(c2 AS int) + 1, cast(n - c2 AS int)), ' ') AS suffix")
           .selectExpr("doc_id", "n_toks", "c1", "c2", "prefix", "middle", "suffix",
             "concat('<PRE>', prefix, '<SUF>', suffix, '<MID>', middle) AS psm"),
-      Some("""
+      Some(s"""
         WITH t AS (
           SELECT doc_id,
-                 string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ') AS toks
+                 string_split(${Fns.cleanTextDuck("text")}, ' ') AS toks
           FROM documents),
         sized AS (
           SELECT doc_id, toks, len(toks)::BIGINT AS n FROM t WHERE len(toks) >= 8),
@@ -1961,7 +1961,7 @@ object Curation {
       (spark, dir) => {
         val bg = Tables.documents(spark, dir)
           .selectExpr(
-            "split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ') AS toks")
+            s"split(${Fns.cleanTextSql("text")}, ' ') AS toks")
           .where("size(toks) >= 2")
           .selectExpr(
             "explode(transform(sequence(2, size(toks)), i -> struct(toks[i - 2] AS w1, toks[i - 1] AS w2))) AS b")
@@ -1982,13 +1982,13 @@ object Curation {
             """((4L * c - 3L) * 250000L) div ch
                + (3L * n1l * 250000L * n1r) div (ch * bigram_types) AS pkn_ppm""")
       },
-      Some("""
+      Some(s"""
         WITH bg AS MATERIALIZED (
           SELECT b['w1'] AS w1, b['w2'] AS w2, count(*)::BIGINT AS c
           FROM (
             SELECT unnest(list_transform(generate_series(2, len(toks)),
                           i -> {'w1': toks[i-1], 'w2': toks[i]})) AS b
-            FROM (SELECT string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ') AS toks
+            FROM (SELECT string_split(${Fns.cleanTextDuck("text")}, ' ') AS toks
                   FROM documents)
             WHERE len(toks) >= 2)
           GROUP BY 1, 2),
@@ -2018,7 +2018,7 @@ object Curation {
       (spark, dir) =>
         Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ') AS toks")
+            s"split(${Fns.cleanTextSql("text")}, ' ') AS toks")
           .where("size(toks) >= 1")
           .selectExpr("doc_id", "toks", "cast(size(toks) AS bigint) AS n",
             "posexplode(toks) AS (p0, w)")
@@ -2029,10 +2029,10 @@ object Curation {
           .selectExpr("doc_id", "pos", "original",
             "CASE WHEN opr < 8 THEN 'mask' WHEN opr = 8 THEN 'random' ELSE 'keep' END AS op",
             "CASE WHEN opr < 8 THEN '[MASK]' WHEN opr = 8 THEN rtok ELSE original END AS replacement"),
-      Some("""
+      Some(s"""
         WITH t AS (
           SELECT doc_id,
-                 string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ') AS toks
+                 string_split(${Fns.cleanTextDuck("text")}, ' ') AS toks
           FROM documents),
         s AS (
           SELECT doc_id, toks, len(toks)::BIGINT AS n,
@@ -2074,7 +2074,7 @@ object Curation {
       (spark, dir) =>
         Tables.documents(spark, dir)
           .selectExpr("doc_id", "source", "lang",
-            "split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ') AS toks")
+            s"split(${Fns.cleanTextSql("text")}, ' ') AS toks")
           .where("size(toks) >= 1")
           .selectExpr("doc_id", "source", "lang",
             "cast(size(array_distinct(toks)) AS bigint) * 1000 div size(toks) AS score")
@@ -2094,10 +2094,10 @@ object Curation {
           .selectExpr("source", "lang", "chosen_doc", "chosen_score",
             "rejected_doc", "rejected_score",
             "chosen_score - rejected_score AS margin_permille"),
-      Some("""
+      Some(s"""
         WITH t AS (
           SELECT doc_id, source, lang,
-                 string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ') AS toks
+                 string_split(${Fns.cleanTextDuck("text")}, ' ') AS toks
           FROM documents),
         s AS (
           SELECT doc_id, source, lang,
@@ -2151,7 +2151,7 @@ object Curation {
         // broadcast build (r15 profile: two ~0.5 s 1-task stages)
         val docs = Tables.spread(graft.sources.Lake.readVersion(spark, root), "doc_id")
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id", "tc", "split(tc, ' ') AS toks")
           .selectExpr("doc_id", "tc", "toks",
             "cast(length(tc) AS bigint) AS char_len",
@@ -2198,7 +2198,7 @@ object Curation {
       },
       Some(s"""
         WITH d0 AS (
-          SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
           FROM documents),
         dd AS (
           SELECT doc_id, tc, toks, length(tc)::BIGINT AS char_len,
@@ -2352,7 +2352,7 @@ object Curation {
     import org.apache.spark.sql.graft.CheckpointOps.release
     val vocab = Tables.documents(spark, dir)
       .selectExpr(
-        "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+        s"${Fns.cleanTextSql("text")} AS tc")
       .selectExpr("explode(split(tc, ' ')) AS w")
       .where("w != ''")
       .groupBy("w").agg(expr("cast(count(*) AS bigint) AS wc"))

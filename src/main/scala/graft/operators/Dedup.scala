@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.graft.CheckpointOps.FenceSyntax
-import graft.{QueryDef, Tables}
+import graft.{Fns, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -104,7 +104,7 @@ object Dedup {
       // provide this for free, and the tiny text shuffle is noise)
       .repartition(Par, col("doc_id"))
       .selectExpr("doc_id", "lang",
-        "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+        s"${Fns.cleanTextSql("text")} AS tc")
       .selectExpr("doc_id", "lang", "split(tc, ' ') AS toks")
       .selectExpr("doc_id", "lang", "size(toks) AS n_toks", "word_shingles(toks, 4) AS hs")
       // second barrier: materialize hs so projection collapse cannot
@@ -121,7 +121,7 @@ object Dedup {
   }
 
   private[graft] val shingleHashesSql: String =
-    """SELECT doc_id, lang, len(toks) AS n_toks,
+    s"""SELECT doc_id, lang, len(toks) AS n_toks,
       |       list_distinct(list_transform(
       |         CASE WHEN len(toks) < 4 THEN [tc]
       |              ELSE list_transform(generate_series(1, len(toks) - 3),
@@ -129,7 +129,7 @@ object Dedup {
       |         END,
       |         s -> ('0x' || substr(md5(s), 1, 15))::BIGINT)) AS hs
       |FROM (SELECT doc_id, lang, string_split(tc, ' ') AS toks, tc
-      |      FROM (SELECT doc_id, lang, regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+      |      FROM (SELECT doc_id, lang, ${Fns.cleanTextDuck("text")} AS tc
       |            FROM documents))""".stripMargin
 
   /** Exact Jaccard over two distinct int arrays (SQL fragments). */
@@ -295,7 +295,7 @@ object Dedup {
     Tables.documents(spark, dir)
       .repartition(Par, col("doc_id"))
       .selectExpr("doc_id",
-        "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+        s"${Fns.cleanTextSql("text")} AS tc")
       .selectExpr("doc_id",
         s"CASE WHEN doc_id % 7 = 0 THEN concat(tc, ' ', '$SpanBoiler') ELSE tc END AS tc")
       .selectExpr("doc_id",
@@ -312,7 +312,7 @@ object Dedup {
                  CASE WHEN doc_id % 5 = 0 THEN '$SpanBoiler2' || ' ' || tc ELSE tc END AS tc
           FROM (SELECT doc_id,
                        CASE WHEN doc_id % 7 = 0 THEN tc || ' ' || '$SpanBoiler' ELSE tc END AS tc
-                FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+                FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
                       FROM documents))),
         t AS (SELECT doc_id, string_split(tc, ' ') AS toks FROM c),
         p0 AS (
@@ -345,11 +345,11 @@ object Dedup {
       (spark, dir) =>
         Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "md5(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '')) AS text_hash")
+            s"md5(${Fns.cleanTextSql("text")}) AS text_hash")
           .groupBy("text_hash")
           .agg(expr("min(doc_id) AS keep_doc_id"), expr("count(*) AS n_copies")),
-      Some("""
-        SELECT md5(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g')) AS text_hash,
+      Some(s"""
+        SELECT md5(${Fns.cleanTextDuck("text")}) AS text_hash,
                min(doc_id) AS keep_doc_id, count(*) AS n_copies
         FROM documents
         GROUP BY 1""")),
@@ -638,7 +638,7 @@ object Dedup {
       (spark, dir) => {
         val texts = Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
         minhashPairs(spark, dir)
           .join(texts.selectExpr("doc_id AS doc_a", "tc AS tc_a"), "doc_a")
           .join(texts.selectExpr("doc_id AS doc_b", "tc AS tc_b"), "doc_b")
@@ -648,7 +648,7 @@ object Dedup {
       Some(s"""
         WITH pairs AS ($minhashPairsSql),
         texts AS (
-          SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
           FROM documents
         )
         SELECT p.doc_a, p.doc_b, p.jaccard,
@@ -715,7 +715,7 @@ object Dedup {
         val spans = Tables.documents(spark, dir)
           .repartition(Par, col("doc_id"))
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id",
             s"CASE WHEN doc_id % 7 = 0 THEN concat(tc, ' ', '$SpanBoiler') ELSE tc END AS tc")
           .selectExpr("doc_id", s"word_shingles(split(tc, ' '), $SpanTokens) AS hs")
@@ -735,7 +735,7 @@ object Dedup {
         WITH c AS (
           SELECT doc_id,
                  CASE WHEN doc_id % 7 = 0 THEN tc || ' ' || '$SpanBoiler' ELSE tc END AS tc
-          FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+          FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents)),
         sh AS (
           SELECT doc_id, list_distinct(list_transform(
@@ -877,7 +877,7 @@ object Dedup {
                  CASE WHEN doc_id % 5 = 0 THEN '$SpanBoiler2' || ' ' || tc ELSE tc END AS tc
           FROM (SELECT doc_id,
                        CASE WHEN doc_id % 7 = 0 THEN tc || ' ' || '$SpanBoiler' ELSE tc END AS tc
-                FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+                FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
                       FROM documents))),
         t AS (SELECT doc_id, string_split(tc, ' ') AS toks FROM c),
         ph AS (
@@ -952,7 +952,7 @@ object Dedup {
       (spark, dir) => {
         val paras = Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id",
             s"CASE WHEN doc_id % 5 = 0 THEN concat('$ParaBoiler', ' ', tc) ELSE tc END AS tc")
           .selectExpr("doc_id", "split(tc, ' ') AS toks")
@@ -981,7 +981,7 @@ object Dedup {
           SELECT doc_id,
                  CASE WHEN doc_id % 5 = 0 THEN '$ParaBoiler' || ' ' || tc ELSE tc END AS tc
           FROM (SELECT doc_id,
-                       regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+                       ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents)),
         paras AS (
           SELECT doc_id, p['para_idx']::BIGINT AS para_idx, p['para'] AS para
@@ -1255,7 +1255,7 @@ object Dedup {
         graft.plans.VectorExprs.register(spark) // hash_tokens, shingle_hashes
         Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ') AS toks")
+            s"split(${Fns.cleanTextSql("text")}, ' ') AS toks")
           .where("size(toks) >= 1")
           // the whole per-doc pass — token hashes, gap anchors, chunk
           // fingerprint folds — runs through native kernels in one
@@ -1275,7 +1275,7 @@ object Dedup {
       Some(s"""
         WITH t AS (
           SELECT doc_id,
-                 string_split(regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g'), ' ') AS toks
+                 string_split(${Fns.cleanTextDuck("text")}, ' ') AS toks
           FROM documents),
         h AS (
           SELECT doc_id, toks,
@@ -1363,11 +1363,14 @@ object Dedup {
         // awaiting futures in order.
         val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
         val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
+        // resolved here: `Par` reads the thread's active session, and
+        // the futures below run on pool threads
+        val par = Par
         val futs = DupProfileLadder.map { l =>
           scala.concurrent.Future {
             val post = checkpointHashPartitioned(
               toks.selectExpr("doc_id", s"explode(shingle_hashes(toks, $l)) AS h"),
-              Par, "h")
+              par, "h")
             // cross-doc flag per h — min ≠ max over doc_id ⟺ held by
             // ≥ 2 distinct docs; runs on the existing partitioning
             val dup = post.groupBy("h")
@@ -1403,7 +1406,7 @@ object Dedup {
                  CASE WHEN doc_id % 5 = 0 THEN '$SpanBoiler2' || ' ' || tc ELSE tc END AS tc
           FROM (SELECT doc_id,
                        CASE WHEN doc_id % 7 = 0 THEN tc || ' ' || '$SpanBoiler' ELSE tc END AS tc
-                FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+                FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
                       FROM documents))),
         t AS (SELECT doc_id, string_split(tc, ' ') AS toks FROM c),
         lv AS (SELECT unnest([${DupProfileLadder.mkString(", ")}]) AS L),
@@ -1764,7 +1767,7 @@ object Dedup {
       .select("doc_id", "text")
       .repartition(Par, col("doc_id")) // parallelize the 60-bit fold (see shingleHashes)
       .selectExpr("doc_id",
-        "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+        s"${Fns.cleanTextSql("text")} AS tc")
       .selectExpr("doc_id", "simhash60(hash_tokens(split(tc, ' '))) AS simhash")
       .repartition(Par, col("doc_id")) // materialize the fold (see shingleHashes)
   }
@@ -1778,6 +1781,6 @@ object Dedup {
        |FROM (SELECT doc_id,
        |             list_transform(string_split(tc, ' '),
        |                            t -> ('0x' || substr(md5(t), 1, 15))::BIGINT) AS hv
-       |      FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+       |      FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
        |            FROM documents))""".stripMargin
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.graft.CheckpointOps.FenceSyntax
-import graft.{QueryDef, Tables}
+import graft.{Fns, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1298,7 +1298,7 @@ object Knn {
     // splits provide this at real scale).
     Tables.documents(spark, dir)
       .repartition(par, col("doc_id"))
-      .selectExpr("doc_id", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+      .selectExpr("doc_id", s"${Fns.cleanTextSql("text")} AS tc")
       .selectExpr("doc_id", "embed64(split(tc, ' ')) AS embedding")
   }
 
@@ -1342,7 +1342,7 @@ object Knn {
   /** DuckDB oracle body for the corpus embedding (kept in the lambda
     * formulation — value-identical to the aggregation pipeline).
     */
-  private[operators] val v1EmbedOracle: String = """
+  private[operators] val v1EmbedOracle: String = s"""
         SELECT doc_id,
                CASE WHEN nrm = 0 THEN counts ELSE list_transform(counts, x -> x / nrm) END AS embedding
         FROM (
@@ -1356,6 +1356,6 @@ object Knn {
               SELECT doc_id,
                      list_transform(string_split(tc, ' '),
                                     t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 64) AS bks
-              FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+              FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
                     FROM documents))))"""
 }

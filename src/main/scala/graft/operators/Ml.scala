@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.graft.CheckpointOps.FenceSyntax
-import graft.{QueryDef, Tables}
+import graft.{Fns, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,7 +62,7 @@ object Ml {
   private[graft] def featureArrays(docs: DataFrame): DataFrame =
     docs
       .selectExpr("doc_id",
-        "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+        s"${Fns.cleanTextSql("text")} AS tc")
       .selectExpr("doc_id",
         s"CASE WHEN doc_id % 7 = 0 THEN concat(tc, ' ', '${Dedup.SpanBoiler}') ELSE tc END AS tc")
       .selectExpr("doc_id",
@@ -215,7 +215,7 @@ object Ml {
           SELECT doc_id,
                  CASE WHEN doc_id % 7 = 0 THEN tc || ' ' || '$boiler' ELSE tc END AS tc
           FROM (SELECT doc_id,
-                       regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+                       ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents)),
         f AS MATERIALIZED (
           SELECT DISTINCT doc_id,
@@ -504,7 +504,7 @@ object Ml {
       (spark, dir) => {
         val toks = Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id",
             s"CASE WHEN doc_id % 7 = 0 THEN concat(tc, ' ', '${Dedup.SpanBoiler}') ELSE tc END AS tc")
           .selectExpr("doc_id",
@@ -554,7 +554,7 @@ object Ml {
                  CASE WHEN doc_id % 7 = 0 THEN 'planted' ELSE 'clean' END AS lang,
                  string_split(CASE WHEN doc_id % 7 = 0 THEN tc || ' ' || '$boiler' ELSE tc END, ' ') AS toks
           FROM (SELECT doc_id,
-                       regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+                       ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents)),
         tr AS (SELECT lang, unnest(toks) AS w FROM t WHERE doc_id % 5 != 0),
         cw AS MATERIALIZED (SELECT lang, w, count(*)::BIGINT AS c FROM tr GROUP BY 1, 2),
@@ -761,7 +761,7 @@ object Ml {
           SELECT doc_id,
                  CASE WHEN doc_id % 7 = 0 THEN tc || ' ' || '$boiler' ELSE tc END AS tc
           FROM (SELECT doc_id,
-                       regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+                       ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents)),
         f AS MATERIALIZED (
           SELECT DISTINCT doc_id,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Fns, QueryDef, Tables}
 
 /** QA / answer-generation layer (SURVEY.md §2.5).
   *
@@ -25,7 +25,7 @@ object Qa {
     */
   private def retrieved(spark: org.apache.spark.sql.SparkSession, dir: String) =
     Tables.documents(spark, dir)
-      .selectExpr("doc_id", "source", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+      .selectExpr("doc_id", "source", s"${Fns.cleanTextSql("text")} AS tc")
       .selectExpr(
         "doc_id", "source", "tc",
         s"""cast(size(array_intersect(split(tc, ' '), split('$Query', ' '))) AS bigint) AS score""")
@@ -45,7 +45,7 @@ object Qa {
        |  FROM (
        |    SELECT doc_id, source, tc,
        |           len(list_intersect(string_split(tc, ' '), string_split('$Query', ' ')))::BIGINT AS score
-       |    FROM (SELECT doc_id, source, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+       |    FROM (SELECT doc_id, source, ${Fns.cleanTextDuck("text")} AS tc
        |          FROM documents)))
        |WHERE rn <= $TopK""".stripMargin
 

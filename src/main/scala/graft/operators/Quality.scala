@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.graft.CheckpointOps.FenceSyntax
-import graft.{QueryDef, Tables}
+import graft.{Fns, QueryDef, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -137,7 +137,7 @@ object Quality {
       (spark, dir) => {
         val docs = Tables.documents(spark, dir)
           .selectExpr("doc_id", "lang", "source", "n_chars",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
         val base = docs.selectExpr("doc_id", "lang", "source", "n_chars",
           "cast((length(tc) + 3) div 4 AS bigint) AS n_tokens", "md5(tc) AS th")
         val metrics = Seq(
@@ -155,12 +155,12 @@ object Quality {
             "cast(floor(percentile(n_chars, 0.5)) AS bigint) AS value"))
         metrics.reduce(_ unionByName _)
       },
-      Some("""
+      Some(s"""
         WITH base AS (
           SELECT doc_id, lang, source, n_chars,
                  ((length(tc) + 3) // 4)::BIGINT AS n_tokens, md5(tc) AS th
           FROM (SELECT doc_id, lang, source, n_chars,
-                       regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+                       ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents))
         SELECT 'documents' AS metric, count(*)::BIGINT AS value FROM base
         UNION ALL SELECT 'tokens_total', sum(n_tokens)::BIGINT FROM base

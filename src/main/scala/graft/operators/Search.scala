@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Fns, QueryDef, Tables}
 import org.apache.spark.sql.functions._
 
 /** Keyword search — BM25 ranked retrieval over the documents table.
@@ -43,7 +43,7 @@ object Search {
                          dir: String): org.apache.spark.sql.DataFrame = {
     val toks = Tables.documents(spark, dir)
       .selectExpr("doc_id",
-        "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+        s"${Fns.cleanTextSql("text")} AS tc")
       .selectExpr(Seq("doc_id", "cast(size(split(tc, ' ')) AS bigint) AS dl") ++
         Terms.zipWithIndex.map { case (t, i) =>
           s"cast(size(filter(split(tc, ' '), x -> x = '$t')) AS bigint) AS tf$i"
@@ -83,7 +83,7 @@ object Search {
                  ${Terms.zipWithIndex.map { case (t, i) =>
                    s"len(list_filter(string_split(tc, ' '), x -> x = '$t'))::BIGINT AS tf$i"
                  }.mkString(",\n                 ")}
-          FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+          FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents)),
         stats AS (
           SELECT count(*) AS n_docs, sum(dl)::BIGINT AS sum_dl,
@@ -124,7 +124,7 @@ object Search {
       (spark, dir) => {
         val posts = Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id",
             s"CASE WHEN doc_id % 7 = 0 THEN concat(tc, ' ', '${graft.operators.Dedup.SpanBoiler}') ELSE tc END AS tc")
           .selectExpr("doc_id", "posexplode(split(tc, ' ')) AS (pos, w)")
@@ -145,7 +145,7 @@ object Search {
           SELECT doc_id,
                  CASE WHEN doc_id % 7 = 0 THEN tc || ' ' || '${graft.operators.Dedup.SpanBoiler}' ELSE tc END AS tc
           FROM (SELECT doc_id,
-                       regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+                       ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents)),
         posts AS (
           SELECT doc_id, unnest(string_split(tc, ' ')) AS w,
@@ -252,7 +252,7 @@ object Search {
           .selectExpr("qt", "posexplode(del_hashes(qt)) AS (qi, qh)")
         val vocab = Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id",
             s"CASE WHEN doc_id % 7 = 0 THEN concat(tc, ' ', '${graft.operators.Dedup.SpanBoiler}') ELSE tc END AS tc")
           .selectExpr("explode(split(tc, ' ')) AS w")
@@ -270,7 +270,7 @@ object Search {
           SELECT doc_id,
                  CASE WHEN doc_id % 7 = 0 THEN tc || ' ' || '${graft.operators.Dedup.SpanBoiler}' ELSE tc END AS tc
           FROM (SELECT doc_id,
-                       regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+                       ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents)),
         v AS (
           SELECT w, count(*)::BIGINT AS df
@@ -480,7 +480,7 @@ object Search {
         import org.apache.spark.sql.graft.CheckpointOps.FenceSyntax
         val cleaned = Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
         // fenced: the regex-clean + tokenize corpus pass feeds THREE
         // consumers (the distinct-token df mining, the final scoring
         // explode, and the doc count) — unfenced, each re-ran the
@@ -525,7 +525,7 @@ object Search {
         val origRows = Terms.map(t => s"('$t')").mkString(", ")
         s"""
         WITH c AS (
-          SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
           FROM documents),
         toks AS (SELECT doc_id, string_split(tc, ' ') AS t FROM c),
         scored AS ($bm25ScoredSql),
@@ -576,7 +576,7 @@ object Search {
         val termList = Terms.map(t => s"'$t'").mkString("(", ", ", ")")
         val toks = Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ') AS toks")
+            s"split(${Fns.cleanTextSql("text")}, ' ') AS toks")
         val best = toks
           // posexplode + codegen'd IN filter, NOT a filter() lambda
           // over sequence(1, n): the interpreted per-token lambda cost
@@ -602,7 +602,7 @@ object Search {
         s"""
         WITH t AS (
           SELECT doc_id,
-                 string_split(regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g'), ' ') AS toks
+                 string_split(${Fns.cleanTextDuck("text")}, ' ') AS toks
           FROM documents),
         m AS (
           SELECT doc_id, s['pos']::BIGINT AS pos

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Fns, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** E1–E3: layout-aware paragraph segmentation — the reference's
@@ -202,10 +202,10 @@ object Segmenter {
         }.toDF("doc_id", "paragraph_number", "text_clean")
           .selectExpr("doc_id", "cast(paragraph_number AS int) AS paragraph_number", "text_clean")
       },
-      Some("""
+      Some(s"""
         SELECT doc_id, 1::INT AS paragraph_number,
-               regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS text_clean
+               ${Fns.cleanTextDuck("text")} AS text_clean
         FROM documents
-        WHERE length(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g')) >= 10"""))
+        WHERE length(${Fns.cleanTextDuck("text")}) >= 10"""))
   )
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.graft.CheckpointOps.FenceSyntax
-import graft.{QueryDef, Tables}
+import graft.{Fns, QueryDef, Tables}
 
 /** Text normalization / filtering / analysis operators.
   *
@@ -33,9 +33,9 @@ object TextOps {
       (spark, dir) =>
         Tables.documents(spark, dir).selectExpr(
           "doc_id",
-          "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS text_clean"),
-      Some("""
-        SELECT doc_id, regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS text_clean
+          s"${Fns.cleanTextSql("text")} AS text_clean"),
+      Some(s"""
+        SELECT doc_id, ${Fns.cleanTextDuck("text")} AS text_clean
         FROM documents""")),
 
     // ---------------------------------------------------------------- E5
@@ -45,14 +45,14 @@ object TextOps {
         Tables.documents(spark, dir)
           .selectExpr(
             "doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS text_clean")
+            s"${Fns.cleanTextSql("text")} AS text_clean")
           // char_length, NOT octet_length: the reference counts Python
           // characters (matters for CJK text).
           .selectExpr("doc_id", "text_clean", "cast(length(text_clean) AS bigint) AS char_len")
           .where("char_len >= 10"),
-      Some("""
+      Some(s"""
         SELECT doc_id, text_clean, length(text_clean)::BIGINT AS char_len
-        FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS text_clean
+        FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS text_clean
               FROM documents)
         WHERE length(text_clean) >= 10""")),
 
@@ -61,19 +61,19 @@ object TextOps {
       "ta_tokens",
       (spark, dir) =>
         Tables.documents(spark, dir)
-          .selectExpr("doc_id", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+          .selectExpr("doc_id", s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr(
             "doc_id",
             "cast(size(split(tc, ' ')) AS bigint) AS n_tokens_ws",
             "cast(size(filter(split(tc, '[^a-z0-9]+'), t -> t != '')) AS bigint) AS n_tokens_re",
             // BPE-ish upper bound: ~4 chars/token, exact integer math
             "cast((length(tc) + 3) div 4 AS bigint) AS n_tokens_bpe"),
-      Some("""
+      Some(s"""
         SELECT doc_id,
                len(string_split(tc, ' '))::BIGINT AS n_tokens_ws,
                len(list_filter(string_split_regex(tc, '[^a-z0-9]+'), t -> t != ''))::BIGINT AS n_tokens_re,
                ((length(tc) + 3) // 4)::BIGINT AS n_tokens_bpe
-        FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+        FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
               FROM documents)""")),
 
     // --------------------------- vocabulary coverage (tokenizer design)
@@ -87,7 +87,7 @@ object TextOps {
       "ta_vocab_coverage",
       (spark, dir) => {
         val counts = Tables.documents(spark, dir)
-          .selectExpr("regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+          .selectExpr(s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("explode(split(tc, ' ')) AS tok")
           .where("tok != ''")
           .groupBy("tok")
@@ -104,9 +104,9 @@ object TextOps {
           .selectExpr("cast(vocab_k AS bigint) AS vocab_k", "total", "covered",
             "covered * 1000000L div total AS coverage_ppm")
       },
-      Some("""
+      Some(s"""
         WITH toks AS (
-          SELECT unnest(string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ')) AS tok
+          SELECT unnest(string_split(${Fns.cleanTextDuck("text")}, ' ')) AS tok
           FROM documents),
         counts AS (
           SELECT tok, count(*)::BIGINT AS n FROM toks WHERE tok != '' GROUP BY tok),
@@ -129,7 +129,7 @@ object TextOps {
       "ta_ttr",
       (spark, dir) =>
         Tables.documents(spark, dir)
-          .selectExpr("doc_id", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+          .selectExpr("doc_id", s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id", "split(tc, ' ') AS toks")
           .selectExpr(
             "doc_id",
@@ -137,7 +137,7 @@ object TextOps {
             "cast(size(array_distinct(toks)) AS bigint) AS n_types")
           .selectExpr("doc_id", "n_tokens", "n_types",
             "CASE WHEN n_tokens = 0 THEN 0L ELSE n_types * 1000000L div n_tokens END AS ttr_ppm"),
-      Some("""
+      Some(s"""
         SELECT doc_id, n_tokens, n_types,
                CASE WHEN n_tokens = 0 THEN 0
                     ELSE n_types * 1000000 // n_tokens END::BIGINT AS ttr_ppm
@@ -145,7 +145,7 @@ object TextOps {
           SELECT doc_id,
                  len(toks)::BIGINT AS n_tokens,
                  len(list_distinct(toks))::BIGINT AS n_types
-          FROM (SELECT doc_id, string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ') AS toks
+          FROM (SELECT doc_id, string_split(${Fns.cleanTextDuck("text")}, ' ') AS toks
                 FROM documents))""")),
 
     // ---------------- per-source lexical concentration (Gini–Simpson)
@@ -165,7 +165,7 @@ object TextOps {
       (spark, dir) =>
         Tables.documents(spark, dir)
           .selectExpr("source",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("source", "explode(split(tc, ' ')) AS w")
           .groupBy("source", "w")
           .agg(org.apache.spark.sql.functions.expr("cast(count(*) AS bigint) AS c"))
@@ -177,7 +177,7 @@ object TextOps {
           .selectExpr("source",
             "cast(nt AS bigint) AS n_tokens", "n_types",
             "cast(1000000L - (sumsq * 1000000L) div (nt * nt) AS bigint) AS simpson_ppm"),
-      Some("""
+      Some(s"""
         SELECT source, n_tokens::BIGINT AS n_tokens, n_types,
                (1000000 - (sumsq * 1000000) // (n_tokens * n_tokens))::BIGINT AS simpson_ppm
         FROM (
@@ -185,7 +185,7 @@ object TextOps {
                  sum(c::HUGEINT * c)::HUGEINT AS sumsq
           FROM (SELECT source, w, count(*)::BIGINT AS c
                 FROM (SELECT source,
-                             unnest(string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ')) AS w
+                             unnest(string_split(${Fns.cleanTextDuck("text")}, ' ')) AS w
                       FROM documents)
                 GROUP BY source, w)
           GROUP BY source)""")),
@@ -199,7 +199,7 @@ object TextOps {
       "ta_langid",
       (spark, dir) =>
         Tables.documents(spark, dir)
-          .selectExpr("doc_id", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+          .selectExpr("doc_id", s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr(
             "doc_id",
             "cast(length(tc) - length(regexp_replace(tc, '[一-鿿]', '')) AS bigint) AS cjk_chars",
@@ -219,7 +219,7 @@ object TextOps {
                      (length(tc) - length(regexp_replace(tc, '[\\x{4e00}-\\x{9fff}]', '', 'g')))::BIGINT AS cjk_chars,
                      length(tc)::BIGINT AS char_len,
                      len(list_filter(string_split(tc, ' '), t -> t IN ($stopSql)))::BIGINT AS stop_hits
-              FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+              FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
                     FROM documents))""")),
 
     // ------------------------------------------------- quality scoring (extension)
@@ -229,7 +229,7 @@ object TextOps {
       "ta_quality",
       (spark, dir) =>
         Tables.documents(spark, dir)
-          .selectExpr("doc_id", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+          .selectExpr("doc_id", s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr(
             "doc_id",
             "cast(length(tc) AS bigint) AS char_len",
@@ -270,7 +270,7 @@ object TextOps {
                    len(string_split(tc, ' '))::BIGINT AS n_tokens,
                    (length(tc) - length(regexp_replace(tc, '[.,!?;:]', '', 'g')))::BIGINT AS punct_chars,
                    len(list_filter(string_split(tc, ' '), t -> t IN ($stopSql)))::BIGINT AS stop_tokens
-            FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+            FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
                   FROM documents)))""")),
 
     // ------------------------------------- Gopher quality rules (extension)
@@ -324,7 +324,7 @@ object TextOps {
     QueryDef(
       "ta_gopher",
       (spark, dir) => gopherRules(Tables.documents(spark, dir)),
-      Some("""
+      Some(s"""
         SELECT doc_id, n_words, alpha_words, sym_count, stop_hits,
                r_words, r_word_len, r_symbols, r_alpha, r_bullets, r_ellipsis,
                r_stopwords,
@@ -356,8 +356,8 @@ object TextOps {
                                    s -> list_contains(ws, s)))::BIGINT AS stop_hits
             FROM (
               SELECT doc_id, text,
-                     regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc,
-                     string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ') AS ws,
+                     ${Fns.cleanTextDuck("text")} AS tc,
+                     string_split(${Fns.cleanTextDuck("text")}, ' ') AS ws,
                      string_split(text, chr(10)) AS lines
               FROM documents)))""")),
 
@@ -374,7 +374,7 @@ object TextOps {
         Tables.documents(spark, dir)
           .repartition(spark.sessionState.conf.numShufflePartitions,
             org.apache.spark.sql.functions.col("doc_id"))
-          .selectExpr("regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+          .selectExpr(s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("split(tc, ' ') AS toks")
           .where("size(toks) >= 2")
           .selectExpr(
@@ -384,13 +384,13 @@ object TextOps {
           .orderBy(org.apache.spark.sql.functions.desc("n"),
             org.apache.spark.sql.functions.col("bigram"))
           .limit(20),
-      Some("""
+      Some(s"""
         SELECT bigram, count(*) AS n
         FROM (
           SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
                                        i -> toks[i] || ' ' || toks[i + 1])) AS bigram
           FROM (SELECT string_split(tc, ' ') AS toks
-                FROM (SELECT regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+                FROM (SELECT ${Fns.cleanTextDuck("text")} AS tc
                       FROM documents))
           WHERE len(toks) >= 2)
         GROUP BY bigram
@@ -406,7 +406,7 @@ object TextOps {
       "ta_fingerprint",
       (spark, dir) =>
         Tables.documents(spark, dir)
-          .selectExpr("doc_id", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+          .selectExpr("doc_id", s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr(
             "doc_id",
             s"transform(split(tc, ' '), t -> cast(conv(substring(md5(t), 1, 15), 16, 10) AS bigint) % $P) AS hs")
@@ -420,7 +420,7 @@ object TextOps {
           SELECT doc_id,
                  list_transform(string_split(tc, ' '),
                                 t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % $P) AS hs
-          FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
+          FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents))""")),
 
     // ------------------------------------ repetition metrics (extension)
@@ -441,7 +441,7 @@ object TextOps {
         val par = spark.sessionState.conf.numShufflePartitions
         val toks = Tables.documents(spark, dir)
           .repartition(par, org.apache.spark.sql.functions.col("doc_id"))
-          .selectExpr("doc_id", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+          .selectExpr("doc_id", s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id", "split(tc, ' ') AS toks")
         val gram = toks
           .selectExpr("doc_id", "size(toks) AS n_toks",
@@ -461,9 +461,9 @@ object TextOps {
             "round(1.0D - cast(distinct_3grams AS double) / cast(total_3grams AS double), 6) AS dup_3gram_frac",
             "round(cast(top_cnt AS double) / cast(n_toks AS double), 6) AS top_word_frac")
       },
-      Some("""
+      Some(s"""
         WITH d AS (
-          SELECT doc_id, string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ') AS toks
+          SELECT doc_id, string_split(${Fns.cleanTextDuck("text")}, ' ') AS toks
           FROM documents),
         gram AS (
           SELECT doc_id,
@@ -562,7 +562,7 @@ object TextOps {
         val phone = "555-[0-9]{4}"
         Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id",
             """CASE WHEN doc_id % 5 = 0
                     THEN concat(tc, ' contact user', cast(doc_id AS string),
@@ -579,7 +579,7 @@ object TextOps {
             "cast(length(redacted) AS bigint) AS redacted_len",
             "md5(redacted) AS redacted_hash")
       },
-      Some("""
+      Some(s"""
         WITH planted AS (
           SELECT doc_id,
                  CASE WHEN doc_id % 5 = 0
@@ -587,16 +587,16 @@ object TextOps {
                            '@mail.example.com from 10.20.' ||
                            (doc_id % 200)::VARCHAR || '.9 call 555-0142'
                       ELSE tc END AS tc
-          FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+          FROM (SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
                 FROM documents)),
         red AS (
           SELECT doc_id,
                  len(regexp_extract_all(tc, '[a-z0-9._]+@[a-z0-9.]+[a-z]'))::BIGINT AS n_emails,
-                 len(regexp_extract_all(tc, '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}'))::BIGINT AS n_ips,
+                 len(regexp_extract_all(tc, '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}'))::BIGINT AS n_ips,
                  len(regexp_extract_all(tc, '555-[0-9]{4}'))::BIGINT AS n_phones,
                  regexp_replace(regexp_replace(regexp_replace(tc,
                    '[a-z0-9._]+@[a-z0-9.]+[a-z]', '[EMAIL]', 'g'),
-                   '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}', '[IP]', 'g'),
+                   '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}', '[IP]', 'g'),
                    '555-[0-9]{4}', '[PHONE]', 'g') AS redacted
           FROM planted)
         SELECT doc_id, n_emails, n_ips, n_phones,
@@ -753,7 +753,7 @@ object TextOps {
       (spark, dir) => {
         val toks = Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ') AS toks")
+            s"split(${Fns.cleanTextSql("text")}, ' ') AS toks")
         val uni = toks.selectExpr("explode(toks) AS w")
         val vocab = uni.selectExpr("count(DISTINCT w) AS v").groupBy().agg(
           org.apache.spark.sql.functions.expr("first(v) AS v"))
@@ -774,10 +774,10 @@ object TextOps {
             org.apache.spark.sql.functions.expr("cast(sum(ppm) AS bigint) AS sum_ppm"),
             org.apache.spark.sql.functions.expr("sum(ppm) div count(*) AS avg_ppm"))
       },
-      Some("""
+      Some(s"""
         WITH c AS (
           SELECT doc_id,
-                 string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ') AS toks
+                 string_split(${Fns.cleanTextDuck("text")}, ' ') AS toks
           FROM documents),
         uni AS (SELECT unnest(toks) AS w FROM c),
         vocab AS (SELECT count(DISTINCT w) AS v FROM uni),
@@ -815,7 +815,7 @@ object TextOps {
       (spark, dir) => {
         val tf = Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "explode(split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ')) AS term")
+            s"explode(split(${Fns.cleanTextSql("text")}, ' ')) AS term")
           .groupBy("doc_id", "term")
           .agg(org.apache.spark.sql.functions.expr("cast(count(*) AS bigint) AS tf"))
         val df = tf.groupBy("term").agg(
@@ -831,11 +831,11 @@ object TextOps {
                                        ORDER BY score DESC, term) AS bigint) AS rank""")
           .where("rank <= 5")
       },
-      Some("""
+      Some(s"""
         WITH tf AS (
           SELECT doc_id, term, count(*)::BIGINT AS tf
           FROM (SELECT doc_id,
-                       unnest(string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ')) AS term
+                       unnest(string_split(${Fns.cleanTextDuck("text")}, ' ')) AS term
                 FROM documents)
           GROUP BY doc_id, term),
         df AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY term),
@@ -942,7 +942,7 @@ object TextOps {
       "ta_pmi",
       (spark, dir) => {
         val base = Tables.documents(spark, dir)
-          .selectExpr("regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+          .selectExpr(s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("split(tc, ' ') AS toks")
         val uni = base.selectExpr("explode(toks) AS w")
           .groupBy("w").agg(org.apache.spark.sql.functions.expr("cast(count(*) AS bigint) AS cw"))
@@ -961,10 +961,9 @@ object TextOps {
             org.apache.spark.sql.functions.col("bigram"))
           .limit(20)
       },
-      Some("""
+      Some(s"""
         WITH base AS (
-          SELECT string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'),
-                                             '^\s+|\s+$', '', 'g'), ' ') AS toks
+          SELECT string_split(${Fns.cleanTextDuck("text")}, ' ') AS toks
           FROM documents),
         uni AS (
           SELECT w, count(*)::BIGINT AS cw
@@ -1096,7 +1095,7 @@ object TextOps {
       (spark, dir) => {
         Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id", "split(tc, ' ') AS toks")
           .selectExpr("doc_id",
             "cast(size(toks) AS bigint) AS words",
@@ -1110,11 +1109,10 @@ object TextOps {
                      + 11.8 * (cast(syllables AS double) / cast(words AS double))
                      - 15.59, 6) AS fk_grade""")
       },
-      Some("""
+      Some(s"""
         WITH t AS (
           SELECT doc_id,
-                 string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'),
-                              '^\s+|\s+$', '', 'g'), ' ') AS toks
+                 string_split(${Fns.cleanTextDuck("text")}, ' ') AS toks
           FROM documents),
         m AS (
           SELECT doc_id,
@@ -1149,7 +1147,7 @@ object TextOps {
       (spark, dir) => {
         val grams = Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("doc_id",
             "pmod(cast(conv(substring(md5(concat('vg:', cast(doc_id AS string))), 1, 15), 16, 10) AS bigint), 10) AS decile",
             "filter(split(tc, ' '), x -> x != '') AS ws")
@@ -1171,11 +1169,11 @@ object TextOps {
             "new_grams",
             "sum(new_grams) OVER (ORDER BY decile) AS cum_vocab")
       },
-      Some("""
+      Some(s"""
         WITH d AS (
           SELECT doc_id,
                  ('0x' || substr(md5('vg:' || doc_id::VARCHAR), 1, 15))::BIGINT % 10 AS decile,
-                 list_filter(string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' '), x -> x != '') AS ws
+                 list_filter(string_split(${Fns.cleanTextDuck("text")}, ' '), x -> x != '') AS ws
           FROM documents),
         g AS (
           SELECT decile,
@@ -1214,7 +1212,7 @@ object TextOps {
       (spark, dir) => {
         val sw = Tables.documents(spark, dir)
           .selectExpr("source",
-            "explode(split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ')) AS w")
+            s"explode(split(${Fns.cleanTextSql("text")}, ' ')) AS w")
           .where("w != ''")
           .select("source", "w").distinct()
         val sizes = sw.groupBy("source")
@@ -1229,11 +1227,11 @@ object TextOps {
           .selectExpr("src_a", "src_b", "vocab_a", "vocab_b", "common",
             "common * 1000000L div (vocab_a + vocab_b - common) AS jaccard_ppm")
       },
-      Some("""
+      Some(s"""
         WITH sw AS (
           SELECT DISTINCT source, w
           FROM (SELECT source,
-                       unnest(string_split(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g'), ' ')) AS w
+                       unnest(string_split(${Fns.cleanTextDuck("text")}, ' ')) AS w
                 FROM documents)
           WHERE w != ''),
         sizes AS (SELECT source, count(*)::BIGINT AS vocab FROM sw GROUP BY source),
@@ -1320,7 +1318,7 @@ object TextOps {
       (spark, dir) =>
         Tables.documents(spark, dir)
           .selectExpr("doc_id",
-            "split(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', ''), ' ') AS toks")
+            s"split(${Fns.cleanTextSql("text")}, ' ') AS toks")
           .where("size(toks) >= 7")
           .selectExpr("doc_id", "toks", "explode(sequence(1, size(toks) - 3)) AS pos")
           .selectExpr("doc_id", "cast(pos AS bigint) AS pos",
@@ -1341,7 +1339,7 @@ object TextOps {
       Some(s"""
         WITH t AS (
           SELECT doc_id,
-                 string_split(regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g'), ' ') AS toks
+                 string_split(${Fns.cleanTextDuck("text")}, ' ') AS toks
           FROM documents),
         p AS (
           SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 3)) AS pos
@@ -1424,7 +1422,7 @@ object TextOps {
       : org.apache.spark.sql.DataFrame =
     docs
       .selectExpr("doc_id", "text",
-        "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+        s"${Fns.cleanTextSql("text")} AS tc")
       .selectExpr("doc_id", "text", "tc",
         "split(tc, ' ') AS ws", "split(text, '\\n') AS lines")
       .selectExpr("doc_id",

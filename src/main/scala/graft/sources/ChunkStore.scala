@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{QueryDef, Tables}
+import graft.{Fns, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -204,11 +204,11 @@ object ChunkStore {
     * oracles below; s4/s5 carry their own inlined copies from earlier
     * rounds).
     */
-  private val chunkCteSql: String = """
+  private val chunkCteSql: String = s"""
         ok AS (
-          SELECT doc_id, regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
           FROM documents
-          WHERE length(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g')) >= 10
+          WHERE length(${Fns.cleanTextDuck("text")}) >= 10
         ), chunks AS (
           SELECT doc_id, NULL::INT AS chunk_number, tc AS chunk_text
           FROM ok WHERE length(tc) <= 500
@@ -332,7 +332,7 @@ object ChunkStore {
       (spark, dir) => {
         val docs = graft.Tables.documents(spark, dir)
           .selectExpr("doc_id", "lang", "source",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
         val path = graft.TmpDirs.create("graft_s9").toString + "/docs_orc"
         docs.write.mode("overwrite").option("compression", "zlib").orc(path)
         spark.read.orc(path)
@@ -346,13 +346,13 @@ object ChunkStore {
             // overflow int64 (DuckDB would widen to HUGEINT, Spark wraps)
             expr("md5(cast(sum(pmod(cast(conv(substring(md5(tc), 1, 15), 16, 10) AS bigint), 1000000007)) AS string)) AS content_fold"))
       },
-      Some("""
+      Some(s"""
         SELECT lang, count(*)::BIGINT AS n_docs,
                sum(length(tc))::BIGINT AS total_chars,
                count(DISTINCT source)::BIGINT AS n_sources,
                md5((sum(('0x' || substr(md5(tc), 1, 15))::BIGINT % 1000000007)::BIGINT)::VARCHAR) AS content_fold
         FROM (SELECT doc_id, lang, source,
-                     regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+                     ${Fns.cleanTextDuck("text")} AS tc
               FROM documents)
         WHERE lang != 'zh'
         GROUP BY lang"""),
@@ -407,7 +407,7 @@ object ChunkStore {
       (spark, dir) => {
         val docs = graft.Tables.documents(spark, dir)
           .selectExpr("doc_id", "lang",
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
         val base = graft.TmpDirs.create("graft_s10").toString
         docs.repartition(64).write.mode("overwrite").parquet(s"$base/small")
         spark.read.parquet(s"$base/small")
@@ -421,13 +421,13 @@ object ChunkStore {
           .selectExpr("lang", "n_docs", "fold_small", "fold_compact",
             "(n_docs = n_docs_c AND fold_small = fold_compact) AS identical")
       },
-      Some("""
+      Some(s"""
         SELECT lang, count(*)::BIGINT AS n_docs,
                md5((sum(('0x' || substr(md5(tc), 1, 15))::BIGINT % 1000000007)::BIGINT)::VARCHAR) AS fold_small,
                md5((sum(('0x' || substr(md5(tc), 1, 15))::BIGINT % 1000000007)::BIGINT)::VARCHAR) AS fold_compact,
                true AS identical
         FROM (SELECT doc_id, lang,
-                     regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+                     ${Fns.cleanTextDuck("text")} AS tc
               FROM documents)
         GROUP BY lang"""),
       bench = false, sinkBench = true),
@@ -511,11 +511,11 @@ object ChunkStore {
             "chunk_text AS text",
             "cast(doc_id AS string) AS doc_id_str",
             "cast(chunk_number AS string) AS chunk_number_str"),
-      Some("""
+      Some(s"""
         WITH ok AS (
-          SELECT doc_id, regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
           FROM documents
-          WHERE length(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g')) >= 10
+          WHERE length(${Fns.cleanTextDuck("text")}) >= 10
         ), chunks AS (
           SELECT doc_id, NULL::INT AS chunk_number, tc AS chunk_text
           FROM ok WHERE length(tc) <= 500
@@ -549,11 +549,11 @@ object ChunkStore {
             "cast(doc_id AS string) AS doc_id_str",
             "cast(chunk_number AS string) AS chunk_number_str")
       },
-      Some("""
+      Some(s"""
         WITH ok AS (
-          SELECT doc_id, regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
           FROM documents
-          WHERE length(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g')) >= 10
+          WHERE length(${Fns.cleanTextDuck("text")}) >= 10
         ), chunks AS (
           SELECT doc_id, NULL::INT AS chunk_number, tc AS chunk_text
           FROM ok WHERE length(tc) <= 500
@@ -578,11 +578,11 @@ object ChunkStore {
           .groupBy("source_doc")
           .agg(expr("count(*) AS n_chunks"),
                expr("cast(sum(length(text)) AS bigint) AS total_chars")),
-      Some("""
+      Some(s"""
         WITH ok AS (
-          SELECT doc_id, regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
+          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
           FROM documents
-          WHERE length(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g')) >= 10
+          WHERE length(${Fns.cleanTextDuck("text")}) >= 10
         ), chunks AS (
           SELECT doc_id, tc AS chunk_text FROM ok WHERE length(tc) <= 500
           UNION ALL

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Fns
 import org.apache.spark.sql.graft.CheckpointOps.FenceSyntax
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -42,21 +43,9 @@ object Streaming {
     */
   def chunkIngest(spark: SparkSession, inDir: String, outDir: String,
                   checkpointDir: String): StreamingQuery = {
-    val chunks = spark.readStream
-      .schema(documentsSchema)
-      .parquet(inDir)
-      .selectExpr("doc_id", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
-      .where("length(tc) >= 10")
-      .selectExpr(
-        "doc_id",
-        """explode(CASE WHEN length(tc) <= 500
-                        THEN array(named_struct('chunk_number', cast(null AS int), 'chunk_text', tc))
-                        ELSE filter(transform(sequence(0, length(tc) - 1, 450),
-                                    i -> named_struct('chunk_number', cast(i div 450 + 1 AS int),
-                                                      'chunk_text', substring(tc, i + 1, 500))),
-                                    s -> length(s.chunk_text) >= 50)
-                   END) AS c""")
-      .selectExpr("doc_id", "c.chunk_number AS chunk_number", "c.chunk_text AS chunk_text")
+    val docs = spark.readStream.schema(documentsSchema).parquet(inDir)
+    val chunks = graft.operators.Chunker.chunk(docs, "doc_id")
+      .select("doc_id", "chunk_number", "chunk_text")
     chunks.writeStream
       .format("parquet")
       .option("path", outDir)
@@ -157,7 +146,7 @@ object Streaming {
   def dedupDocuments(docs: DataFrame): DataFrame =
     docs
       .selectExpr("doc_id", "lang",
-        "md5(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '')) AS text_hash")
+        s"md5(${Fns.cleanTextSql("text")}) AS text_hash")
       .dropDuplicates("text_hash")
 
   /** File-stream wrapper for [[dedupDocuments]]: parquet in, parquet
@@ -184,7 +173,7 @@ object Streaming {
   def dedupDocumentsBounded(docs: DataFrame, tsCol: String, delay: String): DataFrame =
     docs
       .selectExpr(s"$tsCol AS event_ts", "doc_id", "lang",
-        "md5(regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '')) AS text_hash")
+        s"md5(${Fns.cleanTextSql("text")}) AS text_hash")
       .withWatermark("event_ts", delay)
       .dropDuplicatesWithinWatermark("text_hash")
 
@@ -212,7 +201,7 @@ object Streaming {
     import spark.implicits._
     val banded = docs
       .selectExpr("doc_id",
-        "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+        s"${Fns.cleanTextSql("text")} AS tc")
       .selectExpr("doc_id", "word_shingles(split(tc, ' '), 4) AS hs")
       .selectExpr("doc_id", "hs", "minhash16(hs) AS mh")
       .selectExpr("doc_id", "hs",
@@ -721,20 +710,7 @@ object Streaming {
           .schema("doc_id BIGINT, chunk_number INT, chunk_text STRING")
           .parquet(s"$tmp/out")
       },
-      Some("""
-        WITH ok AS (
-          SELECT doc_id, regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g') AS tc
-          FROM documents
-          WHERE length(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g')) >= 10
-        )
-        SELECT doc_id, NULL::INT AS chunk_number, tc AS chunk_text
-        FROM ok WHERE length(tc) <= 500
-        UNION ALL
-        SELECT doc_id, (i // 450 + 1)::INT AS chunk_number,
-               substring(tc, i + 1, 500) AS chunk_text
-        FROM ok, LATERAL (SELECT unnest(generate_series(0, length(tc) - 1, 450)) AS i) g
-        WHERE length(tc) > 500
-          AND length(substring(tc, i + 1, 500)) >= 50"""),
+      Some(graft.operators.Chunker.chunkOracle),
       bench = false),
 
     // Stateful exact dedup through the dropDuplicates state store: which
@@ -754,8 +730,8 @@ object Streaming {
           .parquet(s"$tmp/out")
           .select("text_hash")
       },
-      Some("""
-        SELECT DISTINCT md5(regexp_replace(regexp_replace(text, '\s{2,}', ' ', 'g'), '^\s+|\s+$', '', 'g')) AS text_hash
+      Some(s"""
+        SELECT DISTINCT md5(${Fns.cleanTextDuck("text")}) AS text_hash
         FROM documents"""),
       bench = false),
 
@@ -1103,7 +1079,7 @@ object Streaming {
           .parquet(stageDir(s"$dir/documents.parquet"))
         val regs = src
           .selectExpr(
-            "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
+            s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("split(tc, ' ') AS toks")
           .selectExpr("word_shingles(toks, 4) AS hs")
           .selectExpr("explode(hs) AS h")

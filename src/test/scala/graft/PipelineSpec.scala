@@ -44,4 +44,15 @@ class PipelineSpec extends SparkSpec {
     val ids = store.select("id").collect().map(_.getString(0)).toSet
     assert(ids == Set("chunk_0", "chunk_1", "chunk_2", "chunk_3"))
   }
+
+  test("an unreadable extract raises and is left byte-identical (P1 guard)") {
+    val work = Files.createTempDirectory("graft_pipe")
+    val extracted = Files.createDirectories(work.resolve("extracted_csv"))
+    Files.write(extracted.resolve("part-00000.csv.gz"), "not gzip data".getBytes("UTF-8"))
+    def listing() = extracted.toFile.listFiles().toSeq
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).sortBy(_._1)
+    val before = listing()
+    intercept[Exception](Pipeline.setupKnowledgeBase(spark, docs(), work.toString))
+    assert(listing() == before, "an unreadable extract was overwritten")
+  }
 }
