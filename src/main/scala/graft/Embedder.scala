@@ -36,9 +36,9 @@ trait Embedder extends Serializable {
   * L2-normalized, md5-derived buckets — reproducible in the DuckDB
   * oracle). Runs the codegen'd `embed64` kernel (graft.plans.TextHash);
   * [[Fns.embedText]] is the lambda-form reference implementation it is
-  * spec-pinned against. Callers must have run
-  * `graft.plans.VectorExprs.register(spark)` on the session (the
-  * ChunkStore entry points do).
+  * spec-pinned against. Sessions built by [[GraftSession]] have
+  * `embed64`; a session built elsewhere gets it through [[SparkEntry]]
+  * or [[Graft.initSql]].
   */
 object HashedTokenEmbedder extends Embedder {
   override def embed(text: Column): Column =

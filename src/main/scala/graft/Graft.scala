@@ -6,9 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SparkSession so everything is reachable from `spark.sql(...)` —
   * every table as a temp view, every native expression (`dot_f`,
   * `cosine_f`, `hash_tokens`, `word_shingles`, `minhash16`,
-  * `simhash60`) in the function registry. Sessions built with
-  * `spark.sql.extensions=graft.plans.GraftExtensions` get the functions
-  * without the imperative call; `initSql` is the everything-else path.
+  * `simhash60`) in the function registry. Sessions built by
+  * [[GraftSession]] already have the functions; for a session built
+  * elsewhere, `initSql` registers them, and must run before [[query]]
+  * or any operator that calls them.
   */
 object Graft {
 

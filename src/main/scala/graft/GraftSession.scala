@@ -26,6 +26,12 @@ import org.apache.spark.sql.SparkSession
   *    sf0.1 (gr_pagerank_conv 42.7 → 14.4 s solo). Scale-neutral: any
   *    shuffle with > threshold reduce partitions — every real-cluster
   *    exchange — already uses the sort writer regardless.
+  *  - [[plans.GraftExtensions]]: the native functions (`cosine_f`,
+  *    `embed64`, …) are installed once here, so no query registers
+  *    them. `newSession()` and streaming's cloned sessions inherit
+  *    them. `withExtensions`, not the `spark.sql.extensions` string
+  *    conf: Spark only logs a warning for a class it cannot load,
+  *    while a wrong name here fails to compile.
   */
 object GraftSession {
   /** Shared builder: `master` is the full master URL (callers own the
@@ -37,6 +43,7 @@ object GraftSession {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
+      .withExtensions(new plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

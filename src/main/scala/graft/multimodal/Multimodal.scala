@@ -100,7 +100,6 @@ object Multimodal {
     * kernel is a null-safe BinaryExpression).
     */
   def resize(media: DataFrame, targetBytes: Int): DataFrame = {
-    graft.plans.VectorExprs.register(media.sparkSession)
     media.withColumn("payload_resized", expr(
       s"byte_stride(payload, greatest(1, cast(n_bytes AS int) div $targetBytes))"))
   }
@@ -117,7 +116,6 @@ object Multimodal {
     QueryDef(
       "mm_resize",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         Tables.documents(spark, dir)
           .selectExpr("doc_id", "encode(text, 'UTF-8') AS payload",
             "cast(octet_length(text) AS int) AS n")
@@ -283,7 +281,6 @@ object Multimodal {
     QueryDef(
       "mm_scenecut",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         Tables.documents(spark, dir)
           .selectExpr("doc_id", "encode(text, 'UTF-8') AS payload",
             "cast(octet_length(text) AS int) AS n_bytes")
@@ -340,7 +337,6 @@ object Multimodal {
     QueryDef(
       "mm_ahash",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         Tables.documents(spark, dir)
           .selectExpr("doc_id", "encode(text, 'UTF-8') AS payload",
             "cast(octet_length(text) AS int) AS n_bytes")
@@ -395,7 +391,6 @@ object Multimodal {
     QueryDef(
       "mm_ahash_neardup",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         // Skew discipline (the r10 sf3 profile): text/image-derived
         // perceptual hashes are STRUCTURED, so a few 16-bit band
         // values hold a constant FRACTION of the corpus and the naive
@@ -498,7 +493,6 @@ object Multimodal {
     QueryDef(
       "mm_clip_filter",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val e = Tables.embeddings(spark, dir)
         val txt = e.where("vec_id % 2 = 0")
           .selectExpr("vec_id div 2 AS pair_id", "embedding AS t_emb",
@@ -545,7 +539,6 @@ object Multimodal {
     QueryDef(
       "mm_phash",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         phash(Tables.documents(spark, dir)
           .selectExpr("doc_id", "encode(text, 'UTF-8') AS payload",
             "cast(octet_length(text) AS int) AS n_bytes")
@@ -595,7 +588,6 @@ object Multimodal {
     QueryDef(
       "mm_dhash",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         def half(lo: Int): String =
           s"""aggregate(sequence($lo, ${lo + 31}), 0L, (acc, k) ->
                 acc + CASE WHEN byte_energy(payload, (k div 8) * 16 + (k % 8), 1)
@@ -703,7 +695,6 @@ object Multimodal {
     QueryDef(
       "mm_audio_zcr",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         Tables.documents(spark, dir)
           .selectExpr("doc_id", "encode(text, 'UTF-8') AS payload",
             "cast(octet_length(text) AS int) AS n_bytes")
@@ -793,7 +784,6 @@ object Multimodal {
     * segmenter exercise real decision boundaries.
     */
   private def audioFrames(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExprs.register(spark)
     Tables.documents(spark, dir)
       .selectExpr("doc_id", "encode(text, 'UTF-8') AS payload",
         "cast(octet_length(text) AS int) AS n_bytes")

@@ -2144,7 +2144,6 @@ object Curation {
     QueryDef(
       "tp_release_gate",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark) // shingle_hashes
         val root = gateLakeRoot(spark, dir)
         // the lake tip is few-split at gate scale: spread it before the
         // tokenize projection feeding four stage frames + the eval-hash
@@ -2503,7 +2502,6 @@ object Curation {
     */
   private def semanticAssignAndDrops(spark: org.apache.spark.sql.SparkSession,
                                      dir: String): (DataFrame, DataFrame) = {
-    graft.plans.VectorExprs.register(spark)
     val e = Tables.embeddings(spark, dir)
     val assigned = Knn.assignToCentroids(
         e, e.where("vec_id < 8")

@@ -96,7 +96,6 @@ object Dedup {
     * instead of an interpreted md5 lambda per shingle.
     */
   private[operators] def shingleHashes(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExprs.register(spark)
     Tables.documents(spark, dir)
       .select("doc_id", "lang", "text")
       // single-file tables scan as ONE task; fan out before the hash
@@ -255,7 +254,6 @@ object Dedup {
     */
   private[graft] def exactSubstrSpans(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.graft.CheckpointOps.{checkpointHashPartitioned, release}
-    graft.plans.VectorExprs.register(docs.sparkSession) // shingle_hashes
     // ONE exchange of the corpus-sized posting on h, with the
     // partitioning kept TRUTHFUL through the fence (a plain
     // localCheckpoint forgets it under AQE — the r11 iterative-loop
@@ -711,7 +709,6 @@ object Dedup {
     QueryDef(
       "dd_spandup",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val spans = Tables.documents(spark, dir)
           .repartition(Par, col("doc_id"))
           .selectExpr("doc_id",
@@ -851,7 +848,6 @@ object Dedup {
     QueryDef(
       "dd_decontaminate",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark) // shingle_hashes
         val corpus = exactSubstrCorpus(spark, dir)
           .fenced // feeds the eval AND the train branch
         val evalHashes = corpus.where(s"doc_id % $EvalMod = 0")
@@ -1072,7 +1068,6 @@ object Dedup {
         // levenshtein verify exactly like the ed-0/ed-2 collisions the
         // string form already admits. TextHashSpec pins kernel ≡
         // string-materializing hashes.
-        graft.plans.VectorExprs.register(spark)
         def neighborhood(df: DataFrame, nameCol: String): DataFrame =
           df.selectExpr(df.columns :+
             s"posexplode(del_hashes($nameCol)) AS (i, vh)": _*)
@@ -1252,7 +1247,6 @@ object Dedup {
     QueryDef(
       "dd_cdc_chunks",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark) // hash_tokens, shingle_hashes
         Tables.documents(spark, dir)
           .selectExpr("doc_id",
             s"split(${Fns.cleanTextSql("text")}, ' ') AS toks")
@@ -1336,7 +1330,6 @@ object Dedup {
       "dd_dup_profile",
       (spark, dir) => {
         import org.apache.spark.sql.graft.CheckpointOps.{checkpointHashPartitioned, release}
-        graft.plans.VectorExprs.register(spark) // shingle_hashes
         // the tokenized corpus is consumed SIX times (one posting per
         // ladder level + the final n_tokens scan); fence it once so
         // the parquet scan + regex cleanup + split run once, not per
@@ -1452,7 +1445,6 @@ object Dedup {
     * yield NULL, DuckDB NaN — an oracle mismatch).
     */
   private def normalizedEmbeddings(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExprs.register(spark)
     Tables.embeddings(spark, dir)
       .selectExpr("label", "vec_id", "transform(embedding, x -> cast(x AS double)) AS emb_d")
       // dot_f(v, v) is the same left-to-right double fold the DuckDB
@@ -1607,7 +1599,6 @@ object Dedup {
     * L2-normalized doubles.
     */
   private[graft] def embedTwinCorpus(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExprs.register(spark)
     val base = normalizedEmbeddings(spark, dir)
     val twins = base.selectExpr("label", "vec_id + 1000000L AS vec_id",
       s"zip_with(emb_n, ${Knn.planeSpark(PerturbDir)}, (x, d) -> x + ${EmbEps}D * d) AS emb")
@@ -1762,7 +1753,6 @@ object Dedup {
   }
 
   private def simhashDf(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExprs.register(spark)
     Tables.documents(spark, dir)
       .select("doc_id", "text")
       .repartition(Par, col("doc_id")) // parallelize the 60-bit fold (see shingleHashes)

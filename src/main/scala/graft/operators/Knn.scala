@@ -83,7 +83,6 @@ object Knn {
     QueryDef(
       "v3_knn_topk",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val e = Tables.embeddings(spark, dir)
         val q = e.where("vec_id = 0").select(col("embedding").as("q_emb"))
         e.crossJoin(broadcast(q))
@@ -106,7 +105,6 @@ object Knn {
     QueryDef(
       "v3_knn_batch",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val e = Tables.embeddings(spark, dir)
         val q = e.where("vec_id < 8")
           .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_emb"))
@@ -144,7 +142,6 @@ object Knn {
     QueryDef(
       "v3_knn_batch_agg",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         import spark.implicits._
         val e = Tables.embeddings(spark, dir)
         val q = e.where("vec_id < 8")
@@ -191,7 +188,6 @@ object Knn {
     QueryDef(
       "v5_ivf_knn",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val e = Tables.embeddings(spark, dir)
         val assigned = assignToCentroids(
           e, e.where("vec_id < 8")
@@ -235,7 +231,6 @@ object Knn {
     QueryDef(
       "v5_ivf_knn_mp",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val e = Tables.embeddings(spark, dir)
         val cents = e.where("vec_id < 8")
           .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
@@ -283,7 +278,6 @@ object Knn {
     QueryDef(
       "v7_pq_adc",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val e = Tables.embeddings(spark, dir)
         val M = 8; val D = 8; val CB = 16
         val cbAggs = (0 until M).map(m => expr(
@@ -359,7 +353,6 @@ object Knn {
     QueryDef(
       "v8_ivfpq",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val e = Tables.embeddings(spark, dir)
         val M = 8; val D = 8; val NProbe = 2
         val cents = e.where("vec_id < 8")
@@ -485,7 +478,6 @@ object Knn {
     QueryDef(
       "v4_lsh_ann",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val e = Tables.embeddings(spark, dir)
         val bandStructs = (0 until LshBands)
           .map(b => s"named_struct('band_id', $b, 'band_val', ${bandValSpark(b)})")
@@ -559,7 +551,6 @@ object Knn {
     QueryDef(
       "v2_text_knn",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val q = spark.sql(s"SELECT ${embedLiteralSpark(s"'${graft.operators.Qa.Query}'")} AS q_emb")
         embedDocs(spark, dir).crossJoin(broadcast(q))
           .selectExpr("doc_id", "round(cosine_f(embedding, q_emb), 6) AS similarity")
@@ -588,7 +579,6 @@ object Knn {
     QueryDef(
       "v10_mmr",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         import spark.implicits._
         val e = Tables.embeddings(spark, dir)
         val q = e.where("vec_id = 10").select(col("embedding").as("q_emb"))
@@ -665,7 +655,6 @@ object Knn {
     QueryDef(
       "v9_ivf_recall",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val e = Tables.embeddings(spark, dir)
         val cents = e.where("vec_id < 8")
           .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
@@ -751,7 +740,6 @@ object Knn {
     QueryDef(
       "v11_range",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val e = Tables.embeddings(spark, dir)
         val q = e.where("vec_id < 4")
           .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_emb"))
@@ -798,7 +786,6 @@ object Knn {
     QueryDef(
       "v12_knn_classify",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         import spark.implicits._
         val e = Tables.embeddings(spark, dir)
         val q = e.where(s"vec_id % 23 = 0 AND vec_id < $ClassifyBudget")
@@ -873,7 +860,6 @@ object Knn {
     QueryDef(
       "v13_filtered_knn",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         import spark.implicits._
         val e = Tables.embeddings(spark, dir)
         val q = e.where("vec_id < 8")
@@ -1164,7 +1150,6 @@ object Knn {
     * projection collapse).
     */
   def assignToCentroids(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
-    graft.plans.VectorExprs.register(embeddings.sparkSession)
     val cents = broadcast(
       centroids.groupBy().agg(
         expr("sort_array(collect_list(named_struct('cent_id', cent_id, 'cent_emb', cent_emb))) AS cents")))
@@ -1178,7 +1163,6 @@ object Knn {
     */
   def writeIvfIndex(spark: SparkSession, embeddings: DataFrame, centroids: DataFrame,
                     path: String): Unit = {
-    graft.plans.VectorExprs.register(spark)
     assignToCentroids(embeddings, centroids.select(col("cent_id"), col("cent_emb")))
       .write.mode("overwrite").partitionBy("cluster_id").parquet(path)
   }
@@ -1189,7 +1173,6 @@ object Knn {
     */
   def ivfSearch(spark: SparkSession, indexPath: String, centroids: DataFrame,
                 queryVec: Seq[Float], k: Int = 5, nprobe: Int = 1): DataFrame = {
-    graft.plans.VectorExprs.register(spark)
     val qLit = queryVec.map(v => s"cast($v AS float)").mkString("array(", ", ", ")")
     val probes = centroids
       .selectExpr("cent_id", s"cosine_f(cent_emb, $qLit) AS cs")
@@ -1213,7 +1196,6 @@ object Knn {
     * v − c, all row-local over one broadcast centroid row.
     */
   private def residuals(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
-    graft.plans.VectorExprs.register(embeddings.sparkSession)
     val centRow = broadcast(centroids.groupBy().agg(
       expr("sort_array(collect_list(named_struct('cent_id', cent_id, 'cent_emb', cent_emb))) AS cents")))
     embeddings.crossJoin(centRow)
@@ -1258,7 +1240,6 @@ object Knn {
     */
   def ivfPqSearch(spark: SparkSession, indexPath: String, centroids: DataFrame,
                   queryVec: Seq[Float], k: Int = 10, nprobe: Int = 2): DataFrame = {
-    graft.plans.VectorExprs.register(spark)
     val qLit = queryVec.map(v => s"cast($v AS float)").mkString("array(", ", ", ")")
     val probes = broadcast(centroids
       .selectExpr("cent_id", "cent_emb", s"cosine_f(cent_emb, $qLit) AS cs")
@@ -1286,7 +1267,6 @@ object Knn {
     * aggregation, not per-row lambdas), L2-normalized.
     */
   private[operators] def embedDocs(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorExprs.register(spark)
     val par = spark.sessionState.conf.numShufflePartitions
     // ONE row-local codegen'd kernel per document (graft.plans.TextHash
     // .embed64) — replaces the r1–r8 explode → md5 → two-shuffle

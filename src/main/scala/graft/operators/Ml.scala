@@ -416,7 +416,6 @@ object Ml {
     QueryDef(
       "ml_pca_power",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         import spark.implicits._
         val D = KmDim
         val m = Tables.embeddings(spark, dir)
@@ -632,7 +631,6 @@ object Ml {
     * previous centroid.
     */
   private[graft] def kmTrain(spark: SparkSession, dir: String): Array[Array[Long]] = {
-    graft.plans.VectorExprs.register(spark)
     val q = kmQuantized(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {

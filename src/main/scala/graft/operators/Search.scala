@@ -175,7 +175,6 @@ object Search {
     QueryDef(
       "ts_hybrid",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val queryText = Terms.mkString(" ")
         val lex = bm25Scored(spark, dir)
           .orderBy(desc("bm25"), col("doc_id"))
@@ -245,7 +244,6 @@ object Search {
     QueryDef(
       "ts_fuzzy",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val qterms = Seq("standrd", "corpu", "licence", "redistribted")
         val q = spark.sql(
             s"SELECT explode(array(${qterms.map(t => s"'$t'").mkString(", ")})) AS qt")

@@ -437,7 +437,6 @@ object TextOps {
     QueryDef(
       "ta_repetition",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val par = spark.sessionState.conf.numShufflePartitions
         val toks = Tables.documents(spark, dir)
           .repartition(par, org.apache.spark.sql.functions.col("doc_id"))
@@ -866,7 +865,6 @@ object TextOps {
     QueryDef(
       "ta_nfc",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         import spark.implicits._
         NfcCases.toDF("id", "s")
           .selectExpr("id", "nfc_normalize(s) AS norm",

@@ -647,11 +647,12 @@ object CentroidScan {
 }
 
 /** Registration — both as a [[org.apache.spark.sql.SparkSessionExtensions]]
-  * installer (`spark.sql.extensions=graft.plans.GraftExtensions`) and as
-  * an idempotent imperative call for sessions built without the config
-  * (the driver harness constructs its own sessions). Each function
-  * carries its own implementing class so `DESCRIBE FUNCTION` reports
-  * the right one.
+  * installer ([[GraftExtensions]], which `graft.GraftSession` installs in
+  * every session it builds) and as an idempotent imperative call. The
+  * imperative path exists only for sessions built outside
+  * `graft.GraftSession`: `graft.SparkEntry` and `graft.Graft.initSql`
+  * run it for them. Each function carries its own implementing class
+  * so `DESCRIBE FUNCTION` reports the right one.
   */
 object VectorExprs {
   private[plans] val fns: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
@@ -676,18 +677,23 @@ object VectorExprs {
     ("minsq_q", classOf[MinSqQ], c => MinSqQ(c.head, c(1))),
     ("gram_u", classOf[GramU], c => GramU(c.head)))
 
+  /** Registers each function the session does not already have, so a
+    * session that has them (from [[GraftExtensions]] or an earlier
+    * call) is left untouched.
+    */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     fns.foreach { case (name, cls, builder) =>
-      registry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name),
-        builder)
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id))
+        registry.registerFunction(id, new ExpressionInfo(cls.getName, name), builder)
     }
   }
 }
 
-/** `spark.sql.extensions` entry point. */
+/** Session extension installing [[VectorExprs.fns]]; `graft.GraftSession`
+  * adds it to every session it builds.
+  */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
     VectorExprs.fns.foreach { case (name, cls, builder) =>

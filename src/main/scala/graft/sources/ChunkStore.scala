@@ -103,7 +103,6 @@ object ChunkStore {
   def addDocuments(spark: SparkSession, chunks: DataFrame, storePath: String,
                    orderCols: Seq[String],
                    embedder: graft.Embedder = graft.HashedTokenEmbedder): Boolean = {
-    graft.plans.VectorExprs.register(spark) // default embedder = embed64 kernel
     val embType = chunks.select(embedder.embed(col("text"))).schema.head.dataType
     val storeType = storeSchema("embedding").dataType
     require(embType.catalogString == storeType.catalogString,
@@ -147,7 +146,6 @@ object ChunkStore {
   def similaritySearch(spark: SparkSession, storePath: String, query: String,
                        topK: Int = 5,
                        embedder: graft.Embedder = graft.HashedTokenEmbedder): DataFrame = {
-    graft.plans.VectorExprs.register(spark)
     readStore(spark, storePath)
       .select(col("id"), col("text"), col("metadata"),
         call_function("cosine_f", col("embedding"), embedder.embed(lit(query))).as("similarity"))

@@ -197,7 +197,6 @@ object Streaming {
     * the same property that bounds the batch join bounds this state).
     */
   def nearDupPairsStream(spark: SparkSession, docs: DataFrame): Dataset[NearDupPair] = {
-    graft.plans.VectorExprs.register(spark)
     import spark.implicits._
     val banded = docs
       .selectExpr("doc_id",
@@ -302,7 +301,6 @@ object Streaming {
   def scoreAgainstQueries(docs: DataFrame, queries: DataFrame): Dataset[ScoredDoc] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.plans.VectorExprs.register(spark)
     docs.crossJoin(broadcast(queries))
       .selectExpr("q_id", "doc_id", "cosine_f(embedding, q_emb) AS sim")
       .as[ScoredDoc]
@@ -745,7 +743,6 @@ object Streaming {
     graft.QueryDef(
       "st_ivf_build",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val embSchema = StructType(Seq(
           StructField("vec_id", LongType),
           StructField("embedding", ArrayType(FloatType)),
@@ -801,7 +798,6 @@ object Streaming {
     graft.QueryDef(
       "st_semdedup",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val embSchema = StructType(Seq(
           StructField("vec_id", LongType),
           StructField("embedding", ArrayType(FloatType)),
@@ -1072,7 +1068,6 @@ object Streaming {
     graft.QueryDef(
       "st_hll",
       (spark, dir) => {
-        graft.plans.VectorExprs.register(spark)
         val half = 1L << 52
         val src = spark.readStream
           .schema(documentsSchema)

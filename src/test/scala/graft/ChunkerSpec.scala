@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property tests for the C1 chunker (FIXTURES.md §1.5): the Spark SQL
-  * implementation is compared row-for-row against an independent Scala
+/** Property tests for the C1 chunker (FIXTURES.md §1.5): the shipped
+  * `Chunker.chunk` is compared row-for-row against an independent Scala
   * model of the reference semantics (`src/pdf_extractor.py:43-55`), and
   * the chunk invariants are asserted over a generated corpus.
   */
@@ -38,19 +38,8 @@ class ChunkerSpec extends SparkSpec {
   private lazy val results: Map[Long, Seq[(Option[Int], String)]] = {
     import spark.implicits._
     val df = corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val out = df
-      .selectExpr("doc_id", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
-      .where("length(tc) >= 10")
-      .selectExpr(
-        "doc_id",
-        """explode(CASE WHEN length(tc) <= 500
-                        THEN array(named_struct('chunk_number', cast(null AS int), 'chunk_text', tc))
-                        ELSE filter(transform(sequence(0, length(tc) - 1, 450),
-                                    i -> named_struct('chunk_number', cast(i div 450 + 1 AS int),
-                                                      'chunk_text', substring(tc, i + 1, 500))),
-                                    s -> length(s.chunk_text) >= 50)
-                   END) AS c""")
-      .selectExpr("doc_id", "c.chunk_number", "c.chunk_text")
+    val out = operators.Chunker.chunk(df, "doc_id")
+      .select("doc_id", "chunk_number", "chunk_text")
       .collect()
       .map(r => (r.getLong(0), (Option(r.get(1)).map(_.asInstanceOf[Int]), r.getString(2))))
       .toSeq

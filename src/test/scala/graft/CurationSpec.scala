@@ -89,7 +89,6 @@ class CurationSpec extends SparkSpec {
 
   test("repetition: planted boilerplate scores high, varied text low") {
     import spark.implicits._
-    graft.plans.VectorExprs.register(spark)
     val df = Seq(
       (1L, "spam spam spam spam spam spam spam spam spam spam"),
       (2L, "every word in this perfectly varied sentence differs completely"))

@@ -33,7 +33,6 @@ class DedupSpec extends SparkSpec {
 
   test("exactSubstrSpans == brute-force maximal repeated spans on a toy corpus") {
     import spark.implicits._
-    graft.plans.VectorExprs.register(spark)
     val k = 4
     val shared = "alpha beta gamma delta epsilon zeta" // 6 tokens: 3 windows merge into ONE span
     val shared2 = "one two three four"                 // exactly k tokens: single-window span

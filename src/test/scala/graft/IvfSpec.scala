@@ -56,7 +56,6 @@ class IvfSpec extends SparkSpec {
 
     // monotone recall vs brute force: nprobe=2 finds at least as many of
     // the true top-5 as nprobe=1
-    graft.plans.VectorExprs.register(spark)
     val qLit = qVec.map(v => s"cast($v AS float)").mkString("array(", ", ", ")")
     val brute = embeddings()
       .selectExpr("vec_id", s"round(cosine_f(embedding, $qLit), 6) AS similarity")
@@ -70,7 +69,6 @@ class IvfSpec extends SparkSpec {
   }
 
   test("PQ/ADC: self-match ranks first, approx top-10 overlaps exact top-10") {
-    graft.plans.VectorExprs.register(spark)
     val approx = Knn.queries.find(_.name == "v7_pq_adc").get
       .run(spark, "/root/testdata/sf0.001")
       .collect().map(_.getAs[Long]("vec_id")).toSeq
@@ -89,7 +87,6 @@ class IvfSpec extends SparkSpec {
   }
 
   test("IVF-PQ: results come only from the probed clusters, scores bounded, deterministic") {
-    graft.plans.VectorExprs.register(spark)
     val v8 = Knn.queries.find(_.name == "v8_ivfpq").get
     val rows = v8.run(spark, "/root/testdata/sf0.001").collect()
     assert(rows.length == 10)
@@ -148,7 +145,6 @@ class IvfSpec extends SparkSpec {
     val ivfAll = Knn.ivfSearch(spark, path, centroids(), qVec, k = 5, nprobe = 8)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
 
-    graft.plans.VectorExprs.register(spark)
     val qLit = qVec.map(v => s"cast($v AS float)").mkString("array(", ", ", ")")
     val brute = embeddings()
       .selectExpr("vec_id", s"round(cosine_f(embedding, $qLit), 6) AS similarity")

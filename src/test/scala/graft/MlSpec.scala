@@ -15,7 +15,6 @@ class MlSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private def normalized() = {
-    graft.plans.VectorExprs.register(spark)
     Tables.embeddings(spark, sf)
       .selectExpr("vec_id", "label",
         """CASE WHEN sqrt(aggregate(transform(embedding, x -> cast(x AS double) * cast(x AS double)), 0D, (a, v) -> a + v)) = 0D
@@ -72,7 +71,6 @@ class MlSpec extends SparkSpec {
       .getAs[scala.collection.Seq[Float]](0).toSeq
     val full = graft.operators.Knn.ivfSearch(spark, dir, cent, q, k = 5, nprobe = k)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
-    graft.plans.VectorExprs.register(spark)
     val qLit = q.map(v => s"cast($v AS float)").mkString("array(", ", ", ")")
     val brute = embeddings
       .selectExpr("vec_id", s"round(cosine_f(embedding, $qLit), 6) AS sim")

@@ -52,7 +52,6 @@ class MultimodalSpec extends SparkSpec {
 
   test("resize: byte_stride kernel ≡ the hex-string formulation, byte for byte") {
     import spark.implicits._
-    graft.plans.VectorExprs.register(spark)
     // multi-byte UTF-8 and a stride that doesn't divide the length —
     // the two addressing schemes must still agree on every byte
     val df = Seq((1L, "The quick brown fox jumps over the lazy dog " * 8),
@@ -118,7 +117,6 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("mm_ahash_neardup: banding finds exactly the brute-force Hamming ≤ 3 pairs") {
-    graft.plans.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val banded = Registry.byName("mm_ahash_neardup").run(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -139,7 +137,6 @@ class MultimodalSpec extends SparkSpec {
 
   test("phash: invariant to uniform brightness shift, sensitive to structure") {
     import spark.implicits._
-    graft.plans.VectorExprs.register(spark)
     // bytes in [128, 228]: pixel = b - 128, so +5 on every byte is a
     // uniform +5 pixel shift (no abs() folding)
     val base = Array.tabulate(128)(i => (128 + (i * 7) % 100).toByte)

@@ -33,7 +33,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("v3_knn_topk: top-k is TakeOrderedAndProject over the native cosine") {
-    graft.plans.VectorExprs.register(spark)
     val p = plan("v3_knn_topk")
     assert(p.contains("TakeOrderedAndProject"))
     assert(p.contains("cosine_f"))
@@ -87,7 +86,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("native text-hash kernels run inside WholeStageCodegen") {
-    graft.plans.VectorExprs.register(spark)
     Seq("dd_minhash_lsh" -> "minhash16", "dd_simhash" -> "simhash60").foreach {
       case (q, fn) =>
         val df = Registry.byName(q).run(spark, sf)
@@ -99,7 +97,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("assignToCentroids / v5_ivf_knn: corpus side is exchange-free (broadcast NLJ + argmax_cos, no Window)") {
-    graft.plans.VectorExprs.register(spark)
     import org.apache.spark.sql.functions.col
     val e = Tables.embeddings(spark, sf)
     val assigned = graft.operators.Knn.assignToCentroids(
@@ -122,7 +119,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("mm_resize / mm_frame_sample: byte-native plans — no hex round-trip") {
-    graft.plans.VectorExprs.register(spark)
     Seq("mm_resize", "mm_frame_sample").foreach { q =>
       val p = plan(q)
       assert(!p.contains("hex("), s"$q still addresses bytes through hex strings")
@@ -366,7 +362,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("v12_knn_classify: corpus reduces through the bounded-heap aggregator") {
-    graft.plans.VectorExprs.register(spark)
     val p = plan("v12_knn_classify")
     // the top-k must be the typed ObjectHashAggregate (≤ k rows per
     // query cross the wire) fed by the broadcast query probe — never a
@@ -398,7 +393,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("v13_filtered_knn: the label filter scores via a broadcast HASH join") {
-    graft.plans.VectorExprs.register(spark)
     val p = plan("v13_filtered_knn")
     // the metadata constraint must join BEFORE scoring as a hash join
     // keyed on label — each corpus row scores only against queries of
@@ -514,7 +508,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("v1_embed: the embed64 kernel keeps embedding scan-shaped — no aggregate") {
-    graft.plans.VectorExprs.register(spark)
     val p = plan("v1_embed")
     // r1–r8 embedded via explode → groupBy(doc, bucket) → pivot — two
     // corpus-sized exchanges; the kernel computes the whole vector in
@@ -643,7 +636,6 @@ class PlanShapeSpec extends SparkSpec {
       "ranked and ideal top-K must both be TakeOrdered cuts")
   }
   test("tp_fim / tp_mlm_masks / dd_cdc_chunks: row-local transforms plan ZERO exchanges") {
-    graft.plans.VectorExprs.register(spark)
     // the 100 TB claim for the corruption/chunking preps is literal:
     // one scan, no shuffle of any kind anywhere in the plan
     Seq("tp_fim", "tp_mlm_masks", "dd_cdc_chunks").foreach { q =>

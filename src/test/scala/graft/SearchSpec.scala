@@ -58,7 +58,6 @@ class SearchSpec extends SparkSpec {
     // hash the boilerplate's own 20-token windows directly and check
     // each has document frequency ≥ the planted-doc count — pins the
     // span hashing to the planting, independent of the per-doc rollup
-    graft.plans.VectorExprs.register(spark)
     import org.apache.spark.sql.functions._
     val nPlanted = Tables.documents(spark, sf).where("doc_id % 7 = 0").count()
     val boilerSpans = spark.sql(
@@ -188,7 +187,6 @@ class SearchSpec extends SparkSpec {
     val plain = graft.operators.Knn.queries.find(_.name == "v3_knn_topk").get
       .run(spark, sf) // query vec 0; recompute plain top-5 for vec 10 instead
     import spark.implicits._
-    graft.plans.VectorExprs.register(spark)
     val e = Tables.embeddings(spark, sf)
     val q = e.where("vec_id = 10").selectExpr("embedding AS q_emb")
     val top5 = e.crossJoin(org.apache.spark.sql.functions.broadcast(q))

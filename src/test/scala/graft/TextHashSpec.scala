@@ -1,7 +1,5 @@
 package graft
 
-import graft.plans.VectorExprs
-
 /** Native text-hash kernel tests (graft.plans.TextHash): exact parity
   * with the SQL md5/lambda formulations they replaced — the dedup
   * family's DuckDB oracles still use the SQL form, so hash-for-hash
@@ -13,7 +11,6 @@ class TextHashSpec extends SparkSpec {
 
   private def toksDf(texts: Seq[String]) = {
     import spark.implicits._
-    VectorExprs.register(spark)
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "tc")
       .selectExpr("id", "split(tc, ' ') AS toks", "tc")
   }
@@ -134,7 +131,6 @@ class TextHashSpec extends SparkSpec {
 
   test("rank52 matches the bin()+regexp rank for boundary and random hashes") {
     import spark.implicits._
-    VectorExprs.register(spark)
     val half = 1L << 52
     val rng = new scala.util.Random(7)
     val hs = Seq(0L, 1L, 2L, half - 1, half, half + 1, (1L << 59) | 5L,
@@ -165,7 +161,6 @@ class TextHashSpec extends SparkSpec {
 
   test("nfc_normalize: composition, singleton, reorder, fast path, null") {
     import spark.implicits._
-    graft.plans.VectorExprs.register(spark)
     val rows = Seq(
       (1L, Some("café")), // decomposed → composed
       (2L, Some("Å")), // angstrom sign singleton → Å
@@ -190,7 +185,6 @@ class TextHashSpec extends SparkSpec {
 
   test("del_hashes matches polynomial hashes of materialized deletion variants") {
     import spark.implicits._
-    VectorExprs.register(spark)
     // the reference form: materialize every deletion-variant STRING
     // (what dd_record_linkage shuffled before the kernel) and hash it
     // with the same base-1000003 wrapping polynomial — element 0 is

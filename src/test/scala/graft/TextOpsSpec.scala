@@ -48,7 +48,6 @@ class TextOpsSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     val row = Registry.byName("ta_vocab_hll").run(spark, sf).collect().head
     val est = row.getAs[Double]("hll_est")
-    graft.plans.VectorExprs.register(spark)
     val truth = Tables.documents(spark, sf)
       .selectExpr("regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
       .selectExpr("split(tc, ' ') AS toks")

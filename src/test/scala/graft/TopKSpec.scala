@@ -10,7 +10,6 @@ class TopKSpec extends SparkSpec {
 
   test("aggregator top-k equals the rank-window top-k on the batch kNN scores") {
     import spark.implicits._
-    graft.plans.VectorExprs.register(spark)
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = e.where("vec_id < 8")
       .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_emb"))

@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.VectorExprs
 import org.apache.spark.sql.functions._
 
 /** Native vector expression tests: SQL registration, codegen vs
@@ -11,7 +10,6 @@ class VectorExprsSpec extends SparkSpec {
 
   private def df() = {
     import spark.implicits._
-    VectorExprs.register(spark)
     Seq(
       (1L, Seq(1.0f, 2.0f, 3.0f), Seq(4.0f, 5.0f, 6.0f)),
       (2L, Seq(0.0f, 0.0f, 1.0f), Seq(0.0f, 1.0f, 0.0f)),
@@ -43,7 +41,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("double arrays are accepted too") {
-    VectorExprs.register(spark)
     import spark.implicits._
     val r = Seq((Seq(1.0, 2.0), Seq(3.0, 4.0))).toDF("a", "b")
       .selectExpr("dot_f(a, b) AS d").collect().head.getDouble(0)
@@ -51,7 +48,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("null inputs yield null, not a crash") {
-    VectorExprs.register(spark)
     import spark.implicits._
     val r = Seq((Option.empty[Seq[Float]], Seq(1.0f)))
       .toDF("a", "b").selectExpr("dot_f(a, b) AS d").collect().head
@@ -65,7 +61,6 @@ class VectorExprsSpec extends SparkSpec {
     */
   private def argmaxDf() = {
     import spark.implicits._
-    VectorExprs.register(spark)
     Seq(
       // plain best: candidate 1 is exactly q
       (1L, Seq(1.0f, 0.0f), Seq(Seq(0.9f, 0.1f), Seq(1.0f, 0.0f), Seq(0.0f, 1.0f))),
@@ -104,7 +99,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("argmax_cos: null q or null candidate array yields null") {
-    VectorExprs.register(spark)
     import spark.implicits._
     val r = Seq((Option.empty[Seq[Float]], Option(Seq(Seq(1.0f)))),
         (Option(Seq(1.0f)), Option.empty[Seq[Seq[Float]]]))
@@ -115,7 +109,6 @@ class VectorExprsSpec extends SparkSpec {
   // --------------------------------------------------------- byte_stride
 
   test("byte_stride: byte-for-byte equal to the hex-lambda formulation") {
-    VectorExprs.register(spark)
     import spark.implicits._
     // multi-byte UTF-8 included: the kernel must be byte- (not char-) exact
     val df = Seq((1L, "hello world, this is a longer payload", 3),
@@ -139,7 +132,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("byte_stride: stride below 1 is identity; nulls propagate") {
-    VectorExprs.register(spark)
     import spark.implicits._
     val id = Seq(Tuple1("xyz")).toDF("t")
       .selectExpr("byte_stride(encode(t, 'UTF-8'), 0) AS b").collect().head
@@ -151,7 +143,6 @@ class VectorExprsSpec extends SparkSpec {
 
   test("byte_energy: hand-computed slices, clamped edges, null propagation") {
     import spark.implicits._
-    VectorExprs.register(spark)
     // "abc" = 97 98 99 → |b−128| = 31 30 29
     val rows = Seq(
       (1L, Some("abc"), 0, 160), // full (truncated) window: 31+30+29
