@@ -102,23 +102,12 @@ object Bench {
     * not a failure).
     */
   private def bpeDepthBench(spark: SparkSession, sfDir: String, depths: Seq[Int]): Unit = {
-    import org.apache.spark.sql.graft.CheckpointOps.release
-    // warmup: release both returned checkpointed frames immediately —
-    // discarding them would hold the warmup corpus's block sets in the
-    // block manager for the whole depth grid (the exact leak bpeLearn's
-    // own release discipline exists to prevent)
-    locally {
-      val (wm, wc) = graft.operators.Curation.bpeLearn(spark, "/root/testdata/sf0.001", 5)
-      release(wm); release(wc)
-    }
+    graft.operators.Curation.bpeLearn(spark, sfDir, 1) // warmup, off the clock
     val rows = depths.map { d =>
       System.gc()
       val t0 = System.nanoTime()
-      val (m, cur) = graft.operators.Curation.bpeLearn(spark, sfDir, d)
-      val learned = m.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      release(m); release(cur)
-      (d, learned, sec)
+      val learned = graft.operators.Curation.bpeLearn(spark, sfDir, d).merges.size
+      (d, learned, (System.nanoTime() - t0) / 1e9)
     }
     val qs = rows.map { case (d, l, s) =>
       s""""m$d":{"requested":$d,"learned":$l,"sec":$s}""" }.mkString("{", ",", "}")

@@ -29,7 +29,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *               Same flag-derived-membership rule as streamBench.
   * @param resetMemo for queries whose RESULT is memoized in a holder
   *               (gr_labelprop's label table, tp_bpe_train's merges,
-  *               ml_train_linear's chain): drop + release the memo so a
+  *               ml_train_linear's chain): drop the memo (and release
+  *               its fences, where it holds any — the BPE model is
+  *               plain driver values, so its reset only drops) so a
   *               timed bench pass measures the kernel, not a cached
   *               read. Input-level memos (purchaseEdges) stay — sharing
   *               an input table across queries is legitimate; caching a

@@ -802,70 +802,46 @@ object Curation {
     // ----------------------- BPE vocabulary induction (tokenizer train)
     // The missing tokenizer-side operator: learn the first 10 BPE
     // merges from the corpus itself, exactly the way production BPE
-    // trainers do it — NOT over raw text, but over the WORD-FREQUENCY
-    // TABLE. That one factoring is the whole scale story: the corpus
-    // is read once to count words, and every merge round thereafter
-    // touches only the vocab table (bounded by distinct words, not
-    // corpus bytes — at 100 TB the vocab is millions of rows while the
-    // corpus is trillions of tokens). Each round: adjacent-symbol
-    // pairs explode from the per-word symbol sequences weighted by
-    // word count, one hash aggregate picks the most frequent pair
-    // (ties by symbol order, both engines), the 1-row winner
-    // broadcasts back and every word merges it via a single string
-    // replace. Symbol sequences are stored pipe-TERMINATED ('a|b|c|')
-    // so the merge pattern 'a|b|' owns its trailing separator:
-    // replacements never share a boundary character, which makes
-    // leftmost-nonoverlapping replace IDENTICAL to greedy BPE merging
-    // in both engines (validated: 'a|b|a|b|' → 'ab|ab|', 'a|a|a|' →
-    // 'aa|a|'). Output: the 10 learned merges with their counts plus
-    // the post-merge corpus token total — the artifact a tokenizer
-    // run ships. Rounds are checkpoint-fenced so the plan stays O(1)
-    // per round (the pageRank discipline).
+    // trainers (HF tokenizers, SentencePiece) do it — NOT over raw
+    // text, but over the WORD-FREQUENCY TABLE. That one factoring is
+    // the whole scale story: one distributed word-count pass reads the
+    // corpus, and the merge rounds then run on the driver over the
+    // collected word-type table ([[bpeLearn]]), bounded by distinct
+    // words, not corpus bytes — at 100 TB the vocab is millions of
+    // rows while the corpus is trillions of tokens. Each round:
+    // adjacent-symbol pairs counted from the per-word symbol sequences
+    // weighted by word count, the most frequent pair wins (ties by
+    // symbol order, UTF-8 binary in both engines), and every word
+    // merges it via a single string replace. Symbol sequences are
+    // stored pipe-TERMINATED ('a|b|c|') so the merge pattern 'a|b|'
+    // owns its trailing separator: replacements never share a boundary
+    // character, which makes leftmost-nonoverlapping replace IDENTICAL
+    // to greedy BPE merging in both engines (validated: 'a|b|a|b|' →
+    // 'ab|ab|', 'a|a|a|' → 'aa|a|'). Output: the 10 learned merges
+    // with their counts plus the post-merge corpus token total — the
+    // artifact a tokenizer run ships.
     QueryDef(
       "tp_bpe_train",
       (spark, dir) => {
-        val (merges, cur) = bpeLearned(spark, dir)
-        val total = cur
-          .selectExpr("wc", "cast(size(filter(split(seq, '[|]'), x -> x != '')) AS bigint) AS ns")
-          .groupBy().agg(expr("cast(sum(wc * ns) AS bigint) AS cnt"))
-          .selectExpr("-1L AS round", "'(tokens)' AS a", "'' AS b", "'' AS merged", "cnt")
-        merges.unionByName(total)
+        import spark.implicits._
+        val model = bpeLearned(spark, dir)
+        (model.merges.zipWithIndex.map { case ((a, b, cnt), i) => (i + 1L, a, b, a + b, cnt) } :+
+          ((-1L, "(tokens)", "", "", model.tokens)))
+          .toDF("round", "a", "b", "merged", "cnt")
       },
-      Some {
-        val Rounds = 10
-        val iters = (1 to Rounds).map { r => s"""
-        p$r AS MATERIALIZED (
-          SELECT syms[i] AS a, syms[i + 1] AS b, sum(wc)::BIGINT AS cnt
-          FROM (SELECT wc, list_filter(string_split(seq, '|'), x -> x != '') AS syms FROM v${r - 1}),
-               unnest(generate_series(1, len(syms) - 1)) AS t(i)
-          GROUP BY 1, 2),
-        t$r AS MATERIALIZED (SELECT a, b, cnt FROM p$r ORDER BY cnt DESC, a, b LIMIT 1),
-        v$r AS MATERIALIZED (
-          SELECT w, wc, replace(seq, a || '|' || b || '|', a || b || '|') AS seq
-          FROM v${r - 1}, t$r)"""
-        }.mkString(",")
-        s"""
-        WITH v0 AS MATERIALIZED (
-          SELECT w, count(*)::BIGINT AS wc,
-                 array_to_string(list_transform(generate_series(1, length(w)), i -> w[i]), '|') || '|' AS seq
-          FROM (SELECT unnest(string_split(${Fns.cleanTextDuck("text")}, ' ')) AS w
-                FROM documents)
-          WHERE w != '' GROUP BY w),
-        $iters
-        ${(1 to Rounds).map(r => s"SELECT ${r}::BIGINT AS round, a, b, a || b AS merged, cnt FROM t$r").mkString("\n        UNION ALL\n        ")}
+      Some(s"""$bpeOracleLearn
+        ${(1 to BpeRounds).map(r => s"SELECT ${r}::BIGINT AS round, a, b, a || b AS merged, cnt FROM t$r").mkString("\n        UNION ALL\n        ")}
         UNION ALL
         SELECT -1::BIGINT, '(tokens)', '', '',
                sum(wc * len(list_filter(string_split(seq, '|'), x -> x != '')))::BIGINT
-        FROM v$Rounds"""
-      },
+        FROM v$BpeRounds"""),
       resetMemo = Some((s, d) => resetBpeLearned(s, d))),
 
     // ------------------------------ BPE encode with the learned merges
     // The tokenizer lifecycle's second half: take tp_bpe_train's 10
-    // learned merges (shared via the memoized learner — the pair
-    // trains once per session) and ENCODE the corpus with them, the
-    // way a tokenizer ships. The merge table is vocab-bounded and tiny
-    // (10 rows — a bounded driver collect, like Knn's probe ids), so
+    // learned merges (read straight off the memoized driver-side model
+    // — the pair trains once per session) and ENCODE the corpus with
+    // them, the way a tokenizer ships. The merge table is 10 pairs, so
     // application is a single scan-local projection: each document
     // becomes its per-word pipe-terminated symbol string and the 10
     // replaces compose as one nested codegen'd expression — no joins,
@@ -877,14 +853,11 @@ object Curation {
     QueryDef(
       "tp_bpe_apply",
       (spark, dir) => {
-        val (merges, _) = bpeLearned(spark, dir)
-        val ms = merges.orderBy("round").collect()
-          .map(r => (r.getAs[String]("a"), r.getAs[String]("b")))
         def esc(s: String) =
           "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
         val rep0 = "concat_ws(' ', transform(filter(split(tc, ' '), x -> x != ''), " +
           "w -> concat(array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '|'), '|')))"
-        val repN = ms.foldLeft(rep0) { case (acc, (a, b)) =>
+        val repN = bpeLearned(spark, dir).merges.foldLeft(rep0) { case (acc, (a, b, _)) =>
           s"replace($acc, ${esc(a + "|" + b + "|")}, ${esc(a + b + "|")})"
         }
         Tables.documents(spark, dir)
@@ -897,31 +870,12 @@ object Curation {
             "CASE WHEN n_syms = 0 THEN 0L ELSE (n_syms - n_tokens) * 1000000L div n_syms END AS saved_ppm")
       },
       Some {
-        val Rounds = 10
-        val iters = (1 to Rounds).map { r => s"""
-        p$r AS MATERIALIZED (
-          SELECT syms[i] AS a, syms[i + 1] AS b, sum(wc)::BIGINT AS cnt
-          FROM (SELECT wc, list_filter(string_split(seq, '|'), x -> x != '') AS syms FROM v${r - 1}),
-               unnest(generate_series(1, len(syms) - 1)) AS t(i)
-          GROUP BY 1, 2),
-        t$r AS MATERIALIZED (SELECT a, b, cnt FROM p$r ORDER BY cnt DESC, a, b LIMIT 1),
-        v$r AS MATERIALIZED (
-          SELECT w, wc, replace(seq, a || '|' || b || '|', a || b || '|') AS seq
-          FROM v${r - 1}, t$r)"""
-        }.mkString(",")
-        val reps = (1 to Rounds).map { r => s"""
+        val reps = (1 to BpeRounds).map { r => s"""
         r$r AS MATERIALIZED (
           SELECT doc_id, n_syms, replace(rep, a || '|' || b || '|', a || b || '|') AS rep
           FROM r${r - 1}, t$r)"""
         }.mkString(",")
-        s"""
-        WITH v0 AS MATERIALIZED (
-          SELECT w, count(*)::BIGINT AS wc,
-                 array_to_string(list_transform(generate_series(1, length(w)), i -> w[i]), '|') || '|' AS seq
-          FROM (SELECT unnest(string_split(${Fns.cleanTextDuck("text")}, ' ')) AS w
-                FROM documents)
-          WHERE w != '' GROUP BY w),
-        $iters,
+        s"""$bpeOracleLearn,
         r0 AS MATERIALIZED (
           SELECT doc_id,
                  (length(rep) - length(replace(rep, '|', '')))::BIGINT AS n_syms, rep
@@ -937,7 +891,7 @@ object Curation {
                CASE WHEN n_syms = 0 THEN 0
                     ELSE (n_syms - (length(rep) - length(replace(rep, '|', '')))) * 1000000 // n_syms
                END::BIGINT AS saved_ppm
-        FROM r$Rounds"""
+        FROM r$BpeRounds"""
       }),
 
     // --------------------------------- full semantic curation pipeline
@@ -2317,81 +2271,105 @@ object Curation {
   )
 
 
-  /** One-shot holder for the learned BPE state (the Ml.trainChain
-    * discipline): the 10-round merge learning over the word-frequency
-    * table runs ONCE per (session, dir) and is shared by tp_bpe_train
-    * (which reports the merges) and tp_bpe_apply (which encodes the
-    * corpus with them).
+  /** The 10 BPE merge rounds tp_bpe_train reports and tp_bpe_apply
+    * encodes with.
     */
-  private final class BpeHolder(spark: org.apache.spark.sql.SparkSession,
-                                dir: String) {
-    @volatile var built = false
-    lazy val value: (DataFrame, DataFrame) = {
-      val v = bpeLearn(spark, dir, rounds = 10)
-      built = true
-      v
-    }
+  private val BpeRounds = 10
+
+  /** The DuckDB form of [[bpeLearn]], shared by the tp_bpe_train and
+    * tp_bpe_apply oracles: the word-frequency vocab `v0` (w, wc, seq),
+    * then per round r the pair counts `p$r`, the winning pair `t$r` and
+    * the merged vocab `v$r`. Ends inside the WITH list, after
+    * `v$BpeRounds`.
+    */
+  private val bpeOracleLearn: String = {
+    val iters = (1 to BpeRounds).map { r => s"""
+        p$r AS MATERIALIZED (
+          SELECT syms[i] AS a, syms[i + 1] AS b, sum(wc)::BIGINT AS cnt
+          FROM (SELECT wc, list_filter(string_split(seq, '|'), x -> x != '') AS syms FROM v${r - 1}),
+               unnest(generate_series(1, len(syms) - 1)) AS t(i)
+          GROUP BY 1, 2),
+        t$r AS MATERIALIZED (SELECT a, b, cnt FROM p$r ORDER BY cnt DESC, a, b LIMIT 1),
+        v$r AS MATERIALIZED (
+          SELECT w, wc, replace(seq, a || '|' || b || '|', a || b || '|') AS seq
+          FROM v${r - 1}, t$r)"""
+    }.mkString(",")
+    s"""
+        WITH v0 AS MATERIALIZED (
+          SELECT w, count(*)::BIGINT AS wc,
+                 array_to_string(list_transform(generate_series(1, length(w)), i -> w[i]), '|') || '|' AS seq
+          FROM (SELECT unnest(string_split(${Fns.cleanTextDuck("text")}, ' ')) AS w
+                FROM documents)
+          WHERE w != '' GROUP BY w),
+        $iters"""
   }
 
-  /** Learn `rounds` BPE merges over the word-frequency table. The
-    * corpus is scanned ONCE (the vocab build); every merge round
-    * touches only the vocab-bounded state — pair counts, a 1-row
-    * argmax, one replace projection — so round cost is flat in corpus
-    * size and the depth cost is linear in `rounds` (the
-    * SPARK_GRAFT_BPE_DEPTH bench mode measures exactly that grid).
-    * Two depth-scaling details that 10 rounds never exposed:
-    * superseded per-round vocab checkpoints are RELEASED (at 100+
-    * rounds they otherwise pile vocab-sized dead blocks into the
-    * block manager), and learning STOPS when no adjacent pair remains
-    * (every word fused to one symbol — continuing would cross-join
-    * the vocab against an empty argmax and silently annihilate it).
+  /** Learned BPE state: the merges `(a, b, cnt)` in round order and the
+    * corpus token total after applying all of them.
+    */
+  private[graft] final case class BpeModel(merges: Vector[(String, String, Long)], tokens: Long)
+
+  /** Learn up to `rounds` BPE merges over the word-frequency table.
+    * The corpus is scanned ONCE, by one distributed word-count pass;
+    * its `(wc, seq)` rows are collected and every merge round runs on
+    * the driver over those arrays, so round cost is flat in corpus
+    * size and linear in vocabulary size (the SPARK_GRAFT_BPE_DEPTH
+    * bench mode measures the depth grid). Driver memory is bounded by
+    * the vocabulary, not the corpus: a vocabulary too large to collect
+    * fails loudly under `spark.driver.maxResultSize`, never silently.
+    *
+    * The loop keeps Spark SQL's semantics exactly (the same rows the
+    * DuckDB oracle computes): symbols are `seq` split on '|' with empty
+    * pieces dropped; pair counts are `sum(wc)` with ANSI overflow
+    * checks; the winner is the highest count, ties by `a` then `b` in
+    * UTF-8 binary order (Spark's and DuckDB's string order, which
+    * `String.compareTo`'s UTF-16 order breaks for supplementary-plane
+    * symbols); the merge is `String.replace`, leftmost non-overlapping
+    * like `UTF8String.replace`. Learning STOPS when no adjacent pair
+    * remains (every word fused to one symbol), so fewer than `rounds`
+    * merges marks vocab exhaustion; none at all is an error.
     */
   private[graft] def bpeLearn(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, rounds: Int): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.graft.CheckpointOps.release
+                              dir: String, rounds: Int): BpeModel = {
+    import org.apache.spark.unsafe.types.UTF8String
     val vocab = Tables.documents(spark, dir)
       .selectExpr(
         s"${Fns.cleanTextSql("text")} AS tc")
       .selectExpr("explode(split(tc, ' ')) AS w")
       .where("w != ''")
       .groupBy("w").agg(expr("cast(count(*) AS bigint) AS wc"))
-      .selectExpr("w", "wc",
+      .selectExpr("wc",
         "concat(array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '|'), '|') AS seq")
-      .fenced
-    var cur = vocab
-    var merges: DataFrame = null
-    val tops = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var r = 1
+      .collect()
+    val wc = vocab.map(_.getLong(0))
+    val seq = vocab.map(_.getString(1))
+    def syms(s: String): Array[String] = s.split('|').filter(_.nonEmpty)
+    val utf8 = Ordering.fromLessThan[String] { (x, y) =>
+      UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y)) < 0
+    }
+    val rank = Ordering.Tuple3(Ordering.Long.reverse, utf8, utf8) // cnt DESC, a, b
+    val merges = Vector.newBuilder[(String, String, Long)]
+    var r = 0
     var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val top = cur
-        .selectExpr("wc", "filter(split(seq, '[|]'), x -> x != '') AS syms")
-        .where("size(syms) >= 2") // Spark sequence(1,0) counts DOWN — guard it out
-        .selectExpr("wc",
-          "explode(transform(sequence(1, size(syms) - 1), i -> named_struct('a', element_at(syms, i), 'b', element_at(syms, i + 1)))) AS p")
-        .selectExpr("p.a AS a", "p.b AS b", "wc")
-        .groupBy("a", "b").agg(expr("cast(sum(wc) AS bigint) AS cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1)
-        .fenced // 1 row — feeds the merge row AND the replace
-      if (top.isEmpty) exhausted = true
+    while (r < rounds && !exhausted) {
+      val pairs = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for (i <- seq.indices; s = syms(seq(i)); j <- 0 until s.length - 1) {
+        val k = (s(j), s(j + 1))
+        pairs(k) = Math.addExact(pairs.getOrElse(k, 0L), wc(i))
+      }
+      if (pairs.isEmpty) exhausted = true
       else {
-        tops += top
-        val row = top.selectExpr(s"${r}L AS round", "a", "b", "concat(a, b) AS merged", "cnt")
-        merges = if (merges == null) row else merges.unionByName(row)
-        val next = cur.crossJoin(broadcast(top.select(col("a").as("ma"), col("b").as("mb"))))
-          .selectExpr("w", "wc",
-            "replace(seq, concat(ma, '|', mb, '|'), concat(ma, mb, '|')) AS seq")
-          .fenced
-        release(cur) // superseded vocab fence (incl. the initial build)
-        cur = next
+        val (cnt, a, b) = pairs.iterator.map { case ((a, b), c) => (c, a, b) }.min(rank)
+        merges += ((a, b, cnt))
+        for (i <- seq.indices) seq(i) = seq(i).replace(s"$a|$b|", s"$a$b|")
         r += 1
       }
     }
-    require(merges != null, s"corpus under $dir yielded no mergeable pairs")
-    val m = merges.fenced
-    tops.foreach(release) // 1-row blocks, folded into m now
-    (m, cur)
+    require(r > 0, s"corpus under $dir yielded no mergeable pairs")
+    val tokens = seq.indices.foldLeft(0L) { (t, i) =>
+      Math.addExact(t, Math.multiplyExact(wc(i), syms(seq(i)).length.toLong))
+    }
+    BpeModel(merges.result(), tokens)
   }
 
   private val gateLakeCache = scala.collection.concurrent.TrieMap
@@ -2425,31 +2403,30 @@ object Curation {
   }
 
   private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), BpeHolder]
+    .empty[(org.apache.spark.sql.SparkSession, String), BpeModel]
 
-  /** (learned merges, final post-merge word-frequency vocab), memoized
-    * per (session, dir) with stopped-session eviction.
+  /** The 10-round [[BpeModel]], memoized per (session, dir) with
+    * stopped-session eviction; shared by tp_bpe_train (which reports
+    * the merges) and tp_bpe_apply (which encodes the corpus with them).
+    * The model is 10 merges and a count, so nothing is persisted and a
+    * lost race at most learns twice; the learn itself holds the
+    * collected vocabulary on the driver (see [[bpeLearn]] for that bound).
     */
   private[graft] def bpeLearned(spark: org.apache.spark.sql.SparkSession,
-                                dir: String): (DataFrame, DataFrame) = {
+                                dir: String): BpeModel = {
     bpeCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    val fresh = new BpeHolder(spark, dir)
-    bpeCache.putIfAbsent((spark, dir), fresh).getOrElse(fresh).value
+    bpeCache.getOrElseUpdate((spark, dir), bpeLearn(spark, dir, BpeRounds))
   }
 
-  /** Drop + release the memoized BPE state so the next [[bpeLearned]]
-    * call re-learns. tp_bpe_train's OUTPUT-level memo: Bench resets it
+  /** Drop the memoized model so the next [[bpeLearned]] call
+    * re-learns. tp_bpe_train's OUTPUT-level memo: Bench resets it
     * before each timed pass so the lane row measures the merge
-    * learning, not a cached checkpoint read (tp_bpe_apply keeps
-    * reading the memo — the merges are its INPUT).
+    * learning, not a cached read (tp_bpe_apply keeps reading the memo
+    * — the merges are its INPUT).
     */
   private[graft] def resetBpeLearned(spark: org.apache.spark.sql.SparkSession,
-                                     dir: String): Unit = {
-    import org.apache.spark.sql.graft.CheckpointOps.release
-    bpeCache.remove((spark, dir)).foreach { h =>
-      if (h.built) { release(h.value._1); release(h.value._2) }
-    }
-  }
+                                     dir: String): Unit =
+    bpeCache -= ((spark, dir))
 
   /** Layout-independent dense rank over the doc-id set: (doc_id, rk)
     * with rk the 0-based position in ascending doc_id order — the draw

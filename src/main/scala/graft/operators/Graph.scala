@@ -258,7 +258,7 @@ object Graph {
       // materialize INSIDE the conf guard (the pageRank lesson); `out`
       // is then self-contained, so every per-round fence releases —
       // 16 superseded O(V) block sets would otherwise pile up per
-      // bench pass (the bpeLearn release discipline)
+      // bench pass
       val out = h.selectExpr("id", "'customer' AS kind", "id div 2 AS key",
           "h AS score_ppm")
         .unionByName(a.selectExpr("id", "'supplier' AS kind", "id div 2 AS key",
@@ -293,8 +293,8 @@ object Graph {
 
   /** Memoized 5-round label propagation over the purchase graph —
     * shared by gr_labelprop (which reports the communities) and
-    * gr_modularity (which scores them), the purchaseEdges/bpeLearned
-    * holder discipline.
+    * gr_modularity (which scores them), the purchaseEdges holder
+    * discipline.
     */
   private final class LabelHolder(spark: SparkSession, dir: String) {
     @volatile var built = false

@@ -201,24 +201,6 @@ class ChunkStoreSpec extends SparkSpec {
       .limit(topK)
   }
 
-  private def jobsRunBy(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    // the listener bus is asynchronous; its drain is spark-private
-    def drain(): Unit = {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    drain()
-    sc.addSparkListener(l)
-    try { body; drain() } finally sc.removeSparkListener(l)
-    jobs.get
-  }
-
   test("V3/V4: similaritySearch(...).collect() runs exactly one Spark job") {
     val store = tmp() + "/store"
     ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "page_number", "text"))

@@ -11,6 +11,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // shared session, never stopped per-suite
+
+  /** Spark jobs started while `body` runs. */
+  protected def jobsRunBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // the listener bus is asynchronous; its drain is spark-private
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    drain()
+    sc.addSparkListener(l)
+    try { body; drain() } finally sc.removeSparkListener(l)
+    jobs.get
+  }
 }
 
 object SparkSpec {

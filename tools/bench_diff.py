@@ -50,7 +50,6 @@ ACCEPTED = {
     # solo and the gate was blind to its kernel). Ceilings = measured
     # rebuild cost + in-suite headroom.
     "gr_labelprop": (8.0, "r14 memo reset: row times the 5-round propagation again"),
-    "tp_bpe_train": (3.5, "r14 memo reset: row times the 10-merge learn again"),
     "ml_train_linear": (14.0, "r14 memo reset: row times the epoch chain again"),
     # r16 restored the level-sequential posting (the stacked single-
     # fence form OOMed executor hash aggregates at sf10): five
