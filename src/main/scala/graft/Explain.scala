@@ -89,7 +89,7 @@ object Explain {
     "gr_hits" -> ((s, d) =>
       operators.Graph.hitsRoundPlanForSpec(operators.Graph.purchaseEdges(s, d))),
     "gr_kcore" -> ((s, d) =>
-      operators.Graph.kcoreRoundPlanForSpec(operators.Graph.kcoreEdges(s, d), 3)),
+      operators.Graph.kcoreRoundPlanForSpec(operators.Graph.partEdges(s, d), 3)),
     "dd_cluster" -> ((s, d) =>
       operators.Curation.ccRoundPlanForSpec(
         operators.Dedup.minhashPairs(s, d).select("doc_a", "doc_b")))

@@ -33,35 +33,34 @@ object Curation {
     * `(doc_id, component)` where component is the min doc_id reachable
     * — a unique fixpoint, independent of execution order.
     */
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val edges = pairs.toDF("doc_a", "doc_b")
-      .unionByName(pairs.toDF("doc_a", "doc_b").selectExpr("doc_b AS doc_a", "doc_a AS doc_b"))
-      .fenced
-    import org.apache.spark.sql.graft.CheckpointOps.release
-    var curFence = edges.select(col("doc_a").as("doc_id")).distinct()
-      .withColumn("component", col("doc_id"))
-      .fenced
-    var labels = curFence
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      // change count rides the fence job as an observed metric — the
-      // r16 gr_hits discipline; the old formulation paid a separate
-      // filter-count job per round over the just-materialized blocks
-      val obs = org.apache.spark.sql.Observation(s"cc_changed_$rounds")
-      val next = ccRound(edges, labels)
-        .observe(obs,
-          expr("sum(CASE WHEN component != old THEN 1 ELSE 0 END) AS changed"))
-        .fenced
-      val changed = Option(obs.get("changed")).fold(0L)(_.asInstanceOf[Long])
-      release(curFence) // superseded round (next is materialized)
-      curFence = next
-      labels = next.select("doc_id", "component")
-      converged = changed == 0
-      rounds += 1
+  def connectedComponents(pairs: DataFrame, maxRounds: Int = 20): DataFrame =
+    Rounds.scope { fs =>
+      val (edges, labels0) = ccFences(fs, pairs)
+      // state: (labels, converged)
+      val ((labels, _), _) = fs.loop((labels0, false), maxRounds)(_._2) {
+        case (round, (labels, _)) =>
+          // change count rides the fence job as an observed metric — the
+          // r16 gr_hits discipline; the old formulation paid a separate
+          // filter-count job per round over the just-materialized blocks
+          val obs = org.apache.spark.sql.Observation(s"cc_changed_${round - 1}")
+          val next = fs.fence(ccRound(edges, labels)
+            .observe(obs,
+              expr("sum(CASE WHEN component != old THEN 1 ELSE 0 END) AS changed")))
+          val changed = Option(obs.get("changed")).fold(0L)(_.asInstanceOf[Long])
+          (next.select("doc_id", "component"), changed == 0)
+      }
+      labels
     }
-    release(edges) // labels reads only the final round's fence
-    labels
+
+  /** The fenced both-directions edge table and the initial labels
+    * (every vertex its own component) — shared by the loop and
+    * [[ccRoundPlanForSpec]].
+    */
+  private def ccFences(fs: Rounds, pairs: DataFrame): (DataFrame, DataFrame) = {
+    val edges = fs.fence(pairs.toDF("doc_a", "doc_b")
+      .unionByName(pairs.toDF("doc_a", "doc_b").selectExpr("doc_b AS doc_a", "doc_a AS doc_b")))
+    (edges, fs.fence(edges.select(col("doc_a").as("doc_id")).distinct()
+      .withColumn("component", col("doc_id"))))
   }
 
   /** One lazy min-label-propagation round (pre-observe, pre-fence):
@@ -86,22 +85,15 @@ object Curation {
     * checkpoint scan), built on the same fenced both-directions edge
     * table and initial labels the loop starts from.
     */
-  private[graft] def ccRoundPlanForSpec(pairs: DataFrame): String = {
-    import org.apache.spark.sql.graft.CheckpointOps.release
-    val edges = pairs.toDF("doc_a", "doc_b")
-      .unionByName(pairs.toDF("doc_a", "doc_b").selectExpr("doc_b AS doc_a", "doc_a AS doc_b"))
-      .fenced
-    val labels = edges.select(col("doc_a").as("doc_id")).distinct()
-      .withColumn("component", col("doc_id"))
-      .fenced
-    val obs = org.apache.spark.sql.Observation("cc_changed_spec")
-    val s = ccRound(edges, labels)
-      .observe(obs,
-        expr("sum(CASE WHEN component != old THEN 1 ELSE 0 END) AS changed"))
-      .queryExecution.executedPlan.toString
-    release(edges); release(labels)
-    s
-  }
+  private[graft] def ccRoundPlanForSpec(pairs: DataFrame): String =
+    Rounds.scope { fs =>
+      val (edges, labels) = ccFences(fs, pairs)
+      val obs = org.apache.spark.sql.Observation("cc_changed_spec")
+      ccRound(edges, labels)
+        .observe(obs,
+          expr("sum(CASE WHEN component != old THEN 1 ELSE 0 END) AS changed"))
+        .queryExecution.executedPlan.toString
+    }
 
   /** Cleaned text + md5 for the gate/dedup stages (shared fragment). */
   private val cleanCols =

@@ -44,141 +44,79 @@ object Graph {
   private def iterWidth(df: DataFrame): Int =
     df.sparkSession.sessionState.conf.numShufflePartitions
 
-  /** Run a Pregel-style round loop with adaptive execution and
-    * whole-stage codegen OFF, restoring both afterwards. Measured on
-    * the sf0.1 purchase graph (20-round PageRank, idle machine, both
-    * orders tried, 2 reps): baseline ~14-17 s, AQE off ~13-15 s,
-    * codegen off ~11-12 s, both off **~8-9 s** — per-round wall is
-    * driver-bound, not executor-bound (338 s of task time fit in a
-    * 56 s wall at 32 threads). Every round is a NEW plan with fresh
-    * expr-ids, so whole-stage codegen compiles ~3 never-reused
-    * classes per round (Janino time on the critical path) and AQE
-    * re-optimizes every shuffle stage to coalesce a few-MB exchange
-    * it should leave alone. Interpreted eval is slower per row, but a
-    * round touches only O(E/n) rows per task — the driver overhead
-    * dominates by an order of magnitude. The loop STRUCTURE
-    * (stationary co-partitioned edges, shuffle_hash score joins) is
-    * unchanged and scale-independent; this trades a per-row constant
-    * that is irrelevant at test SF and amortized at 100 TB (where
-    * task time, not plan time, dominates and a fixed plan per round
-    * still skips the per-round compile).
+  /** One lazy PageRank round over the stationary fences (shared by
+    * [[pageRank]], [[personalizedPageRank]], [[pageRankConverged]], and
+    * the plan-evidence seams). The score table CARRIES outdeg, so the
+    * per-round quotient is a row-local projection — no join against a
+    * degree table at all (r17; the r16 shape paid a V-sized
+    * shuffled-hash quotient join per round, and the pre-r16 shape
+    * carried outdeg on the E-sized edge fence and divided per edge).
+    * `sum(q)` with q = r div outdeg is bit-identical to the per-edge
+    * `sum(r div outdeg)`: every edge out of `src` contributes the same
+    * floored quotient. The score side keeps the shuffle_hash hint: the
+    * stationary edge fence streams against a per-partition hash map of
+    * the O(V/n) (id, outdeg, r) rows, never an E-sized sort. The new
+    * score is `teleport` plus the damped contributions; every other
+    * column of `verts` rides along.
     */
-  private def withIterConf[T](spark: SparkSession)(f: => T): T =
-    withIterConf(spark, codegen = false)(f)
+  private def prRound(eFence: DataFrame, verts: DataFrame, r: DataFrame,
+                      teleport: String = s"$BasePpm"): DataFrame = {
+    val q = r.selectExpr("id AS src", "r div outdeg AS q")
+    val contrib = eFence
+      .join(q.hint("shuffle_hash"), "src")
+      .groupBy("dst").agg(expr("cast(sum(q) AS bigint) AS c"))
+    verts.join(contrib.selectExpr("dst AS id", "c").hint("shuffle_hash"),
+        Seq("id"), "left")
+      .selectExpr(verts.columns.toIndexedSeq :+
+        s"$teleport + ($Damping * coalesce(c, 0L)) div 100 AS r": _*)
+  }
 
-  private def withIterConf[T](spark: SparkSession, codegen: Boolean)(f: => T): T = {
-    val conf = spark.conf
-    val aqe = conf.get("spark.sql.adaptive.enabled")
-    val wsc = conf.get("spark.sql.codegen.wholeStage")
-    val cp = conf.get("spark.sql.constraintPropagation.enabled")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.codegen.wholeStage", codegen.toString)
-    // constraint propagation re-derives the constraint set of every
-    // join/filter subtree on each round's fresh plan — pure optimizer
-    // inference (no plan it enables matters in these loops: the round
-    // joins are all hinted shuffle_hash on advertised partitionings)
-    // that grows with plan depth between fences. Paired back-to-back
-    // A/B on gr_pagerank_conv sf0.1 (r16): 44.6 -> 42.6 s and
-    // 43.2 -> 40.7 s with it off (~5%), same rows. Scoped to the
-    // iteration and restored after — global queries keep the
-    // inference (e.g. IsNotNull pushdown from join conditions).
-    conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try f finally {
-      conf.set("spark.sql.adaptive.enabled", aqe)
-      conf.set("spark.sql.codegen.wholeStage", wsc)
-      conf.set("spark.sql.constraintPropagation.enabled", cp)
-    }
+  /** The stationary PageRank fences over a fenced `(src, dst)` edge
+    * list. The edge table is hash-partitioned on src ONCE and
+    * checkpointed with the partitioning ADVERTISED (a plain
+    * localCheckpoint forgets it under AQE and every round re-shuffled
+    * the E-sized table), so every round's edge⋈score join reuses this
+    * layout and only the O(V) score table moves — the edge list (the
+    * 100 TB side) never re-shuffles. The fence is (src, dst) ONLY: it is
+    * re-scanned once PER ROUND, so it stays as narrow as the algorithm
+    * allows (guide §2.3; profiled before the r16 split: 10.9 GB of
+    * fence-block re-reads per run at sf0.1, a third of it outdeg).
+    * outdeg lives on the V-sized vertex table and rides the score rows
+    * (see [[prRound]]). That one table serves as both the vertex set and
+    * the degree table: group-by-src IS distinct-src here (every vertex
+    * appears as a source in the both-directions edge list). `verts`
+    * adds per-vertex columns before the vertex table is fenced.
+    */
+  private def prFences(fs: Rounds, e: DataFrame,
+                       verts: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
+    val w = iterWidth(e)
+    (fs.fence(e, w, "src"),
+      fs.fence(verts(e.groupBy("src").agg(expr("cast(count(*) AS bigint) AS outdeg"))
+        .selectExpr("src AS id", "outdeg")), w, "id"))
   }
 
   /** Integer PageRank over a directed edge list `(src, dst)`. Every
     * vertex must appear as a source (undirected graphs: union both
     * directions); init score = 1e6 ppm.
+    *
+    * A FIXED iteration count needs no per-round convergence action, so
+    * lineage stays lazy — one job plans all rounds (materializing every
+    * round tripled wall-clock); a fence only kicks in every 6 rounds, on
+    * walks deep enough for plan analysis to grow noticeable. The result
+    * is materialized INSIDE the iteration confs, so the rounds execute
+    * under them (returned lazily, they would plan at the caller's action
+    * with codegen+AQE back on).
     */
-  /** One lazy PageRank round over the stationary fences (shared by
-    * [[pageRank]], [[pageRankConverged]], and the plan-evidence
-    * seams). The score table CARRIES outdeg, so the per-round quotient
-    * is a row-local projection — no join against a degree table at
-    * all (r17; the r16 shape paid a V-sized shuffled-hash quotient
-    * join per round, and the pre-r16 shape carried outdeg on the
-    * E-sized edge fence and divided per edge). `sum(q)` with q =
-    * r div outdeg is bit-identical to the per-edge `sum(r div
-    * outdeg)`: every edge out of `src` contributes the same floored
-    * quotient. The score side keeps the shuffle_hash hint: the
-    * stationary edge fence streams against a per-partition hash map
-    * of the O(V/n) (id, outdeg, r) rows, never an E-sized sort.
-    */
-  private def prRound(eFence: DataFrame, vertsDeg: DataFrame,
-                      r: DataFrame): DataFrame = {
-    val q = r.selectExpr("id AS src", "r div outdeg AS q")
-    val contrib = eFence
-      .join(q.hint("shuffle_hash"), "src")
-      .groupBy("dst").agg(expr("cast(sum(q) AS bigint) AS c"))
-    vertsDeg.join(contrib.selectExpr("dst AS id", "c").hint("shuffle_hash"),
-        Seq("id"), "left")
-      .selectExpr("id", "outdeg",
-        s"$BasePpm + ($Damping * coalesce(c, 0L)) div 100 AS r")
-  }
-
-  def pageRank(edges: DataFrame, iters: Int = Iters): DataFrame = {
-    val e = edges.toDF("src", "dst").fenced
-    withIterConf(e.sparkSession) {
-    val w = iterWidth(edges)
-    // hash-partition the edge table on src ONCE and checkpoint it with
-    // the partitioning ADVERTISED (checkpointHashPartitioned — a plain
-    // localCheckpoint forgets it under AQE and every round re-shuffled
-    // the E-sized table), so every round's edge⋈score join reuses this
-    // layout and only the O(V) score table moves — the edge list (the
-    // 100 TB side) never re-shuffles. The fence is (src, dst) ONLY:
-    // outdeg lives on the V-sized vertex table and rides the score
-    // rows (see prRound), so the re-scanned-per-round payload carries
-    // no degree column (guide §2.3 — the r16 prc narrowing, now
-    // applied family-wide).
-    val eFence = checkpointHashPartitioned(e, w, "src")
-    // one V-sized table serves as both the vertex set and the degree
-    // table: group-by-src IS distinct-src here (every vertex appears
-    // as a source in the both-directions edge list)
-    val vertsDeg = checkpointHashPartitioned(
-      e.groupBy("src").agg(expr("cast(count(*) AS bigint) AS outdeg"))
-        .selectExpr("src AS id", "outdeg"), w, "id")
-    var r = vertsDeg.withColumn("r", lit(1000000L))
-    var loopFence: DataFrame = null
-    (1 to iters).foreach { i =>
-      r = prRound(eFence, vertsDeg, r)
-      // a FIXED iteration count needs no per-round convergence action,
-      // so lineage stays lazy — one job plans all rounds (materializing
-      // every round tripled wall-clock); the fence only kicks in on
-      // walks deep enough for plan analysis to grow noticeable. Each
-      // fence supersedes the previous one — release it, or deep runs
-      // leak a fence per 6 rounds (blocks locally; corpus-sized FILE
-      // sets under the reliable mode)
-      if (i % 6 == 0 && i < iters) {
-        val prev = loopFence
-        r = r.fenced
-        loopFence = r
-        if (prev != null) release(prev)
-      }
+  def pageRank(edges: DataFrame, iters: Int = Iters): DataFrame =
+    Rounds.iterate(edges.toDF("src", "dst")) { (fs, e) =>
+      val (eFence, vertsDeg) = prFences(fs, e)
+      val r = fs.fixed(vertsDeg.withColumn("r", lit(1000000L)), iters, every = 6)(
+        prRound(eFence, vertsDeg, _))(fs.fence(_))
+      fs.fence(r.select("id", "r"), iterWidth(e), "id")
     }
-    // materialize INSIDE the guard so the rounds execute under the
-    // iteration confs (returned lazily, they would plan at the
-    // caller's action with codegen+AQE back on)
-    val out = checkpointHashPartitioned(r.select("id", "r"), w, "id")
-    // the result is materialized — drop the iteration-only checkpoint
-    // blocks so repeated invocations (bench passes) don't pile dead
-    // blocks into the block manager
-    if (loopFence != null) release(loopFence)
-    release(eFence); release(vertsDeg); release(e)
-    out
-    }
-  }
 
   private val HitsIters = 8
 
-  /** Kleinberg HITS over a symmetric ±-coded purchase edge list (only
-    * the even→odd customer→supplier direction is used). Integer
-    * max-normalized ppm scores, 8 rounds — see gr_hits's commentary.
-    * Returns one row per vertex with its role score at round 8
-    * (hub score for customers, authority score for suppliers).
-    */
   /** The two lazy HITS half-rounds (pre-observe, pre-fence), factored
     * so the loop and [[hitsRoundPlanForSpec]] share one definition:
     * raw authority = per-dst sum of hub scores over the src-stationary
@@ -199,74 +137,60 @@ object Graph {
   /** One HITS half-round's executed-plan string (authority pass with
     * its riding max observation) — plan evidence for the fenced loop.
     */
-  private[graft] def hitsRoundPlanForSpec(edges: DataFrame): String = {
-    val dirE = edges.toDF("src", "dst").where("src % 2 = 0").fenced
-    withIterConf(dirE.sparkSession) {
-      val w = iterWidth(dirE)
-      val eSrc = checkpointHashPartitioned(dirE, w, "src")
+  private[graft] def hitsRoundPlanForSpec(edges: DataFrame): String =
+    Rounds.iterate(edges.toDF("src", "dst").where("src % 2 = 0")) { (fs, dirE) =>
+      val eSrc = fs.fence(dirE, iterWidth(dirE), "src")
       val h = eSrc.select(col("src").as("id")).distinct()
         .withColumn("h", lit(1000000L))
       val obs = org.apache.spark.sql.Observation("hits_amax_spec")
-      val s = hitsAuthRaw(eSrc, h)
+      hitsAuthRaw(eSrc, h)
         .observe(obs, expr("max(ar) AS am"))
         .queryExecution.executedPlan.toString
-      release(eSrc); release(dirE)
-      s
     }
-  }
 
+  /** Kleinberg HITS over a symmetric ±-coded purchase edge list (only
+    * the even→odd customer→supplier direction is used). Integer
+    * max-normalized ppm scores, 8 rounds — see gr_hits's commentary.
+    * Returns one row per vertex with its role score at round 8
+    * (hub score for customers, authority score for suppliers).
+    */
   def hits(edges: DataFrame, iters: Int = HitsIters): DataFrame = {
     require(iters >= 1, "hits needs at least one round")
-    val dirE = edges.toDF("src", "dst").where("src % 2 = 0").fenced
-    withIterConf(dirE.sparkSession) {
+    Rounds.iterate(edges.toDF("src", "dst").where("src % 2 = 0")) { (fs, dirE) =>
       val w = iterWidth(dirE)
-      val eSrc = checkpointHashPartitioned(dirE, w, "src")
-      val eDst = checkpointHashPartitioned(dirE, w, "dst")
-      var h = eSrc.select(col("src").as("id")).distinct()
+      val eSrc = fs.fence(dirE, w, "src")
+      val eDst = fs.fence(dirE, w, "dst")
+      val h0 = eSrc.select(col("src").as("id")).distinct()
         .withColumn("h", lit(1000000L))
-      var a: DataFrame = null
-      val fences = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      (1 to iters).foreach { i =>
-        // the round max must MATERIALIZE, so unlike the pageRank loop
-        // (which stays lazy for a fixed round count) the raw per-round
-        // aggregate is checkpoint-fenced FIRST — without the fence each
-        // max re-executes the whole prior-round lineage and the plan
-        // re-runs combinatorially (first measured shape: 48 s solo at
-        // sf0.1 for 8 rounds; fenced: ~1 s). The max itself rides the
-        // FENCE job as an observed metric (r16): the eager checkpoint
-        // is already an action over every araw/hraw row, so a
-        // CollectMetrics node yields the round max for free — replacing
-        // the 2 extra aggregate jobs + broadcast exchanges + crossJoins
-        // per round the old amax/hmax DataFrames cost (16 scheduler
-        // round-trips across the run), and the normalization becomes a
-        // row-local projection with a literal divisor.
-        val obsA = org.apache.spark.sql.Observation(s"hits_amax_$i")
-        val araw = hitsAuthRaw(eSrc, h)
-          .observe(obsA, expr("max(ar) AS am"))
-          .fenced
-        fences += araw
-        val am = obsA.get("am").asInstanceOf[Long]
-        a = araw.selectExpr("dst AS id", s"ar * 1000000 div ${am}L AS a")
-        val obsH = org.apache.spark.sql.Observation(s"hits_hmax_$i")
-        val hraw = hitsHubRaw(eDst, a)
-          .observe(obsH, expr("max(hrw) AS hm"))
-          .fenced
-        fences += hraw
-        val hm = obsH.get("hm").asInstanceOf[Long]
-        h = hraw.selectExpr("src AS id", s"hrw * 1000000 div ${hm}L AS h")
+      val ((h, a), _) = fs.loop((h0, null: DataFrame), iters)(_ => false) {
+        case (i, (h, _)) =>
+          // the round max must MATERIALIZE, so unlike the pageRank loop
+          // (which stays lazy for a fixed round count) the raw per-round
+          // aggregate is checkpoint-fenced FIRST — without the fence each
+          // max re-executes the whole prior-round lineage and the plan
+          // re-runs combinatorially (first measured shape: 48 s solo at
+          // sf0.1 for 8 rounds; fenced: ~1 s). The max itself rides the
+          // FENCE job as an observed metric (r16): the eager checkpoint
+          // is already an action over every araw/hraw row, so a
+          // CollectMetrics node yields the round max for free — replacing
+          // the 2 extra aggregate jobs + broadcast exchanges + crossJoins
+          // per round the old amax/hmax DataFrames cost (16 scheduler
+          // round-trips across the run), and the normalization becomes a
+          // row-local projection with a literal divisor.
+          val obsA = org.apache.spark.sql.Observation(s"hits_amax_$i")
+          val araw = fs.fence(hitsAuthRaw(eSrc, h).observe(obsA, expr("max(ar) AS am")))
+          val am = obsA.get("am").asInstanceOf[Long]
+          val a = araw.selectExpr("dst AS id", s"ar * 1000000 div ${am}L AS a")
+          val obsH = org.apache.spark.sql.Observation(s"hits_hmax_$i")
+          val hraw = fs.fence(hitsHubRaw(eDst, a).observe(obsH, expr("max(hrw) AS hm")))
+          val hm = obsH.get("hm").asInstanceOf[Long]
+          (hraw.selectExpr("src AS id", s"hrw * 1000000 div ${hm}L AS h"), a)
       }
-      // materialize INSIDE the conf guard (the pageRank lesson); `out`
-      // is then self-contained, so every per-round fence releases —
-      // 16 superseded O(V) block sets would otherwise pile up per
-      // bench pass
-      val out = h.selectExpr("id", "'customer' AS kind", "id div 2 AS key",
+      // materialize INSIDE the iteration confs (the pageRank lesson)
+      fs.fence(h.selectExpr("id", "'customer' AS kind", "id div 2 AS key",
           "h AS score_ppm")
         .unionByName(a.selectExpr("id", "'supplier' AS kind", "id div 2 AS key",
-          "a AS score_ppm"))
-        .fenced
-      fences.foreach(release)
-      release(eSrc); release(eDst); release(dirE)
-      out
+          "a AS score_ppm")))
     }
   }
 
@@ -346,21 +270,54 @@ object Graph {
     * round shape (1 contribution exchange, 2 shuffled-hash joins, no
     * sort) without reaching into the guarded loop.
     */
-  private[graft] def oneRoundPlanForSpec(edges: DataFrame): String = {
-    val e = edges.toDF("src", "dst").fenced
-    withIterConf(e.sparkSession) {
-      val w = iterWidth(e)
-      val eFence = checkpointHashPartitioned(e, w, "src")
-      val vertsDeg = checkpointHashPartitioned(
-        e.groupBy("src").agg(expr("cast(count(*) AS bigint) AS outdeg"))
-          .selectExpr("src AS id", "outdeg"), w, "id")
-      val r = vertsDeg.withColumn("r", lit(1000000L))
-      val s = prRound(eFence, vertsDeg, r)
+  private[graft] def oneRoundPlanForSpec(edges: DataFrame): String =
+    Rounds.iterate(edges.toDF("src", "dst")) { (fs, e) =>
+      val (eFence, vertsDeg) = prFences(fs, e)
+      prRound(eFence, vertsDeg, vertsDeg.withColumn("r", lit(1000000L)))
         .queryExecution.executedPlan.toString
-      release(eFence); release(vertsDeg); release(e)
-      s
     }
-  }
+
+  /** Rounds between two cycle checks of [[pageRankConverged]]. Any EVEN
+    * k that divides 120 is semantics-identical (the realized period is
+    * 2; odd k would never detect it). k = 6 is the measured sweet spot
+    * of the block-depth-vs-fence-count trade (r13, sf0.1 solo, idle:
+    * k = 2 → 37.4 s, 4 → 37.1 s, 6 → 35.1 s, 10 → 40.2 s — deeper lazy
+    * blocks pay per-stage lineage-serialization, shallower ones pay
+    * fence+cycle-check jobs; the r17 re-grid found no win beyond 6–8).
+    */
+  private val CheckEvery = 6
+
+  /** The block-ending cycle check of [[pageRankConverged]]: fence the
+    * state WITH the id-layout advertised, so the next block's rounds
+    * start from a co-partitioned state table, and count the rows that
+    * differ from the previous fence while the fence materializes. Both
+    * sides advertise hash(id, w), so the join is exchange-free, and
+    * shuffle_hash keeps it sort-free; both hold exactly one row per
+    * vertex id, so the inner join is row-preserving and d == 0 ⟺ no
+    * row differs. The count RIDES the fence job as an observed metric
+    * (the gr_hits/k-core r16 discipline) instead of a separate isEmpty
+    * JOB per block (~17 extra scheduler barriers over a 102-round run).
+    */
+  private def prcCheck(r: DataFrame, prev: DataFrame, obs: org.apache.spark.sql.Observation): DataFrame =
+    r.join(prev.selectExpr("id", "r AS rp").hint("shuffle_hash"), "id")
+      .observe(obs, expr("count_if(r != rp) AS d"))
+      .select("id", "outdeg", "r")
+
+  /** One pageRankConverged round PLUS the block-ending cycle-check
+    * join, executed-plan string — the plan-evidence seam for the
+    * fenced loop (the outer dump collapses to a checkpoint scan).
+    * Built exactly the way the loop builds it: stationary fences, one
+    * shared [[prRound]] (quotient is a row-local projection — outdeg
+    * rides the score rows), then the exchange-free [[prcCheck]].
+    */
+  private[graft] def prcRoundPlanForSpec(edges: DataFrame): String =
+    Rounds.iterate(edges.toDF("src", "dst")) { (fs, e) =>
+      val (eFence, vertsDeg) = prFences(fs, e)
+      val r0 = fs.fence(vertsDeg.withColumn("r", lit(1000000L)), iterWidth(e), "id")
+      prcCheck(prRound(eFence, vertsDeg, r0), r0,
+          org.apache.spark.sql.Observation("prc_diff_spec"))
+        .queryExecution.executedPlan.toString
+    }
 
   /** PageRank iterated to the exact integer FIXPOINT CYCLE instead of a
     * fixed round count. Measured fact (sf0.01 purchase graph, and the
@@ -373,225 +330,108 @@ object Graph {
     * period-≤2 fixpoint.
     *
     * Determinism across engines without agreeing on the detection
-    * round: scores are fenced every `checkEvery` rounds (lazy
+    * round: scores are fenced every [[CheckEvery]] rounds (lazy
     * composition in between — materializing each round tripled
     * wall-clock) and compared to the previous fence. `r_t == r_{t-k}`
     * proves a cycle of period dividing k; detection lands on a
     * multiple of k, and 120 − t is then also a multiple of k, so the
     * detected fence carries EXACTLY the scores of the oracle's fixed
-    * 120th round. Any EVEN k that divides 120 is therefore
-    * semantics-identical (the realized period is 2; odd k would never
-    * detect it). k = 6 is the measured sweet spot of the
-    * block-depth-vs-fence-count trade (r13, sf0.1 solo, idle:
-    * k = 2 → 37.4 s, 4 → 37.1 s, 6 → 35.1 s, 10 → 40.2 s — deeper
-    * lazy blocks pay per-stage lineage-serialization, shallower ones
-    * pay fence+cycle-check jobs).
+    * 120th round. The last block is clamped, so a `maxIters` that is
+    * not a multiple of k still runs exactly `maxIters` rounds.
+    *
+    * Reaching `maxIters` with no cycle detected raises
+    * IllegalStateException: a graph with a longer period (or genuine
+    * divergence) has no fixpoint this loop can certify, and the
+    * round-`maxIters` scores would silently mismatch a fixed-round
+    * oracle.
     */
-  /** One pageRankConverged round PLUS the block-ending cycle-check
-    * join, executed-plan string — the plan-evidence seam for the
-    * fenced loop (the outer dump collapses to a checkpoint scan).
-    * Built exactly the way the loop builds it: stationary fences, one
-    * shared [[prRound]] (quotient is a row-local projection — outdeg
-    * rides the score rows), then the exchange-free
-    * hash(id,w)⋈hash(id,w) compare-to-previous-fence join whose
-    * count_if rides the fence job as an observed metric.
-    */
-  private[graft] def prcRoundPlanForSpec(edges: DataFrame): String = {
-    val e = edges.toDF("src", "dst").fenced
-    withIterConf(e.sparkSession) {
-      val w = iterWidth(edges)
-      val eFence = checkpointHashPartitioned(e, w, "src")
-      val vertsDeg = checkpointHashPartitioned(
-        e.groupBy("src").agg(expr("cast(count(*) AS bigint) AS outdeg"))
-          .selectExpr("src AS id", "outdeg"), w, "id")
-      val r0 = checkpointHashPartitioned(
-        vertsDeg.withColumn("r", lit(1000000L)), w, "id")
-      val obs = org.apache.spark.sql.Observation("prc_diff_spec")
-      val s = prRound(eFence, vertsDeg, r0)
-        .join(r0.selectExpr("id", "r AS rp").hint("shuffle_hash"), "id")
-        .observe(obs, expr("count_if(r != rp) AS d"))
-        .select("id", "outdeg", "r")
-        .queryExecution.executedPlan.toString
-      release(eFence); release(vertsDeg); release(r0); release(e)
-      s
-    }
-  }
-
-  def pageRankConverged(edges: DataFrame, maxIters: Int = 190,
-                        checkEvery: Int = 6): DataFrame = {
-    val e = edges.toDF("src", "dst").fenced
-    withIterConf(e.sparkSession) {
-    val w = iterWidth(edges)
-    // The stationary table a round re-reads is the 100 TB side and is
-    // re-scanned once PER ROUND — keep it as narrow as the algorithm
-    // allows (guide §2.3 "narrower types / project early", applied to
-    // the fence): (src, dst) only. Profiled before the r16 split:
-    // 10.9 GB of fence-block re-reads per run at sf0.1 — dropping
-    // outdeg cut the re-read payload by a third. r17 goes further:
-    // outdeg RIDES THE SCORE ROWS (vertsDeg is both the vertex set and
-    // the degree table; the periodic fence carries id, outdeg, r), so
-    // the per-round quotient is a row-local projection and the
-    // V-sized quotient join the r16 shape paid per round disappears —
-    // see prRound for the bit-identity argument.
-    val eFence = checkpointHashPartitioned(e, w, "src")
-    val vertsDeg = checkpointHashPartitioned(
-      e.groupBy("src").agg(expr("cast(count(*) AS bigint) AS outdeg"))
-        .selectExpr("src AS id", "outdeg"), w, "id")
-    var r = checkpointHashPartitioned(
-      vertsDeg.withColumn("r", lit(1000000L)), w, "id")
-    var prevFence = r
-    var i = 0
-    var cycled = false
-    while (i < maxIters && !cycled) {
-      // clamp the last block so a maxIters that is not a multiple of
-      // checkEvery still runs EXACTLY maxIters rounds (an unclamped
-      // block would overshoot and the no-cycle diagnostic would
-      // misreport the returned round)
-      val block = math.min(checkEvery, maxIters - i)
-      (1 to block).foreach { _ => r = prRound(eFence, vertsDeg, r) }
-      i += block
-      // fence WITH the id-layout advertised: the next block's rounds
-      // start from a co-partitioned state table instead of re-deriving
-      // the layout. The cycle check RIDES the fence job as an observed
-      // metric (the gr_hits/k-core r16 discipline): join the new state
-      // to the previous fence — both advertise hash(id, w), so the
-      // join is exchange-free, and shuffle_hash keeps it sort-free —
-      // and count differing rows while the fence materializes. The old
-      // shape paid a separate isEmpty JOB per block (~17 extra
-      // scheduler barriers over a 102-round run) that re-read both
-      // fenced block sets for one boolean. Both sides hold exactly one
-      // row per vertex id, so the inner join is row-preserving and
-      // d == 0 ⟺ the old "no row differs".
-      val obs = org.apache.spark.sql.Observation(s"prc_diff_$i")
-      r = checkpointHashPartitioned(
-        r.join(prevFence.selectExpr("id", "r AS rp").hint("shuffle_hash"), "id")
-          .observe(obs, expr("count_if(r != rp) AS d"))
-          .select("id", "outdeg", "r"),
-        w, "id")
-      cycled = obs.get("d").asInstanceOf[Long] == 0L
-      if (prevFence ne r) release(prevFence) // superseded fence blocks
-      prevFence = r
-    }
-    // A maxIters exit means NO period-dividing-`checkEvery` cycle was
-    // detected — a graph with a longer period (or genuine divergence)
-    // would silently return the round-`maxIters` state and mismatch a
-    // fixed-round oracle with no clue why. Make that attributable.
-    if (!cycled)
-      System.err.println(
-        s"[graft] pageRankConverged: no period-$checkEvery cycle within " +
-        s"$maxIters rounds — returning round-$i scores; a fixed-round " +
-        "oracle may disagree (raise maxIters or checkEvery for this graph)")
-    else
+  def pageRankConverged(edges: DataFrame, maxIters: Int = 190): DataFrame =
+    Rounds.iterate(edges.toDF("src", "dst")) { (fs, e) =>
+      val w = iterWidth(e)
+      val (eFence, vertsDeg) = prFences(fs, e)
+      val r0 = fs.fence(vertsDeg.withColumn("r", lit(1000000L)), w, "id")
+      // state: (scores, last fence, cycled)
+      val ((r, _, _), out) = fs.loop((r0, r0, false), maxIters)(_._3) {
+        case (i, (r, prev, _)) =>
+          val next = prRound(eFence, vertsDeg, r)
+          if (i % CheckEvery != 0 && i < maxIters) (next, prev, false)
+          else {
+            val obs = org.apache.spark.sql.Observation(s"prc_diff_$i")
+            val fenced = fs.fence(prcCheck(next, prev, obs), w, "id")
+            (fenced, fenced, obs.get("d").asInstanceOf[Long] == 0L)
+          }
+      }
+      if (!out.converged)
+        throw new IllegalStateException(
+          s"pageRankConverged: no period-$CheckEvery cycle within maxIters = " +
+          s"$maxIters rounds (checked every $CheckEvery rounds); the " +
+          s"round-$maxIters scores are not a fixpoint")
       // attributability for wall-clock shifts: the round count is
       // data-dependent (damping x graph structure), so a corpus
       // regeneration can legitimately move it — make that visible
       // instead of letting the bench row drift unexplained (r15: the
       // 2026-08-13 testdata vintage moved sf0.1 detection 84 -> ~132)
       System.err.println(
-        s"[graft] pageRankConverged: period-$checkEvery cycle detected at round $i")
-    release(eFence); release(vertsDeg); release(e)
-    r.select("id", "r")
+        s"[graft] pageRankConverged: period-$CheckEvery cycle detected at round ${out.rounds}")
+      r.select("id", "r")
     }
-  }
 
   /** Personalized PageRank: teleport mass returns only to the SEED set
     * (seeds start with the full unit mass, non-seeds with 0), so the
     * fixpoint measures proximity to the seeds rather than global
     * centrality. Same integer-ppm arithmetic and per-round shape as
-    * [[pageRank]].
+    * [[pageRank]]: the seed flag rides the V-sized vertex/score rows
+    * beside outdeg.
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-                           iters: Int = Iters): DataFrame = {
-    val e = edges.toDF("src", "dst").fenced
-    withIterConf(e.sparkSession) {
-    val w = iterWidth(edges)
-    // the pageRank r17 shape: narrow (src, dst) edge fence; outdeg and
-    // the seed flag ride the V-sized vertex/score rows so the per-round
-    // quotient is a row-local projection (see prRound's bit-identity
-    // argument — every edge out of src contributes the same floored
-    // quotient either way)
-    val eFence = checkpointHashPartitioned(e, w, "src")
-    val vertsDeg = checkpointHashPartitioned(
-      e.groupBy("src").agg(expr("cast(count(*) AS bigint) AS outdeg"))
-        .selectExpr("src AS id", "outdeg")
-        .join(seeds.toDF("id").withColumn("seed", lit(true)), Seq("id"), "left")
-        .selectExpr("id", "outdeg", "coalesce(seed, false) AS seed"), w, "id")
-    var r = vertsDeg.selectExpr("id", "outdeg", "seed",
-      "CASE WHEN seed THEN 1000000L ELSE 0L END AS r")
-    var loopFence: DataFrame = null
-    (1 to iters).foreach { i =>
-      val q = r.selectExpr("id AS src", "r div outdeg AS q")
-      val contrib = eFence
-        .join(q.hint("shuffle_hash"), "src")
-        .groupBy("dst").agg(expr("cast(sum(q) AS bigint) AS c"))
-      r = vertsDeg.join(contrib.selectExpr("dst AS id", "c").hint("shuffle_hash"),
-          Seq("id"), "left")
-        .selectExpr("id", "outdeg", "seed",
-          s"CASE WHEN seed THEN $BasePpm ELSE 0L END + ($Damping * coalesce(c, 0L)) div 100 AS r")
-      // release superseded in-loop fences (see pageRank)
-      if (i % 6 == 0 && i < iters) {
-        val prev = loopFence
-        r = r.fenced
-        loopFence = r
-        if (prev != null) release(prev)
-      }
+                           iters: Int = Iters): DataFrame =
+    Rounds.iterate(edges.toDF("src", "dst")) { (fs, e) =>
+      val (eFence, vertsDeg) = prFences(fs, e,
+        _.join(seeds.toDF("id").withColumn("seed", lit(true)), Seq("id"), "left")
+          .selectExpr("id", "outdeg", "coalesce(seed, false) AS seed"))
+      val r = fs.fixed(vertsDeg.selectExpr("id", "outdeg", "seed",
+          "CASE WHEN seed THEN 1000000L ELSE 0L END AS r"), iters, every = 6)(
+        prRound(eFence, vertsDeg, _, s"CASE WHEN seed THEN $BasePpm ELSE 0L END"))(
+        fs.fence(_))
+      fs.fence(r.select("id", "r"), iterWidth(e), "id")
     }
-    val out = checkpointHashPartitioned(r.select("id", "r"), w, "id")
-    if (loopFence != null) release(loopFence)
-    release(eFence); release(vertsDeg); release(e)
-    out
-    }
-  }
 
   /** Weighted integer PageRank: each edge carries an integer weight and
     * a source's mass splits proportionally — contribution = (r · w) div
     * Σw(src) per edge, still exact int64 arithmetic (one floor division
     * per edge per round).
     */
-  def pageRankWeighted(edges: DataFrame, iters: Int = Iters): DataFrame = {
-    val e = edges.toDF("src", "dst", "w").fenced
-    withIterConf(e.sparkSession) {
-    val wdt = iterWidth(edges)
-    // the pageRank r17 shape, weighted flavor: the stationary fence is
-    // (src, dst, w) — the per-source weight TOTAL rides the V-sized
-    // vertex/score rows instead of being duplicated onto every edge
-    // row (guide §2.3: one bigint column off the E-sized re-scanned-
-    // per-round payload). The per-edge contribution (rs · w) div sw is
-    // unchanged arithmetic; rs and sw arrive on the score side of the
-    // join instead of sw sitting on the edge side.
-    val eFence = checkpointHashPartitioned(e, wdt, "src")
-    val vertsSw = checkpointHashPartitioned(
-      e.groupBy("src").agg(expr("cast(sum(w) AS bigint) AS sw"))
-        .selectExpr("src AS id", "sw"), wdt, "id")
-    var r = vertsSw.withColumn("r", lit(1000000L))
-    var loopFence: DataFrame = null
-    (1 to iters).foreach { i =>
-      val contrib = eFence
-        .join(r.selectExpr("id AS src", "r AS rs", "sw").hint("shuffle_hash"), "src")
-        .groupBy("dst").agg(expr("cast(sum((rs * w) div sw) AS bigint) AS c"))
-      r = vertsSw.join(contrib.selectExpr("dst AS id", "c").hint("shuffle_hash"),
-          Seq("id"), "left")
-        .selectExpr("id", "sw",
-          s"$BasePpm + ($Damping * coalesce(c, 0L)) div 100 AS r")
-      // release superseded in-loop fences (see pageRank)
-      if (i % 6 == 0 && i < iters) {
-        val prev = loopFence
-        r = r.fenced
-        loopFence = r
-        if (prev != null) release(prev)
-      }
+  def pageRankWeighted(edges: DataFrame, iters: Int = Iters): DataFrame =
+    Rounds.iterate(edges.toDF("src", "dst", "w")) { (fs, e) =>
+      val wdt = iterWidth(e)
+      // the pageRank r17 shape, weighted flavor: the stationary fence is
+      // (src, dst, w) — the per-source weight TOTAL rides the V-sized
+      // vertex/score rows instead of being duplicated onto every edge
+      // row (guide §2.3: one bigint column off the E-sized re-scanned-
+      // per-round payload). The per-edge contribution (rs · w) div sw is
+      // unchanged arithmetic; rs and sw arrive on the score side of the
+      // join instead of sw sitting on the edge side.
+      val eFence = fs.fence(e, wdt, "src")
+      val vertsSw = fs.fence(
+        e.groupBy("src").agg(expr("cast(sum(w) AS bigint) AS sw"))
+          .selectExpr("src AS id", "sw"), wdt, "id")
+      val r = fs.fixed(vertsSw.withColumn("r", lit(1000000L)), iters, every = 6) { r =>
+        val contrib = eFence
+          .join(r.selectExpr("id AS src", "r AS rs", "sw").hint("shuffle_hash"), "src")
+          .groupBy("dst").agg(expr("cast(sum((rs * w) div sw) AS bigint) AS c"))
+        vertsSw.join(contrib.selectExpr("dst AS id", "c").hint("shuffle_hash"),
+            Seq("id"), "left")
+          .selectExpr("id", "sw",
+            s"$BasePpm + ($Damping * coalesce(c, 0L)) div 100 AS r")
+      }(fs.fence(_))
+      fs.fence(r.select("id", "r"), wdt, "id")
     }
-    val out = checkpointHashPartitioned(r.select("id", "r"), wdt, "id")
-    if (loopFence != null) release(loopFence)
-    release(eFence); release(vertsSw); release(e)
-    out
-    }
-  }
 
   /** Synchronous label propagation: `rounds` fixed rounds, each vertex
     * adopting the most frequent neighbor label, ties to the SMALLEST —
     * a deterministic total order. Same stationary-edge iteration shape
-    * as [[pageRank]]. Returns (id, lbl).
+    * as [[pageRank]], with the label table fenced every 3 rounds.
+    * Returns (id, lbl).
     *
     * codegen stays OFF here like the rest of the family — the r11
     * late flip to ON was REVERTED in r13 on measurement: ON costs
@@ -608,15 +448,12 @@ object Graph {
     * adjudication; the committed 1.55 point was ambient-load
     * contamination).
     */
-  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.toDF("src", "dst").fenced
-    withIterConf(e.sparkSession) {
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame =
+    Rounds.iterate(edges.toDF("src", "dst")) { (fs, e) =>
       val w = iterWidth(e)
-      val withE = checkpointHashPartitioned(e, w, "src")
-      val verts = checkpointHashPartitioned(
-        e.select(col("src").as("id")).distinct(), w, "id")
-      var lbls = verts.withColumn("lbl", col("id"))
-      (1 to rounds).foreach { r =>
+      val withE = fs.fence(e, w, "src")
+      val verts = fs.fence(e.select(col("src").as("id")).distinct(), w, "id")
+      val lbls = fs.fixed(verts.withColumn("lbl", col("id")), rounds, every = 3) { lbls =>
         val win = withE
           .join(lbls.selectExpr("id AS src", "lbl").hint("shuffle_hash"), "src")
           .groupBy("dst", "lbl")
@@ -624,19 +461,11 @@ object Graph {
           .groupBy("dst")
           .agg(expr("max(named_struct('c', cnt, 'nl', -lbl)) AS m"))
           .selectExpr("dst AS id", "-m.nl AS wl")
-        lbls = lbls.join(win.hint("shuffle_hash"), Seq("id"), "left")
+        lbls.join(win.hint("shuffle_hash"), Seq("id"), "left")
           .selectExpr("id", "coalesce(wl, lbl) AS lbl")
-        if (r % 3 == 0 && r < rounds) {
-          val old = lbls
-          lbls = checkpointHashPartitioned(lbls, w, "id")
-          release(old) // superseded mid-loop fence (no-op on lazy plans)
-        }
-      }
-      val out = checkpointHashPartitioned(lbls, w, "id")
-      release(withE); release(verts); release(e)
-      out
+      }(fs.fence(_, w, "id"))
+      fs.fence(lbls, w, "id")
     }
-  }
 
   /** Newman modularity of a community assignment over a symmetric
     * directed edge list, exact integer arithmetic (see gr_modularity's
@@ -757,27 +586,16 @@ object Graph {
     // (see pageRankConverged: consecutive-delta never hits 0 here —
     // the exact system settles into a stable 2-cycle around round
     // 72–80). The oracle runs a FIXED 120 rounds; the Spark side
-    // early-exits at the first multiple-of-10 fence inside the cycle —
-    // provably the same scores. bench=false, measured: convergence is
-    // ~16× gr_pagerank's 5 rounds, so an early-exit cannot land below
-    // the fixed-iteration figure on this graph; gr_pagerank stays the
-    // benched representative and this row pins full-convergence
-    // semantics instead.
+    // early-exits at the first cycle check (every 6th round) inside
+    // the cycle — provably the same scores. Benched (the default
+    // bench = true): convergence costs ~16× gr_pagerank's 5 rounds, so
+    // this row times the deep-loop regime that gr_pagerank cannot.
     QueryDef(
       "gr_pagerank_conv",
-      (spark, dir) => {
-        val edges = purchaseEdges(spark, dir)
-        // SPARK_GRAFT_CONV_K: fence-cadence experiment knob (bench
-        // grids only). Any EVEN k is bit-identical on this graph's
-        // period-2 fixpoint (the checkEvery=6 adoption proof), so the
-        // knob clamps odd values up to even rather than let a grid
-        // typo silently change semantics.
-        val k = sys.env.get("SPARK_GRAFT_CONV_K").map(_.toInt)
-          .map(v => v + (v & 1)).getOrElse(6)
-        pageRankConverged(edges, checkEvery = k)
+      (spark, dir) =>
+        pageRankConverged(purchaseEdges(spark, dir))
           .selectExpr("id", "CASE WHEN id % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind",
-            "id div 2 AS key", "r AS score_ppm")
-      },
+            "id div 2 AS key", "r AS score_ppm"),
       Some {
         // Every CTE is MATERIALIZED: DuckDB inlines single-reference
         // CTEs, and 120 inlined iterations build a 120-deep join tree
@@ -935,15 +753,7 @@ object Graph {
     // no float a shuffle could reorder.
     QueryDef(
       "gr_triangles",
-      (spark, dir) => {
-        val os = Tables.lineitem(spark, dir)
-          .where("l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'")
-          .selectExpr("l_orderkey AS ok", "l_partkey AS s").distinct()
-        val edges = os.selectExpr("ok", "s AS a")
-          .join(os.selectExpr("ok", "s AS b"), "ok")
-          .where("a < b").select("a", "b").distinct()
-        triangleReport(edges)
-      },
+      (spark, dir) => triangleReport(partEdges(spark, dir)),
       Some("""
         WITH os AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS s FROM lineitem
                     WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'),
@@ -996,7 +806,7 @@ object Graph {
     // in bench/profile_sf0.1.json + PLANS.md.
     QueryDef(
       "gr_kcore",
-      (spark, dir) => kCore(kcoreEdges(spark, dir), 3),
+      (spark, dir) => kCore(partEdges(spark, dir), 3),
       Some {
         // AS MATERIALIZED: each e_i is referenced three times; an
         // inlined CTE chain re-expands the whole prefix per reference
@@ -1275,8 +1085,9 @@ object Graph {
     // table is checkpointHashPartitioned ONCE per join side (src for
     // the authority step, dst for the hub step) and never re-shuffles;
     // each round moves only the O(V) score tables (shuffle_hash
-    // hints), the round max is a 1-row broadcast, and the whole walk
-    // runs under withIterConf with periodic O(V) fences.
+    // hints), the round max is an observed metric riding each round's
+    // O(V) fence (r16), and the whole walk runs under the iteration
+    // confs (Rounds.iterConfs).
     QueryDef(
       "gr_hits",
       (spark, dir) => hits(purchaseEdges(spark, dir)),
@@ -1489,11 +1300,12 @@ object Graph {
   private[graft] def kCore(edges: DataFrame, k: Int): DataFrame =
     kCoreWithDepth(edges, k)._1
 
-  /** gr_kcore's input: the 1996-shipments part co-purchase graph as a
-    * simple undirected `(a, b)`, `a < b` edge list — factored from the
-    * QueryDef so the plan-evidence seam peels the same graph.
+  /** The 1996-shipments part co-purchase graph (two parts are adjacent
+    * when some 1996 order contains both) as a simple undirected
+    * `(a, b)`, `a < b` edge list — the input of gr_triangles and
+    * gr_kcore, and of the k-core plan-evidence seam.
     */
-  private[graft] def kcoreEdges(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def partEdges(spark: SparkSession, dir: String): DataFrame = {
     val os = Tables.lineitem(spark, dir)
       .where("l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'")
       .selectExpr("l_orderkey AS ok", "l_partkey AS s").distinct()
@@ -1536,64 +1348,55 @@ object Graph {
     * metric, and termination (rm = 0) is known from the fence that
     * produced the state — no extra job.
     */
-  private[graft] def kCoreWithDepth(edges: DataFrame, k: Int): (DataFrame, Int) = {
-    val spark = edges.sparkSession
-    val wMax = spark.sessionState.conf.numShufflePartitions
-    // SCALE-ADAPTIVE wave width (guide §2: derive partitioning from
-    // input size, never a constant tuned for one deployment): the
-    // peel runs O(depth) waves of stages over the stationary fence
-    // and the V-sized degree table, and a width fixed at the session
-    // parallelism makes every tiny wave pay 32-task scheduling for
-    // kilobytes of state (first delta cut measured 6.7 s vs 4.7 s
-    // baseline solo at sf0.1 from exactly that). ~250k edge rows per
-    // task, clamped to the session parallelism: sf0.1 → 1, sf10 → a
-    // dozen, production → the full cluster width. The count that
-    // feeds the sizing rides the one-time full-width materialization
-    // of the wedge join; when the adaptive width equals the session
-    // width (every at-scale run) the re-layout below is skipped, so
-    // the sizing costs nothing there, and at tiny SFs the re-layout
-    // is a block-to-block copy of a few MB.
-    val obsE = org.apache.spark.sql.Observation("kcore_edges")
-    var eDst = checkpointHashPartitioned(
-      edges.selectExpr("a AS src", "b AS dst")
-        .unionByName(edges.selectExpr("b AS src", "a AS dst"))
-        .observe(obsE, expr("count(*) AS n")),
-      wMax, "dst")
-    val nE = obsE.get("n").asInstanceOf[Long]
-    val w = math.max(1L, math.min(wMax.toLong, nE / 250000L + 1L)).toInt
-    if (w != wMax) {
-      val wide = eDst
-      eDst = checkpointHashPartitioned(wide, w, "dst")
-      release(wide)
+  private[graft] def kCoreWithDepth(edges: DataFrame, k: Int): (DataFrame, Int) =
+    Rounds.scope { fs =>
+      val spark = edges.sparkSession
+      val wMax = spark.sessionState.conf.numShufflePartitions
+      // SCALE-ADAPTIVE wave width (guide §2: derive partitioning from
+      // input size, never a constant tuned for one deployment): the
+      // peel runs O(depth) waves of stages over the stationary fence
+      // and the V-sized degree table, and a width fixed at the session
+      // parallelism makes every tiny wave pay 32-task scheduling for
+      // kilobytes of state (first delta cut measured 6.7 s vs 4.7 s
+      // baseline solo at sf0.1 from exactly that). ~250k edge rows per
+      // task, clamped to the session parallelism: sf0.1 → 1, sf10 → a
+      // dozen, production → the full cluster width. The count that
+      // feeds the sizing rides the one-time full-width materialization
+      // of the wedge join; when the adaptive width equals the session
+      // width (every at-scale run) the re-layout below is skipped, so
+      // the sizing costs nothing there, and at tiny SFs the re-layout
+      // is a block-to-block copy of a few MB (whose source blocks the
+      // scope releases on exit).
+      val obsE = org.apache.spark.sql.Observation("kcore_edges")
+      val wide = fs.fence(
+        edges.selectExpr("a AS src", "b AS dst")
+          .unionByName(edges.selectExpr("b AS src", "a AS dst"))
+          .observe(obsE, expr("count(*) AS n")),
+        wMax, "dst")
+      val nE = obsE.get("n").asInstanceOf[Long]
+      val w = math.max(1L, math.min(wMax.toLong, nE / 250000L + 1L)).toInt
+      val eDst = if (w != wMax) fs.fence(wide, w, "dst") else wide
+      val obs0 = org.apache.spark.sql.Observation("kcore_rm_0")
+      val deg0 = fs.fence(
+        eDst.groupBy("src").agg(expr("cast(count(*) AS bigint) AS d"))
+          .observe(obs0, expr(s"count_if(d < $k) AS rm")),
+        w, "src")
+      // only the WAVES run under the iteration confs: the one-time setup
+      // above (the wedge-join materialization — the query's real compute)
+      // wants codegen and AQE; the waves are fresh tiny plans per round
+      // where per-round Janino compiles and AQE re-optimization are the
+      // dominant cost (the pageRank-family measurement)
+      Rounds.iterConfs(spark) {
+        // state: (live-degree table, vertices it holds below k)
+        val ((deg, _), out) = fs.loop((deg0, obs0.get("rm").asInstanceOf[Long]),
+            Int.MaxValue)(_._2 == 0L) { case (depth, (deg, _)) =>
+          val obs = org.apache.spark.sql.Observation(s"kcore_rm_$depth")
+          (fs.fence(kcoreWave(eDst, deg, k, w).observe(obs, expr(s"count_if(d < $k) AS rm")),
+            w, "src"), obs.get("rm").asInstanceOf[Long])
+        }
+        (fs.fence(deg.selectExpr("src AS id", "d AS core_deg")), out.rounds)
+      }
     }
-    val obs0 = org.apache.spark.sql.Observation("kcore_rm_0")
-    var deg = checkpointHashPartitioned(
-      eDst.groupBy("src").agg(expr("cast(count(*) AS bigint) AS d"))
-        .observe(obs0, expr(s"count_if(d < $k) AS rm")),
-      w, "src")
-    var nRm = obs0.get("rm").asInstanceOf[Long]
-    var depth = 0
-    // only the WAVES run under the iteration confs: the one-time setup
-    // above (the wedge-join materialization — the query's real compute)
-    // wants codegen and AQE; the waves are fresh tiny plans per round
-    // where per-round Janino compiles and AQE re-optimization are the
-    // dominant cost (the pageRank-family measurement)
-    withIterConf(spark) {
-    while (nRm > 0) {
-      depth += 1
-      val wave = kcoreWave(eDst, deg, k, w)
-      val obs = org.apache.spark.sql.Observation(s"kcore_rm_$depth")
-      val degNew = checkpointHashPartitioned(
-        wave.observe(obs, expr(s"count_if(d < $k) AS rm")), w, "src")
-      nRm = obs.get("rm").asInstanceOf[Long]
-      release(deg) // superseded live-degree table (degNew materialized)
-      deg = degNew
-    }
-    val out = deg.selectExpr("src AS id", "d AS core_deg").fenced
-    release(deg); release(eDst)
-    (out, depth)
-    }
-  }
 
   /** One lazy delta-peel wave (pre-observe, pre-fence): the vertices
     * whose maintained degree fell below k probe the stationary
@@ -1617,21 +1420,19 @@ object Graph {
     * the fenced loop, built on the same stationary dst-layout edge
     * fence and live-degree checkpoint the loop maintains.
     */
-  private[graft] def kcoreRoundPlanForSpec(edges: DataFrame, k: Int): String = {
-    val spark = edges.sparkSession
-    val w = spark.sessionState.conf.numShufflePartitions
-    val eDst = checkpointHashPartitioned(
-      edges.selectExpr("a AS src", "b AS dst")
-        .unionByName(edges.selectExpr("b AS src", "a AS dst")), w, "dst")
-    val deg = checkpointHashPartitioned(
-      eDst.groupBy("src").agg(expr("cast(count(*) AS bigint) AS d")), w, "src")
-    val obs = org.apache.spark.sql.Observation("kcore_rm_spec")
-    val s = kcoreWave(eDst, deg, k, w)
-      .observe(obs, expr(s"count_if(d < $k) AS rm"))
-      .queryExecution.executedPlan.toString
-    release(deg); release(eDst)
-    s
-  }
+  private[graft] def kcoreRoundPlanForSpec(edges: DataFrame, k: Int): String =
+    Rounds.scope { fs =>
+      val w = edges.sparkSession.sessionState.conf.numShufflePartitions
+      val eDst = fs.fence(
+        edges.selectExpr("a AS src", "b AS dst")
+          .unionByName(edges.selectExpr("b AS src", "a AS dst")), w, "dst")
+      val deg = fs.fence(
+        eDst.groupBy("src").agg(expr("cast(count(*) AS bigint) AS d")), w, "src")
+      val obs = org.apache.spark.sql.Observation("kcore_rm_spec")
+      kcoreWave(eDst, deg, k, w)
+        .observe(obs, expr(s"count_if(d < $k) AS rm"))
+        .queryExecution.executedPlan.toString
+    }
 
   /** Multi-source BFS hop distances over a directed edge list — the
     * "how far is everything from this segment" primitive behind blast-
@@ -1644,49 +1445,36 @@ object Graph {
     * `maxHops` keeps the output deterministic either way — hop counts
     * are exact integers, nothing to converge).
     */
-  def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val w = spark.sessionState.conf.numShufflePartitions
-    // src-layout ADVERTISED (r17): the old repartition+plain-fence
-    // forgot the partitioning, so every hop re-exchanged the O(E)
-    // edge table to join the frontier (profiled at sf0.1: one 9 MB
-    // edge shuffle per hop). With the layout advertised only the
-    // O(frontier) side moves per hop — the pageRank discipline,
-    // actually enforced.
-    val e = checkpointHashPartitioned(edges.toDF("src", "dst"), w, "src")
-    var known = seeds.toDF("id").distinct()
-      .withColumn("dist", lit(0L))
-      .repartition(col("id")).fenced
-    var frontier = known
-    var h = 0
-    var empty = frontier.isEmpty
-    while (h < maxHops && !empty) {
-      h += 1
-      // frontier size rides the fence job (observed metric) instead of
-      // a separate isEmpty job per hop
-      val obs = org.apache.spark.sql.Observation(s"bfs_n_$h")
-      val next = e.join(frontier.selectExpr("id AS src")
-            .repartition(w, col("src")).hint("shuffle_hash"), "src")
-        .selectExpr("dst AS id").distinct()
-        .join(known.select("id"), Seq("id"), "left_anti")
-        .withColumn("dist", lit(h.toLong))
-        .observe(obs, expr("count(*) AS n"))
-        .fenced
-      empty = obs.get("n").asInstanceOf[Long] == 0L
-      if (!empty) {
-        val grown = known.unionByName(next).repartition(col("id")).fenced
-        release(known) // superseded accumulator (grown is materialized)
-        if (frontier ne known) release(frontier) // h=1: same fence, once
-        known = grown
-        frontier = next
-      } else {
-        release(next) // the empty terminal frontier's zero-row blocks
+  def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
+    Rounds.scope { fs =>
+      val w = edges.sparkSession.sessionState.conf.numShufflePartitions
+      // src-layout ADVERTISED (r17): the old repartition+plain-fence
+      // forgot the partitioning, so every hop re-exchanged the O(E)
+      // edge table to join the frontier (profiled at sf0.1: one 9 MB
+      // edge shuffle per hop). With the layout advertised only the
+      // O(frontier) side moves per hop — the pageRank discipline,
+      // actually enforced.
+      val e = fs.fence(edges.toDF("src", "dst"), w, "src")
+      val known0 = fs.fence(seeds.toDF("id").distinct()
+        .withColumn("dist", lit(0L))
+        .repartition(col("id")))
+      // state: (known accumulator, frontier, frontier drained)
+      val ((known, _, _), _) = fs.loop((known0, known0, known0.isEmpty), maxHops)(_._3) {
+        case (h, (known, frontier, _)) =>
+          // frontier size rides the fence job (observed metric) instead
+          // of a separate isEmpty job per hop
+          val obs = org.apache.spark.sql.Observation(s"bfs_n_$h")
+          val next = fs.fence(e.join(frontier.selectExpr("id AS src")
+                .repartition(w, col("src")).hint("shuffle_hash"), "src")
+            .selectExpr("dst AS id").distinct()
+            .join(known.select("id"), Seq("id"), "left_anti")
+            .withColumn("dist", lit(h.toLong))
+            .observe(obs, expr("count(*) AS n")))
+          if (obs.get("n").asInstanceOf[Long] == 0L) (known, frontier, true)
+          else (fs.fence(known.unionByName(next).repartition(col("id"))), next, false)
       }
+      known
     }
-    if (frontier ne known) release(frontier)
-    release(e)
-    known
-  }
 
   /** Degree-ordered triangle counting over an undirected simple edge
     * list `(a, b)` with a < b. Returns top-20 'vertex' rows (triangle

@@ -151,22 +151,25 @@ object Ml {
     import spark.implicits._
     val f = features(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var w = Seq.empty[(Long, Long)].toDF("h", "w")
-    val margins = (1 to (Epochs + 1)).map { epoch =>
-      val m = f.join(broadcast(w), Seq("h"), "left")
-        .groupBy("doc_id", "y")
-        .agg(expr("sum(coalesce(w, 0L)) AS m"))
-        .fenced
-      if (epoch <= Epochs) {
-        val g = f.join(m.where("y * m <= 0").select("doc_id"), "doc_id")
-          .groupBy("h").agg(expr("cast(sum(y) AS bigint) AS g"))
-        w = w.join(g, Seq("h"), "full_outer")
-          .selectExpr("h", "coalesce(w, 0L) + coalesce(g, 0L) AS w")
-          .fenced
+    // the weight tables are tiny (≤ Buckets + 1 rows): the superseded
+    // ones are released when training ends, the final one and the
+    // margins live on as the result
+    Rounds.scope { fs =>
+      var w = Seq.empty[(Long, Long)].toDF("h", "w")
+      val margins = (1 to (Epochs + 1)).map { epoch =>
+        val m = fs.fence(f.join(broadcast(w), Seq("h"), "left")
+          .groupBy("doc_id", "y")
+          .agg(expr("sum(coalesce(w, 0L)) AS m")))
+        if (epoch <= Epochs) {
+          val g = f.join(m.where("y * m <= 0").select("doc_id"), "doc_id")
+            .groupBy("h").agg(expr("cast(sum(y) AS bigint) AS g"))
+          w = fs.fence(w.join(g, Seq("h"), "full_outer")
+            .selectExpr("h", "coalesce(w, 0L) + coalesce(g, 0L) AS w"))
+        }
+        m
       }
-      m
+      (f, w, margins)
     }
-    (f, w, margins)
   }
 
   def queries: Seq[QueryDef] = Seq(

@@ -218,4 +218,10 @@ object CheckpointOps {
         }
       case _ => ()
     }
+
+  /** The RDD ids of the fences `ds` reads: a fence's own id, or every
+    * fence under a lazy plan built on fences.
+    */
+  def fenceRdds(ds: org.apache.spark.sql.Dataset[_]): Set[Int] =
+    ds.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }.toSet
 }
