@@ -91,7 +91,7 @@ object Bench {
     // (load-contaminated) run can overwrite the idle baseline and dirty
     // the tree (the recurring r13/r14 hygiene item)
     timeLane(spark, sfDir, "total", benched, passes,
-      if (only.isDefined) "bench/only" else "bench/last", () => ())
+      if (only.isDefined) "bench/only" else "bench/last")
     spark.stop()
   }
 
@@ -134,7 +134,7 @@ object Bench {
     // a hardcoded 9-name list silently left st_holt and 10 other
     // state-store paths without any timed row)
     timeLane(spark, sfDir, "stream_total", Registry.all.filter(_.streamBench), 3,
-      "bench/stream", () => ())
+      "bench/stream")
   }
 
   /** The side-effecting sink/source round trips (registry sinkBench
@@ -142,18 +142,11 @@ object Bench {
     * rewrite + banded scans, small-file compaction, store lifecycle,
     * layout segmentation) timed as full write-then-read-back runs —
     * min of 3 interleaved passes after the two-step warmup: the main
-    * lane's [[timeLane]]. Each plan build creates fresh
-    * `graft_*` temp dirs by design (the sink IS the measured work), so
-    * the lane sweeps dirs it created between passes — 5 runs per query
-    * would otherwise leave 5 corpus-sized copies each on disk. The
-    * sweep drains the [[TmpDirs]] registry (dirs THIS process
-    * created), never a prefix scan over the shared java.io.tmpdir —
-    * a concurrent graft JVM's live lake roots match any
-    * (prefix, mtime) heuristic.
+    * lane's [[timeLane]].
     */
   private def sinkBench(spark: SparkSession, sfDir: String): Unit = {
     timeLane(spark, sfDir, "sink_total", Registry.all.filter(_.sinkBench), 3,
-      "bench/sink", () => TmpDirs.sweepCreated())
+      "bench/sink")
   }
 
   /** Runs `d` on `dir` into a noop sink: forces FULL evaluation of every
@@ -172,8 +165,15 @@ object Bench {
     * per pass, so a transient memory-pressure episode inflates one pass,
     * not all samples of one query), min per query. A failed run's error
     * is listed in "errors", and a query that fails every pass is
-    * reported as -1, never as a near-zero time. `sweep` runs after the
-    * first warmup, before each pass and at the end, outside the timer.
+    * reported as -1, never as a near-zero time.
+    *
+    * Plan builds create `graft_*` temp dirs (lake roots, staged stream
+    * sources, sinks, index dirs), so the lane sweeps the [[TmpDirs]]
+    * registry after the first warmup, before each pass and at the end,
+    * outside the timer: 5 runs per query would otherwise leave 5 copies
+    * each. The registry holds only dirs THIS process created, never a
+    * prefix scan over the shared java.io.tmpdir, whose entries a
+    * concurrent graft JVM may still be using.
     *
     * Prints the full line (`metric`), then a short `<metric>_compact`
     * line: the full line is ~8 KB for the main lane and a stdout-tail
@@ -183,16 +183,15 @@ object Bench {
     * artifact tools/bench_diff.py diffs round-over-round.
     */
   private def timeLane(spark: SparkSession, sfDir: String, metric: String,
-                       defs: Seq[QueryDef], passes: Int, outPrefix: String,
-                       sweep: () => Unit): Unit = {
+                       defs: Seq[QueryDef], passes: Int, outPrefix: String): Unit = {
     val tinySf = new java.io.File(new java.io.File(sfDir).getAbsoluteFile.getParentFile, "sf0.001")
     defs.foreach(d => try exhaust(spark, d, tinySf.getPath) catch { case _: Throwable => () })
-    sweep()
+    TmpDirs.sweepCreated()
     defs.foreach(d => try exhaust(spark, d, sfDir) catch { case _: Throwable => () })
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
     for (_ <- 1 to passes) {
-      sweep()
+      TmpDirs.sweepCreated()
       System.gc() // start each pass from comparable heap pressure
       defs.foreach { d =>
         // drop output-level memos (label table, BPE merges, training
@@ -210,7 +209,7 @@ object Bench {
         }
       }
     }
-    sweep()
+    TmpDirs.sweepCreated()
     val results = defs.map { d =>
       d.name -> samples.get(d.name).filter(_.nonEmpty).map(_.min).getOrElse(-1.0)
     }

@@ -709,24 +709,7 @@ object Curation {
         assigned.join(drops.withColumn("hit", lit(true)), Seq("vec_id"), "left")
           .selectExpr("vec_id", "cluster_id", "(hit IS NULL) AS kept")
       },
-      Some(s"""
-        WITH cent AS (SELECT vec_id AS cent_id, embedding AS cent_emb
-                      FROM embeddings WHERE vec_id < 8),
-        assigned AS (
-          SELECT vec_id, embedding, cent_id AS cluster_id
-          FROM (
-            SELECT e.vec_id, e.embedding, c.cent_id,
-                   row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY ${semCos("e.embedding", "c.cent_emb")} DESC, c.cent_id) AS rn
-            FROM embeddings e, cent c)
-          WHERE rn = 1),
-        drops AS (
-          SELECT DISTINCT b.vec_id
-          FROM assigned a JOIN assigned b
-            ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
-          WHERE ${semCos("a.embedding", "b.embedding")} >= $SemTheta)
-        SELECT a.vec_id, a.cluster_id, (d.vec_id IS NULL) AS kept
-        FROM assigned a LEFT JOIN drops d ON a.vec_id = d.vec_id""")),
+      Some(semDedupOracleSql)),
 
     // --------------------------------------- deterministic corpus split
     // Train/validation/test assignment as pure key arithmetic: the
@@ -962,14 +945,14 @@ object Curation {
           FROM (
             SELECT e.vec_id, e.embedding, cn.cent_id,
                    row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY ${semCos("e.embedding", "cn.cent_emb")} DESC, cn.cent_id) AS rn
+                                      ORDER BY ${Knn.dCos("e.embedding", "cn.cent_emb")} DESC, cn.cent_id) AS rn
             FROM embeddings e, cent cn)
           WHERE rn = 1),
         drops AS (
           SELECT DISTINCT b.vec_id
           FROM assigned a JOIN assigned b
             ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
-          WHERE ${semCos("a.embedding", "b.embedding")} >= $SemTheta),
+          WHERE ${Knn.dCos("a.embedding", "b.embedding")} >= $SemTheta),
         kept AS (
           SELECT k.doc_id FROM keepers k
           LEFT JOIN drops d ON k.doc_id = d.vec_id
@@ -2382,7 +2365,7 @@ object Curation {
       case Some(r) => r
       case None =>
         // NOT TmpDirs.create: this root is a session-lifetime memo the
-        // sink lane's sweep must never reclaim; the shutdown hook is
+        // bench lanes' sweep must never reclaim; the shutdown hook is
         // its whole cleanup story
         val tmp = java.nio.file.Files.createTempDirectory("graft_gate")
         Runtime.getRuntime.addShutdownHook(new Thread(() => {
@@ -2465,6 +2448,26 @@ object Curation {
     */
   private[graft] val SemTheta = "0.3"
 
+  /** tp_semdedup's oracle, shared by st_semdedup. */
+  private[graft] val semDedupOracleSql: String = s"""
+        WITH cent AS (SELECT vec_id AS cent_id, embedding AS cent_emb
+                      FROM embeddings WHERE vec_id < 8),
+        assigned AS (
+          SELECT vec_id, embedding, cent_id AS cluster_id
+          FROM (
+            SELECT e.vec_id, e.embedding, c.cent_id,
+                   row_number() OVER (PARTITION BY e.vec_id
+                                      ORDER BY ${Knn.dCos("e.embedding", "c.cent_emb")} DESC, c.cent_id) AS rn
+            FROM embeddings e, cent c)
+          WHERE rn = 1),
+        drops AS (
+          SELECT DISTINCT b.vec_id
+          FROM assigned a JOIN assigned b
+            ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
+          WHERE ${Knn.dCos("a.embedding", "b.embedding")} >= $SemTheta)
+        SELECT a.vec_id, a.cluster_id, (d.vec_id IS NULL) AS kept
+        FROM assigned a LEFT JOIN drops d ON a.vec_id = d.vec_id"""
+
   /** Shared SemDeDup machinery: exchange-free centroid assignment plus
     * the drop set (vectors with a lower-id in-cluster neighbor at
     * cosine ≥ θ). Used by tp_semdedup and tp_curate_semantic.
@@ -2483,12 +2486,4 @@ object Curation {
       .select(col("vb").as("vec_id")).distinct()
     (assigned, drops)
   }
-
-  private val semCosT: String =
-    """list_sum(list_transform(generate_series(1, len(%A)), i -> %A[i]::DOUBLE * %B[i]::DOUBLE))
-      |/ (sqrt(list_sum(list_transform(%A, x -> x::DOUBLE * x::DOUBLE)))
-      |   * sqrt(list_sum(list_transform(%B, x -> x::DOUBLE * x::DOUBLE))))""".stripMargin
-  /** DuckDB cosine matching the native `cosine_f` left-to-right fold. */
-  private def semCos(a: String, b: String): String =
-    semCosT.replace("%A", a).replace("%B", b)
 }

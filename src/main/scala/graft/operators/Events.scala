@@ -230,6 +230,133 @@ object Events {
                   // count(*)::BIGINT)::BIGINT AS vb
           FROM events GROUP BY 1, 2)"""
 
+  /** ev_sliding_window's oracle, shared by st_sliding_counts. */
+  private[graft] val slidingWindowOracleSql: String = """
+        SELECT slide_start AS window_start, event_type, count(*) AS n_events,
+               CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+        FROM (
+          SELECT event_type, value, (ts_s // 900 - g.k) * 900 AS slide_start, ts_s
+          FROM (SELECT epoch_us(ts) // 1000000 AS ts_s, event_type, value FROM events),
+               (SELECT unnest(generate_series(0, 3)) AS k) g)
+        WHERE slide_start >= 0 AND ts_s < slide_start + 3600
+        GROUP BY slide_start, event_type"""
+
+  /** ev_sessionize's oracle, shared by st_sessionize. */
+  private[graft] val sessionizeOracleSql: String = """
+        WITH flagged AS (
+          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+                 CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) IS NULL
+                      THEN 1
+                      WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) > 1800000000
+                      THEN 1 ELSE 0 END AS is_boundary
+          FROM events
+        ), sessioned AS (
+          SELECT user_id, event_id, ts_us,
+                 sum(is_boundary) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+                                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS session_id
+          FROM flagged
+        )
+        SELECT user_id, session_id, count(*) AS n_events,
+               min(ts_us) AS session_start_us, max(ts_us) AS session_end_us
+        FROM sessioned
+        GROUP BY user_id, session_id"""
+
+  /** ev_ewma's oracle, shared by st_ewma. */
+  private[graft] val ewmaOracleSql: String = """
+        WITH RECURSIVE e AS (
+          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+                 CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v,
+                 row_number() OVER (PARTITION BY user_id
+                                    ORDER BY epoch_us(ts), event_id) AS rn
+          FROM events),
+        r AS (
+          SELECT user_id, event_id, rn, v, v AS s FROM e WHERE rn = 1
+          UNION ALL
+          SELECT e.user_id, e.event_id, e.rn, e.v,
+                 ((300 * e.v + 700 * r.s) // 1000)::BIGINT
+          FROM r JOIN e ON e.user_id = r.user_id AND e.rn = r.rn + 1)
+        SELECT user_id, event_id, rn::BIGINT AS rn, v AS v_micros,
+               s::BIGINT AS ewma_micros
+        FROM r"""
+
+  /** ev_holt's oracle, shared by st_holt. */
+  private[graft] val holtOracleSql: String = """
+        WITH RECURSIVE e AS (
+          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+                 CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v,
+                 row_number() OVER (PARTITION BY user_id
+                                    ORDER BY epoch_us(ts), event_id) AS rn
+          FROM events),
+        r AS (
+          SELECT user_id, event_id, rn, v, v AS l, 0::BIGINT AS b FROM e WHERE rn = 1
+          UNION ALL
+          SELECT e.user_id, e.event_id, e.rn, e.v,
+                 ((300 * e.v + 700 * (r.l + r.b)) // 1000)::BIGINT,
+                 ((200 * (((300 * e.v + 700 * (r.l + r.b)) // 1000) - r.l)
+                   + 800 * r.b) // 1000)::BIGINT
+          FROM r JOIN e ON e.user_id = r.user_id AND e.rn = r.rn + 1)
+        SELECT user_id, event_id, rn::BIGINT AS rn, v AS v_micros,
+               l::BIGINT AS level_micros, b::BIGINT AS trend_micros,
+               (l + b)::BIGINT AS forecast_micros
+        FROM r"""
+
+  /** ev_anomaly's oracle, shared by st_anomaly. */
+  private[graft] val anomalyOracleSql: String = """
+        WITH RECURSIVE e AS (
+          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+                 CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v,
+                 row_number() OVER (PARTITION BY user_id
+                                    ORDER BY epoch_us(ts), event_id) AS rn
+          FROM events),
+        r AS (
+          SELECT user_id, event_id, rn, v, v AS s, 0::BIGINT AS resid FROM e WHERE rn = 1
+          UNION ALL
+          SELECT e.user_id, e.event_id, e.rn, e.v,
+                 ((300 * e.v + 700 * r.s) // 1000)::BIGINT,
+                 (e.v - r.s)::BIGINT
+          FROM r JOIN e ON e.user_id = r.user_id AND e.rn = r.rn + 1),
+        ew AS (SELECT * FROM r WHERE rn >= 2),
+        scale AS (
+          SELECT user_id,
+                 CAST(round(2 * quantile_cont(abs(resid), 0.5), 0) AS BIGINT) AS m2
+          FROM ew GROUP BY user_id)
+        SELECT ew.user_id, event_id, rn::BIGINT AS rn, v AS v_micros,
+               resid AS resid_micros, m2
+        FROM ew JOIN scale ON ew.user_id = scale.user_id
+        WHERE 2 * abs(resid) > 3 * m2"""
+
+  /** ev_funnel_strict's oracle, shared by st_funnel_strict. */
+  private[graft] val funnelStrictOracleSql: String = """
+        WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
+        s1 AS (SELECT user_id, min(ts_us) AS t1 FROM e
+               WHERE event_type = 'signup' GROUP BY user_id),
+        s2 AS (SELECT e.user_id, min(ts_us) AS t2
+               FROM e JOIN s1 USING (user_id)
+               WHERE event_type = 'view' AND ts_us > t1 AND ts_us <= t1 + 86400000000
+               GROUP BY e.user_id),
+        s3 AS (SELECT e.user_id, min(ts_us) AS t3
+               FROM e JOIN s2 USING (user_id)
+               WHERE event_type = 'purchase' AND ts_us > t2 AND ts_us <= t2 + 86400000000
+               GROUP BY e.user_id),
+        c AS (
+          SELECT '1_signup' AS stage, count(*)::BIGINT AS n FROM s1
+          UNION ALL SELECT '2_view_24h', count(*)::BIGINT FROM s2
+          UNION ALL SELECT '3_purchase_24h', count(*)::BIGINT FROM s3)
+        SELECT stage, n, (n * 1000000 // (SELECT count(*) FROM s1))::BIGINT AS conv_ppm
+        FROM c"""
+
+  /** ev_heavyhitters' oracle, shared by st_heavyhitters. */
+  private[graft] val heavyHittersOracleSql: String = """
+        WITH i AS (
+          SELECT CASE WHEN event_id % 10 < 7 THEN event_id % 20
+                      ELSE event_id + 1000000000 END AS item
+          FROM events)
+        SELECT item, count(*)::BIGINT AS cnt,
+               (count(*) * 1000000 // (SELECT count(*) FROM i))::BIGINT AS share_ppm
+        FROM i
+        GROUP BY item
+        HAVING count(*) * 500 > (SELECT count(*) FROM i)"""
+
   def queries: Seq[QueryDef] = Seq(
     // Tumbling 1-hour event-time window per event_type. In streaming this
     // is `window($"ts", "1 hour")` + watermark; batch-side date_trunc is
@@ -285,15 +412,7 @@ object Events {
             org.apache.spark.sql.functions.expr(
               "cast(sum(cast(value AS decimal(18,6))) AS double) AS sum_value"))
           .selectExpr("slide_start AS window_start", "event_type", "n_events", "sum_value"),
-      Some("""
-        SELECT slide_start AS window_start, event_type, count(*) AS n_events,
-               CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        FROM (
-          SELECT event_type, value, (ts_s // 900 - g.k) * 900 AS slide_start, ts_s
-          FROM (SELECT epoch_us(ts) // 1000000 AS ts_s, event_type, value FROM events),
-               (SELECT unnest(generate_series(0, 3)) AS k) g)
-        WHERE slide_start >= 0 AND ts_s < slide_start + 3600
-        GROUP BY slide_start, event_type""")),
+      Some(slidingWindowOracleSql)),
 
     // Sessionization: per-user sessions split on >30 min inactivity.
     // The batch analog of flatMapGroupsWithState sessionization
@@ -320,24 +439,7 @@ object Events {
             org.apache.spark.sql.functions.expr("count(*) AS n_events"),
             org.apache.spark.sql.functions.expr("min(ts_us) AS session_start_us"),
             org.apache.spark.sql.functions.expr("max(ts_us) AS session_end_us")),
-      Some("""
-        WITH flagged AS (
-          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                 CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) IS NULL
-                      THEN 1
-                      WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) > 1800000000
-                      THEN 1 ELSE 0 END AS is_boundary
-          FROM events
-        ), sessioned AS (
-          SELECT user_id, event_id, ts_us,
-                 sum(is_boundary) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS session_id
-          FROM flagged
-        )
-        SELECT user_id, session_id, count(*) AS n_events,
-               min(ts_us) AS session_start_us, max(ts_us) AS session_end_us
-        FROM sessioned
-        GROUP BY user_id, session_id""")),
+      Some(sessionizeOracleSql)),
 
     // JSON scalar extraction over the props column (semi-structured
     // payloads are the norm in event pipelines): get_json_object stays
@@ -1089,22 +1191,7 @@ object Events {
           }
           .toDF("user_id", "event_id", "rn", "v_micros", "ewma_micros")
       },
-      Some("""
-        WITH RECURSIVE e AS (
-          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                 CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY epoch_us(ts), event_id) AS rn
-          FROM events),
-        r AS (
-          SELECT user_id, event_id, rn, v, v AS s FROM e WHERE rn = 1
-          UNION ALL
-          SELECT e.user_id, e.event_id, e.rn, e.v,
-                 ((300 * e.v + 700 * r.s) // 1000)::BIGINT
-          FROM r JOIN e ON e.user_id = r.user_id AND e.rn = r.rn + 1)
-        SELECT user_id, event_id, rn::BIGINT AS rn, v AS v_micros,
-               s::BIGINT AS ewma_micros
-        FROM r""")),
+      Some(ewmaOracleSql)),
 
     // ------------- Holt's linear smoothing (trend-aware forecasting)
     // ev_ewma's level-only recurrence misses drifting series; Holt
@@ -1146,25 +1233,7 @@ object Events {
           .toDF("user_id", "event_id", "rn", "v_micros",
             "level_micros", "trend_micros", "forecast_micros")
       },
-      Some("""
-        WITH RECURSIVE e AS (
-          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                 CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY epoch_us(ts), event_id) AS rn
-          FROM events),
-        r AS (
-          SELECT user_id, event_id, rn, v, v AS l, 0::BIGINT AS b FROM e WHERE rn = 1
-          UNION ALL
-          SELECT e.user_id, e.event_id, e.rn, e.v,
-                 ((300 * e.v + 700 * (r.l + r.b)) // 1000)::BIGINT,
-                 ((200 * (((300 * e.v + 700 * (r.l + r.b)) // 1000) - r.l)
-                   + 800 * r.b) // 1000)::BIGINT
-          FROM r JOIN e ON e.user_id = r.user_id AND e.rn = r.rn + 1)
-        SELECT user_id, event_id, rn::BIGINT AS rn, v AS v_micros,
-               l::BIGINT AS level_micros, b::BIGINT AS trend_micros,
-               (l + b)::BIGINT AS forecast_micros
-        FROM r""")),
+      Some(holtOracleSql)),
 
     // ------ Holt-Winters additive triple smoothing (seasonal series)
     // ev_holt's level+trend recurrence is blind to the daily cycle
@@ -1318,29 +1387,7 @@ object Events {
           .where("2 * abs(resid_micros) > 3 * m2")
           .selectExpr("user_id", "event_id", "rn", "v_micros", "resid_micros", "m2")
       },
-      Some("""
-        WITH RECURSIVE e AS (
-          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                 CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY epoch_us(ts), event_id) AS rn
-          FROM events),
-        r AS (
-          SELECT user_id, event_id, rn, v, v AS s, 0::BIGINT AS resid FROM e WHERE rn = 1
-          UNION ALL
-          SELECT e.user_id, e.event_id, e.rn, e.v,
-                 ((300 * e.v + 700 * r.s) // 1000)::BIGINT,
-                 (e.v - r.s)::BIGINT
-          FROM r JOIN e ON e.user_id = r.user_id AND e.rn = r.rn + 1),
-        ew AS (SELECT * FROM r WHERE rn >= 2),
-        scale AS (
-          SELECT user_id,
-                 CAST(round(2 * quantile_cont(abs(resid), 0.5), 0) AS BIGINT) AS m2
-          FROM ew GROUP BY user_id)
-        SELECT ew.user_id, event_id, rn::BIGINT AS rn, v AS v_micros,
-               resid AS resid_micros, m2
-        FROM ew JOIN scale ON ew.user_id = scale.user_id
-        WHERE 2 * abs(resid) > 3 * m2""")),
+      Some(anomalyOracleSql)),
 
     // ------------------------ strict time-windowed funnel
     // ev_funnel's upgrade: each stage must follow the PREVIOUS stage
@@ -1374,24 +1421,7 @@ object Events {
         counts.crossJoin(org.apache.spark.sql.functions.broadcast(base))
           .selectExpr("stage", "n", "n * 1000000L div n0 AS conv_ppm")
       },
-      Some("""
-        WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        s1 AS (SELECT user_id, min(ts_us) AS t1 FROM e
-               WHERE event_type = 'signup' GROUP BY user_id),
-        s2 AS (SELECT e.user_id, min(ts_us) AS t2
-               FROM e JOIN s1 USING (user_id)
-               WHERE event_type = 'view' AND ts_us > t1 AND ts_us <= t1 + 86400000000
-               GROUP BY e.user_id),
-        s3 AS (SELECT e.user_id, min(ts_us) AS t3
-               FROM e JOIN s2 USING (user_id)
-               WHERE event_type = 'purchase' AND ts_us > t2 AND ts_us <= t2 + 86400000000
-               GROUP BY e.user_id),
-        c AS (
-          SELECT '1_signup' AS stage, count(*)::BIGINT AS n FROM s1
-          UNION ALL SELECT '2_view_24h', count(*)::BIGINT FROM s2
-          UNION ALL SELECT '3_purchase_24h', count(*)::BIGINT FROM s3)
-        SELECT stage, n, (n * 1000000 // (SELECT count(*) FROM s1))::BIGINT AS conv_ppm
-        FROM c""")),
+      Some(funnelStrictOracleSql)),
 
     // -------------------- heavy-hitter keys (Misra-Gries + exact confirm)
     // "Which keys carry more than 1/500 of all traffic?" — the skew
@@ -1431,16 +1461,7 @@ object Events {
             .as[Long],
           k = 500)
       },
-      Some("""
-        WITH i AS (
-          SELECT CASE WHEN event_id % 10 < 7 THEN event_id % 20
-                      ELSE event_id + 1000000000 END AS item
-          FROM events)
-        SELECT item, count(*)::BIGINT AS cnt,
-               (count(*) * 1000000 // (SELECT count(*) FROM i))::BIGINT AS share_ppm
-        FROM i
-        GROUP BY item
-        HAVING count(*) * 500 > (SELECT count(*) FROM i)""")),
+      Some(heavyHittersOracleSql)),
 
     // ------------------------- Count-Min sketch (mergeable frequency)
     // The sketch counterpart to ev_heavyhitters' Misra-Gries summary:

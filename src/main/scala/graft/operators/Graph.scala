@@ -1350,45 +1350,15 @@ object Graph {
     */
   private[graft] def kCoreWithDepth(edges: DataFrame, k: Int): (DataFrame, Int) =
     Rounds.scope { fs =>
-      val spark = edges.sparkSession
-      val wMax = spark.sessionState.conf.numShufflePartitions
-      // SCALE-ADAPTIVE wave width (guide §2: derive partitioning from
-      // input size, never a constant tuned for one deployment): the
-      // peel runs O(depth) waves of stages over the stationary fence
-      // and the V-sized degree table, and a width fixed at the session
-      // parallelism makes every tiny wave pay 32-task scheduling for
-      // kilobytes of state (first delta cut measured 6.7 s vs 4.7 s
-      // baseline solo at sf0.1 from exactly that). ~250k edge rows per
-      // task, clamped to the session parallelism: sf0.1 → 1, sf10 → a
-      // dozen, production → the full cluster width. The count that
-      // feeds the sizing rides the one-time full-width materialization
-      // of the wedge join; when the adaptive width equals the session
-      // width (every at-scale run) the re-layout below is skipped, so
-      // the sizing costs nothing there, and at tiny SFs the re-layout
-      // is a block-to-block copy of a few MB (whose source blocks the
-      // scope releases on exit).
-      val obsE = org.apache.spark.sql.Observation("kcore_edges")
-      val wide = fs.fence(
-        edges.selectExpr("a AS src", "b AS dst")
-          .unionByName(edges.selectExpr("b AS src", "a AS dst"))
-          .observe(obsE, expr("count(*) AS n")),
-        wMax, "dst")
-      val nE = obsE.get("n").asInstanceOf[Long]
-      val w = math.max(1L, math.min(wMax.toLong, nE / 250000L + 1L)).toInt
-      val eDst = if (w != wMax) fs.fence(wide, w, "dst") else wide
-      val obs0 = org.apache.spark.sql.Observation("kcore_rm_0")
-      val deg0 = fs.fence(
-        eDst.groupBy("src").agg(expr("cast(count(*) AS bigint) AS d"))
-          .observe(obs0, expr(s"count_if(d < $k) AS rm")),
-        w, "src")
+      val (eDst, w, deg0, rm0) = kcoreSetup(fs, edges, k)
       // only the WAVES run under the iteration confs: the one-time setup
-      // above (the wedge-join materialization — the query's real compute)
+      // (the wedge-join materialization — the query's real compute)
       // wants codegen and AQE; the waves are fresh tiny plans per round
       // where per-round Janino compiles and AQE re-optimization are the
       // dominant cost (the pageRank-family measurement)
-      Rounds.iterConfs(spark) {
+      Rounds.iterConfs(edges.sparkSession) {
         // state: (live-degree table, vertices it holds below k)
-        val ((deg, _), out) = fs.loop((deg0, obs0.get("rm").asInstanceOf[Long]),
+        val ((deg, _), out) = fs.loop((deg0, rm0),
             Int.MaxValue)(_._2 == 0L) { case (depth, (deg, _)) =>
           val obs = org.apache.spark.sql.Observation(s"kcore_rm_$depth")
           (fs.fence(kcoreWave(eDst, deg, k, w).observe(obs, expr(s"count_if(d < $k) AS rm")),
@@ -1397,6 +1367,47 @@ object Graph {
         (fs.fence(deg.selectExpr("src AS id", "d AS core_deg")), out.rounds)
       }
     }
+
+  /** The peel's one-time setup, under the caller's confs, shared by
+    * [[kCoreWithDepth]] and [[kcoreRoundPlanForSpec]]: the stationary
+    * both-directions edge fence laid out by `dst` at the adaptive wave
+    * width, that width, and the initial live-degree fence with its
+    * count of vertices below `k`.
+    *
+    * SCALE-ADAPTIVE wave width (guide §2: derive partitioning from
+    * input size, never a constant tuned for one deployment): the peel
+    * runs O(depth) waves of stages over the stationary fence and the
+    * V-sized degree table, and a width fixed at the session parallelism
+    * makes every tiny wave pay 32-task scheduling for kilobytes of
+    * state (first delta cut measured 6.7 s vs 4.7 s baseline solo at
+    * sf0.1 from exactly that). ~250k edge rows per task, clamped to the
+    * session parallelism: sf0.1 → 1, sf10 → a dozen, production → the
+    * full cluster width. The count that feeds the sizing rides the
+    * one-time full-width materialization of the wedge join; when the
+    * adaptive width equals the session width (every at-scale run) the
+    * re-layout is skipped, so the sizing costs nothing there, and at
+    * tiny SFs the re-layout is a block-to-block copy of a few MB (whose
+    * source blocks the scope releases on exit).
+    */
+  private def kcoreSetup(fs: Rounds, edges: DataFrame,
+                         k: Int): (DataFrame, Int, DataFrame, Long) = {
+    val wMax = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val obsE = org.apache.spark.sql.Observation("kcore_edges")
+    val wide = fs.fence(
+      edges.selectExpr("a AS src", "b AS dst")
+        .unionByName(edges.selectExpr("b AS src", "a AS dst"))
+        .observe(obsE, expr("count(*) AS n")),
+      wMax, "dst")
+    val nE = obsE.get("n").asInstanceOf[Long]
+    val w = math.max(1L, math.min(wMax.toLong, nE / 250000L + 1L)).toInt
+    val eDst = if (w != wMax) fs.fence(wide, w, "dst") else wide
+    val obs0 = org.apache.spark.sql.Observation("kcore_rm_0")
+    val deg0 = fs.fence(
+      eDst.groupBy("src").agg(expr("cast(count(*) AS bigint) AS d"))
+        .observe(obs0, expr(s"count_if(d < $k) AS rm")),
+      w, "src")
+    (eDst, w, deg0, obs0.get("rm").asInstanceOf[Long])
+  }
 
   /** One lazy delta-peel wave (pre-observe, pre-fence): the vertices
     * whose maintained degree fell below k probe the stationary
@@ -1417,21 +1428,18 @@ object Graph {
   }
 
   /** One delta-peel wave's executed-plan string — plan evidence for
-    * the fenced loop, built on the same stationary dst-layout edge
-    * fence and live-degree checkpoint the loop maintains.
+    * the fenced loop: the loop's own setup, and the wave planned under
+    * the iteration confs the loop runs it under.
     */
   private[graft] def kcoreRoundPlanForSpec(edges: DataFrame, k: Int): String =
     Rounds.scope { fs =>
-      val w = edges.sparkSession.sessionState.conf.numShufflePartitions
-      val eDst = fs.fence(
-        edges.selectExpr("a AS src", "b AS dst")
-          .unionByName(edges.selectExpr("b AS src", "a AS dst")), w, "dst")
-      val deg = fs.fence(
-        eDst.groupBy("src").agg(expr("cast(count(*) AS bigint) AS d")), w, "src")
-      val obs = org.apache.spark.sql.Observation("kcore_rm_spec")
-      kcoreWave(eDst, deg, k, w)
-        .observe(obs, expr(s"count_if(d < $k) AS rm"))
-        .queryExecution.executedPlan.toString
+      val (eDst, w, deg0, _) = kcoreSetup(fs, edges, k)
+      Rounds.iterConfs(edges.sparkSession) {
+        val obs = org.apache.spark.sql.Observation("kcore_rm_spec")
+        kcoreWave(eDst, deg0, k, w)
+          .observe(obs, expr(s"count_if(d < $k) AS rm"))
+          .queryExecution.executedPlan.toString
+      }
     }
 
   /** Multi-source BFS hop distances over a directed edge list — the

@@ -73,6 +73,29 @@ object Knn {
   private[graft] def dCos(a: String, b: String): String =
     duckCos.replace("%A", a).replace("%B", b)
 
+  /** v3_knn_topk's oracle, shared by v6_graph_ann. */
+  private[graft] val knnTopKOracleSql: String = s"""
+        WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
+        SELECT vec_id, round(${dCos("embedding", "q_emb")}, 6) AS similarity
+        FROM embeddings, q
+        ORDER BY similarity DESC, vec_id
+        LIMIT $K"""
+
+  /** v3_knn_batch's oracle, shared by v3_knn_batch_agg. */
+  private[graft] val knnBatchOracleSql: String = s"""
+        WITH q AS (SELECT vec_id AS q_vec_id, embedding AS q_emb FROM embeddings WHERE vec_id < 8),
+        scored AS (
+          SELECT q.q_vec_id, e.vec_id,
+                 round(${dCos("e.embedding", "q.q_emb")}, 6) AS similarity
+          FROM embeddings e, q
+          WHERE e.vec_id != q.q_vec_id)
+        SELECT q_vec_id, vec_id, similarity, rank
+        FROM (SELECT q_vec_id, vec_id, similarity,
+                     row_number() OVER (PARTITION BY q_vec_id
+                                        ORDER BY similarity DESC, vec_id)::BIGINT AS rank
+              FROM scored)
+        WHERE rank <= $K"""
+
   def queries: Seq[QueryDef] = Seq(
     // ------------------------------------------------ V3: top-k cosine kNN
     // Query vector = embedding of vec_id 0 (a deterministic stand-in for
@@ -90,12 +113,7 @@ object Knn {
           .orderBy(desc("similarity"), col("vec_id"))
           .limit(K)
       },
-      Some(s"""
-        WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
-        SELECT vec_id, round(${dCos("embedding", "q_emb")}, 6) AS similarity
-        FROM embeddings, q
-        ORDER BY similarity DESC, vec_id
-        LIMIT $K""")),
+      Some(knnTopKOracleSql)),
 
     // ----------------------------------------- batch kNN (many queries)
     // 8 query vectors broadcast against the corpus; per-query top-k via a
@@ -117,19 +135,7 @@ object Knn {
                                         ORDER BY similarity DESC, vec_id) AS bigint) AS rank""")
           .where(s"rank <= $K")
       },
-      Some(s"""
-        WITH q AS (SELECT vec_id AS q_vec_id, embedding AS q_emb FROM embeddings WHERE vec_id < 8),
-        scored AS (
-          SELECT q.q_vec_id, e.vec_id,
-                 round(${dCos("e.embedding", "q.q_emb")}, 6) AS similarity
-          FROM embeddings e, q
-          WHERE e.vec_id != q.q_vec_id)
-        SELECT q_vec_id, vec_id, similarity, rank
-        FROM (SELECT q_vec_id, vec_id, similarity,
-                     row_number() OVER (PARTITION BY q_vec_id
-                                        ORDER BY similarity DESC, vec_id)::BIGINT AS rank
-              FROM scored)
-        WHERE rank <= $K""")),
+      Some(knnBatchOracleSql)),
 
     // ---------------- batch kNN via the typed bounded-heap Aggregator
     // Same result set as v3_knn_batch, computed through
@@ -154,19 +160,7 @@ object Knn {
           .toDF("q_vec_id", "rank", "vec_id", "similarity")
           .select("q_vec_id", "vec_id", "similarity", "rank")
       },
-      Some(s"""
-        WITH q AS (SELECT vec_id AS q_vec_id, embedding AS q_emb FROM embeddings WHERE vec_id < 8),
-        scored AS (
-          SELECT q.q_vec_id, e.vec_id,
-                 round(${dCos("e.embedding", "q.q_emb")}, 6) AS similarity
-          FROM embeddings e, q
-          WHERE e.vec_id != q.q_vec_id)
-        SELECT q_vec_id, vec_id, similarity, rank
-        FROM (SELECT q_vec_id, vec_id, similarity,
-                     row_number() OVER (PARTITION BY q_vec_id
-                                        ORDER BY similarity DESC, vec_id)::BIGINT AS rank
-              FROM scored)
-        WHERE rank <= $K""")),
+      Some(knnBatchOracleSql)),
 
     // ------------------------------------ IVF-style partition-pruned ANN
     // Scale path for 100 TB: vectors are assigned to the nearest of a
@@ -234,7 +228,7 @@ object Knn {
         val e = Tables.embeddings(spark, dir)
         val cents = e.where("vec_id < 8")
           .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
-        val idx = java.nio.file.Files.createTempDirectory("graft_ivf_gate").toString + "/idx"
+        val idx = graft.TmpDirs.create("graft_ivf_gate").toString + "/idx"
         writeIvfIndex(spark, e, cents, idx)
         val q = e.where("vec_id = 0").select("embedding").collect().head
           .getAs[scala.collection.Seq[Float]]("embedding").toSeq
@@ -451,7 +445,7 @@ object Knn {
       "v6_graph_ann",
       (spark, dir) => {
         val e = Tables.embeddings(spark, dir)
-        val idx = java.nio.file.Files.createTempDirectory("graft_gann_gate").toString + "/idx"
+        val idx = graft.TmpDirs.create("graft_gann_gate").toString + "/idx"
         GraphAnn.buildIndex(e, idx, numParts = 8, m = 8, efC = 64)
         val q = e.where("vec_id = 0").select("embedding").collect().head
           .getAs[scala.collection.Seq[Float]]("embedding").toSeq
@@ -460,12 +454,7 @@ object Knn {
           .orderBy(desc("similarity"), col("vec_id"))
           .limit(K)
       },
-      Some(s"""
-        WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
-        SELECT vec_id, round(${dCos("embedding", "q_emb")}, 6) AS similarity
-        FROM embeddings, q
-        ORDER BY similarity DESC, vec_id
-        LIMIT $K""")),
+      Some(knnTopKOracleSql)),
 
     // ------------------------ LSH-bucketed ANN (the other V2 scale path)
     // Random-hyperplane LSH: 32 fixed Gaussian planes → 4 bands × 8 sign

@@ -20,6 +20,55 @@ import org.apache.spark.sql.functions._
   */
 object Quality {
 
+  /** dq_outliers' oracle, shared by st_outliers. */
+  private[graft] val outliersOracleSql: String = """
+        WITH e AS (SELECT event_id, event_type, value FROM events),
+        m AS (SELECT event_type, round(quantile_cont(value, 0.5), 6) AS med
+              FROM e GROUP BY event_type),
+        d AS (SELECT event_id, e.event_type, value, med, abs(value - med) AS ad
+              FROM e JOIN m ON e.event_type = m.event_type),
+        md AS (SELECT event_type, round(quantile_cont(ad, 0.5), 6) AS mad
+               FROM d GROUP BY event_type)
+        SELECT event_id, d.event_type AS event_type, round(value, 6) AS value,
+               round(med, 6) AS med, round(mad, 6) AS mad,
+               round(ad / (1.4826 * mad), 6) AS robust_z
+        FROM d JOIN md ON d.event_type = md.event_type
+        WHERE ad > 3 * 1.4826 * mad"""
+
+  /** dq_drift's oracle, shared by st_drift. */
+  private[graft] val driftOracleSql: String = """
+        WITH ev AS (SELECT value, CASE WHEN day(ts) <= 15 THEN 1 ELSE 0 END AS is_ref
+                    FROM events),
+        cuts AS (
+          SELECT round(quantile_cont(value, 0.1), 6) AS c1,
+                 round(quantile_cont(value, 0.2), 6) AS c2,
+                 round(quantile_cont(value, 0.3), 6) AS c3,
+                 round(quantile_cont(value, 0.4), 6) AS c4,
+                 round(quantile_cont(value, 0.5), 6) AS c5,
+                 round(quantile_cont(value, 0.6), 6) AS c6,
+                 round(quantile_cont(value, 0.7), 6) AS c7,
+                 round(quantile_cont(value, 0.8), 6) AS c8,
+                 round(quantile_cont(value, 0.9), 6) AS c9
+          FROM ev WHERE is_ref = 1),
+        counts AS (
+          SELECT 1 + (value > c1)::INT + (value > c2)::INT + (value > c3)::INT
+                   + (value > c4)::INT + (value > c5)::INT + (value > c6)::INT
+                   + (value > c7)::INT + (value > c8)::INT + (value > c9)::INT AS bucket,
+                 sum(is_ref)::BIGINT AS n_ref, sum(1 - is_ref)::BIGINT AS n_cur
+          FROM ev, cuts GROUP BY 1),
+        tot AS (SELECT sum(n_ref)::BIGINT AS t_ref, sum(n_cur)::BIGINT AS t_cur FROM counts),
+        per AS (
+          SELECT bucket::BIGINT AS bucket, n_ref, n_cur,
+                 (n_ref * 1000000 // t_ref)::BIGINT AS ppm_ref,
+                 (n_cur * 1000000 // t_cur)::BIGINT AS ppm_cur,
+                 abs(n_ref * 1000000 // t_ref - n_cur * 1000000 // t_cur)::BIGINT AS diff_ppm
+          FROM counts, tot)
+        SELECT * FROM per
+        UNION ALL
+        SELECT -1, sum(n_ref)::BIGINT, sum(n_cur)::BIGINT, 1000000, 1000000,
+               (sum(diff_ppm) // 2)::BIGINT
+        FROM per"""
+
   def queries: Seq[QueryDef] = Seq(
     QueryDef(
       "dq_constraints",
@@ -110,19 +159,7 @@ object Quality {
       (spark, dir) =>
         outlierReport(Tables.events(spark, dir)
           .selectExpr("event_id", "event_type", "value")),
-      Some("""
-        WITH e AS (SELECT event_id, event_type, value FROM events),
-        m AS (SELECT event_type, round(quantile_cont(value, 0.5), 6) AS med
-              FROM e GROUP BY event_type),
-        d AS (SELECT event_id, e.event_type, value, med, abs(value - med) AS ad
-              FROM e JOIN m ON e.event_type = m.event_type),
-        md AS (SELECT event_type, round(quantile_cont(ad, 0.5), 6) AS mad
-               FROM d GROUP BY event_type)
-        SELECT event_id, d.event_type AS event_type, round(value, 6) AS value,
-               round(med, 6) AS med, round(mad, 6) AS mad,
-               round(ad / (1.4826 * mad), 6) AS robust_z
-        FROM d JOIN md ON d.event_type = md.event_type
-        WHERE ad > 3 * 1.4826 * mad""")),
+      Some(outliersOracleSql)),
 
     // --------------------------------------------- corpus datasheet
     // The "datasheets for datasets" summary a training-data release
@@ -198,38 +235,7 @@ object Quality {
             expr("cast(sum(is_ref) AS bigint) AS n_ref"),
             expr("cast(sum(1 - is_ref) AS bigint) AS n_cur")))
       },
-      Some("""
-        WITH ev AS (SELECT value, CASE WHEN day(ts) <= 15 THEN 1 ELSE 0 END AS is_ref
-                    FROM events),
-        cuts AS (
-          SELECT round(quantile_cont(value, 0.1), 6) AS c1,
-                 round(quantile_cont(value, 0.2), 6) AS c2,
-                 round(quantile_cont(value, 0.3), 6) AS c3,
-                 round(quantile_cont(value, 0.4), 6) AS c4,
-                 round(quantile_cont(value, 0.5), 6) AS c5,
-                 round(quantile_cont(value, 0.6), 6) AS c6,
-                 round(quantile_cont(value, 0.7), 6) AS c7,
-                 round(quantile_cont(value, 0.8), 6) AS c8,
-                 round(quantile_cont(value, 0.9), 6) AS c9
-          FROM ev WHERE is_ref = 1),
-        counts AS (
-          SELECT 1 + (value > c1)::INT + (value > c2)::INT + (value > c3)::INT
-                   + (value > c4)::INT + (value > c5)::INT + (value > c6)::INT
-                   + (value > c7)::INT + (value > c8)::INT + (value > c9)::INT AS bucket,
-                 sum(is_ref)::BIGINT AS n_ref, sum(1 - is_ref)::BIGINT AS n_cur
-          FROM ev, cuts GROUP BY 1),
-        tot AS (SELECT sum(n_ref)::BIGINT AS t_ref, sum(n_cur)::BIGINT AS t_cur FROM counts),
-        per AS (
-          SELECT bucket::BIGINT AS bucket, n_ref, n_cur,
-                 (n_ref * 1000000 // t_ref)::BIGINT AS ppm_ref,
-                 (n_cur * 1000000 // t_cur)::BIGINT AS ppm_cur,
-                 abs(n_ref * 1000000 // t_ref - n_cur * 1000000 // t_cur)::BIGINT AS diff_ppm
-          FROM counts, tot)
-        SELECT * FROM per
-        UNION ALL
-        SELECT -1, sum(n_ref)::BIGINT, sum(n_cur)::BIGINT, 1000000, 1000000,
-               (sum(diff_ppm) // 2)::BIGINT
-        FROM per""")),
+      Some(driftOracleSql)),
 
     // ---------------- two-sample Kolmogorov–Smirnov drift (exact)
     // dq_drift's decile TVD quantizes the distribution into 10 buckets

@@ -26,6 +26,27 @@ object TextOps {
   private val stop = Seq("the", "a", "of", "and", "to", "in", "is", "for", "on", "with")
   private val stopSql = stop.map(s => s"'$s'").mkString(", ")
 
+  /** ta_vocab_hll's oracle, shared by st_hll. */
+  private[graft] val vocabHllOracleSql: String = s"""
+        WITH sh AS (${Dedup.shingleHashesSql}),
+        post AS (SELECT unnest(hs) AS h FROM sh),
+        rk AS (
+          SELECT h // 4503599627370496 AS b,
+                 53 - length(regexp_replace(bin(h % 4503599627370496), '^0+', '')) AS r
+          FROM post),
+        mb AS (SELECT b, max(r) AS mr FROM rk GROUP BY b),
+        allb AS (
+          SELECT gs.b, coalesce(mb.mr, 0) AS M
+          FROM (SELECT unnest(generate_series(0, 255)) AS b) gs
+          LEFT JOIN mb ON gs.b = mb.b),
+        agg AS (
+          SELECT list_sum(list(pow(2, -M) ORDER BY b)) AS S,
+                 sum(CASE WHEN M > 0 THEN 1 ELSE 0 END) AS hit
+          FROM allb)
+        SELECT 256::BIGINT AS m_buckets, hit::BIGINT AS buckets_hit,
+               round((0.7213 / (1 + 1.079 / 256)) * 256 * 256 / S, 4) AS hll_est
+        FROM agg"""
+
   def queries: Seq[QueryDef] = Seq(
     // ---------------------------------------------------------------- E4
     QueryDef(
@@ -517,25 +538,7 @@ object TextOps {
             "cast(hit AS bigint) AS buckets_hit",
             "round((0.7213D / (1D + 1.079D / 256D)) * 256D * 256D / S, 4) AS hll_est")
       },
-      Some(s"""
-        WITH sh AS (${Dedup.shingleHashesSql}),
-        post AS (SELECT unnest(hs) AS h FROM sh),
-        rk AS (
-          SELECT h // 4503599627370496 AS b,
-                 53 - length(regexp_replace(bin(h % 4503599627370496), '^0+', '')) AS r
-          FROM post),
-        mb AS (SELECT b, max(r) AS mr FROM rk GROUP BY b),
-        allb AS (
-          SELECT gs.b, coalesce(mb.mr, 0) AS M
-          FROM (SELECT unnest(generate_series(0, 255)) AS b) gs
-          LEFT JOIN mb ON gs.b = mb.b),
-        agg AS (
-          SELECT list_sum(list(pow(2, -M) ORDER BY b)) AS S,
-                 sum(CASE WHEN M > 0 THEN 1 ELSE 0 END) AS hit
-          FROM allb)
-        SELECT 256::BIGINT AS m_buckets, hit::BIGINT AS buckets_hit,
-               round((0.7213 / (1 + 1.079 / 256)) * 256 * 256 / S, 4) AS hll_est
-        FROM agg""")),
+      Some(vocabHllOracleSql)),
 
     // ------------------------------------------ PII redaction (extension)
     // The scrub pass every training corpus runs before release: emails,

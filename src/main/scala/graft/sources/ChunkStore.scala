@@ -216,6 +216,26 @@ object ChunkStore {
           WHERE length(tc) > 500 AND length(substring(tc, i + 1, 500)) >= 50
         )"""
 
+  /** s5_store_entries' oracle, shared by s5_store_entries_scalable. */
+  private[graft] val storeEntriesOracleSql: String = s"""
+        WITH ok AS (
+          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
+          FROM documents
+          WHERE length(${Fns.cleanTextDuck("text")}) >= 10
+        ), chunks AS (
+          SELECT doc_id, NULL::INT AS chunk_number, tc AS chunk_text
+          FROM ok WHERE length(tc) <= 500
+          UNION ALL
+          SELECT doc_id, (i // 450 + 1)::INT AS chunk_number, substring(tc, i + 1, 500) AS chunk_text
+          FROM ok, LATERAL (SELECT unnest(generate_series(0, length(tc) - 1, 450)) AS i) g
+          WHERE length(tc) > 500 AND length(substring(tc, i + 1, 500)) >= 50
+        )
+        SELECT 'chunk_' || (row_number() OVER (ORDER BY doc_id, coalesce(chunk_number, 0)) - 1) AS id,
+               chunk_text AS text,
+               doc_id::VARCHAR AS doc_id_str,
+               chunk_number::VARCHAR AS chunk_number_str
+        FROM chunks"""
+
   def queries: Seq[QueryDef] = Seq(
     // S1+S2+E1-E5+C1 over REAL PDF BYTES: the fixture corpus (2-page
     // Flate-compressed + 1-page raw + Type0/CID CJK files (embedded
@@ -509,24 +529,7 @@ object ChunkStore {
             "chunk_text AS text",
             "cast(doc_id AS string) AS doc_id_str",
             "cast(chunk_number AS string) AS chunk_number_str"),
-      Some(s"""
-        WITH ok AS (
-          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
-          FROM documents
-          WHERE length(${Fns.cleanTextDuck("text")}) >= 10
-        ), chunks AS (
-          SELECT doc_id, NULL::INT AS chunk_number, tc AS chunk_text
-          FROM ok WHERE length(tc) <= 500
-          UNION ALL
-          SELECT doc_id, (i // 450 + 1)::INT AS chunk_number, substring(tc, i + 1, 500) AS chunk_text
-          FROM ok, LATERAL (SELECT unnest(generate_series(0, length(tc) - 1, 450)) AS i) g
-          WHERE length(tc) > 500 AND length(substring(tc, i + 1, 500)) >= 50
-        )
-        SELECT 'chunk_' || (row_number() OVER (ORDER BY doc_id, coalesce(chunk_number, 0)) - 1) AS id,
-               chunk_text AS text,
-               doc_id::VARCHAR AS doc_id_str,
-               chunk_number::VARCHAR AS chunk_number_str
-        FROM chunks""")),
+      Some(storeEntriesOracleSql)),
 
     // S5, the SCALE path: the same positional-id contract computed by
     // withPositionalIds (range partition → in-partition sort →
@@ -547,24 +550,7 @@ object ChunkStore {
             "cast(doc_id AS string) AS doc_id_str",
             "cast(chunk_number AS string) AS chunk_number_str")
       },
-      Some(s"""
-        WITH ok AS (
-          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
-          FROM documents
-          WHERE length(${Fns.cleanTextDuck("text")}) >= 10
-        ), chunks AS (
-          SELECT doc_id, NULL::INT AS chunk_number, tc AS chunk_text
-          FROM ok WHERE length(tc) <= 500
-          UNION ALL
-          SELECT doc_id, (i // 450 + 1)::INT AS chunk_number, substring(tc, i + 1, 500) AS chunk_text
-          FROM ok, LATERAL (SELECT unnest(generate_series(0, length(tc) - 1, 450)) AS i) g
-          WHERE length(tc) > 500 AND length(substring(tc, i + 1, 500)) >= 50
-        )
-        SELECT 'chunk_' || (row_number() OVER (ORDER BY doc_id, coalesce(chunk_number, 0)) - 1) AS id,
-               chunk_text AS text,
-               doc_id::VARCHAR AS doc_id_str,
-               chunk_number::VARCHAR AS chunk_number_str
-        FROM chunks""")),
+      Some(storeEntriesOracleSql)),
 
     // S4 reload quirk as a pure query: the metadata projection that
     // survives a CSV round-trip (chunk_number dropped).

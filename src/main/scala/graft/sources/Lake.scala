@@ -1005,7 +1005,7 @@ object Lake {
     QueryDef(
       "s13_upsert",
       (spark, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/customer"
+        val root = graft.TmpDirs.create("graft_lake").toString + "/customer"
         commitVersion(spark, Tables.customer(spark, dir), root)
         upsert(spark, updatesFixture(spark, dir), root, "c_custkey")
         readVersion(spark, root)
@@ -1028,7 +1028,7 @@ object Lake {
     QueryDef(
       "s14_time_travel",
       (spark, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/customer"
+        val root = graft.TmpDirs.create("graft_lake").toString + "/customer"
         commitVersion(spark, Tables.customer(spark, dir), root)
         upsert(spark, updatesFixture(spark, dir), root, "c_custkey")
         Seq(0, 1).map { v =>
@@ -1068,7 +1068,7 @@ object Lake {
     QueryDef(
       "s15_mor_resolve",
       (spark, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/customer"
+        val root = graft.TmpDirs.create("graft_lake").toString + "/customer"
         commitVersion(spark, Tables.customer(spark, dir), root)
         appendDelta(spark, updatesFixture(spark, dir), root, "c_custkey")
         appendDelta(spark,
@@ -1107,7 +1107,7 @@ object Lake {
     QueryDef(
       "s16_changefeed",
       (spark, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/customer"
+        val root = graft.TmpDirs.create("graft_lake").toString + "/customer"
         commitVersion(spark, Tables.customer(spark, dir), root)
         upsert(spark, updatesFixture(spark, dir), root, "c_custkey")
         deleteWhere(spark, root, "c_acctbal < 0")
@@ -1177,7 +1177,7 @@ object Lake {
     QueryDef(
       "s17_schema_evolution",
       (spark, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/customer"
+        val root = graft.TmpDirs.create("graft_lake").toString + "/customer"
         commitVersion(spark, Tables.customer(spark, dir), root)
         commitVersion(spark,
           readVersion(spark, root).selectExpr("*",
@@ -1215,7 +1215,7 @@ object Lake {
     QueryDef(
       "s18_vacuum",
       (spark, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("graft_lake").toString
+        val work = graft.TmpDirs.create("graft_lake").toString
         val root = s"$work/customer"
         commitVersion(spark, Tables.customer(spark, dir), root)
         upsert(spark, updatesFixture(spark, dir), root, "c_custkey")
@@ -1260,7 +1260,7 @@ object Lake {
     QueryDef(
       "s19_incremental_agg",
       (spark, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("graft_lake").toString
+        val work = graft.TmpDirs.create("graft_lake").toString
         val root = s"$work/customer"
         commitVersion(spark, Tables.customer(spark, dir), root)
         val view0 = readVersion(spark, root)
@@ -1307,7 +1307,7 @@ object Lake {
     QueryDef(
       "s20_clone",
       (spark, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("graft_lake").toString
+        val work = graft.TmpDirs.create("graft_lake").toString
         val src = s"$work/customer"
         val dst = s"$work/customer_fork"
         commitVersion(spark, Tables.customer(spark, dir), src)
@@ -1354,7 +1354,7 @@ object Lake {
     QueryDef(
       "s21_version_diff",
       (spark, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/customer"
+        val root = graft.TmpDirs.create("graft_lake").toString + "/customer"
         commitVersion(spark, Tables.customer(spark, dir), root)
         upsert(spark, updatesFixture(spark, dir), root, "c_custkey")
         deleteWhere(spark, root, "c_custkey % 37 = 1")
@@ -1450,7 +1450,7 @@ object Lake {
     QueryDef(
       "s23_analyze",
       (spark, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/customer"
+        val root = graft.TmpDirs.create("graft_lake").toString + "/customer"
         commitVersion(spark, Tables.customer(spark, dir).selectExpr(
           "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"), root)
         analyze(spark, root)
@@ -1505,7 +1505,7 @@ object Lake {
     QueryDef(
       "s25_commit_check",
       (spark, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/customer"
+        val root = graft.TmpDirs.create("graft_lake").toString + "/customer"
         val cust = Tables.customer(spark, dir).selectExpr(
           "c_custkey", "c_name", "c_nationkey",
           "cast(cast(c_acctbal AS decimal(18,2)) * 100 AS bigint) AS bal_cents",
@@ -1541,7 +1541,7 @@ object Lake {
     QueryDef(
       "s24_bloom_skip",
       (spark, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/lineitem"
+        val root = graft.TmpDirs.create("graft_lake").toString + "/lineitem"
         commitVersion(spark,
           Tables.lineitem(spark, dir)
             .selectExpr("l_orderkey", "l_partkey", "l_suppkey",
@@ -1572,7 +1572,7 @@ object Lake {
     QueryDef(
       "s26_partition_evolution",
       (spark, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/orders"
+        val root = graft.TmpDirs.create("graft_lake").toString + "/orders"
         val ord = Tables.orders(spark, dir).selectExpr(
           "o_orderkey", "o_custkey",
           "cast(round(o_totalprice * 1000000, 0) AS bigint) AS price_micros",
@@ -1623,7 +1623,7 @@ object Lake {
     QueryDef(
       "s27_mor_delete",
       (spark, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/customer"
+        val root = graft.TmpDirs.create("graft_lake").toString + "/customer"
         val cust = Tables.customer(spark, dir).selectExpr(
           "c_custkey", "c_name", "cast(c_nationkey AS bigint) AS nation",
           "cast(cast(c_acctbal AS decimal(18,2)) * 100 AS bigint) AS bal_cents",
@@ -1672,7 +1672,7 @@ object Lake {
     QueryDef(
       "s28_restore",
       (spark, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/customer"
+        val root = graft.TmpDirs.create("graft_lake").toString + "/customer"
         commitVersion(spark, Tables.customer(spark, dir), root)
         upsert(spark, updatesFixture(spark, dir), root, "c_custkey")
         val tip = restore(spark, root, 0)
@@ -1715,7 +1715,7 @@ object Lake {
     QueryDef(
       "s29_merge",
       (spark, dir) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/customer"
+        val root = graft.TmpDirs.create("graft_lake").toString + "/customer"
         val cust = Tables.customer(spark, dir).selectExpr(
           "c_custkey", "c_name", "cast(c_nationkey AS bigint) AS nation",
           "cast(cast(c_acctbal AS decimal(18,2)) * 100 AS bigint) AS bal_cents",

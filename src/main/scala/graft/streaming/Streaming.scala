@@ -17,6 +17,13 @@ import org.apache.spark.sql.types._
   * (Events.ev_window_agg / ev_sessionize are the batch twins) — Spark's
   * unified batch/streaming model means the per-microbatch physical plan
   * is identical to the batch one, so the 100 TB design notes carry over.
+  *
+  * The gate twins in [[queries]] all end through one drain seam:
+  * [[drain]] (parquet Append sink in a [[graft.TmpDirs]] dir, read back
+  * through a declared schema) or [[drainTable]] (memory sink in
+  * Complete/Update mode). Both run under `Trigger.AvailableNow` and
+  * wait for the query to end, which rethrows a failed stream's error.
+  * Each twin names its batch twin's oracle, never a copy of it.
   */
 object Streaming {
 
@@ -43,17 +50,14 @@ object Streaming {
     */
   def chunkIngest(spark: SparkSession, inDir: String, outDir: String,
                   checkpointDir: String): StreamingQuery = {
-    val docs = spark.readStream.schema(documentsSchema).parquet(inDir)
-    val chunks = graft.operators.Chunker.chunk(docs, "doc_id")
-      .select("doc_id", "chunk_number", "chunk_text")
-    chunks.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    appendParquet(chunkDocuments(spark.readStream.schema(documentsSchema).parquet(inDir)),
+      outDir, checkpointDir)
   }
+
+  /** [[chunkIngest]]'s transform: the C1 chunk rows of a document stream. */
+  private def chunkDocuments(docs: DataFrame): DataFrame =
+    graft.operators.Chunker.chunk(docs, "doc_id")
+      .select("doc_id", "chunk_number", "chunk_text")
 
   /** Event-time tumbling-window aggregation with a watermark: late rows
     * beyond 1 hour are dropped, state is bounded — the streaming twin of
@@ -154,14 +158,8 @@ object Streaming {
     */
   def dedupIngest(spark: SparkSession, inDir: String, outDir: String,
                   checkpointDir: String): StreamingQuery =
-    dedupDocuments(spark.readStream.schema(documentsSchema).parquet(inDir))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    appendParquet(dedupDocuments(spark.readStream.schema(documentsSchema).parquet(inDir)),
+      outDir, checkpointDir)
 
   /** Watermark-bounded streaming dedup: like [[dedupDocuments]] but
     * state is capped at the watermark horizon — a duplicate arriving
@@ -328,13 +326,6 @@ object Streaming {
         "unix_micros(l_ts) - unix_micros(r_ts) AS us_gap")
   }
 
-  /** Drain a file-source stream with AvailableNow and wait — the test /
-    * batch-parity entry point.
-    */
-  def runToCompletion(q: StreamingQuery): Unit = {
-    q.awaitTermination()
-  }
-
   // ------------------------------------------------- driver-gate rows
   // Structured Streaming through the DuckDB oracle: a Trigger.AvailableNow
   // run over the static test tables drains the whole source through the
@@ -380,10 +371,6 @@ object Streaming {
     }
   }
 
-  /** The file-stream source requires a DIRECTORY (basePath); the test
-    * tables are single files — stage a copy into a temp source dir, the
-    * same shape a production landing zone has.
-    */
   case class SemVec(vec_id: Long, cluster_id: Long, embedding: Seq[Float])
   case class SemVerdict(vec_id: Long, cluster_id: Long, kept: Boolean)
   case class EwmaPoint(user_id: Long, event_id: Long, ts_us: Long, v: Long)
@@ -686,10 +673,69 @@ object Streaming {
       }
   }
 
+  /** The file-stream source requires a DIRECTORY (basePath); the test
+    * tables are single files — stage a copy into a temp source dir, the
+    * same shape a production landing zone has.
+    */
   private def stageDir(file: String): String = {
-    val src = java.nio.file.Files.createTempDirectory("graft_st_src")
+    val src = graft.TmpDirs.create("graft_st_src")
     java.nio.file.Files.copy(java.nio.file.Paths.get(file), src.resolve("part-0.parquet"))
     src.toString
+  }
+
+  /** The staged documents table as a file stream. */
+  private def documentsStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(documentsSchema).parquet(stageDir(s"$dir/documents.parquet"))
+
+  private val embeddingsSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("label", IntegerType)))
+
+  /** The staged embeddings table as a file stream. */
+  private def embeddingsStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(embeddingsSchema).parquet(stageDir(s"$dir/embeddings.parquet"))
+
+  // ------------------------------------------------- the drain seam
+  // Every gate twin ends in one of the two drains below. Both run the
+  // stream under Trigger.AvailableNow over its bounded, staged source
+  // and wait for the query to end, which rethrows a failed stream's
+  // error: a drain raises, it never reads back a sink the stream did
+  // not finish.
+
+  /** The parquet Append sink chain: [[drain]], [[chunkIngest]] and
+    * [[dedupIngest]] all write through it.
+    */
+  private def appendParquet(df: Dataset[_], outDir: String, checkpointDir: String,
+                            partitionBy: String*): StreamingQuery =
+    df.writeStream
+      .format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", checkpointDir)
+      .partitionBy(partitionBy: _*)
+      .outputMode(OutputMode.Append)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** Drain `df` into a parquet sink under a fresh [[graft.TmpDirs]] dir
+    * and read `out/` back through `schema` (a DDL string).
+    */
+  private[graft] def drain(df: Dataset[_], schema: String, partitionBy: String*): DataFrame = {
+    val tmp = graft.TmpDirs.create("graft_st_gate").toString
+    appendParquet(df, s"$tmp/out", s"$tmp/cp", partitionBy: _*).awaitTermination()
+    df.sparkSession.read.schema(schema).parquet(s"$tmp/out")
+  }
+
+  /** Drain `df` into the memory sink `name` in `mode` (Complete or
+    * Update) and return the sink's table.
+    */
+  private[graft] def drainTable(df: Dataset[_], name: String, mode: OutputMode): DataFrame = {
+    df.writeStream.format("memory").queryName(name)
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    df.sparkSession.table(name)
   }
 
   def queries: Seq[graft.QueryDef] = Seq(
@@ -700,14 +746,8 @@ object Streaming {
     // this measures checkpoint/sink I/O, not engine throughput.
     graft.QueryDef(
       "st_chunk_ingest",
-      (spark, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = chunkIngest(spark, stageDir(s"$dir/documents.parquet"), s"$tmp/out", s"$tmp/cp")
-        q.awaitTermination()
-        spark.read
-          .schema("doc_id BIGINT, chunk_number INT, chunk_text STRING")
-          .parquet(s"$tmp/out")
-      },
+      (spark, dir) => drain(chunkDocuments(documentsStream(spark, dir)),
+        "doc_id BIGINT, chunk_number INT, chunk_text STRING"),
       Some(graft.operators.Chunker.chunkOracle),
       bench = false),
 
@@ -719,15 +759,8 @@ object Streaming {
     // passing through) or over-drop breaks row count and hash alike.
     graft.QueryDef(
       "st_dedup_ingest",
-      (spark, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = dedupIngest(spark, stageDir(s"$dir/documents.parquet"), s"$tmp/out", s"$tmp/cp")
-        q.awaitTermination()
-        spark.read
-          .schema("doc_id BIGINT, lang STRING, text_hash STRING")
-          .parquet(s"$tmp/out")
-          .select("text_hash")
-      },
+      (spark, dir) => drain(dedupDocuments(documentsStream(spark, dir)),
+        "doc_id BIGINT, lang STRING, text_hash STRING").select("text_hash"),
       Some(s"""
         SELECT DISTINCT md5(${Fns.cleanTextDuck("text")}) AS text_hash
         FROM documents"""),
@@ -743,27 +776,10 @@ object Streaming {
     graft.QueryDef(
       "st_ivf_build",
       (spark, dir) => {
-        val embSchema = StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)),
-          StructField("label", IntegerType)))
         val cents = graft.Tables.embeddings(spark, dir).where("vec_id < 8")
           .selectExpr("vec_id AS cent_id", "embedding AS cent_emb")
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val src = spark.readStream.schema(embSchema)
-          .parquet(stageDir(s"$dir/embeddings.parquet"))
-        val q = graft.operators.Knn.assignToCentroids(src, cents)
-          .select("vec_id", "cluster_id")
-          .writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/cp")
-          .partitionBy("cluster_id")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.read.schema("vec_id BIGINT, cluster_id BIGINT").parquet(s"$tmp/out")
+        drain(graft.operators.Knn.assignToCentroids(embeddingsStream(spark, dir), cents)
+          .select("vec_id", "cluster_id"), "vec_id BIGINT, cluster_id BIGINT", "cluster_id")
       },
       Some("""
         WITH cent AS (SELECT vec_id AS cent_id, list_transform(embedding, x -> x::DOUBLE) AS cent_emb
@@ -798,51 +814,12 @@ object Streaming {
     graft.QueryDef(
       "st_semdedup",
       (spark, dir) => {
-        val embSchema = StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)),
-          StructField("label", IntegerType)))
         val cents = graft.Tables.embeddings(spark, dir).where("vec_id < 8")
           .selectExpr("vec_id AS cent_id", "embedding AS cent_emb")
-        val src = spark.readStream.schema(embSchema)
-          .parquet(stageDir(s"$dir/embeddings.parquet"))
-        val verdicts = semanticDedupStream(spark, src, cents)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = verdicts.writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/cp")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.read.schema("vec_id BIGINT, cluster_id BIGINT, kept BOOLEAN")
-          .parquet(s"$tmp/out")
+        drain(semanticDedupStream(spark, embeddingsStream(spark, dir), cents),
+          "vec_id BIGINT, cluster_id BIGINT, kept BOOLEAN")
       },
-      Some {
-        val cos = (a: String, b: String) =>
-          s"""list_sum(list_transform(generate_series(1, len($a)), i -> $a[i]::DOUBLE * $b[i]::DOUBLE))
-             / (sqrt(list_sum(list_transform($a, x -> x::DOUBLE * x::DOUBLE)))
-                * sqrt(list_sum(list_transform($b, x -> x::DOUBLE * x::DOUBLE))))"""
-        s"""
-        WITH cent AS (SELECT vec_id AS cent_id, embedding AS cent_emb
-                      FROM embeddings WHERE vec_id < 8),
-        assigned AS (
-          SELECT vec_id, embedding, cent_id AS cluster_id
-          FROM (
-            SELECT e.vec_id, e.embedding, c.cent_id,
-                   row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY ${cos("e.embedding", "c.cent_emb")} DESC, c.cent_id) AS rn
-            FROM embeddings e, cent c)
-          WHERE rn = 1),
-        drops AS (
-          SELECT DISTINCT b.vec_id
-          FROM assigned a JOIN assigned b
-            ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
-          WHERE ${cos("a.embedding", "b.embedding")} >= ${graft.operators.Curation.SemTheta})
-        SELECT a.vec_id, a.cluster_id, (d.vec_id IS NULL) AS kept
-        FROM assigned a LEFT JOIN drops d ON a.vec_id = d.vec_id"""
-      },
+      Some(graft.operators.Curation.semDedupOracleSql),
       bench = false),
 
     // Stream-stream interval join through the join state store: clicks
@@ -860,18 +837,7 @@ object Streaming {
         val joined = intervalJoinStream(
           src().where("event_type = 'click'"),
           src().where("event_type = 'view'"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = joined.writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/cp")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.read
-          .schema("user_id BIGINT, l_id BIGINT, r_id BIGINT, us_gap BIGINT")
-          .parquet(s"$tmp/out")
+        drain(joined, "user_id BIGINT, l_id BIGINT, r_id BIGINT, us_gap BIGINT")
       },
       Some("""
         WITH c AS (SELECT event_id AS l_id, ts AS l_ts, user_id FROM events WHERE event_type = 'click'),
@@ -891,17 +857,8 @@ object Streaming {
     // the streaming twin carries count and decimal sum).
     graft.QueryDef(
       "st_window_counts",
-      (spark, dir) => {
-        val src = eventsStream(spark, dir)
-        val qn = "st_window_counts_sink"
-        val q = windowedEventCounts(src)
-          .writeStream.format("memory").queryName(qn)
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.table(qn)
-      },
+      (spark, dir) => drainTable(windowedEventCounts(eventsStream(spark, dir)),
+        "st_window_counts_sink", OutputMode.Complete),
       Some("""
         SELECT epoch(date_trunc('hour', ts))::BIGINT AS window_start, event_type,
                count(*) AS n_events,
@@ -919,26 +876,9 @@ object Streaming {
     // filters to the shared domain ≥ 0 — both engines agree on it).
     graft.QueryDef(
       "st_sliding_counts",
-      (spark, dir) => {
-        val src = eventsStream(spark, dir)
-        val qn = "st_sliding_counts_sink"
-        val q = slidingEventCounts(src)
-          .writeStream.format("memory").queryName(qn)
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.table(qn).where("window_start >= 0")
-      },
-      Some("""
-        SELECT slide_start AS window_start, event_type, count(*) AS n_events,
-               CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        FROM (
-          SELECT event_type, value, (ts_s // 900 - g.k) * 900 AS slide_start, ts_s
-          FROM (SELECT epoch_us(ts) // 1000000 AS ts_s, event_type, value FROM events),
-               (SELECT unnest(generate_series(0, 3)) AS k) g)
-        WHERE slide_start >= 0 AND ts_s < slide_start + 3600
-        GROUP BY slide_start, event_type"""),
+      (spark, dir) => drainTable(slidingEventCounts(eventsStream(spark, dir)),
+        "st_sliding_counts_sink", OutputMode.Complete).where("window_start >= 0"),
+      Some(graft.operators.Events.slidingWindowOracleSql),
       bench = false),
 
     // Streaming outlier alerts: the production alerting split of
@@ -957,33 +897,10 @@ object Streaming {
           graft.Tables.events(spark, dir).selectExpr("event_id", "event_type", "value"))
         val src = eventsStream(spark, dir)
           .selectExpr("event_id", "event_type", "value")
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = graft.operators.Quality.flagOutliers(src, stats)
-          .writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/cp")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.read
-          .schema("event_id BIGINT, event_type STRING, value DOUBLE, med DOUBLE, mad DOUBLE, robust_z DOUBLE")
-          .parquet(s"$tmp/out")
+        drain(graft.operators.Quality.flagOutliers(src, stats),
+          "event_id BIGINT, event_type STRING, value DOUBLE, med DOUBLE, mad DOUBLE, robust_z DOUBLE")
       },
-      Some("""
-        WITH e AS (SELECT event_id, event_type, value FROM events),
-        m AS (SELECT event_type, round(quantile_cont(value, 0.5), 6) AS med
-              FROM e GROUP BY event_type),
-        d AS (SELECT event_id, e.event_type, value, med, abs(value - med) AS ad
-              FROM e JOIN m ON e.event_type = m.event_type),
-        md AS (SELECT event_type, round(quantile_cont(ad, 0.5), 6) AS mad
-               FROM d GROUP BY event_type)
-        SELECT event_id, d.event_type AS event_type, round(value, 6) AS value,
-               round(med, 6) AS med, round(mad, 6) AS mad,
-               round(ad / (1.4826 * mad), 6) AS robust_z
-        FROM d JOIN md ON d.event_type = md.event_type
-        WHERE ad > 3 * 1.4826 * mad"""),
+      Some(graft.operators.Quality.outliersOracleSql),
       bench = false),
 
     // ------------------------- streaming distribution-drift monitor
@@ -1009,51 +926,15 @@ object Streaming {
           .selectExpr("value",
             "CASE WHEN day(ts) <= 15 THEN 1 ELSE 0 END AS is_ref")
           .where("is_ref = 0")
-        val qn = "st_drift_sink"
-        val q = Quality.bucketize(src, cuts)
-          .groupBy("bucket").agg(expr("cast(count(*) AS bigint) AS n_cur"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val curCounts = drainTable(Quality.bucketize(src, cuts)
+          .groupBy("bucket").agg(expr("cast(count(*) AS bigint) AS n_cur")),
+          "st_drift_sink", OutputMode.Complete)
         Quality.driftReport(
-          refCounts.join(spark.table(qn), Seq("bucket"), "full_outer")
+          refCounts.join(curCounts, Seq("bucket"), "full_outer")
             .selectExpr("bucket", "coalesce(n_ref, 0L) AS n_ref",
               "coalesce(n_cur, 0L) AS n_cur"))
       },
-      Some("""
-        WITH ev AS (SELECT value, CASE WHEN day(ts) <= 15 THEN 1 ELSE 0 END AS is_ref
-                    FROM events),
-        cuts AS (
-          SELECT round(quantile_cont(value, 0.1), 6) AS c1,
-                 round(quantile_cont(value, 0.2), 6) AS c2,
-                 round(quantile_cont(value, 0.3), 6) AS c3,
-                 round(quantile_cont(value, 0.4), 6) AS c4,
-                 round(quantile_cont(value, 0.5), 6) AS c5,
-                 round(quantile_cont(value, 0.6), 6) AS c6,
-                 round(quantile_cont(value, 0.7), 6) AS c7,
-                 round(quantile_cont(value, 0.8), 6) AS c8,
-                 round(quantile_cont(value, 0.9), 6) AS c9
-          FROM ev WHERE is_ref = 1),
-        counts AS (
-          SELECT 1 + (value > c1)::INT + (value > c2)::INT + (value > c3)::INT
-                   + (value > c4)::INT + (value > c5)::INT + (value > c6)::INT
-                   + (value > c7)::INT + (value > c8)::INT + (value > c9)::INT AS bucket,
-                 sum(is_ref)::BIGINT AS n_ref, sum(1 - is_ref)::BIGINT AS n_cur
-          FROM ev, cuts GROUP BY 1),
-        tot AS (SELECT sum(n_ref)::BIGINT AS t_ref, sum(n_cur)::BIGINT AS t_cur FROM counts),
-        per AS (
-          SELECT bucket::BIGINT AS bucket, n_ref, n_cur,
-                 (n_ref * 1000000 // t_ref)::BIGINT AS ppm_ref,
-                 (n_cur * 1000000 // t_cur)::BIGINT AS ppm_cur,
-                 abs(n_ref * 1000000 // t_ref - n_cur * 1000000 // t_cur)::BIGINT AS diff_ppm
-          FROM counts, tot)
-        SELECT * FROM per
-        UNION ALL
-        SELECT -1, sum(n_ref)::BIGINT, sum(n_cur)::BIGINT, 1000000, 1000000,
-               (sum(diff_ppm) // 2)::BIGINT
-        FROM per"""),
+      Some(graft.operators.Quality.driftOracleSql),
       bench = false),
 
     // ------------------------- streaming HLL sketch maintenance
@@ -1069,10 +950,7 @@ object Streaming {
       "st_hll",
       (spark, dir) => {
         val half = 1L << 52
-        val src = spark.readStream
-          .schema(documentsSchema)
-          .parquet(stageDir(s"$dir/documents.parquet"))
-        val regs = src
+        val regs = documentsStream(spark, dir)
           .selectExpr(
             s"${Fns.cleanTextSql("text")} AS tc")
           .selectExpr("split(tc, ' ') AS toks")
@@ -1081,14 +959,8 @@ object Streaming {
           .selectExpr(s"h div ${half}L AS b", s"h % ${half}L AS rem")
           .selectExpr("b", "rank52(rem) AS r")
           .groupBy("b").agg(expr("max(r) AS mr"))
-        val qn = "st_hll_sink"
-        val q = regs.writeStream.format("memory").queryName(qn)
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         spark.range(0, 256).selectExpr("cast(id AS bigint) AS b")
-          .join(spark.table(qn), Seq("b"), "left")
+          .join(drainTable(regs, "st_hll_sink", OutputMode.Complete), Seq("b"), "left")
           .selectExpr("b", "coalesce(mr, 0) AS M")
           .groupBy()
           .agg(
@@ -1100,25 +972,7 @@ object Streaming {
             "cast(hit AS bigint) AS buckets_hit",
             "round((0.7213D / (1D + 1.079D / 256D)) * 256D * 256D / S, 4) AS hll_est")
       },
-      Some(s"""
-        WITH sh AS (${graft.operators.Dedup.shingleHashesSql}),
-        post AS (SELECT unnest(hs) AS h FROM sh),
-        rk AS (
-          SELECT h // 4503599627370496 AS b,
-                 53 - length(regexp_replace(bin(h % 4503599627370496), '^0+', '')) AS r
-          FROM post),
-        mb AS (SELECT b, max(r) AS mr FROM rk GROUP BY b),
-        allb AS (
-          SELECT gs.b, coalesce(mb.mr, 0) AS M
-          FROM (SELECT unnest(generate_series(0, 255)) AS b) gs
-          LEFT JOIN mb ON gs.b = mb.b),
-        agg AS (
-          SELECT list_sum(list(pow(2, -M) ORDER BY b)) AS S,
-                 sum(CASE WHEN M > 0 THEN 1 ELSE 0 END) AS hit
-          FROM allb)
-        SELECT 256::BIGINT AS m_buckets, hit::BIGINT AS buckets_hit,
-               round((0.7213 / (1 + 1.079 / 256)) * 256 * 256 / S, 4) AS hll_est
-        FROM agg"""),
+      Some(graft.operators.TextOps.vocabHllOracleSql),
       bench = false),
 
     // ------------------------- streaming Count-Min sketch maintenance
@@ -1139,13 +993,8 @@ object Streaming {
           .selectExpr(s"explode(array(${graft.operators.Events.cmStructs})) AS c")
           .selectExpr("c.j AS j", "c.b AS b")
           .groupBy("j", "b").agg(expr("cast(count(*) AS bigint) AS n"))
-        val qn = "st_countmin_sink"
-        val q = cells.writeStream.format("memory").queryName(qn)
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        graft.operators.Events.cmEstimates(spark, dir, spark.table(qn))
+        graft.operators.Events.cmEstimates(spark, dir,
+          drainTable(cells, "st_countmin_sink", OutputMode.Complete))
       },
       Some(graft.operators.Events.cmOracleSql),
       bench = false),
@@ -1170,13 +1019,8 @@ object Streaming {
           .groupBy("event_type")
           .agg(graft.operators.Events.abCellAggs.head,
             graft.operators.Events.abCellAggs.tail: _*)
-        val qn = "st_ab_chisq_sink"
-        val q = cells.writeStream.format("memory").queryName(qn)
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        graft.operators.Events.chisqFromCells(spark.table(qn))
+        graft.operators.Events.chisqFromCells(
+          drainTable(cells, "st_ab_chisq_sink", OutputMode.Complete))
       },
       Some(graft.operators.Events.abChisqOracleSql),
       bench = false),
@@ -1193,35 +1037,10 @@ object Streaming {
         val src = eventsStream(spark, dir)
           .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
             "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v")
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = ewmaStream(spark, src).writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/cp")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.read
-          .schema("user_id BIGINT, event_id BIGINT, rn BIGINT, v_micros BIGINT, ewma_micros BIGINT")
-          .parquet(s"$tmp/out")
+        drain(ewmaStream(spark, src),
+          "user_id BIGINT, event_id BIGINT, rn BIGINT, v_micros BIGINT, ewma_micros BIGINT")
       },
-      Some("""
-        WITH RECURSIVE e AS (
-          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                 CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY epoch_us(ts), event_id) AS rn
-          FROM events),
-        r AS (
-          SELECT user_id, event_id, rn, v, v AS s FROM e WHERE rn = 1
-          UNION ALL
-          SELECT e.user_id, e.event_id, e.rn, e.v,
-                 ((300 * e.v + 700 * r.s) // 1000)::BIGINT
-          FROM r JOIN e ON e.user_id = r.user_id AND e.rn = r.rn + 1)
-        SELECT user_id, event_id, rn::BIGINT AS rn, v AS v_micros,
-               s::BIGINT AS ewma_micros
-        FROM r"""),
+      Some(graft.operators.Events.ewmaOracleSql),
       bench = false),
 
     // ---------------------- streaming Holt (trend-aware forecasting)
@@ -1236,39 +1055,11 @@ object Streaming {
         val src = eventsStream(spark, dir)
           .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
             "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v")
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = holtStream(spark, src).writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/cp")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.read
-          .schema("user_id BIGINT, event_id BIGINT, rn BIGINT, v_micros BIGINT, " +
+        drain(holtStream(spark, src),
+          "user_id BIGINT, event_id BIGINT, rn BIGINT, v_micros BIGINT, " +
             "level_micros BIGINT, trend_micros BIGINT, forecast_micros BIGINT")
-          .parquet(s"$tmp/out")
       },
-      Some("""
-        WITH RECURSIVE e AS (
-          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                 CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY epoch_us(ts), event_id) AS rn
-          FROM events),
-        r AS (
-          SELECT user_id, event_id, rn, v, v AS l, 0::BIGINT AS b FROM e WHERE rn = 1
-          UNION ALL
-          SELECT e.user_id, e.event_id, e.rn, e.v,
-                 ((300 * e.v + 700 * (r.l + r.b)) // 1000)::BIGINT,
-                 ((200 * (((300 * e.v + 700 * (r.l + r.b)) // 1000) - r.l)
-                   + 800 * r.b) // 1000)::BIGINT
-          FROM r JOIN e ON e.user_id = r.user_id AND e.rn = r.rn + 1)
-        SELECT user_id, event_id, rn::BIGINT AS rn, v AS v_micros,
-               l::BIGINT AS level_micros, b::BIGINT AS trend_micros,
-               (l + b)::BIGINT AS forecast_micros
-        FROM r"""),
+      Some(graft.operators.Events.holtOracleSql),
       bench = false),
 
     // --------------------- streaming CUSUM (live change-point watch)
@@ -1294,19 +1085,9 @@ object Streaming {
           .join(mu, "user_id")
           .selectExpr("user_id", "event_id", "ts_us", "v", "mu")
           .as[CusumPoint]
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = cusumStream(spark, src).writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/cp")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.read
-          .schema("user_id BIGINT, event_id BIGINT, rn BIGINT, v_micros BIGINT, " +
+        drain(cusumStream(spark, src),
+          "user_id BIGINT, event_id BIGINT, rn BIGINT, v_micros BIGINT, " +
             "mu_micros BIGINT, sp_micros BIGINT, sm_micros BIGINT, alarm BOOLEAN")
-          .parquet(s"$tmp/out")
       },
       Some(graft.operators.Events.cusumOracleSql),
       bench = false),
@@ -1350,49 +1131,22 @@ object Streaming {
           .write.mode("append").parquet(staged)
         val src = eventsStreamFrom(spark, staged).select("user_id", "ts")
         val gapUs = 1800000001L
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = src.withWatermark("ts", "0 seconds")
+        val sessions = src.withWatermark("ts", "0 seconds")
           .groupBy(session_window(col("ts"), s"$gapUs microseconds"), col("user_id"))
           .agg(expr("cast(count(*) AS bigint) AS n_events"))
           .selectExpr("user_id",
             "unix_micros(session_window.start) AS session_start_us",
             s"unix_micros(session_window.end) - ${gapUs}L AS session_end_us",
             "n_events")
-          .writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/cp")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.read
-          .schema("user_id BIGINT, session_start_us BIGINT, session_end_us BIGINT, n_events BIGINT")
-          .parquet(s"$tmp/out")
+        drain(sessions,
+          "user_id BIGINT, session_start_us BIGINT, session_end_us BIGINT, n_events BIGINT")
           .where("user_id >= 0")
           .selectExpr("user_id",
             """cast(row_number() OVER (PARTITION BY user_id
                                        ORDER BY session_start_us) AS bigint) AS session_id""",
             "n_events", "session_start_us", "session_end_us")
       },
-      Some("""
-        WITH flagged AS (
-          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                 CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) IS NULL
-                      THEN 1
-                      WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) > 1800000000
-                      THEN 1 ELSE 0 END AS is_boundary
-          FROM events
-        ), sessioned AS (
-          SELECT user_id, event_id, ts_us,
-                 sum(is_boundary) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS session_id
-          FROM flagged
-        )
-        SELECT user_id, session_id, count(*) AS n_events,
-               min(ts_us) AS session_start_us, max(ts_us) AS session_end_us
-        FROM sessioned
-        GROUP BY user_id, session_id"""),
+      Some(graft.operators.Events.sessionizeOracleSql),
       bench = false),
 
     // ------------------ streaming anomaly residuals (live alerting)
@@ -1409,18 +1163,8 @@ object Streaming {
         val src = eventsStream(spark, dir)
           .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
             "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v")
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = ewmaResidStream(spark, src).writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/cp")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val ew = spark.read
-          .schema("user_id BIGINT, event_id BIGINT, rn BIGINT, v_micros BIGINT, resid_micros BIGINT")
-          .parquet(s"$tmp/out")
+        val ew = drain(ewmaResidStream(spark, src),
+          "user_id BIGINT, event_id BIGINT, rn BIGINT, v_micros BIGINT, resid_micros BIGINT")
           .where("rn >= 2")
         val scale = ew.groupBy("user_id")
           .agg(expr("cast(round(2 * percentile(abs(resid_micros), 0.5), 0) AS bigint) AS m2"))
@@ -1428,29 +1172,7 @@ object Streaming {
           .where("2 * abs(resid_micros) > 3 * m2")
           .selectExpr("user_id", "event_id", "rn", "v_micros", "resid_micros", "m2")
       },
-      Some("""
-        WITH RECURSIVE e AS (
-          SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                 CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY epoch_us(ts), event_id) AS rn
-          FROM events),
-        r AS (
-          SELECT user_id, event_id, rn, v, v AS s, 0::BIGINT AS resid FROM e WHERE rn = 1
-          UNION ALL
-          SELECT e.user_id, e.event_id, e.rn, e.v,
-                 ((300 * e.v + 700 * r.s) // 1000)::BIGINT,
-                 (e.v - r.s)::BIGINT
-          FROM r JOIN e ON e.user_id = r.user_id AND e.rn = r.rn + 1),
-        ew AS (SELECT * FROM r WHERE rn >= 2),
-        scale AS (
-          SELECT user_id,
-                 CAST(round(2 * quantile_cont(abs(resid), 0.5), 0) AS BIGINT) AS m2
-          FROM ew GROUP BY user_id)
-        SELECT ew.user_id, event_id, rn::BIGINT AS rn, v AS v_micros,
-               resid AS resid_micros, m2
-        FROM ew JOIN scale ON ew.user_id = scale.user_id
-        WHERE 2 * abs(resid) > 3 * m2"""),
+      Some(graft.operators.Events.anomalyOracleSql),
       bench = false),
 
     // --------------------- stateful streaming funnel (stage machine)
@@ -1470,18 +1192,7 @@ object Streaming {
           .selectExpr("user_id", "event_type", "ts")
           .withWatermark("ts", "24 hours")
           .as[FunnelEvent]
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = funnelStream(src).writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/cp")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val hits = spark.read
-          .schema("user_id BIGINT, stage INT, ts_us BIGINT")
-          .parquet(s"$tmp/out")
+        val hits = drain(funnelStream(src), "user_id BIGINT, stage INT, ts_us BIGINT")
         val agg = hits.groupBy("stage").agg(expr("cast(count(*) AS bigint) AS n"))
         val spine = Seq((1, "1_signup"), (2, "2_view_24h"), (3, "3_purchase_24h"))
           .toDF("stage", "label")
@@ -1492,24 +1203,7 @@ object Streaming {
           .orderBy("stage_no")
           .selectExpr("stage", "n", "n * 1000000L div n0 AS conv_ppm")
       },
-      Some("""
-        WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        s1 AS (SELECT user_id, min(ts_us) AS t1 FROM e
-               WHERE event_type = 'signup' GROUP BY user_id),
-        s2 AS (SELECT e.user_id, min(ts_us) AS t2
-               FROM e JOIN s1 USING (user_id)
-               WHERE event_type = 'view' AND ts_us > t1 AND ts_us <= t1 + 86400000000
-               GROUP BY e.user_id),
-        s3 AS (SELECT e.user_id, min(ts_us) AS t3
-               FROM e JOIN s2 USING (user_id)
-               WHERE event_type = 'purchase' AND ts_us > t2 AND ts_us <= t2 + 86400000000
-               GROUP BY e.user_id),
-        c AS (
-          SELECT '1_signup' AS stage, count(*)::BIGINT AS n FROM s1
-          UNION ALL SELECT '2_view_24h', count(*)::BIGINT FROM s2
-          UNION ALL SELECT '3_purchase_24h', count(*)::BIGINT FROM s3)
-        SELECT stage, n, (n * 1000000 // (SELECT count(*) FROM s1))::BIGINT AS conv_ppm
-        FROM c"""),
+      Some(graft.operators.Events.funnelStrictOracleSql),
       bench = false),
 
     // ------------------- streaming heavy hitters (bounded sketch state)
@@ -1555,14 +1249,8 @@ object Streaming {
               state.update(m.toMap)
               m.keysIterator.map(t => (shard, t)).toSeq.iterator
           }
-        val qn = "st_heavyhitters_sink"
-        val q = summaries.toDF("shard", "item").writeStream
-          .format("memory").queryName(qn)
-          .outputMode(OutputMode.Update)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val cands = spark.table(qn).select("item").distinct()
+        val cands = drainTable(summaries.toDF("shard", "item"),
+          "st_heavyhitters_sink", OutputMode.Update).select("item").distinct()
         // exact confirm over the batch table — identical to the batch
         // operator's second pass (and the reason the output is exact)
         val items = graft.Tables.events(spark, dir).selectExpr(itemExpr)
@@ -1574,16 +1262,7 @@ object Streaming {
           .where(s"cnt * ${k}L > n_total")
           .selectExpr("item", "cnt", "cnt * 1000000L div n_total AS share_ppm")
       },
-      Some("""
-        WITH i AS (
-          SELECT CASE WHEN event_id % 10 < 7 THEN event_id % 20
-                      ELSE event_id + 1000000000 END AS item
-          FROM events)
-        SELECT item, count(*)::BIGINT AS cnt,
-               (count(*) * 1000000 // (SELECT count(*) FROM i))::BIGINT AS share_ppm
-        FROM i
-        GROUP BY item
-        HAVING count(*) * 500 > (SELECT count(*) FROM i)"""),
+      Some(graft.operators.Events.heavyHittersOracleSql),
       bench = false),
 
     // ------------------------ stateless model serving (stream scoring)
@@ -1606,10 +1285,7 @@ object Streaming {
         val wMap = graft.operators.Ml.trainChain(spark, dir)._2
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         val bc = spark.sparkContext.broadcast(wMap)
-        val src = spark.readStream
-          .schema(documentsSchema)
-          .parquet(stageDir(s"$dir/documents.parquet"))
-        val scored = graft.operators.Ml.featureArrays(src)
+        val scored = graft.operators.Ml.featureArrays(documentsStream(spark, dir))
           .selectExpr("doc_id", "y", "hs")
           .as[(Long, Long, Seq[Long])]
           .map { case (d, y, hs) =>
@@ -1619,18 +1295,7 @@ object Streaming {
             (d, y, m, if (m > 0L) 1L else -1L, if (y * m > 0L) 1L else 0L)
           }
           .toDF("doc_id", "y", "margin", "pred", "correct")
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = scored.writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/cp")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.read
-          .schema("doc_id BIGINT, y BIGINT, margin BIGINT, pred BIGINT, correct BIGINT")
-          .parquet(s"$tmp/out")
+        drain(scored, "doc_id BIGINT, y BIGINT, margin BIGINT, pred BIGINT, correct BIGINT")
       },
       Some(graft.operators.Ml.scoreOracleSql),
       bench = false),
@@ -1651,14 +1316,7 @@ object Streaming {
       (spark, dir) => {
         import spark.implicits._
         val bc = spark.sparkContext.broadcast(graft.operators.Ml.kmTrain(spark, dir))
-        val embSchema = StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)),
-          StructField("label", IntegerType)))
-        val src = spark.readStream
-          .schema(embSchema)
-          .parquet(stageDir(s"$dir/embeddings.parquet"))
-        val scored = src.selectExpr("vec_id", "embedding")
+        val scored = embeddingsStream(spark, dir).selectExpr("vec_id", "embedding")
           .as[(Long, Seq[Float])]
           .map { case (id, e) =>
             val cents = bc.value
@@ -1678,18 +1336,7 @@ object Streaming {
             (id, bj, bd)
           }
           .toDF("vec_id", "cluster", "d")
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = scored.writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/cp")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.read
-          .schema("vec_id BIGINT, cluster BIGINT, d BIGINT")
-          .parquet(s"$tmp/out")
+        drain(scored, "vec_id BIGINT, cluster BIGINT, d BIGINT")
       },
       Some(s"""
         WITH ${graft.operators.Ml.kmAssignCtes}
@@ -1709,7 +1356,7 @@ object Streaming {
     graft.QueryDef(
       "st_lake_ingest",
       (spark, dir) => {
-        val work = java.nio.file.Files.createTempDirectory("graft_st_lake").toString
+        val work = graft.TmpDirs.create("graft_st_lake").toString
         val root = s"$work/customer"
         graft.sources.Lake.commitVersion(
           spark, graft.Tables.customer(spark, dir), root)
@@ -1755,7 +1402,7 @@ object Streaming {
       "st_ivm",
       (spark, dir) => {
         import graft.sources.Lake
-        val work = java.nio.file.Files.createTempDirectory("graft_st_ivm").toString
+        val work = graft.TmpDirs.create("graft_st_ivm").toString
         val root = s"$work/customer"
         val viewRoot = s"$work/segment_view"
         Lake.commitVersion(spark, graft.Tables.customer(spark, dir), root)
@@ -1847,19 +1494,9 @@ object Streaming {
         val src = eventsStreamFrom(spark, staged)
           .selectExpr("user_id", "event_id", "event_type", "unix_micros(ts) AS ts_us")
           .as[Scd2Point]
-        val tmp = java.nio.file.Files.createTempDirectory("graft_st_gate").toString
-        val q = scd2Stream(spark, src).writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/cp")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.read
-          .schema("user_id BIGINT, event_type STRING, valid_from_us BIGINT, " +
+        drain(scd2Stream(spark, src),
+          "user_id BIGINT, event_type STRING, valid_from_us BIGINT, " +
             "valid_to_us BIGINT, version BIGINT")
-          .parquet(s"$tmp/out")
           .selectExpr("user_id", "event_type", "valid_from_us",
             s"CASE WHEN valid_to_us = ${sentinelUs}L THEN cast(null AS bigint) " +
               "ELSE valid_to_us END AS valid_to_us",

@@ -78,8 +78,8 @@ class ChunkPathsSpec extends SparkSpec {
       .selectExpr("page_number AS doc_id", "chunk_number", "text AS chunk_text"))
 
     val out = s"${tmp()}/out"
-    Streaming.runToCompletion(
-      Streaming.chunkIngest(spark, s"$dir/documents.parquet", out, s"${tmp()}/ck"))
+    Streaming.chunkIngest(spark, s"$dir/documents.parquet", out, s"${tmp()}/ck")
+      .awaitTermination()
     val streamed = rows(spark.read.parquet(out))
 
     // per doc: 9 → none, 10/11/49/120/500 → 1, 501/549/550 → 2,

@@ -1,0 +1,53 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+/** Source guards for two shared seams: temp dirs go through
+  * [[TmpDirs]], and the streaming twins start their sinks only through
+  * the drain seam in `Streaming.scala`.
+  */
+class SeamGuardSpec extends AnyFunSuite {
+  private val root = Paths.get("src/main/scala")
+
+  /** Each line of `p` containing `needle`, with the name of the `def` or
+    * registered query (`"name",` on its own line) that encloses it: the
+    * nearest one above.
+    */
+  private def hits(p: Path, needle: String): List[(String, String)] = {
+    val Def = """.*\bdef (\w+).*""".r
+    val Query = """\s*"(\w+)",\s*""".r
+    var owner = "<top>"
+    Files.readAllLines(p).asScala.zipWithIndex.toList.flatMap { case (line, i) =>
+      line match {
+        case Def(n) => owner = n
+        case Query(n) => owner = n
+        case _ =>
+      }
+      if (line.contains(needle)) List(s"${p.getFileName}:${i + 1}" -> owner) else Nil
+    }
+  }
+
+  private def sources: List[Path] = {
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    Using.resource(Files.walk(root))(_.iterator.asScala.filter(_.toString.endsWith(".scala")).toList)
+  }
+
+  test("Files.createTempDirectory appears in src/main only in TmpDirs, Curation.gateLakeRoot and Repl") {
+    def allowed(file: String, owner: String): Boolean =
+      file == "TmpDirs.scala" || file == "Repl.scala" ||
+        (file == "Curation.scala" && owner == "gateLakeRoot")
+    val stray = sources.flatMap(p => hits(p, "Files.createTempDirectory("))
+      .filterNot { case (at, owner) => allowed(at.takeWhile(_ != ':'), owner) }
+    assert(stray.isEmpty, stray.mkString("\n"))
+  }
+
+  test(".writeStream appears in Streaming.scala only in the drain seam and the foreachBatch twins") {
+    val file = root.resolve("graft/streaming/Streaming.scala")
+    val owners = hits(file, ".writeStream").map(_._2)
+    assert(owners.sorted == List("appendParquet", "drainTable", "st_ivm", "st_lake_ingest"),
+      owners)
+  }
+}

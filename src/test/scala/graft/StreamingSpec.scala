@@ -90,7 +90,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     batch1.write.mode("append").parquet(in)
 
-    Streaming.runToCompletion(Streaming.chunkIngest(spark, in, out, ck))
+    Streaming.chunkIngest(spark, in, out, ck).awaitTermination()
     val afterFirst = spark.read.parquet(out).count()
     assert(afterFirst == 4) // doc1: 1 chunk; doc2 (950 chars): 500 + 500 + trailing 50 = 3 chunks
 
@@ -99,7 +99,7 @@ class StreamingSpec extends SparkSpec {
     Seq((3L, "another single-chunk document arrives later", "en", "s3", 44L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("append").parquet(in)
-    Streaming.runToCompletion(Streaming.chunkIngest(spark, in, out, ck))
+    Streaming.chunkIngest(spark, in, out, ck).awaitTermination()
     val afterSecond = spark.read.parquet(out)
     assert(afterSecond.count() == afterFirst + 1)
     assert(afterSecond.where("doc_id = 1").count() == 1) // not reprocessed
@@ -118,7 +118,7 @@ class StreamingSpec extends SparkSpec {
       (3L, "a different document", "en", "s3", 20L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("append").parquet(in)
-    Streaming.runToCompletion(Streaming.dedupIngest(spark, in, out, ck))
+    Streaming.dedupIngest(spark, in, out, ck).awaitTermination()
     val first = spark.read.parquet(out)
     assert(first.count() == 2)
     assert(first.select("text_hash").distinct().count() == 2)
@@ -130,7 +130,7 @@ class StreamingSpec extends SparkSpec {
       (5L, "brand new content", "en", "s5", 17L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("append").parquet(in)
-    Streaming.runToCompletion(Streaming.dedupIngest(spark, in, out, ck))
+    Streaming.dedupIngest(spark, in, out, ck).awaitTermination()
     val second = spark.read.parquet(out)
     assert(second.count() == 3) // doc 4 deduped against batch-1 state
     assert(second.where("doc_id = 4").count() == 0)
@@ -356,7 +356,7 @@ class StreamingSpec extends SparkSpec {
       .option("path", out).option("checkpointLocation", ck)
       .outputMode("append").trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    Streaming.runToCompletion(q)
+    q.awaitTermination()
 
     val got = spark.read.parquet(out).collect()
       .map(r => (r.getLong(0), Option(r.getString(2)))).toMap
@@ -395,7 +395,7 @@ class StreamingSpec extends SparkSpec {
       .option("path", out).option("checkpointLocation", ck)
       .outputMode("append").trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    Streaming.runToCompletion(q)
+    q.awaitTermination()
     val got = spark.read.parquet(out).collect()
       .map(r => (r.getAs[Long]("l_id"), r.getAs[Long]("r_id"))).toSet
     // click 2 ⋈ view 1 (20 min gap); click 4 ⋈ view 5 (5 min, across files);
