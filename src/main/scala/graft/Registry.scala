@@ -27,13 +27,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *               surface (PdfText, CSV/ORC/JSONL round trips, zorder
   *               rewrite, compaction) has NO perf regression signal.
   *               Same flag-derived-membership rule as streamBench.
-  * @param resetMemo for queries whose RESULT is memoized in a holder
-  *               (gr_labelprop's label table, tp_bpe_train's merges,
-  *               ml_train_linear's chain): drop the memo (and release
-  *               its fences, where it holds any — the BPE model is
-  *               plain driver values, so its reset only drops) so a
-  *               timed bench pass measures the kernel, not a cached
-  *               read. Input-level memos (purchaseEdges) stay — sharing
+  * @param resetMemo for queries whose RESULT is held in a
+  *               [[SessionMemo]] (gr_labelprop's label table,
+  *               tp_bpe_train's merges, ml_train_linear's chain): that
+  *               memo's `reset`, which drops the entry and releases
+  *               what it holds, so a timed bench pass measures the
+  *               kernel, not a cached read. Input-level memos
+  *               (purchaseEdges) stay — sharing
   *               an input table across queries is legitimate; caching a
   *               query's own answer in the timed lane is not.
   */

@@ -1,25 +1,42 @@
 package graft
 
-/** Process-private registry of the temp directories queries create per
-  * plan build: lake roots, staged stream sources and drain sinks, index
-  * dirs, PDF gate copies, CSV/ORC/JSONL round trips, compaction, zorder
-  * and store lifecycle dirs. Every `Files.createTempDirectory` in the
-  * engine goes through [[create]]; the exceptions are
-  * `Curation.gateLakeRoot` (a session memo, deleted by a shutdown hook)
-  * and the REPL's work dir. Every timed bench lane sweeps between
-  * passes — 5 runs per query would otherwise leave 5 copies each — but
-  * a prefix+mtime scan over the SHARED java.io.tmpdir deletes other
-  * graft JVMs' live dirs too (an sbt test run's lake roots, a
-  * concurrent Verify's gate copies). Registering each created path here
-  * scopes the sweep to exactly what THIS process created.
+/** Owner of every temp directory the engine creates: lake roots, staged
+  * stream sources and drain sinks, index dirs, PDF gate copies,
+  * CSV/ORC/JSONL round trips, compaction, zorder and store lifecycle
+  * dirs, and the release gate's session-held lake root. Every
+  * `Files.createTempDirectory` in the engine goes through [[create]];
+  * the one exception is the REPL's work dir, which outlives the JVM on
+  * purpose.
+  *
+  * Two lifetimes:
+  *  - plan-build dirs ([[create]]): every timed bench lane calls
+  *    [[sweepCreated]] between passes — 5 runs per query would
+  *    otherwise leave 5 copies each;
+  *  - session-held dirs (`create(prefix, held = true)`): read by a
+  *    [[SessionMemo]] for the session's lifetime, so no sweep reclaims
+  *    them.
+  * One JVM shutdown hook deletes every dir of either kind that is still
+  * registered, so a `graft.Verify` run or a test run leaves none behind.
+  * Registration scopes both the sweep and the hook to exactly what THIS
+  * process created: a prefix+mtime scan over the SHARED java.io.tmpdir
+  * would delete other graft JVMs' live dirs too (an sbt test run's lake
+  * roots, a concurrent Verify's gate copies).
   */
 object TmpDirs {
   private val created = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private val held = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
 
-  /** `Files.createTempDirectory(prefix)` + register for [[sweepCreated]]. */
-  def create(prefix: String): java.nio.file.Path = {
+  Runtime.getRuntime.addShutdownHook(new Thread(() => {
+    sweepCreated()
+    held.forEach(p => deleteRecursively(p.toFile))
+  }))
+
+  /** `Files.createTempDirectory(prefix)`, registered for [[sweepCreated]]
+    * (or, when `held`, only for the exit hook).
+    */
+  def create(prefix: String, held: Boolean = false): java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
-    created.add(p)
+    (if (held) this.held else created).add(p)
     p
   }
 
@@ -28,10 +45,8 @@ object TmpDirs {
     f.delete(): Unit
   }
 
-  /** Delete every dir this JVM registered via [[create]] and forget it.
-    * Only the bench lanes call it: outside them nothing drains the
-    * queue, which costs one Path reference per plan build, and the dirs
-    * stay until the caller removes them.
+  /** Delete every plan-build dir this JVM registered and forget it. The
+    * bench lanes call it between passes; the exit hook calls it last.
     */
   def sweepCreated(): Unit = {
     var p = created.poll()

@@ -46,23 +46,33 @@ object Chunker {
            |                   s -> length(s.chunk_text) >= $MinChunk)
            |       END)""".stripMargin): _*)
 
-  /** [[chunk]] in DuckDB: the oracle of `c1_chunk` and of its
-    * streaming twin `st_chunk_ingest`.
+  /** [[chunk]] in DuckDB over `documents`, as the CTE pair `ok` (the
+    * cleaned `tc` of every kept document) and `chunks` (the `keep`
+    * columns, `tc`, `chunk_number`, `chunk_text` — what [[chunk]] gives
+    * in Spark), without the leading `WITH`. Every chunk oracle reads it.
     */
-  val chunkOracle: String = s"""
-        WITH ok AS (
-          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
+  def chunkCte(keep: String*): String = {
+    val k = keep.mkString(", ")
+    s"""ok AS (
+          SELECT $k, ${Fns.cleanTextDuck("text")} AS tc
           FROM documents
           WHERE length(${Fns.cleanTextDuck("text")}) >= $MinParagraph
-        )
-        SELECT doc_id, NULL::INT AS chunk_number, tc AS chunk_text
-        FROM ok WHERE length(tc) <= $ChunkSize
-        UNION ALL
-        SELECT doc_id, (i // $Stride + 1)::INT AS chunk_number,
-               substring(tc, i + 1, $ChunkSize) AS chunk_text
-        FROM ok, LATERAL (SELECT unnest(generate_series(0, length(tc) - 1, $Stride)) AS i) g
-        WHERE length(tc) > $ChunkSize
-          AND length(substring(tc, i + 1, $ChunkSize)) >= $MinChunk"""
+        ), chunks AS (
+          SELECT $k, tc, NULL::INT AS chunk_number, tc AS chunk_text
+          FROM ok WHERE length(tc) <= $ChunkSize
+          UNION ALL
+          SELECT $k, tc, (i // $Stride + 1)::INT AS chunk_number,
+                 substring(tc, i + 1, $ChunkSize) AS chunk_text
+          FROM ok, LATERAL (SELECT unnest(generate_series(0, length(tc) - 1, $Stride)) AS i) g
+          WHERE length(tc) > $ChunkSize
+            AND length(substring(tc, i + 1, $ChunkSize)) >= $MinChunk
+        )"""
+  }
+
+  /** The oracle of `c1_chunk` and of its streaming twin `st_chunk_ingest`. */
+  val chunkOracle: String = s"""
+        WITH ${chunkCte("doc_id")}
+        SELECT doc_id, chunk_number, chunk_text FROM chunks"""
 
   def queries: Seq[QueryDef] = Seq(
     // ---------------------------------------------------------------- C1
@@ -93,23 +103,9 @@ object Chunker {
             org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1))
               .over(org.apache.spark.sql.expressions.Window.partitionBy("doc_id"))),
       Some(s"""
-        WITH ok AS (
-          SELECT doc_id, source, ${Fns.cleanTextDuck("text")} AS tc
-          FROM documents
-          WHERE length(${Fns.cleanTextDuck("text")}) >= $MinParagraph
-        ), chunks AS (
-          SELECT doc_id, source, length(tc)::BIGINT AS char_len,
-                 NULL::INT AS chunk_number, length(tc)::BIGINT AS chunk_len
-          FROM ok WHERE length(tc) <= $ChunkSize
-          UNION ALL
-          SELECT doc_id, source, length(tc)::BIGINT AS char_len,
-                 (i // $Stride + 1)::INT AS chunk_number,
-                 length(substring(tc, i + 1, $ChunkSize))::BIGINT AS chunk_len
-          FROM ok, LATERAL (SELECT unnest(generate_series(0, length(tc) - 1, $Stride)) AS i) g
-          WHERE length(tc) > $ChunkSize
-            AND length(substring(tc, i + 1, $ChunkSize)) >= $MinChunk
-        )
-        SELECT doc_id, source, char_len, chunk_number, chunk_len,
+        WITH ${chunkCte("doc_id", "source")}
+        SELECT doc_id, source, length(tc)::BIGINT AS char_len, chunk_number,
+               length(chunk_text)::BIGINT AS chunk_len,
                count(*) OVER (PARTITION BY doc_id) AS total_chunks
         FROM chunks"""))
   )

@@ -810,7 +810,7 @@ object Curation {
         SELECT -1::BIGINT, '(tokens)', '', '',
                sum(wc * len(list_filter(string_split(seq, '|'), x -> x != '')))::BIGINT
         FROM v$BpeRounds"""),
-      resetMemo = Some((s, d) => resetBpeLearned(s, d))),
+      resetMemo = Some(bpeLearned.reset _)),
 
     // ------------------------------ BPE encode with the learned merges
     // The tokenizer lifecycle's second half: take tp_bpe_train's 10
@@ -2347,61 +2347,30 @@ object Curation {
     BpeModel(merges.result(), tokens)
   }
 
-  private val gateLakeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
   /** One committed lake copy of the corpus per (session, sfDir) for
-    * tp_release_gate, memoized like [[bpeLearned]]. Without the memo,
-    * every PLAN BUILD (Bench warmup + each timed pass, RegistrySpec,
-    * the profile lane) wrote a fresh never-deleted temp-dir corpus
-    * copy — a disk leak across a round. The temp root is registered
-    * for recursive deletion at JVM exit; a lost putIfAbsent race just
-    * commits one extra copy that its own shutdown hook still removes.
+    * tp_release_gate. Without the memo, every PLAN BUILD (Bench warmup
+    * + each timed pass, RegistrySpec, the profile lane) wrote a fresh
+    * corpus copy. The root is a held [[graft.TmpDirs]] dir: the bench
+    * lanes' sweep leaves it to the session, and the exit hook deletes it.
     */
-  private def gateLakeRoot(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): String = {
-    gateLakeCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    gateLakeCache.get((spark, dir)) match {
-      case Some(r) => r
-      case None =>
-        // NOT TmpDirs.create: this root is a session-lifetime memo the
-        // bench lanes' sweep must never reclaim; the shutdown hook is
-        // its whole cleanup story
-        val tmp = java.nio.file.Files.createTempDirectory("graft_gate")
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          graft.TmpDirs.deleteRecursively(tmp.toFile)
-        }))
-        val root = tmp.toString + "/documents"
-        graft.sources.Lake.commitVersion(spark, Tables.documents(spark, dir), root)
-        gateLakeCache.putIfAbsent((spark, dir), root).getOrElse(root)
-    }
-  }
+  private val gateLakeRoot = new graft.SessionMemo[String]((spark, dir) => {
+    val root = graft.TmpDirs.create("graft_gate", held = true).toString + "/documents"
+    graft.sources.Lake.commitVersion(spark, Tables.documents(spark, dir), root)
+    root
+  }, _ => ())
 
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), BpeModel]
-
-  /** The 10-round [[BpeModel]], memoized per (session, dir) with
-    * stopped-session eviction; shared by tp_bpe_train (which reports
-    * the merges) and tp_bpe_apply (which encodes the corpus with them).
-    * The model is 10 merges and a count, so nothing is persisted and a
-    * lost race at most learns twice; the learn itself holds the
-    * collected vocabulary on the driver (see [[bpeLearn]] for that bound).
+  /** The 10-round [[BpeModel]] per (session, dir), shared by
+    * tp_bpe_train (which reports the merges) and tp_bpe_apply (which
+    * encodes the corpus with them). tp_bpe_train's OUTPUT-level memo:
+    * its `resetMemo` is this memo's `reset`, so a timed bench pass
+    * measures the merge learning, not a cached read (tp_bpe_apply
+    * keeps reading the memo — the merges are its INPUT). The model is
+    * 10 merges and a count, so nothing is persisted and the reset only
+    * drops it; the learn itself holds the collected vocabulary on the
+    * driver (see [[bpeLearn]] for that bound).
     */
-  private[graft] def bpeLearned(spark: org.apache.spark.sql.SparkSession,
-                                dir: String): BpeModel = {
-    bpeCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    bpeCache.getOrElseUpdate((spark, dir), bpeLearn(spark, dir, BpeRounds))
-  }
-
-  /** Drop the memoized model so the next [[bpeLearned]] call
-    * re-learns. tp_bpe_train's OUTPUT-level memo: Bench resets it
-    * before each timed pass so the lane row measures the merge
-    * learning, not a cached read (tp_bpe_apply keeps reading the memo
-    * — the merges are its INPUT).
-    */
-  private[graft] def resetBpeLearned(spark: org.apache.spark.sql.SparkSession,
-                                     dir: String): Unit =
-    bpeCache -= ((spark, dir))
+  private[graft] val bpeLearned =
+    new graft.SessionMemo[BpeModel](bpeLearn(_, _, BpeRounds), _ => ())
 
   /** Layout-independent dense rank over the doc-id set: (doc_id, rk)
     * with rk the 0-based position in ascending doc_id order — the draw

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.{Fns, QueryDef, Tables}
+import graft.operators.Chunker
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -198,38 +199,9 @@ object ChunkStore {
 
   // -------------------------------------------------------------- queries
 
-  /** DuckDB twin of the chunker pipeline (shared by the sink round-trip
-    * oracles below; s4/s5 carry their own inlined copies from earlier
-    * rounds).
-    */
-  private val chunkCteSql: String = s"""
-        ok AS (
-          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
-          FROM documents
-          WHERE length(${Fns.cleanTextDuck("text")}) >= 10
-        ), chunks AS (
-          SELECT doc_id, NULL::INT AS chunk_number, tc AS chunk_text
-          FROM ok WHERE length(tc) <= 500
-          UNION ALL
-          SELECT doc_id, (i // 450 + 1)::INT AS chunk_number, substring(tc, i + 1, 500) AS chunk_text
-          FROM ok, LATERAL (SELECT unnest(generate_series(0, length(tc) - 1, 450)) AS i) g
-          WHERE length(tc) > 500 AND length(substring(tc, i + 1, 500)) >= 50
-        )"""
-
   /** s5_store_entries' oracle, shared by s5_store_entries_scalable. */
   private[graft] val storeEntriesOracleSql: String = s"""
-        WITH ok AS (
-          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
-          FROM documents
-          WHERE length(${Fns.cleanTextDuck("text")}) >= 10
-        ), chunks AS (
-          SELECT doc_id, NULL::INT AS chunk_number, tc AS chunk_text
-          FROM ok WHERE length(tc) <= 500
-          UNION ALL
-          SELECT doc_id, (i // 450 + 1)::INT AS chunk_number, substring(tc, i + 1, 500) AS chunk_text
-          FROM ok, LATERAL (SELECT unnest(generate_series(0, length(tc) - 1, 450)) AS i) g
-          WHERE length(tc) > 500 AND length(substring(tc, i + 1, 500)) >= 50
-        )
+        WITH ${Chunker.chunkCte("doc_id")}
         SELECT 'chunk_' || (row_number() OVER (ORDER BY doc_id, coalesce(chunk_number, 0)) - 1) AS id,
                chunk_text AS text,
                doc_id::VARCHAR AS doc_id_str,
@@ -327,7 +299,7 @@ object ChunkStore {
             expr("max(page_number) AS max_page"))
       },
       Some(s"""
-        WITH $chunkCteSql
+        WITH ${Chunker.chunkCte("doc_id")}
         SELECT 'doc_' || doc_id::VARCHAR AS source,
                count(*) AS n_chunks,
                sum(length(chunk_text))::BIGINT AS total_chars,
@@ -473,7 +445,7 @@ object ChunkStore {
           "'graft_chunks' AS collection_name")
       },
       Some(s"""
-        WITH $chunkCteSql
+        WITH ${Chunker.chunkCte("doc_id")}
         SELECT count(*)::BIGINT AS docs_before, 0::BIGINT AS docs_after,
                'graft_chunks' AS collection_name
         FROM chunks"""),
@@ -506,7 +478,7 @@ object ChunkStore {
             expr("cast(sum(size(metadata)) AS bigint) AS meta_entries"))
       },
       Some(s"""
-        WITH $chunkCteSql
+        WITH ${Chunker.chunkCte("doc_id")}
         SELECT count(*)::BIGINT AS n_entries,
                count(DISTINCT doc_id::VARCHAR || '_' || coalesce(chunk_number, 0)::VARCHAR)::BIGINT AS n_ids,
                sum(length(chunk_text))::BIGINT AS total_chars,
@@ -563,17 +535,7 @@ object ChunkStore {
           .agg(expr("count(*) AS n_chunks"),
                expr("cast(sum(length(text)) AS bigint) AS total_chars")),
       Some(s"""
-        WITH ok AS (
-          SELECT doc_id, ${Fns.cleanTextDuck("text")} AS tc
-          FROM documents
-          WHERE length(${Fns.cleanTextDuck("text")}) >= 10
-        ), chunks AS (
-          SELECT doc_id, tc AS chunk_text FROM ok WHERE length(tc) <= 500
-          UNION ALL
-          SELECT doc_id, substring(tc, i + 1, 500) AS chunk_text
-          FROM ok, LATERAL (SELECT unnest(generate_series(0, length(tc) - 1, 450)) AS i) g
-          WHERE length(tc) > 500 AND length(substring(tc, i + 1, 500)) >= 50
-        )
+        WITH ${Chunker.chunkCte("doc_id")}
         SELECT doc_id::VARCHAR AS source_doc, count(*) AS n_chunks,
                sum(length(chunk_text))::BIGINT AS total_chars
         FROM chunks GROUP BY 1""")),

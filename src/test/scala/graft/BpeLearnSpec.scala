@@ -76,7 +76,7 @@ class BpeLearnSpec extends SparkSpec {
 
   private def corpus(texts: String*): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    val dir = SparkSpec.tmpDir("graft_bpe").toString
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
     dir
@@ -87,7 +87,7 @@ class BpeLearnSpec extends SparkSpec {
       val want = sparkLoopLearn(sf, 10)
       assert(want.merges.size == 10)
       assert(Curation.bpeLearn(spark, sf, 10) == want)
-      Curation.resetBpeLearned(spark, sf)
+      Curation.bpeLearned.reset(spark, sf)
       val rows = Registry.byName("tp_bpe_train").run(spark, sf).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4))).toSeq
       assert(rows == want.merges.zipWithIndex.map { case ((a, b, c), i) => (i + 1L, a, b, a + b, c) } :+
@@ -124,7 +124,7 @@ class BpeLearnSpec extends SparkSpec {
   }
 
   test("tp_bpe_train runs at most 4 Spark jobs") {
-    Curation.resetBpeLearned(spark, sf0001)
+    Curation.bpeLearned.reset(spark, sf0001)
     val jobs = jobsRunBy(Registry.byName("tp_bpe_train").run(spark, sf0001).collect(): Unit)
     assert(jobs <= 4, s"tp_bpe_train ran $jobs jobs")
   }
@@ -133,7 +133,7 @@ class BpeLearnSpec extends SparkSpec {
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val first = Curation.bpeLearned(spark, sf0001)
     assert(jobsRunBy(assert(Curation.bpeLearned(spark, sf0001) eq first)) == 0)
-    Curation.resetBpeLearned(spark, sf0001)
+    Curation.bpeLearned.reset(spark, sf0001)
     var again: BpeModel = null
     assert(jobsRunBy { again = Curation.bpeLearned(spark, sf0001) } > 0)
     assert(!(again eq first) && again == first)

@@ -61,7 +61,7 @@ class CheckpointOpsSpec extends SparkSpec {
     * fences to file-backed mode).
     */
   private def withReliable[A](body: String => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = SparkSpec.tmpDir("graft_ckpt").toString
     val hadDir = spark.sparkContext.getCheckpointDir
     spark.sparkContext.setCheckpointDir(dir) // dir BEFORE the mode flip
     spark.conf.set("spark.graft.checkpoint.reliable", "true")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.Chunker
 import graft.sources.ChunkStore
 import graft.streaming.Streaming
@@ -17,7 +15,7 @@ import org.apache.spark.sql.DataFrame
   */
 class ChunkPathsSpec extends SparkSpec {
 
-  private def tmp(): String = Files.createTempDirectory("graft_chunks").toString
+  private def tmp(): String = SparkSpec.tmpDir("graft_chunks").toString
 
   /** Cleaned text of length `n`: words joined by single spaces. */
   private def cleaned(n: Int, seed: Int): String = {

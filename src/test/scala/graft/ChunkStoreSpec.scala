@@ -3,7 +3,6 @@ package graft
 import graft.sources.ChunkStore
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** S3–S8 quirk-ledger tests (SURVEY.md §2.1): CSV round-trip drops
   * chunk_number, add is idempotent, positional ids are deterministic.
@@ -11,7 +10,7 @@ import java.nio.file.Files
 class ChunkStoreSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_store").toString
+    SparkSpec.tmpDir("graft_store").toString
 
   private def sampleChunks() = {
     import spark.implicits._

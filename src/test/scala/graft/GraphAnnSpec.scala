@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.GraphAnn
-import java.nio.file.Files
 
 /** Sharded-NSW graph ANN: exactness by coverage at full beam width,
   * bounded-recall behavior at narrow width, build determinism, degree
@@ -29,7 +28,7 @@ class GraphAnnSpec extends SparkSpec {
   }
 
   private lazy val indexPath: String = {
-    val p = Files.createTempDirectory("graft_gann").toString + "/idx"
+    val p = SparkSpec.tmpDir("graft_gann").toString + "/idx"
     GraphAnn.buildIndex(embeddings(), p, numParts = 8, m = M, efC = 64)
     p
   }
@@ -52,7 +51,7 @@ class GraphAnnSpec extends SparkSpec {
   }
 
   test("build is deterministic and respects the degree bound") {
-    val p2 = Files.createTempDirectory("graft_gann2").toString + "/idx"
+    val p2 = SparkSpec.tmpDir("graft_gann2").toString + "/idx"
     GraphAnn.buildIndex(embeddings(), p2, numParts = 8, m = M, efC = 64)
     def nodes(path: String) = spark.read.parquet(path)
       .collect().map(r => (r.getAs[Long]("vec_id"),

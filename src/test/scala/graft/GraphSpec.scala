@@ -278,7 +278,7 @@ class GraphSpec extends SparkSpec {
       Seq((5L, 0L), (1L, 5L), (5L, 2L))).toDF("src", "dst")
     val local = Graph.pageRank(edges, 7).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_e2e").toString
+    val dir = SparkSpec.tmpDir("graft_ckpt_e2e").toString
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set("spark.graft.checkpoint.reliable", "true")
     try {

@@ -117,7 +117,7 @@ class HttpAnswererSpec extends AnyFunSuite {
   }
 
   test("dotenv: process env wins over the file; file fills the gap; missing file is silent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dotenv")
+    val dir = SparkSpec.tmpDir("graft_dotenv")
     val envFile = dir.resolve(".env")
     java.nio.file.Files.write(envFile,
       "API_KEY=from-file\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Knn
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** IVF index at rest: partitioned layout, partition-PRUNED search, and
   * agreement with brute force when the probe covers the right cluster.
@@ -17,7 +16,7 @@ class IvfSpec extends SparkSpec {
       .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
 
   test("index is written partitioned by cluster_id; search prunes partitions") {
-    val path = Files.createTempDirectory("graft_ivf").toString + "/index"
+    val path = SparkSpec.tmpDir("graft_ivf").toString + "/index"
     Knn.writeIvfIndex(spark, embeddings(), centroids(), path)
 
     // on-disk layout: one directory per cluster
@@ -41,7 +40,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("multi-probe: exactly nprobe clusters scanned, recall grows with width") {
-    val path = Files.createTempDirectory("graft_ivf").toString + "/index"
+    val path = SparkSpec.tmpDir("graft_ivf").toString + "/index"
     Knn.writeIvfIndex(spark, embeddings(), centroids(), path)
     val qVec = embeddings().where("vec_id = 3")
       .collect().head.getAs[scala.collection.Seq[Float]]("embedding").toSeq
@@ -111,7 +110,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("IVF-PQ at rest: codes-only layout, pruned probe, equals the inline v8 pipeline") {
-    val path = Files.createTempDirectory("graft_ivfpq").toString + "/index"
+    val path = SparkSpec.tmpDir("graft_ivfpq").toString + "/index"
     Knn.writeIvfPqIndex(spark, embeddings(), centroids(), path)
     // at rest: 8 small codes + id per vector — never the embedding
     val codes = spark.read.parquet(s"$path/codes")
@@ -137,7 +136,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("IVF with full probe width equals brute force") {
-    val path = Files.createTempDirectory("graft_ivf").toString + "/index"
+    val path = SparkSpec.tmpDir("graft_ivf").toString + "/index"
     Knn.writeIvfIndex(spark, embeddings(), centroids(), path)
     val qVec = embeddings().where("vec_id = 3")
       .collect().head.getAs[scala.collection.Seq[Float]]("embedding").toSeq

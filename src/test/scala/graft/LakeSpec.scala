@@ -11,7 +11,7 @@ class LakeSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot() =
-    java.nio.file.Files.createTempDirectory("graft_lake_spec").toString + "/t"
+    SparkSpec.tmpDir("graft_lake_spec").toString + "/t"
 
   test("a data directory without a manifest entry is not a committed version") {
     val root = freshRoot()
@@ -189,7 +189,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("shallow clone copies no data and evolves independently of the source") {
-    val work = java.nio.file.Files.createTempDirectory("graft_lake_clone").toString
+    val work = SparkSpec.tmpDir("graft_lake_clone").toString
     val src = s"$work/src"
     val dst = s"$work/dst"
     Lake.commitVersion(spark, Seq((1L, 10L), (2L, 20L)).toDF("k", "x"), src)

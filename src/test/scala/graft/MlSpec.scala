@@ -62,7 +62,7 @@ class MlSpec extends SparkSpec {
       (i.toLong, c.toArray.map(_.toFloat).toSeq)
     }.toSeq.toDF("cent_id", "cent_emb")
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_ml_ivf").toString
+    val dir = SparkSpec.tmpDir("graft_ml_ivf").toString
     val embeddings = Tables.embeddings(spark, sf)
     graft.operators.Knn.writeIvfIndex(spark, embeddings, cent, dir)
 

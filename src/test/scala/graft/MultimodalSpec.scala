@@ -73,7 +73,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("payload column is pruned when a query doesn't touch it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mm").toString + "/media"
+    val dir = SparkSpec.tmpDir("graft_mm").toString + "/media"
     media().write.parquet(dir)
     val q = spark.read.parquet(dir).select("media_id", "n_bytes")
     val scan = q.queryExecution.executedPlan.toString

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.{PdfFixtures, PdfText}
-import java.nio.file.Files
 
 /** S2 extractor tests against REAL on-disk PDF bytes (built by the
   * deterministic fixture writer): object scan, FlateDecode, content
@@ -236,7 +235,7 @@ class PdfTextSpec extends SparkSpec {
     val page =
       s"""BT /F1 12 Tf 72 720 Td 14 TL ($l1) Tj T* ($l2) Tj ET
          |""".stripMargin
-    val dir = Files.createTempDirectory("graft_pdf_long").toString
+    val dir = SparkSpec.tmpDir("graft_pdf_long").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "long.pdf"),
       PdfFixtures.buildPdf(Seq(page), compress = true))
     val rows = PdfText.extractChunks(spark, dir)
@@ -250,7 +249,7 @@ class PdfTextSpec extends SparkSpec {
   }
 
   test("extractChunks: distributed S1→C2 over a mixed-case fixture corpus") {
-    val dir = Files.createTempDirectory("graft_pdf_corpus").toString
+    val dir = SparkSpec.tmpDir("graft_pdf_corpus").toString
     PdfFixtures.writeFixtureDir(dir)
     val rows = PdfText.extractChunks(spark, dir).collect()
       .map(r => (r.getAs[String]("source"), r.getAs[Int]("page_number"),

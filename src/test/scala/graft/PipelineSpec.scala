@@ -18,7 +18,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("cold run extracts + indexes; warm run skips both (P1/P2)") {
-    val work = Files.createTempDirectory("graft_pipe").toString
+    val work = SparkSpec.tmpDir("graft_pipe").toString
     val first = Pipeline.setupKnowledgeBase(spark, docs(), work)
     assert(first.extracted && first.indexed)
     assert(first.chunkCount == 4) // 1 + 3
@@ -29,7 +29,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("force rebuild resets and reprocesses (P3)") {
-    val work = Files.createTempDirectory("graft_pipe").toString
+    val work = SparkSpec.tmpDir("graft_pipe").toString
     Pipeline.setupKnowledgeBase(spark, docs(), work)
     val rebuilt = Pipeline.setupKnowledgeBase(spark, docs(), work, forceRebuild = true)
     assert(rebuilt.extracted && rebuilt.indexed)
@@ -37,7 +37,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("store rows carry positional ids and NO chunk_number (P4/S4 quirk)") {
-    val work = Files.createTempDirectory("graft_pipe").toString
+    val work = SparkSpec.tmpDir("graft_pipe").toString
     Pipeline.setupKnowledgeBase(spark, docs(), work)
     val store = spark.read.parquet(s"$work/vector_store")
     assert(!store.columns.contains("chunk_number"))
@@ -46,7 +46,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("an unreadable extract raises and is left byte-identical (P1 guard)") {
-    val work = Files.createTempDirectory("graft_pipe")
+    val work = SparkSpec.tmpDir("graft_pipe")
     val extracted = Files.createDirectories(work.resolve("extracted_csv"))
     Files.write(extracted.resolve("part-00000.csv.gz"), "not gzip data".getBytes("UTF-8"))
     def listing() = extracted.toFile.listFiles().toSeq

@@ -41,7 +41,7 @@ class PlanShapeSpec extends SparkSpec {
   test("similaritySearch: one scan, no join or exchange; the query vector is a literal") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("graft_store").toString + "/store"
+    val store = SparkSpec.tmpDir("graft_store").toString + "/store"
     val chunks = Seq(("alpha chunk text", "a.pdf"), ("beta chunk text", "b.pdf"))
       .toDF("text", "source")
     graft.sources.ChunkStore.addDocuments(spark, chunks, store, Seq("source", "text"))
@@ -264,7 +264,7 @@ class PlanShapeSpec extends SparkSpec {
     val ev = Tables.events(spark, "/root/testdata/sf0.01").selectExpr(
       "event_id", "user_id", "event_type", "value", "cast(day(ts) AS int) AS d")
     val total = ev.count()
-    val base = java.nio.file.Files.createTempDirectory("graft_zspec").toString
+    val base = SparkSpec.tmpDir("graft_zspec").toString
     sources.Layout.zOrderWrite(ev, s"$base/z", 16, col("user_id"), col("d"))
     // control: single-column sort — perfect for user predicates, blind
     // to day predicates (every file spans all 30 days)
@@ -653,7 +653,7 @@ class PlanShapeSpec extends SparkSpec {
     // spread exchange, recomputing the whole md5-per-bigram feature
     // expression inside the (single) scan task. explode_outer carries
     // no inferred filter; this pin fails if anyone reverts it.
-    operators.Ml.resetTrainChain(spark, sf)
+    operators.Ml.trainChain.reset(spark, sf)
     val (f, _, _) = operators.Ml.trainChain(spark, sf)
     val inner = f.queryExecution.executedPlan.toString
     val poison = inner.linesIterator.filter(l =>

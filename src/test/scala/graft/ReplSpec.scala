@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** P5 end-to-end: a scripted stdin session drives the REAL interactive
   * loop against a populated vector store, and the captured console
   * transcript is golden-checked byte for byte against the reference's
@@ -13,7 +11,7 @@ class ReplSpec extends SparkSpec {
 
   test("scripted stdin session over a populated store matches the console golden") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_repl_spec").toString
+    val work = SparkSpec.tmpDir("graft_repl_spec").toString
     val docs = Seq(
       (1L, "数据工程课程介绍分布式查询引擎与大规模语料处理方法", "s1"),
       (2L, "another readable document with enough characters to index", "s2"))

@@ -85,10 +85,10 @@ class RoundsSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     // one warm cycle, so any per-session input memo is in place first
     Ml.trainChain(spark, sf)
-    Ml.resetTrainChain(spark, sf)
+    Ml.trainChain.reset(spark, sf)
     val before = persisted()
     Ml.trainChain(spark, sf)
-    Ml.resetTrainChain(spark, sf)
+    Ml.trainChain.reset(spark, sf)
     val left = persisted() -- before
     unpersist(left)
     assert(left.isEmpty, s"left persisted after reset: $left")

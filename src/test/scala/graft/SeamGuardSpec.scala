@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-/** Source guards for two shared seams: temp dirs go through
-  * [[TmpDirs]], and the streaming twins start their sinks only through
-  * the drain seam in `Streaming.scala`.
+/** Source guards for the shared seams: temp dirs go through
+  * [[TmpDirs]], per-session memos through [[SessionMemo]], and the
+  * streaming twins start their sinks only through the drain seam in
+  * `Streaming.scala`.
   */
 class SeamGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -35,13 +36,20 @@ class SeamGuardSpec extends AnyFunSuite {
     Using.resource(Files.walk(root))(_.iterator.asScala.filter(_.toString.endsWith(".scala")).toList)
   }
 
-  test("Files.createTempDirectory appears in src/main only in TmpDirs, Curation.gateLakeRoot and Repl") {
-    def allowed(file: String, owner: String): Boolean =
-      file == "TmpDirs.scala" || file == "Repl.scala" ||
-        (file == "Curation.scala" && owner == "gateLakeRoot")
+  /** Files under `src/main` whose lines contain `needle`. */
+  private def filesWith(needle: String): Set[String] =
+    sources.flatMap(p => hits(p, needle)).map(_._1.takeWhile(_ != ':')).toSet
+
+  test("Files.createTempDirectory appears in src/main only in TmpDirs and Repl") {
     val stray = sources.flatMap(p => hits(p, "Files.createTempDirectory("))
-      .filterNot { case (at, owner) => allowed(at.takeWhile(_ != ':'), owner) }
+      .filterNot { case (at, _) => Set("TmpDirs.scala", "Repl.scala")(at.takeWhile(_ != ':')) }
     assert(stray.isEmpty, stray.mkString("\n"))
+  }
+
+  test("per-session state lives only in SessionMemo, exit cleanup only in TmpDirs") {
+    assert(filesWith("TrieMap") == Set("SessionMemo.scala"))
+    assert(filesWith("sparkContext.isStopped") == Set("SessionMemo.scala"))
+    assert(filesWith("addShutdownHook") == Set("TmpDirs.scala"))
   }
 
   test(".writeStream appears in Streaming.scala only in the drain seam and the foreachBatch twins") {

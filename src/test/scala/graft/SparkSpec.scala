@@ -33,11 +33,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** A [[TmpDirs]] dir: deleted when the test JVM exits. */
+  def tmpDir(prefix: String): java.nio.file.Path = TmpDirs.create(prefix)
+
   lazy val session: SparkSession = {
     val s = GraftSession.builder("local[4]", "4")
       .appName("graft-test")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+        tmpDir("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -34,7 +34,7 @@ class StreamingDrainSpec extends SparkSpec {
   /** A document-id stream over six rows that throws at the fourth. */
   private def failingStream() = {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_drain_fail").toString + "/in"
+    val in = SparkSpec.tmpDir("graft_drain_fail").toString + "/in"
     (1L to 6L).toDF("doc_id").write.parquet(in)
     spark.readStream.schema("doc_id BIGINT").parquet(in)
       .selectExpr("CASE WHEN doc_id = 4 THEN raise_error('drain boom') ELSE doc_id END AS doc_id")

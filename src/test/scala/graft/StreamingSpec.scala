@@ -4,7 +4,6 @@ import graft.streaming.Streaming
 import graft.streaming.Streaming.Event
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Structured Streaming tests: checkpoint-resumable chunk ingest
@@ -13,7 +12,7 @@ import java.sql.Timestamp
   */
 class StreamingSpec extends SparkSpec {
 
-  private def tmp(): String = Files.createTempDirectory("graft_stream").toString
+  private def tmp(): String = SparkSpec.tmpDir("graft_stream").toString
 
   test("st_kmeans_score: drained per-vector assignments fold to exactly ml_kmeans' cluster rows") {
     val sf = "/root/testdata/sf0.001"
@@ -529,7 +528,7 @@ class StreamingSpec extends SparkSpec {
       (3L, ns(t0 + 2400), 1L, "click", 1.0, ""), // 39 min gap → new session
       (4L, ns(t0), 2L, "view", 1.0, ""))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val out = java.nio.file.Files.createTempDirectory("graft_vintage").toString
+    val out = SparkSpec.tmpDir("graft_vintage").toString
     rows.repartition(1).write.parquet(s"$out/w")
     val part = new java.io.File(s"$out/w").listFiles()
       .filter(_.getName.endsWith(".parquet")).head

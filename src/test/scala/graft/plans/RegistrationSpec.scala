@@ -20,7 +20,7 @@ class RegistrationSpec extends SparkSpec {
 
   test("a session without the functions gets them through SparkEntry.queries") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_foreign").toString
+    val dir = SparkSpec.tmpDir("graft_foreign").toString
     (0L until 8L).map(i => (i, Seq.tabulate(4)(j => ((i + j) % 5 + 1).toFloat)))
       .toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
     // stands in for a session built outside GraftSession
