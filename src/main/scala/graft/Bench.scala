@@ -51,7 +51,7 @@ object Bench {
     // sink/source round trips (registry sinkBench flag). They are
     // bench=false in the main lane — a temp-dir write would add I/O
     // noise to operator-throughput rows — but that left the entire
-    // format-codec surface (the 2,700-line PdfText extractor, the
+    // format-codec surface (the from-scratch PdfText extractor, the
     // RFC-4180 CSV sink/source, ORC, JSONL, zorder rewrite, small-file
     // compaction, the store lifecycle) with NO timing signal: a 10×
     // PdfText regression would land invisibly. This lane times them

@@ -486,7 +486,10 @@ object Search {
         // 3.1 s of single-core work at sf0.1). One materialization;
         // layout stays the scan's natural split shape (no forced
         // exchange of tokenized arrays — at 100 TB the scan's own
-        // splits carry the parallelism).
+        // splits carry the parallelism). Memory: this fence holds the
+        // WHOLE tokenized corpus, so its blocks are corpus-sized; at
+        // 100 TB run with spark.graft.fence.storageLevel=DISK_ONLY and
+        // local disk of about the corpus's size.
         val toks = cleaned.selectExpr("doc_id", "split(tc, ' ') AS t").fenced
         val pool = bm25Scored(spark, dir)
           .orderBy(desc("bm25"), col("doc_id")).limit(PrfPool).select("doc_id")

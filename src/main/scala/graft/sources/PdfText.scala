@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.operators.Segmenter
+import graft.operators.{Chunker, Segmenter}
 import graft.operators.Segmenter.Line
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -1218,38 +1218,27 @@ object PdfText {
 
   /** The reference's whole extraction pipeline over a directory of real
     * PDFs (`extract_text_with_metadata`, pdf_extractor.py:15-57):
-    * S1 scan → S2 extract → E1/E3 segment → E4 clean → E5 min-length →
-    * C1 chunk → C2 metadata, as one distributed flatMap. Output columns
-    * are exactly the flattened chunk schema the CSV sink writes.
+    * S1 scan → S2 extract → E1/E3 segment, as one distributed flatMap
+    * emitting a row per paragraph (numbered before E5 drops any), then
+    * E4 clean → E5 min-length → C1 chunk → C2 metadata through
+    * [[Chunker.chunk]]. Output columns are exactly the flattened chunk
+    * schema the CSV sink writes.
     */
   def extractChunks(spark: SparkSession, pdfDir: String): DataFrame = {
     import spark.implicits._
-    ChunkStore.scanPdfDir(spark, pdfDir)
+    val paragraphs = ChunkStore.scanPdfDir(spark, pdfDir)
       .select("file_name", "content").as[(String, Array[Byte])]
       .flatMap { case (name, bytes) =>
         val pages = extractPageParagraphs(bytes)
-        val total = pages.size
         for {
           (paras, pi) <- pages.zipWithIndex
           (para, pn) <- paras.zipWithIndex
-          cleaned = para.replaceAll("\\s{2,}", " ").trim // E4
-          if cleaned.length >= graft.operators.Chunker.MinParagraph // E5
-          (chunkNo, text) <- chunksOf(cleaned) // C1
-        } yield (text, name, pi + 1, pn + 1, total, chunkNo)
+        } yield (para, name, pi + 1, pn + 1, pages.size)
       }
-      .toDF("text", "source", "page_number", "paragraph_number", "total_pages", "chunk_number")
-  }
-
-  /** C1 chunk windows, Scala-side (same constants and semantics as the
-    * Catalyst formulation in [[graft.operators.Chunker]]).
-    */
-  private def chunksOf(t: String): Seq[(Option[Int], String)] = {
-    import graft.operators.Chunker.{ChunkSize, MinChunk, Stride}
-    if (t.length <= ChunkSize) Seq((None, t))
-    else (0 until t.length by Stride).iterator
-      .map(i => (Option(i / Stride + 1), t.slice(i, i + ChunkSize)))
-      .filter(_._2.length >= MinChunk)
-      .toSeq
+      .toDF("text", "source", "page_number", "paragraph_number", "total_pages")
+    Chunker.chunk(paragraphs, "source", "page_number", "paragraph_number", "total_pages")
+      .selectExpr("chunk_text AS text", "source", "page_number", "paragraph_number",
+        "total_pages", "chunk_number")
   }
 }
 
@@ -1608,16 +1597,19 @@ private[sources] object PdfCrypt {
   }
 }
 
-/** Deterministic minimal-but-valid PDF writer — fixture generator for
-  * PdfTextSpec and the s2_pdf_pipeline gate query (proper catalog,
-  * page tree, xref and trailer; content streams optionally
-  * FlateDecode'd). A writer this small is NOT the product sink — it
-  * exists so the extractor is tested against real on-disk PDF bytes
-  * instead of pre-parsed fixtures.
+/** Deterministic minimal-but-valid PDF fixtures for PdfTextSpec and the
+  * s2_pdf_pipeline gate query: catalog, page tree, xref and trailer,
+  * content streams optionally filtered or encrypted. Every file is
+  * written through one serializer, [[PdfWriter]]; each builder declares
+  * only what makes its fixture distinct. A writer this small is NOT the
+  * product sink — it exists so the extractor is tested against real
+  * on-disk PDF bytes instead of pre-parsed fixtures.
   */
 private[graft] object PdfFixtures {
 
   private val L1 = java.nio.charset.StandardCharsets.ISO_8859_1
+
+  private def bytes(s: String): Array[Byte] = s.getBytes(L1)
 
   private[graft] def deflate(data: Array[Byte]): Array[Byte] = {
     val d = new java.util.zip.Deflater()
@@ -1629,41 +1621,143 @@ private[graft] object PdfFixtures {
     out.toByteArray
   }
 
-  /** Assemble a PDF from raw page content streams. */
-  def buildPdf(pageStreams: Seq[String], compress: Boolean): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num 0 obj\n"); body; w("endobj\n")
+  /** The stream-dictionary entries after /Length of a Flate'd stream. */
+  private val Flate = " /Filter /FlateDecode"
+
+  private val Helvetica = "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+
+  /** Catalog 1, page tree 2 and pages 3 until 3 + n; page i shows
+    * content object 3 + n + i with the font resources `fonts`.
+    */
+  private def pageTree(n: Int = 1, fonts: String = "/F1 5 0 R"): Seq[(Int, String)] =
+    Seq(1 -> "<< /Type /Catalog /Pages 2 0 R >>",
+      2 -> (s"<< /Type /Pages /Kids [${(3 until 3 + n).map(p => s"$p 0 R").mkString(" ")}] " +
+        s"/Count $n /MediaBox [0 0 612 792] >>")) ++
+      (0 until n).map(i => (3 + i) -> (s"<< /Type /Page /Parent 2 0 R /Contents ${3 + n + i} 0 R " +
+        s"/Resources << /Font << $fonts >> >> >>"))
+
+  /** A content stream showing the PDF string `operand` at the top left in /F1 12pt. */
+  private def showPage(operand: String): String = s"BT /F1 12 Tf 72 720 Td $operand Tj ET\n"
+
+  /** [[showPage]] of `paragraph` as a literal string (backslashes,
+    * parentheses and line breaks escaped, so the reader gets every
+    * character back as written).
+    */
+  private[graft] def textPage(paragraph: String): String =
+    showPage("(" + paragraph.flatMap {
+      case c @ ('\\' | '(' | ')') => s"\\$c"
+      case '\r' => "\\r"
+      case '\n' => "\\n"
+      case c => c.toString
+    } + ")")
+
+  /** A PDF hex string of 2-byte character codes. */
+  private def hexCodes(codes: Seq[Int]): String = codes.map(c => f"$c%04X").mkString("<", "", ">")
+
+  /** A PDF hex string of raw bytes. */
+  private def hexBytes(b: Array[Byte]): String = b.map(x => f"${x & 0xFF}%02X").mkString("<", "", ">")
+
+  /** `n` deterministic bytes `i * mul + add` — the fixtures' IDs, IVs, salts and keys. */
+  private def ramp(n: Int, mul: Int, add: Int): Array[Byte] =
+    Array.tabulate[Byte](n)(i => ((i * mul + add) & 0xFF).toByte)
+
+  /** AES-CBC with PKCS#7 padding, the IV prepended (§7.6.2). */
+  private def aesSeal(key: Array[Byte], iv: Array[Byte], data: Array[Byte]): Array[Byte] = {
+    val padN = 16 - data.length % 16
+    iv ++ PdfCrypt.aesCbc(key, iv, data ++ Array.fill[Byte](padN)(padN.toByte), encrypt = true)
+  }
+
+  /** The fixtures' one PDF serializer: the `%PDF-version` header,
+    * numbered objects (offsets and generations recorded), stream and
+    * ObjStm objects, then one of two finishers — a classic xref table
+    * plus trailer, or an xref stream. Object order, generations, the
+    * entries a classic table lists and the trailer's extra entries are
+    * the caller's, so the deliberately adversarial layouts stay
+    * expressible; /Size is one past the highest object number written
+    * or packed.
+    */
+  private final class PdfWriter(version: String) {
+    private val out = new java.io.ByteArrayOutputStream()
+    private val at = scala.collection.mutable.Map.empty[Int, (Int, Int)] // num -> (offset, gen)
+    private val packed = scala.collection.mutable.Map.empty[Int, (Int, Int)] // num -> (ObjStm, index)
+    out.write(bytes(s"%PDF-$version\n"))
+
+    private def size: Int = (at.keySet ++ packed.keySet).max + 1
+
+    def obj(num: Int, body: String, gen: Int = 0): Unit = {
+      at(num) = (out.size(), gen)
+      out.write(bytes(s"$num $gen obj\n$body\nendobj\n"))
     }
-    w("%PDF-1.4\n")
-    val n = pageStreams.size
-    val pageObjs = (0 until n).map(3 + _)
-    val contentObjs = (0 until n).map(3 + n + _)
-    val fontObj = 3 + 2 * n
-    obj(1)(w("<< /Type /Catalog /Pages 2 0 R >>\n"))
-    obj(2)(w(s"<< /Type /Pages /Kids [${pageObjs.map(p => s"$p 0 R").mkString(" ")}] " +
-      s"/Count $n /MediaBox [0 0 612 792] >>\n"))
-    pageObjs.zip(contentObjs).foreach { case (p, c) =>
-      obj(p)(w(s"<< /Type /Page /Parent 2 0 R /Contents $c 0 R " +
-        s"/Resources << /Font << /F1 $fontObj 0 R >> >> >>\n"))
-    }
-    contentObjs.zip(pageStreams).foreach { case (c, text) =>
-      val raw = text.getBytes(L1)
-      val data = if (compress) deflate(raw) else raw
-      obj(c) {
-        w(s"<< /Length ${data.length}${if (compress) " /Filter /FlateDecode" else ""} >>\nstream\n")
-        bos.write(data)
-        w("\nendstream\n")
+
+    /** A stream object; `dict` gets the payload length and returns the dictionary's entries. */
+    def stream(num: Int, data: Array[Byte], gen: Int = 0)(dict: Int => String): Unit =
+      obj(num, s"<< ${dict(data.length)} >>\nstream\n${new String(data, L1)}\nendstream", gen)
+
+    /** [[pageTree]] as plain objects, then one content stream per page
+      * (`filter`: its dictionary entries after /Length).
+      */
+    def pages(contents: Seq[Array[Byte]], filter: String = "", fonts: String = "/F1 5 0 R",
+              gen: Int = 0): Unit = {
+      pageTree(contents.size, fonts).foreach { case (n, body) => obj(n, body) }
+      contents.zipWithIndex.foreach { case (data, i) =>
+        stream(3 + contents.size + i, data, gen)(len => s"/Length $len$filter")
       }
     }
-    obj(fontObj)(w("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\n"))
-    val xref = bos.size()
-    w(s"xref\n0 ${fontObj + 1}\n0000000000 65535 f \n")
-    (1 to fontObj).foreach(i => w(f"${offsets(i)}%010d 00000 n \n"))
-    w(s"trailer\n<< /Size ${fontObj + 1} /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    bos.toByteArray
+
+    /** Object stream `num` packing `bodies` (Flate'd, then `seal`ed with the stream's number). */
+    def objStm(num: Int, bodies: Seq[(Int, String)],
+               seal: (Int, Array[Byte]) => Array[Byte] = (_, data) => data): Unit = {
+      val offs = bodies.map(_._2.length + 1).scanLeft(0)(_ + _)
+      val header = bodies.zip(offs).map { case ((n, _), off) => s"$n $off" }.mkString(" ") + "\n"
+      bodies.zipWithIndex.foreach { case ((n, _), i) => packed(n) = (num, i) }
+      stream(num, seal(num, deflate(bytes(header + bodies.map(_._2).mkString("\n") + "\n"))))(len =>
+        s"/Type /ObjStm /N ${bodies.size} /First ${header.length} /Length $len$Flate")
+    }
+
+    /** Finish with a classic xref table and trailer (`trailer`: the
+      * entries after /Root). `freeOnly` lists just the free entry 0 —
+      * the table an ObjStm file's reader must not trust.
+      */
+    def classic(trailer: String = "", freeOnly: Boolean = false): Array[Byte] = {
+      val xref = out.size()
+      val listed = if (freeOnly) 1 else size
+      val rows = (1 until listed).map { i => val (off, gen) = at(i); f"$off%010d $gen%05d n \n" }
+      finish(xref, s"xref\n0 $listed\n0000000000 65535 f \n${rows.mkString}" +
+        s"trailer\n<< /Size $size /Root 1 0 R$trailer >>\n")
+    }
+
+    /** Finish with xref stream `num` and no classic trailer (`trailer`:
+      * its dictionary entries after /Root): /W [1 4 2] rows for every
+      * object, free, at an offset or packed in an ObjStm.
+      */
+    def xrefStream(num: Int, trailer: String = ""): Array[Byte] = {
+      val xref = out.size()
+      at(num) = (xref, 0)
+      val table = new java.io.ByteArrayOutputStream()
+      (0 until size).foreach { i =>
+        val (t, mid, lo) = packed.get(i).map { case (stm, k) => (2, stm, k) }
+          .orElse(at.get(i).map { case (off, gen) => (1, off, gen) }).getOrElse((0, 0, 65535))
+        Seq(t, mid >>> 24, mid >>> 16, mid >>> 8, mid, lo >>> 8, lo).foreach(table.write)
+      }
+      stream(num, table.toByteArray)(len =>
+        s"/Type /XRef /Size $size /W [1 4 2] /Root 1 0 R$trailer /Length $len")
+      finish(xref, "")
+    }
+
+    private def finish(xref: Int, table: String): Array[Byte] = {
+      out.write(bytes(s"${table}startxref\n$xref\n%%EOF\n"))
+      out.toByteArray
+    }
+  }
+
+  /** Assemble a PDF from raw page content streams. */
+  def buildPdf(pageStreams: Seq[String], compress: Boolean): Array[Byte] = {
+    val n = pageStreams.size
+    val w = new PdfWriter("1.4")
+    w.pages(pageStreams.map(p => if (compress) deflate(bytes(p)) else bytes(p)),
+      if (compress) Flate else "", fonts = s"/F1 ${3 + 2 * n} 0 R")
+    w.obj(3 + 2 * n, Helvetica)
+    w.classic()
   }
 
   /** Two-page fixture document exercising Td positioning, block gaps
@@ -1726,9 +1820,6 @@ private[graft] object PdfFixtures {
   private val cidOf: Map[Char, Int] = (cjkSpan1 + cjkParagraph2)
     .toSeq.distinct.sorted.zipWithIndex.map { case (c, i) => c -> (i + 1) }.toMap
 
-  private def cidHex(text: String): String =
-    text.map(c => f"${cidOf(c)}%04X").mkString("<", "", ">")
-
   /** ToUnicode CMap text: maximal runs of consecutive code points emit
     * the bfrange increment form; singletons emit bfchar entries.
     */
@@ -1770,43 +1861,22 @@ private[graft] object PdfFixtures {
     * first paragraph, 60pt block gap splitting the second.
     */
   def buildCjkPdf(compress: Boolean): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num 0 obj\n"); body; w("endobj\n")
-    }
-    def streamObj(num: Int, text: String, extra: String = ""): Unit = {
-      val raw = text.getBytes(L1)
-      val data = if (compress) deflate(raw) else raw
-      obj(num) {
-        w(s"<< /Length ${data.length}${if (compress) " /Filter /FlateDecode" else ""}$extra >>\nstream\n")
-        bos.write(data)
-        w("\nendstream\n")
-      }
-    }
+    def data(s: String) = if (compress) deflate(bytes(s)) else bytes(s)
+    val filter = if (compress) Flate else ""
     val content =
-      s"""BT /F1 12 Tf 72 720 Td ($cjkAsciiSpan) Tj /F2 12 Tf ${cidHex(cjkSpan1)} Tj ET
-         |BT /F2 12 Tf 72 660 Td ${cidHex(cjkParagraph2)} Tj ET
+      s"""BT /F1 12 Tf 72 720 Td ($cjkAsciiSpan) Tj /F2 12 Tf ${hexCodes(cjkSpan1.map(cidOf))} Tj ET
+         |BT /F2 12 Tf 72 660 Td ${hexCodes(cjkParagraph2.map(cidOf))} Tj ET
          |""".stripMargin
-    w("%PDF-1.4\n")
-    obj(1)(w("<< /Type /Catalog /Pages 2 0 R >>\n"))
-    obj(2)(w("<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>\n"))
-    obj(3)(w("<< /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      "/Resources << /Font << /F1 5 0 R /F2 6 0 R >> >> >>\n"))
-    streamObj(4, content)
-    obj(5)(w("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\n"))
-    obj(6)(w("<< /Type /Font /Subtype /Type0 /BaseFont /STSong-Light " +
-      "/Encoding /Identity-H /DescendantFonts [7 0 R] /ToUnicode 8 0 R >>\n"))
-    obj(7)(w("<< /Type /Font /Subtype /CIDFontType2 /BaseFont /STSong-Light " +
+    val w = new PdfWriter("1.4")
+    w.pages(Seq(data(content)), filter, fonts = "/F1 5 0 R /F2 6 0 R")
+    w.obj(5, Helvetica)
+    w.obj(6, "<< /Type /Font /Subtype /Type0 /BaseFont /STSong-Light " +
+      "/Encoding /Identity-H /DescendantFonts [7 0 R] /ToUnicode 8 0 R >>")
+    w.obj(7, "<< /Type /Font /Subtype /CIDFontType2 /BaseFont /STSong-Light " +
       "/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) /Supplement 0 >> " +
-      "/CIDToGIDMap /Identity >>\n"))
-    streamObj(8, toUnicodeCMap)
-    val xref = bos.size()
-    w("xref\n0 9\n0000000000 65535 f \n")
-    (1 to 8).foreach(i => w(f"${offsets(i)}%010d 00000 n \n"))
-    w(s"trailer\n<< /Size 9 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    bos.toByteArray
+      "/CIDToGIDMap /Identity >>")
+    w.stream(8, data(toUnicodeCMap))(len => s"/Length $len$filter")
+    w.classic()
   }
 
   // ------------------------ predefined-CMap fixture (CID, no ToUnicode)
@@ -1819,32 +1889,20 @@ private[graft] object PdfFixtures {
     * Adobe CMap tables. UniGB-UCS2-H's code space is UCS-2, so the
     * show-string 2-byte codes below ARE the Unicode values.
     */
-  def buildPredefCMapPdf(): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num 0 obj\n"); body; w("endobj\n")
-    }
-    val hexStr = predefParagraph.map(c => f"${c.toInt}%04X").mkString("<", "", ">")
-    val content = s"BT /F1 12 Tf 72 720 Td $hexStr Tj ET\n"
-    w("%PDF-1.4\n")
-    obj(1)(w("<< /Type /Catalog /Pages 2 0 R >>\n"))
-    obj(2)(w("<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>\n"))
-    obj(3)(w("<< /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      "/Resources << /Font << /F1 5 0 R >> >> >>\n"))
-    obj(4) {
-      w(s"<< /Length ${content.length} >>\nstream\n"); w(content); w("\nendstream\n")
-    }
-    obj(5)(w("<< /Type /Font /Subtype /Type0 /BaseFont /STSong-Light " +
-      "/Encoding /UniGB-UCS2-H /DescendantFonts [6 0 R] >>\n"))
-    obj(6)(w("<< /Type /Font /Subtype /CIDFontType0 /BaseFont /STSong-Light " +
-      "/CIDSystemInfo << /Registry (Adobe) /Ordering (GB1) /Supplement 2 >> >>\n"))
-    val xref = bos.size()
-    w("xref\n0 7\n0000000000 65535 f \n")
-    (1 to 6).foreach(i => w(f"${offsets(i)}%010d 00000 n \n"))
-    w(s"trailer\n<< /Size 7 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    bos.toByteArray
+  def buildPredefCMapPdf(): Array[Byte] =
+    predefCMapPdf(showPage(hexCodes(predefParagraph.map(_.toInt))), "UniGB-UCS2-H")
+
+  /** One page showing `content` through a Type0 font on the predefined
+    * `cmap` over an Adobe-GB1 CIDFontType0, with no /ToUnicode.
+    */
+  private def predefCMapPdf(content: String, cmap: String): Array[Byte] = {
+    val w = new PdfWriter("1.4")
+    w.pages(Seq(bytes(content)))
+    w.obj(5, "<< /Type /Font /Subtype /Type0 /BaseFont /STSong-Light " +
+      s"/Encoding /$cmap /DescendantFonts [6 0 R] >>")
+    w.obj(6, "<< /Type /Font /Subtype /CIDFontType0 /BaseFont /STSong-Light " +
+      "/CIDSystemInfo << /Registry (Adobe) /Ordering (GB1) /Supplement 2 >> >>")
+    w.classic()
   }
 
   // --------------------- vertical-writing fixture (predefined -V CMap)
@@ -1862,37 +1920,13 @@ private[graft] object PdfFixtures {
     * [[verticalLines]]; stream-order concatenation scrambles it.
     */
   def buildVerticalCMapPdf(): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num 0 obj\n"); body; w("endobj\n")
-    }
-    def hex(c: Char) = f"<${c.toInt}%04X>"
     val Seq(right, left) = verticalLines
     val paints = // (x, y, glyph) in scrambled paint order
       left.zipWithIndex.map { case (c, i) => (480, 720 - 14 * i, c) } ++
         right.zipWithIndex.map { case (c, i) => (500, 720 - 14 * i, c) }.reverse
-    val content = "BT /F1 12 Tf\n" + paints.map { case (px, py, c) =>
-      s"1 0 0 1 $px $py Tm ${hex(c)} Tj\n"
-    }.mkString + "ET\n"
-    w("%PDF-1.4\n")
-    obj(1)(w("<< /Type /Catalog /Pages 2 0 R >>\n"))
-    obj(2)(w("<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>\n"))
-    obj(3)(w("<< /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      "/Resources << /Font << /F1 5 0 R >> >> >>\n"))
-    obj(4) {
-      w(s"<< /Length ${content.length} >>\nstream\n"); w(content); w("\nendstream\n")
-    }
-    obj(5)(w("<< /Type /Font /Subtype /Type0 /BaseFont /STSong-Light " +
-      "/Encoding /UniGB-UCS2-V /DescendantFonts [6 0 R] >>\n"))
-    obj(6)(w("<< /Type /Font /Subtype /CIDFontType0 /BaseFont /STSong-Light " +
-      "/CIDSystemInfo << /Registry (Adobe) /Ordering (GB1) /Supplement 2 >> >>\n"))
-    val xref = bos.size()
-    w("xref\n0 7\n0000000000 65535 f \n")
-    (1 to 6).foreach(i => w(f"${offsets(i)}%010d 00000 n \n"))
-    w(s"trailer\n<< /Size 7 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    bos.toByteArray
+    predefCMapPdf("BT /F1 12 Tf\n" + paints.map { case (px, py, c) =>
+      s"1 0 0 1 $px $py Tm ${hexCodes(Seq(c.toInt))} Tj\n"
+    }.mkString + "ET\n", "UniGB-UCS2-V")
   }
 
   // -------------- Identity-H + embedded TrueType cmap (no ToUnicode)
@@ -1922,7 +1956,7 @@ private[graft] object PdfFixtures {
     // sfnt offset table
     u32(0x00010000L); u16(1); u16(16); u16(0); u16(0)
     // table record: 'cmap' at offset 28
-    bos.write("cmap".getBytes("ISO-8859-1")); u32(0); u32(28); u32(cmapLen)
+    bos.write(bytes("cmap")); u32(0); u32(28); u32(cmapLen)
     // cmap header + one (3,1) encoding record pointing at offset 12
     u16(0); u16(1); u16(3); u16(1); u32(12)
     // format 4 subtable: one segment per char + terminator
@@ -1944,39 +1978,17 @@ private[graft] object PdfFixtures {
     * [[identityHParagraph]].
     */
   def buildIdentityHPdf(): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num 0 obj\n"); body; w("endobj\n")
-    }
     val gids = identityHGids
-    val ttf = buildMinimalTtf(gids.toSeq)
-    val hexStr = identityHParagraph.map(c => f"${gids(c)}%04X").mkString("<", "", ">")
-    val content = s"BT /F1 12 Tf 72 720 Td $hexStr Tj ET\n"
-    w("%PDF-1.4\n")
-    obj(1)(w("<< /Type /Catalog /Pages 2 0 R >>\n"))
-    obj(2)(w("<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>\n"))
-    obj(3)(w("<< /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      "/Resources << /Font << /F1 5 0 R >> >> >>\n"))
-    obj(4) {
-      w(s"<< /Length ${content.length} >>\nstream\n"); w(content); w("\nendstream\n")
-    }
-    obj(5)(w("<< /Type /Font /Subtype /Type0 /BaseFont /Embedded-Fixture " +
-      "/Encoding /Identity-H /DescendantFonts [6 0 R] >>\n"))
-    obj(6)(w("<< /Type /Font /Subtype /CIDFontType2 /BaseFont /Embedded-Fixture " +
+    val w = new PdfWriter("1.4")
+    w.pages(Seq(bytes(showPage(hexCodes(identityHParagraph.map(gids))))))
+    w.obj(5, "<< /Type /Font /Subtype /Type0 /BaseFont /Embedded-Fixture " +
+      "/Encoding /Identity-H /DescendantFonts [6 0 R] >>")
+    w.obj(6, "<< /Type /Font /Subtype /CIDFontType2 /BaseFont /Embedded-Fixture " +
       "/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) /Supplement 0 >> " +
-      "/CIDToGIDMap /Identity /FontDescriptor 7 0 R >>\n"))
-    obj(7)(w("<< /Type /FontDescriptor /FontName /Embedded-Fixture /Flags 4 " +
-      "/FontFile2 8 0 R >>\n"))
-    obj(8) {
-      w(s"<< /Length ${ttf.length} >>\nstream\n"); bos.write(ttf); w("\nendstream\n")
-    }
-    val xref = bos.size()
-    w("xref\n0 9\n0000000000 65535 f \n")
-    (1 to 8).foreach(i => w(f"${offsets(i)}%010d 00000 n \n"))
-    w(s"trailer\n<< /Size 9 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    bos.toByteArray
+      "/CIDToGIDMap /Identity /FontDescriptor 7 0 R >>")
+    w.obj(7, "<< /Type /FontDescriptor /FontName /Embedded-Fixture /Flags 4 /FontFile2 8 0 R >>")
+    w.stream(8, buildMinimalTtf(gids.toSeq))(len => s"/Length $len")
+    w.classic()
   }
 
   // --------------------- /Encoding /Differences fixture (simple font)
@@ -1991,30 +2003,11 @@ private[graft] object PdfFixtures {
     * CP1252, a control char in Latin-1).
     */
   def buildDifferencesPdf(): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num 0 obj\n"); body; w("endobj\n")
-    }
-    val content =
-      "BT /F1 12 Tf 72 720 Td " +
-        "(Glyph name differences map caf\u0003 \u0001 \u0002 \u0095 codes to text.) Tj ET\n"
-    w("%PDF-1.4\n")
-    obj(1)(w("<< /Type /Catalog /Pages 2 0 R >>\n"))
-    obj(2)(w("<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>\n"))
-    obj(3)(w("<< /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      "/Resources << /Font << /F1 5 0 R >> >> >>\n"))
-    obj(4) {
-      w(s"<< /Length ${content.length} >>\nstream\n"); w(content); w("\nendstream\n")
-    }
-    obj(5)(w("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding " +
-      "<< /BaseEncoding /WinAnsiEncoding /Differences [ 1 /bullet /emdash 3 /eacute ] >> >>\n"))
-    val xref = bos.size()
-    w("xref\n0 6\n0000000000 65535 f \n")
-    (1 to 5).foreach(i => w(f"${offsets(i)}%010d 00000 n \n"))
-    w(s"trailer\n<< /Size 6 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    bos.toByteArray
+    val w = new PdfWriter("1.4")
+    w.pages(Seq(bytes(textPage("Glyph name differences map caf\u0003 \u0001 \u0002 \u0095 codes to text."))))
+    w.obj(5, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding " +
+      "<< /BaseEncoding /WinAnsiEncoding /Differences [ 1 /bullet /emdash 3 /eacute ] >> >>")
+    w.classic()
   }
 
   // ----------------------------------------------- predictor fixture
@@ -2027,10 +2020,9 @@ private[graft] object PdfFixtures {
     * the /DecodeParms layout modern writers emit on compressed streams.
     */
   def buildPredictorPdf(columns: Int = 32): Array[Byte] = {
-    val content0 = s"BT /F1 12 Tf 72 720 Td ($predictorParagraph) Tj ET\n"
+    val content0 = textPage(predictorParagraph)
     val pad = (columns - content0.length % columns) % columns
-    val content = content0 + ("\n" * pad)
-    val rows = content.getBytes(L1).grouped(columns).toArray
+    val rows = bytes(content0 + ("\n" * pad)).grouped(columns).toArray
     val enc = new java.io.ByteArrayOutputStream()
     for (r <- rows.indices) {
       val ft = Array(1, 2, 3, 4, 0)(r % 5)
@@ -2053,31 +2045,10 @@ private[graft] object PdfFixtures {
         enc.write(((cur(i) & 0xFF) - p) & 0xFF)
       }
     }
-    val packed = deflate(enc.toByteArray)
-
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num 0 obj\n"); body; w("endobj\n")
-    }
-    w("%PDF-1.5\n")
-    obj(1)(w("<< /Type /Catalog /Pages 2 0 R >>\n"))
-    obj(2)(w("<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>\n"))
-    obj(3)(w("<< /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      "/Resources << /Font << /F1 5 0 R >> >> >>\n"))
-    obj(4) {
-      w(s"<< /Length ${packed.length} /Filter /FlateDecode " +
-        s"/DecodeParms << /Predictor 12 /Columns $columns >> >>\nstream\n")
-      bos.write(packed)
-      w("\nendstream\n")
-    }
-    obj(5)(w("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\n"))
-    val xref = bos.size()
-    w("xref\n0 6\n0000000000 65535 f \n")
-    (1 to 5).foreach(i => w(f"${offsets(i)}%010d 00000 n \n"))
-    w(s"trailer\n<< /Size 6 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    bos.toByteArray
+    val w = new PdfWriter("1.5")
+    w.pages(Seq(deflate(enc.toByteArray)), s"$Flate /DecodeParms << /Predictor 12 /Columns $columns >>")
+    w.obj(5, Helvetica)
+    w.classic()
   }
 
   // --------------------------------------------------- ObjStm fixture
@@ -2087,42 +2058,14 @@ private[graft] object PdfFixtures {
 
   /** Modern-writer layout: catalog, page tree, page and font dicts
     * packed into ONE compressed /Type /ObjStm; only the content stream
-    * stays top-level (streams cannot nest inside an ObjStm).
+    * stays top-level (streams cannot nest inside an ObjStm). The
+    * classic xref lists only the free entry.
     */
   def buildObjStmPdf(): Array[Byte] = {
-    val bodies = Seq(
-      1 -> "<< /Type /Catalog /Pages 2 0 R >>",
-      2 -> "<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>",
-      3 -> "<< /Type /Page /Parent 2 0 R /Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>",
-      5 -> "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    val offs = bodies.map(_._2.length + 1).scanLeft(0)(_ + _)
-    val header = bodies.zip(offs).map { case ((num, _), off) => s"$num $off" }.mkString(" ") + "\n"
-    val payload = header + bodies.map(_._2).mkString("\n") + "\n"
-    val packed = deflate(payload.getBytes(L1))
-
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num 0 obj\n"); body; w("endobj\n")
-    }
-    w("%PDF-1.5\n")
-    obj(10) {
-      w(s"<< /Type /ObjStm /N ${bodies.size} /First ${header.length} " +
-        s"/Length ${packed.length} /Filter /FlateDecode >>\nstream\n")
-      bos.write(packed)
-      w("\nendstream\n")
-    }
-    val content = s"BT /F1 12 Tf 72 720 Td ($objStmParagraph) Tj ET\n"
-    obj(4) {
-      w(s"<< /Length ${content.length} >>\nstream\n")
-      w(content)
-      w("\nendstream\n")
-    }
-    val xref = bos.size()
-    w("xref\n0 1\n0000000000 65535 f \n")
-    w(s"trailer\n<< /Size 11 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    bos.toByteArray
+    val w = new PdfWriter("1.5")
+    w.objStm(10, pageTree() :+ (5 -> Helvetica))
+    w.stream(4, bytes(textPage(objStmParagraph)))(len => s"/Length $len")
+    w.classic(freeOnly = true)
   }
 
   val encObjStmParagraph: String =
@@ -2135,58 +2078,12 @@ private[graft] object PdfFixtures {
     * Stored layout per object: Encrypt(Flate(payload)).
     */
   def buildEncryptedObjStmPdf(): Array[Byte] = {
-    import PdfCrypt.{Pad, computeU, fileKey, md5, rc4}
-    val r = 3; val keyLen = 16; val p = -44
-    val id0 = Array.tabulate[Byte](16)(i => ((i * 11 + 2) & 0xFF).toByte)
-    var od = md5(Pad)
-    for (_ <- 0 until 50) od = md5(od)
-    val oKey = od.take(keyLen)
-    var o = rc4(oKey, Pad)
-    for (i <- 1 to 19) o = rc4(oKey.map(b => (b ^ i).toByte), o)
-    val key = fileKey(o, p, id0, r, keyLen, encMeta = true)
-    val u = computeU(key, r, id0) ++ Array.fill[Byte](16)(0)
-    def enc(num: Int, data: Array[Byte]): Array[Byte] = {
-      val ext = Array[Byte]((num & 0xFF).toByte, ((num >> 8) & 0xFF).toByte,
-        ((num >> 16) & 0xFF).toByte, 0, 0)
-      rc4(md5(key, ext).take(math.min(keyLen + 5, 16)), data)
-    }
-    def hexStr(b: Array[Byte]): String = b.map(x => f"${x & 0xFF}%02X").mkString("<", "", ">")
-    val bodies = Seq(
-      1 -> "<< /Type /Catalog /Pages 2 0 R >>",
-      2 -> "<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>",
-      3 -> "<< /Type /Page /Parent 2 0 R /Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>",
-      5 -> "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    val offs = bodies.map(_._2.length + 1).scanLeft(0)(_ + _)
-    val header = bodies.zip(offs).map { case ((num, _), off) => s"$num $off" }.mkString(" ") + "\n"
-    val payload = header + bodies.map(_._2).mkString("\n") + "\n"
-    val packed = enc(10, deflate(payload.getBytes(L1)))
-    val content = enc(4, s"BT /F1 12 Tf 72 720 Td ($encObjStmParagraph) Tj ET\n".getBytes(L1))
-
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num 0 obj\n"); body; w("endobj\n")
-    }
-    w("%PDF-1.5\n")
-    obj(10) {
-      w(s"<< /Type /ObjStm /N ${bodies.size} /First ${header.length} " +
-        s"/Length ${packed.length} /Filter /FlateDecode >>\nstream\n")
-      bos.write(packed)
-      w("\nendstream\n")
-    }
-    obj(4) {
-      w(s"<< /Length ${content.length} >>\nstream\n")
-      bos.write(content)
-      w("\nendstream\n")
-    }
-    obj(11)(w("<< /Filter /Standard /V 2 /R 3 /Length 128 " +
-      s"/O ${hexStr(o)} /U ${hexStr(u)} /P $p >>\n"))
-    val xref = bos.size()
-    w("xref\n0 1\n0000000000 65535 f \n")
-    w(s"trailer\n<< /Size 12 /Root 1 0 R /Encrypt 11 0 R " +
-      s"/ID [${hexStr(id0)} ${hexStr(id0)}] >>\nstartxref\n$xref\n%%EOF\n")
-    bos.toByteArray
+    val h = new EmptyPasswordHandler("rc4-128", idMul = 11, idAdd = 2)
+    val w = new PdfWriter("1.5")
+    w.objStm(10, pageTree() :+ (5 -> Helvetica), h.seal(_, _))
+    w.stream(4, h.seal(4, bytes(textPage(encObjStmParagraph))))(len => s"/Length $len")
+    w.obj(11, h.dict)
+    w.classic(h.trailer(11), freeOnly = true)
   }
 
   // ------------------------------------------- filter-tail fixtures
@@ -2286,7 +2183,7 @@ private[graft] object PdfFixtures {
       i += 4
     }
     sb.append("~>")
-    sb.toString.getBytes(L1)
+    bytes(sb.toString)
   }
 
   /** One-page PDF whose content stream is encoded with `filters`
@@ -2294,33 +2191,13 @@ private[graft] object PdfFixtures {
     */
   def buildFilteredPdf(paragraph: String, filters: Seq[String],
                        encode: Array[Byte] => Array[Byte]): Array[Byte] = {
-    val content = s"BT /F1 12 Tf 72 720 Td ($paragraph) Tj ET\n"
-    val data = encode(content.getBytes(L1))
     val filterSpec =
       if (filters.size == 1) s"/Filter /${filters.head}"
       else s"/Filter [${filters.map("/" + _).mkString(" ")}]"
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num 0 obj\n"); body; w("endobj\n")
-    }
-    w("%PDF-1.4\n")
-    obj(1)(w("<< /Type /Catalog /Pages 2 0 R >>\n"))
-    obj(2)(w("<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>\n"))
-    obj(3)(w("<< /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      "/Resources << /Font << /F1 5 0 R >> >> >>\n"))
-    obj(4) {
-      w(s"<< /Length ${data.length} $filterSpec >>\nstream\n")
-      bos.write(data)
-      w("\nendstream\n")
-    }
-    obj(5)(w("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\n"))
-    val xref = bos.size()
-    w("xref\n0 6\n0000000000 65535 f \n")
-    (1 to 5).foreach(i => w(f"${offsets(i)}%010d 00000 n \n"))
-    w(s"trailer\n<< /Size 6 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    bos.toByteArray
+    val w = new PdfWriter("1.4")
+    w.pages(Seq(encode(bytes(textPage(paragraph)))), s" $filterSpec")
+    w.obj(5, Helvetica)
+    w.classic()
   }
 
   // ---------------------------------------------- encrypted fixtures
@@ -2334,82 +2211,73 @@ private[graft] object PdfFixtures {
   val aes256Paragraph: String =
     "Modern two hundred fifty six bit keys derive from iterated hashing rounds."
 
-  /** Standard-security-handler encrypted single-page file (empty user
-    * AND owner passwords). `mode`: "rc4-40" (V1 R2), "rc4-128" (V2 R3),
-    * "aes-128" (V4 R4 /AESV2). Deterministic: fixed /ID and AES IV.
-    * The derivation helpers are shared with [[PdfCrypt]] — the
-    * INDEPENDENT-implementation pin (a file produced by a separate
-    * Python hashlib/cryptography generator) lives in PdfTextSpec, so a
-    * shared derivation bug cannot self-certify.
+  /** The standard security handler with empty user AND owner passwords
+    * for `mode` "rc4-40" (V1 R2), "rc4-128" (V2 R3) or "aes-128" (V4 R4
+    * /AESV2), /P −44 (modify/annotate forbidden — a typical courseware
+    * mask) and the fixed /ID `ramp(16, idMul, idAdd)`. The derivation
+    * helpers are shared with [[PdfCrypt]] — the INDEPENDENT-implementation
+    * pin (files produced by a separate Python hashlib/cryptography
+    * generator) lives in PdfTextSpec, so a shared derivation bug cannot
+    * self-certify.
     */
-  def buildEncryptedPdf(paragraph: String, mode: String,
-                        compress: Boolean = true,
-                        contentGen: Int = 0): Array[Byte] = {
-    import PdfCrypt.{Pad, aesCbc, computeU, fileKey, md5, rc4}
-    if (mode == "aes-256") return buildAes256Pdf(paragraph, compress)
-    val (v, r, keyBits, aes) = mode match {
+  private final class EmptyPasswordHandler(mode: String, idMul: Int, idAdd: Int) {
+    import PdfCrypt.{Pad, computeU, fileKey, md5, rc4}
+    private val (v, r, keyBits, aes) = mode match {
       case "rc4-40" => (1, 2, 40, false)
       case "rc4-128" => (2, 3, 128, false)
       case "aes-128" => (4, 4, 128, true)
       case other => throw new IllegalArgumentException(other)
     }
-    val keyLen = keyBits / 8
-    val p = -44 // modify/annotate forbidden — a typical courseware mask
-    val id0 = Array.tabulate[Byte](16)(i => ((i * 17 + 3) & 0xFF).toByte)
-    // Algorithm 3 with both passwords empty
-    var od = md5(Pad)
-    if (r >= 3) for (_ <- 0 until 50) od = md5(od)
-    val oKey = od.take(keyLen)
-    var o = rc4(oKey, Pad)
-    if (r >= 3) for (i <- 1 to 19) o = rc4(oKey.map(b => (b ^ i).toByte), o)
-    val key = fileKey(o, p, id0, r, keyLen, encMeta = true)
-    val u0 = computeU(key, r, id0)
-    val u = if (u0.length >= 32) u0.take(32) else u0 ++ Array.fill[Byte](32 - u0.length)(0)
-    def hexStr(b: Array[Byte]): String = b.map(x => f"${x & 0xFF}%02X").mkString("<", "", ">")
-    def encryptObj(num: Int, gen: Int, data: Array[Byte]): Array[Byte] = {
+    private val keyLen = keyBits / 8
+    private val id0 = ramp(16, idMul, idAdd)
+    private val o = { // Algorithm 3 with both passwords empty
+      var od = md5(Pad)
+      if (r >= 3) for (_ <- 0 until 50) od = md5(od)
+      val oKey = od.take(keyLen)
+      var o = rc4(oKey, Pad)
+      if (r >= 3) for (i <- 1 to 19) o = rc4(oKey.map(b => (b ^ i).toByte), o)
+      o
+    }
+    private val key = fileKey(o, -44, id0, r, keyLen, encMeta = true)
+
+    /** The /Encrypt dictionary. */
+    val dict: String = {
+      val length = if (v >= 2) s" /Length $keyBits" else ""
+      val cf = if (v == 4) " /CF << /StdCF << /CFM /AESV2 /Length 16 >> >> /StmF /StdCF /StrF /StdCF" else ""
+      s"<< /Filter /Standard /V $v /R $r$length$cf /O ${hexBytes(o)} " +
+        s"/U ${hexBytes(computeU(key, r, id0).padTo(32, 0: Byte))} /P -44 >>"
+    }
+
+    /** Trailer entries naming the /Encrypt dictionary object `num` and the /ID. */
+    def trailer(num: Int): String = s" /Encrypt $num 0 R /ID [${hexBytes(id0)} ${hexBytes(id0)}]"
+
+    /** Object `num`'s stream encrypted under its §7.6.2 Algorithm 1 key. */
+    def seal(num: Int, data: Array[Byte], gen: Int = 0): Array[Byte] = {
       val ext = Array[Byte]((num & 0xFF).toByte, ((num >> 8) & 0xFF).toByte,
         ((num >> 16) & 0xFF).toByte, (gen & 0xFF).toByte, ((gen >> 8) & 0xFF).toByte)
       val salt = if (aes) Array[Byte](0x73, 0x41, 0x6C, 0x54) else Array.empty[Byte]
       val objKey = md5(key, ext, salt).take(math.min(keyLen + 5, 16))
-      if (!aes) rc4(objKey, data)
-      else {
-        val iv = Array.tabulate[Byte](16)(i => ((i * 29 + 11) & 0xFF).toByte)
-        val padN = 16 - data.length % 16
-        iv ++ aesCbc(objKey, iv, data ++ Array.fill[Byte](padN)(padN.toByte), encrypt = true)
-      }
+      if (aes) aesSeal(objKey, ramp(16, 29, 11), data) else rc4(objKey, data)
     }
-    val content = s"BT /F1 12 Tf 72 720 Td ($paragraph) Tj ET\n".getBytes(L1)
-    val data = encryptObj(4, contentGen, if (compress) deflate(content) else content)
-    val cf =
-      if (v == 4) " /CF << /StdCF << /CFM /AESV2 /Length 16 >> >> /StmF /StdCF /StrF /StdCF"
-      else ""
-    val lengthEntry = if (v >= 2) s" /Length $keyBits" else ""
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int, gen: Int = 0)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num $gen obj\n"); body; w("endobj\n")
-    }
-    w("%PDF-1.4\n")
-    obj(1)(w("<< /Type /Catalog /Pages 2 0 R >>\n"))
-    obj(2)(w("<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>\n"))
-    obj(3)(w("<< /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      "/Resources << /Font << /F1 5 0 R >> >> >>\n"))
-    obj(4, contentGen) {
-      w(s"<< /Length ${data.length}${if (compress) " /Filter /FlateDecode" else ""} >>\nstream\n")
-      bos.write(data)
-      w("\nendstream\n")
-    }
-    obj(5)(w("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\n"))
-    obj(6)(w(s"<< /Filter /Standard /V $v /R $r$lengthEntry$cf " +
-      s"/O ${hexStr(o)} /U ${hexStr(u)} /P $p >>\n"))
-    val xref = bos.size()
-    w("xref\n0 7\n0000000000 65535 f \n")
-    (1 to 6).foreach(i =>
-      w(f"${offsets(i)}%010d ${if (i == 4) contentGen else 0}%05d n \n"))
-    w(s"trailer\n<< /Size 7 /Root 1 0 R /Encrypt 6 0 R " +
-      s"/ID [${hexStr(id0)} ${hexStr(id0)}] >>\nstartxref\n$xref\n%%EOF\n")
-    bos.toByteArray
+  }
+
+  /** Standard-security-handler encrypted single-page file (empty user
+    * AND owner passwords): `mode` "rc4-40", "rc4-128", "aes-128" (see
+    * [[EmptyPasswordHandler]]) or "aes-256". Deterministic: fixed /ID
+    * and AES IV. `contentGen` is the content stream's generation.
+    */
+  def buildEncryptedPdf(paragraph: String, mode: String,
+                        compress: Boolean = true,
+                        contentGen: Int = 0): Array[Byte] = {
+    if (mode == "aes-256") return buildAes256Pdf(paragraph, compress)
+    val h = new EmptyPasswordHandler(mode, idMul = 17, idAdd = 3)
+    val content = bytes(textPage(paragraph))
+    val w = new PdfWriter("1.4")
+    w.pages(Seq(h.seal(4, if (compress) deflate(content) else content, contentGen)),
+      if (compress) Flate else "", gen = contentGen)
+    w.obj(5, Helvetica)
+    w.obj(6, h.dict)
+    w.classic(h.trailer(6))
   }
 
   /** AES-256 / R6 (ISO 32000-2) fixture with empty user AND owner
@@ -2421,9 +2289,8 @@ private[graft] object PdfFixtures {
   private def buildAes256Pdf(paragraph: String, compress: Boolean): Array[Byte] = {
     import PdfCrypt.{aesCbc, hash2b}
     val pw = Array.empty[Byte]
-    def bytes8(seed: Int): Array[Byte] = Array.tabulate[Byte](8)(i => ((i * seed + 7) & 0xFF).toByte)
-    val (vsU, ksU, vsO, ksO) = (bytes8(31), bytes8(37), bytes8(41), bytes8(43))
-    val fileKey = Array.tabulate[Byte](32)(i => ((i * 23 + 5) & 0xFF).toByte)
+    val (vsU, ksU, vsO, ksO) = (ramp(8, 31, 7), ramp(8, 37, 7), ramp(8, 41, 7), ramp(8, 43, 7))
+    val fileKey = ramp(32, 23, 5)
     val u = hash2b(pw, vsU, Array.empty, 6) ++ vsU ++ ksU
     val ue = aesCbc(hash2b(pw, ksU, Array.empty, 6), new Array[Byte](16), fileKey, encrypt = true)
     val o = hash2b(pw, vsO, u, 6) ++ vsO ++ ksO
@@ -2436,40 +2303,16 @@ private[graft] object PdfFixtures {
     ecb.init(javax.crypto.Cipher.ENCRYPT_MODE,
       new javax.crypto.spec.SecretKeySpec(fileKey, "AES"))
     val perms = ecb.doFinal(permsPlain)
-    def encryptStream(data: Array[Byte]): Array[Byte] = {
-      val iv = Array.tabulate[Byte](16)(i => ((i * 19 + 3) & 0xFF).toByte)
-      val padN = 16 - data.length % 16
-      iv ++ aesCbc(fileKey, iv, data ++ Array.fill[Byte](padN)(padN.toByte), encrypt = true)
-    }
-    val content = s"BT /F1 12 Tf 72 720 Td ($paragraph) Tj ET\n".getBytes(L1)
-    val data = encryptStream(if (compress) deflate(content) else content)
-    def hexStr(b: Array[Byte]): String = b.map(x => f"${x & 0xFF}%02X").mkString("<", "", ">")
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num 0 obj\n"); body; w("endobj\n")
-    }
-    w("%PDF-2.0\n")
-    obj(1)(w("<< /Type /Catalog /Pages 2 0 R >>\n"))
-    obj(2)(w("<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>\n"))
-    obj(3)(w("<< /Type /Page /Parent 2 0 R /Contents 4 0 R " +
-      "/Resources << /Font << /F1 5 0 R >> >> >>\n"))
-    obj(4) {
-      w(s"<< /Length ${data.length}${if (compress) " /Filter /FlateDecode" else ""} >>\nstream\n")
-      bos.write(data)
-      w("\nendstream\n")
-    }
-    obj(5)(w("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\n"))
-    obj(6)(w("<< /Filter /Standard /V 5 /R 6 /Length 256 " +
+    val content = bytes(textPage(paragraph))
+    val w = new PdfWriter("2.0")
+    w.pages(Seq(aesSeal(fileKey, ramp(16, 19, 3), if (compress) deflate(content) else content)),
+      if (compress) Flate else "")
+    w.obj(5, Helvetica)
+    w.obj(6, "<< /Filter /Standard /V 5 /R 6 /Length 256 " +
       "/CF << /StdCF << /CFM /AESV3 /Length 32 >> >> /StmF /StdCF /StrF /StdCF " +
-      s"/O ${hexStr(o)} /U ${hexStr(u)} /OE ${hexStr(oe)} /UE ${hexStr(ue)} " +
-      s"/Perms ${hexStr(perms)} /P $p >>\n"))
-    val xref = bos.size()
-    w("xref\n0 7\n0000000000 65535 f \n")
-    (1 to 6).foreach(i => w(f"${offsets(i)}%010d 00000 n \n"))
-    w(s"trailer\n<< /Size 7 /Root 1 0 R /Encrypt 6 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    bos.toByteArray
+      s"/O ${hexBytes(o)} /U ${hexBytes(u)} /OE ${hexBytes(oe)} /UE ${hexBytes(ue)} " +
+      s"/Perms ${hexBytes(perms)} /P $p >>")
+    w.classic(" /Encrypt 6 0 R")
   }
 
   // --------------------------------------------- xref-stream fixture
@@ -2484,66 +2327,14 @@ private[graft] object PdfFixtures {
     * contains the literal word "endstream" — so only a reader that
     * walks the xref stream and resolves the indirect length recovers
     * the exact stream extent. W = [1 4 2]; type-2 entries point into
-    * the ObjStm.
+    * the ObjStm; object 8 is free.
     */
   def buildXrefStreamPdf(): Array[Byte] = {
-    val content = s"BT /F1 12 Tf 72 720 Td ($xrefParagraph) Tj ET\n"
-    val objStmBodies = Seq(
-      1 -> "<< /Type /Catalog /Pages 2 0 R >>",
-      2 -> "<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>",
-      3 -> "<< /Type /Page /Parent 2 0 R /Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>",
-      5 -> "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-      9 -> content.length.toString)
-    val offs = objStmBodies.map(_._2.length + 1).scanLeft(0)(_ + _)
-    val header = objStmBodies.zip(offs).map { case ((num, _), off) => s"$num $off" }.mkString(" ") + "\n"
-    val payload = header + objStmBodies.map(_._2).mkString("\n") + "\n"
-    val packed = deflate(payload.getBytes(L1))
-
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num 0 obj\n"); body; w("endobj\n")
-    }
-    w("%PDF-1.5\n")
-    obj(6) {
-      w(s"<< /Type /ObjStm /N ${objStmBodies.size} /First ${header.length} " +
-        s"/Length ${packed.length} /Filter /FlateDecode >>\nstream\n")
-      bos.write(packed)
-      w("\nendstream\n")
-    }
-    obj(4) {
-      w("<< /Length 9 0 R >>\nstream\n")
-      w(content)
-      w("\nendstream\n")
-    }
-    val xrefOff = bos.size()
-    // entries for objects 0..9: 0 free; 1,2,3 in ObjStm 6 idx 0..2;
-    // 4 at offset; 5 idx 3; 6,7 at offset; 8 free; 9 idx 4
-    val entries: Seq[(Int, Int, Int)] = Seq(
-      (0, 0, 65535),
-      (2, 6, 0), (2, 6, 1), (2, 6, 2),
-      (1, offsets(4), 0),
-      (2, 6, 3),
-      (1, offsets(6), 0),
-      (1, xrefOff, 0),
-      (0, 0, 65535),
-      (2, 6, 4))
-    val table = new java.io.ByteArrayOutputStream()
-    for ((t, mid, lo) <- entries) {
-      table.write(t)
-      table.write((mid >>> 24) & 0xFF); table.write((mid >>> 16) & 0xFF)
-      table.write((mid >>> 8) & 0xFF); table.write(mid & 0xFF)
-      table.write((lo >>> 8) & 0xFF); table.write(lo & 0xFF)
-    }
-    val tb = table.toByteArray
-    obj(7) {
-      w(s"<< /Type /XRef /Size 10 /W [1 4 2] /Root 1 0 R /Length ${tb.length} >>\nstream\n")
-      bos.write(tb)
-      w("\nendstream\n")
-    }
-    w(s"startxref\n$xrefOff\n%%EOF\n")
-    bos.toByteArray
+    val content = textPage(xrefParagraph)
+    val w = new PdfWriter("1.5")
+    w.objStm(6, pageTree() ++ Seq(5 -> Helvetica, 9 -> content.length.toString))
+    w.stream(4, bytes(content))(_ => "/Length 9 0 R")
+    w.xrefStream(7)
   }
 
   val encXrefParagraph: String =
@@ -2560,119 +2351,40 @@ private[graft] object PdfFixtures {
     * together.
     */
   def buildEncryptedXrefPdf(): Array[Byte] = {
-    import PdfCrypt.{Pad, computeU, fileKey, md5, rc4}
-    val r = 3; val keyLen = 16; val p = -44
-    val id0 = Array.tabulate[Byte](16)(i => ((i * 13 + 6) & 0xFF).toByte)
-    var od = md5(Pad)
-    for (_ <- 0 until 50) od = md5(od)
-    val oKey = od.take(keyLen)
-    var o = rc4(oKey, Pad)
-    for (i <- 1 to 19) o = rc4(oKey.map(b => (b ^ i).toByte), o)
-    val key = fileKey(o, p, id0, r, keyLen, encMeta = true)
-    val u = computeU(key, r, id0) ++ Array.fill[Byte](16)(0)
-    def enc(num: Int, data: Array[Byte]): Array[Byte] = {
-      val ext = Array[Byte]((num & 0xFF).toByte, ((num >> 8) & 0xFF).toByte,
-        ((num >> 16) & 0xFF).toByte, 0, 0)
-      rc4(md5(key, ext).take(math.min(keyLen + 5, 16)), data)
-    }
-    def hexStr(b: Array[Byte]): String = b.map(x => f"${x & 0xFF}%02X").mkString("<", "", ">")
-    val content = s"BT /F1 12 Tf 72 720 Td ($encXrefParagraph) Tj ET\n"
-    val objStmBodies = Seq(
-      1 -> "<< /Type /Catalog /Pages 2 0 R >>",
-      2 -> "<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>",
-      3 -> "<< /Type /Page /Parent 2 0 R /Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>",
-      5 -> "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
-      9 -> content.length.toString)
-    val offs = objStmBodies.map(_._2.length + 1).scanLeft(0)(_ + _)
-    val header = objStmBodies.zip(offs).map { case ((num, _), off) => s"$num $off" }.mkString(" ") + "\n"
-    val payload = header + objStmBodies.map(_._2).mkString("\n") + "\n"
-    val packed = enc(6, deflate(payload.getBytes(L1)))
-    val encContent = enc(4, content.getBytes(L1))
-
-    val bos = new java.io.ByteArrayOutputStream()
-    def w(str: String): Unit = bos.write(str.getBytes(L1))
-    val offsets = scala.collection.mutable.Map.empty[Int, Int]
-    def obj(num: Int)(body: => Unit): Unit = {
-      offsets(num) = bos.size(); w(s"$num 0 obj\n"); body; w("endobj\n")
-    }
-    w("%PDF-1.5\n")
-    obj(6) {
-      w(s"<< /Type /ObjStm /N ${objStmBodies.size} /First ${header.length} " +
-        s"/Length ${packed.length} /Filter /FlateDecode >>\nstream\n")
-      bos.write(packed)
-      w("\nendstream\n")
-    }
-    obj(4) {
-      w("<< /Length 9 0 R >>\nstream\n")
-      bos.write(encContent)
-      w("\nendstream\n")
-    }
-    obj(8)(w("<< /Filter /Standard /V 2 /R 3 /Length 128 " +
-      s"/O ${hexStr(o)} /U ${hexStr(u)} /P $p >>\n"))
-    val xrefOff = bos.size()
-    val entries: Seq[(Int, Int, Int)] = Seq(
-      (0, 0, 65535),
-      (2, 6, 0), (2, 6, 1), (2, 6, 2),
-      (1, offsets(4), 0),
-      (2, 6, 3),
-      (1, offsets(6), 0),
-      (1, xrefOff, 0),
-      (1, offsets(8), 0),
-      (2, 6, 4))
-    val table = new java.io.ByteArrayOutputStream()
-    for ((t, mid, lo) <- entries) {
-      table.write(t)
-      table.write((mid >>> 24) & 0xFF); table.write((mid >>> 16) & 0xFF)
-      table.write((mid >>> 8) & 0xFF); table.write(mid & 0xFF)
-      table.write((lo >>> 8) & 0xFF); table.write(lo & 0xFF)
-    }
-    val tb = table.toByteArray
-    obj(7) {
-      w(s"<< /Type /XRef /Size 10 /W [1 4 2] /Root 1 0 R /Encrypt 8 0 R " +
-        s"/ID [${hexStr(id0)} ${hexStr(id0)}] /Length ${tb.length} >>\nstream\n")
-      bos.write(tb)
-      w("\nendstream\n")
-    }
-    w(s"startxref\n$xrefOff\n%%EOF\n")
-    bos.toByteArray
+    val h = new EmptyPasswordHandler("rc4-128", idMul = 13, idAdd = 6)
+    val content = textPage(encXrefParagraph)
+    val w = new PdfWriter("1.5")
+    w.objStm(6, pageTree() ++ Seq(5 -> Helvetica, 9 -> content.length.toString), h.seal(_, _))
+    w.stream(4, h.seal(4, bytes(content)))(_ => "/Length 9 0 R")
+    w.obj(8, h.dict)
+    w.xrefStream(7, h.trailer(8))
   }
 
-  /** Write the fixture corpus (a.pdf two pages Flate'd, B.PDF one page
-    * raw, cjk.pdf Type0/CID, m.pdf ObjStm-packed, lzw.pdf LZWDecode,
-    * rle.pdf RunLengthDecode, a85.pdf ASCII85+Flate chain, xr.pdf
-    * xref-stream layout with an indirect-length stream, rc4.pdf
-    * RC4-128-encrypted + Flate'd, aes.pdf AES-128-CBC-encrypted raw,
-    * aes256.pdf AES-256/R6 (PDF 2.0) encrypted + Flate'd, m_enc.pdf
-    * RC4-128-encrypted ObjStm (decrypt-before-expand interaction) — all
-    * empty-user-password standard security handler — notes.txt
-    * decoy) into a directory; returns the directory.
+  /** Write the fixture corpus into `dir` and return it: every file is
+    * empty-user-password where encrypted, and notes.txt is a decoy the
+    * S1 scan must skip.
     */
   def writeFixtureDir(dir: String): String = {
-    val p = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.createDirectories(p)
-    java.nio.file.Files.write(p.resolve("a.pdf"), buildPdf(fixturePages, compress = true))
-    java.nio.file.Files.write(p.resolve("B.PDF"), buildPdf(Seq(companionPage), compress = false))
-    java.nio.file.Files.write(p.resolve("cjk.pdf"), buildCjkPdf(compress = true))
-    java.nio.file.Files.write(p.resolve("m.pdf"), buildObjStmPdf())
-    java.nio.file.Files.write(p.resolve("lzw.pdf"),
-      buildFilteredPdf(lzwParagraph, Seq("LZWDecode"), lzwEncode))
-    java.nio.file.Files.write(p.resolve("rle.pdf"),
-      buildFilteredPdf(rleParagraph, Seq("RunLengthDecode"), runLengthEncode))
-    java.nio.file.Files.write(p.resolve("a85.pdf"),
-      buildFilteredPdf(a85Paragraph, Seq("ASCII85Decode", "FlateDecode"),
-        b => ascii85Encode(deflate(b))))
-    java.nio.file.Files.write(p.resolve("xr.pdf"), buildXrefStreamPdf())
-    java.nio.file.Files.write(p.resolve("rc4.pdf"),
-      buildEncryptedPdf(rc4Paragraph, "rc4-128", compress = true))
-    java.nio.file.Files.write(p.resolve("aes.pdf"),
-      buildEncryptedPdf(aesParagraph, "aes-128", compress = false))
-    java.nio.file.Files.write(p.resolve("aes256.pdf"),
-      buildEncryptedPdf(aes256Paragraph, "aes-256"))
-    java.nio.file.Files.write(p.resolve("m_enc.pdf"), buildEncryptedObjStmPdf())
-    java.nio.file.Files.write(p.resolve("xr_enc.pdf"), buildEncryptedXrefPdf())
-    java.nio.file.Files.write(p.resolve("gb.pdf"), buildPredefCMapPdf())
-    java.nio.file.Files.write(p.resolve("diff.pdf"), buildDifferencesPdf())
-    java.nio.file.Files.write(p.resolve("notes.txt"), "not a pdf".getBytes(L1))
+    val p = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    Seq(
+      "a.pdf" -> buildPdf(fixturePages, compress = true), // two pages, Flate'd
+      "B.PDF" -> buildPdf(Seq(companionPage), compress = false), // raw; upper-case extension
+      "cjk.pdf" -> buildCjkPdf(compress = true), // Type0/CID + ToUnicode
+      "m.pdf" -> buildObjStmPdf(),
+      "lzw.pdf" -> buildFilteredPdf(lzwParagraph, Seq("LZWDecode"), lzwEncode),
+      "rle.pdf" -> buildFilteredPdf(rleParagraph, Seq("RunLengthDecode"), runLengthEncode),
+      "a85.pdf" -> buildFilteredPdf(a85Paragraph, Seq("ASCII85Decode", "FlateDecode"),
+        b => ascii85Encode(deflate(b))),
+      "xr.pdf" -> buildXrefStreamPdf(), // xref stream, indirect /Length
+      "rc4.pdf" -> buildEncryptedPdf(rc4Paragraph, "rc4-128", compress = true),
+      "aes.pdf" -> buildEncryptedPdf(aesParagraph, "aes-128", compress = false),
+      "aes256.pdf" -> buildEncryptedPdf(aes256Paragraph, "aes-256"), // PDF 2.0, R6
+      "m_enc.pdf" -> buildEncryptedObjStmPdf(), // decrypt before ObjStm expansion
+      "xr_enc.pdf" -> buildEncryptedXrefPdf(),
+      "gb.pdf" -> buildPredefCMapPdf(), // predefined UniGB-UCS2-H, no ToUnicode
+      "diff.pdf" -> buildDifferencesPdf(),
+      "notes.txt" -> bytes("not a pdf")
+    ).foreach { case (name, data) => java.nio.file.Files.write(p.resolve(name), data) }
     dir
   }
 }

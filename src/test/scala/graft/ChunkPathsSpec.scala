@@ -1,17 +1,19 @@
 package graft
 
 import graft.operators.Chunker
-import graft.sources.ChunkStore
+import graft.sources.{ChunkStore, PdfFixtures, PdfText}
 import graft.streaming.Streaming
 import org.apache.spark.sql.DataFrame
 
-/** The three ways a document becomes chunks — the `c1_chunk` query, the
-  * CSV that `Pipeline.setupKnowledgeBase` extracts, and the streaming
-  * `Streaming.chunkIngest` — must produce the same rows, not just the
-  * same row counts. The fixture mixes tabs, `\n`, `\r`, space runs and
-  * leading/trailing whitespace, and puts cleaned lengths on every C1/E5
-  * boundary: 9 (dropped), 10 (kept), 500 (one chunk), 501 (two), 950
-  * and 951 (three).
+/** The four ways a document becomes chunks — the `c1_chunk` query, the
+  * CSV that `Pipeline.setupKnowledgeBase` extracts, the streaming
+  * `Streaming.chunkIngest`, and `PdfText.extractChunks` over the same
+  * texts written as one-paragraph PDF pages — must produce the same
+  * rows, not just the same row counts. The fixture mixes tabs, `\n`,
+  * `\r`, space runs and leading/trailing whitespace, and puts cleaned
+  * lengths on every C1/E5 boundary: 9 (dropped), 10 (kept), 500 (one
+  * chunk), 501 (two), 950 and 951 (three). Its words are Latin-1, so
+  * the PDF fixture font can show every one of them.
   */
 class ChunkPathsSpec extends SparkSpec {
 
@@ -20,7 +22,7 @@ class ChunkPathsSpec extends SparkSpec {
   /** Cleaned text of length `n`: words joined by single spaces. */
   private def cleaned(n: Int, seed: Int): String = {
     val rnd = new scala.util.Random(seed)
-    val words = Seq("spark", "chunk", "数据", "overlap", "q", "window", "表")
+    val words = Seq("spark", "chunk", "daté", "overlap", "q", "window", "ß")
     val t = Seq.fill(n)(words(rnd.nextInt(words.size))).mkString(" ").take(n)
     if (t.endsWith(" ")) t.init + "x" else t
   }
@@ -80,11 +82,21 @@ class ChunkPathsSpec extends SparkSpec {
       .awaitTermination()
     val streamed = rows(spark.read.parquet(out))
 
+    val pdfs = tmp()
+    documents().collect().foreach { r =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(pdfs, s"${r.getLong(0)}.pdf"),
+        PdfFixtures.buildPdf(Seq(PdfFixtures.textPage(r.getString(1))), compress = true))
+    }
+    val fromPdf = rows(PdfText.extractChunks(spark, pdfs)
+      .selectExpr("cast(substring_index(source, '.', 1) AS bigint) AS doc_id", "chunk_number",
+        "text AS chunk_text"))
+
     // per doc: 9 → none, 10/11/49/120/500 → 1, 501/549/550 → 2,
     // 950/951/1000/1403 → 3, 3, 3, 4; plus the lone-whitespace doc
     assert(query.size == 1 * 5 + 2 * 3 + 3 * 3 + 4 + 1)
     assert(query.forall(r => r._3.nonEmpty && r._3.length <= Chunker.ChunkSize))
     assert(extracted == query)
     assert(streamed == query)
+    assert(fromPdf == query)
   }
 }

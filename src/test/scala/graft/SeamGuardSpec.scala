@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 /** Source guards for the shared seams: temp dirs go through
-  * [[TmpDirs]], per-session memos through [[SessionMemo]], and the
+  * [[TmpDirs]], per-session memos through [[SessionMemo]], the
   * streaming twins start their sinks only through the drain seam in
-  * `Streaming.scala`.
+  * `Streaming.scala`, chunking's constants stay in `Chunker.scala`, and
+  * the PDF fixtures serialize only through their one writer.
   */
 class SeamGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -57,5 +58,18 @@ class SeamGuardSpec extends AnyFunSuite {
     val owners = hits(file, ".writeStream").map(_._2)
     assert(owners.sorted == List("appendParquet", "drainTable", "st_ivm", "st_lake_ingest"),
       owners)
+  }
+
+  test("the C1/E5 constants are read in src/main only in Chunker.scala") {
+    val Const = """\b(ChunkSize|Stride|MinChunk|MinParagraph)\b""".r
+    val readers = sources.filter(p => Files.readAllLines(p).asScala.exists(Const.findFirstIn(_).isDefined))
+      .map(_.getFileName.toString).toSet
+    assert(readers == Set("Chunker.scala"), readers)
+  }
+
+  test("PdfText.scala writes endobj and startxref only in the fixture writer") {
+    val file = root.resolve("graft/sources/PdfText.scala")
+    assert(hits(file, "endobj\\n").map(_._2) == List("obj"))
+    assert(hits(file, "startxref\\n").map(_._2) == List("finish"))
   }
 }
