@@ -15,15 +15,18 @@ import org.apache.spark.sql.Column
   * Invariant the store relies on: the SAME embedder instance must be
   * used at ingest ([[sources.ChunkStore.addDocuments]]) and at query
   * ([[sources.ChunkStore.similaritySearch]]) — cosine geometry is only
-  * meaningful within one embedding space.
+  * meaningful within one embedding space. Each store version's
+  * `_COMMIT` token names the embedder class it was built with, and a
+  * search with another embedder raises.
   *
   * Query side: the search scores `cosine_f(embedding, embed(lit(query)))`
-  * in the store scan's projection, so `embed` must be DETERMINISTIC.
-  * Built of foldable expressions (as the default is), the query vector
-  * is computed once, folded to a literal by the optimizer; an embedder
-  * that does not fold (e.g. built on higher-order functions) gets the
-  * same value recomputed per row. Its type must be `array<double>`,
-  * the store's declared embedding type ([[sources.ChunkStore.storeSchema]]).
+  * in one scan of the committed snapshot's projection, so `embed` must
+  * be DETERMINISTIC. Built of foldable expressions (as the default
+  * is), the query vector is computed once, folded to a literal by the
+  * optimizer; an embedder that does not fold (e.g. built on
+  * higher-order functions) gets the same value recomputed per row. Its
+  * type must be `array<double>`, the store's declared embedding type
+  * ([[sources.ChunkStore.storeSchema]]).
   */
 trait Embedder extends Serializable {
   /** text column → array<double> vector column. */

@@ -163,10 +163,12 @@ object Qa {
       .getOrElse("抱歉，没有检索到相关资料。")
 
   /** Q4 — the reference's whole query lifecycle over a graft vector
-    * store: kNN retrieval (one scan job: folded query vector +
-    * TakeOrdered, see [[graft.sources.ChunkStore.similaritySearch]]), Q1
-    * context, Q2 prompt, Q3 answer (stub by default, any generator
-    * pluggable), assembled response.
+    * store: kNN retrieval (one scan of the committed snapshot, one job:
+    * folded query vector + TakeOrdered, after the store's `_COMMIT`
+    * token is read and its embedder checked, see
+    * [[graft.sources.ChunkStore.similaritySearch]]), Q1 context, Q2
+    * prompt, Q3 answer (stub by default, any generator pluggable),
+    * assembled response.
     */
   def answerWithSources(spark: org.apache.spark.sql.SparkSession, storePath: String,
                         query: String, topK: Int = 5,

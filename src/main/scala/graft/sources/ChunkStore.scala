@@ -1,9 +1,11 @@
 package graft.sources
 
-import graft.{Fns, QueryDef, Tables}
+import graft.{Fns, QueryDef, SessionMemo, Tables}
 import graft.operators.Chunker
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 import org.apache.spark.sql.types._
 
 /** Sources & sinks (SURVEY.md §2.1 S1–S8) — the reference's interchange
@@ -15,6 +17,9 @@ import org.apache.spark.sql.types._
   *    stringified, NO-OP when the store is non-empty
   *    (`src/vector_store.py:115-117,127,132-140`)
   *  - S6 reset: overwrite (`src/vector_store.py:96-107`)
+  *  - every store version is committed whole: built in a hidden
+  *    sibling staging directory, stamped with a `_COMMIT` token
+  *    (version id, embedder, embedding type), renamed into place
   *  - S7 JSON dump (`src/vector_store.py:184-205`)
   *  - S8 stats (`src/vector_store.py:177-182`)
   */
@@ -42,6 +47,75 @@ object ChunkStore {
   /** The vector store at `storePath`, read by [[storeSchema]]. */
   def readStore(spark: SparkSession, storePath: String): DataFrame =
     spark.read.schema(storeSchema).parquet(storePath)
+
+  /** A committed store version's token: a `version` id fresh per
+    * commit, the `embedder` class its rows were embedded with, and the
+    * `embedding` type.
+    */
+  private final case class Commit(version: String, embedder: String, embedding: String)
+
+  private def embedderName(e: graft.Embedder): String = e.getClass.getName.stripSuffix("$")
+
+  private def fsOf(spark: SparkSession, p: Path) =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The `_COMMIT` token of the store at `storePath`, or None when the
+    * path holds no committed store. One small file read.
+    */
+  private def readCommit(spark: SparkSession, storePath: String): Option[Commit] = {
+    val token = new Path(storePath, "_COMMIT")
+    val fs = fsOf(spark, token)
+    if (!fs.exists(token)) None
+    else {
+      val in = fs.open(token)
+      val kv = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
+      finally in.close()
+      Some(Commit(kv("version"), kv("embedder"), kv("embedding")))
+    }
+  }
+
+  /** Commit one store version: `write` fills a hidden sibling staging
+    * directory, the `_COMMIT` token is written last, then whatever
+    * store `storePath` held (empty, or the version a reset drops) is
+    * deleted and one rename puts the staging directory in its place. A
+    * failed write deletes the staging directory and leaves `storePath`
+    * as it was.
+    */
+  private def commit(spark: SparkSession, storePath: String, embedder: String,
+                     embedding: String)(write: String => Unit): Unit = {
+    val target = new Path(storePath)
+    val fs = fsOf(spark, target)
+    val version = java.util.UUID.randomUUID().toString
+    val staging = new Path(target.getParent, s".${target.getName}.staging-$version")
+    try {
+      write(staging.toString)
+      val out = fs.create(new Path(staging, "_COMMIT"), false)
+      try out.write(s"version=$version\nembedder=$embedder\nembedding=$embedding\n"
+        .getBytes("UTF-8"))
+      finally out.close()
+      fs.delete(target, true)
+      if (!fs.rename(staging, target))
+        throw new java.io.IOException(s"could not rename $staging to $target")
+    } catch {
+      case e: Throwable =>
+        fs.delete(staging, true)
+        throw e
+    }
+  }
+
+  /** Per (session, store path): the committed version answers are
+    * served from, as its version id and its rows pinned in executor
+    * blocks ([[CheckpointOps.pin]]). [[similaritySearch]] swaps in a
+    * new snapshot when the token names a new version; the superseded
+    * one's blocks are released.
+    */
+  private val snapshots = new SessionMemo[(String, DataFrame)](
+    (spark, storePath) => {
+      val version = readCommit(spark, storePath).map(_.version).orNull
+      (version, CheckpointOps.pin(readStore(spark, storePath)))
+    },
+    held => CheckpointOps.release(held._2))
 
   /** S1/S2 — PDF directory scan (reference
     * `src/pdf_extractor.py:246-265`): list a directory, keep files whose
@@ -96,6 +170,10 @@ object ChunkStore {
     * if the store already has rows). `orderCols` makes the positional id
     * deterministic — the reference relies on Python list order.
     *
+    * The rows are committed as one new store version (a staging
+    * directory, its `_COMMIT` token naming `embedder`, one rename): a
+    * failed add leaves no store behind, or the empty one it found.
+    *
     * Scale note: `row_number` over a global window is a single-partition
     * sort; fine for the reference-fidelity path. The scale path is
     * `zipWithIndex`-style partition-offset ids — see
@@ -110,26 +188,31 @@ object ChunkStore {
       s"embedder produces ${embType.catalogString}, the store holds ${storeType.catalogString}")
     // a missing store is built; a present one is read, and a read that
     // fails (corrupt or half-written files) raises instead of passing
-    // for empty and being appended to
-    val path = new org.apache.hadoop.fs.Path(storePath)
-    val present = path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
-    if (present && readStore(spark, storePath).limit(1).count() > 0)
+    // for empty and being replaced
+    val path = new Path(storePath)
+    if (fsOf(spark, path).exists(path) && readStore(spark, storePath).limit(1).count() > 0)
       false // reference: add is a no-op when non-empty
     else {
       val metaCols = chunks.columns.filterNot(_ == "text").toSeq
-      withPositionalIds(chunks, orderCols)
-        .select(
-          col("id"),
-          col("text"),
-          // FIXTURES §1.2 entry shape: EVERY metadata value stringified
-          // (`src/vector_store.py:132-140` — "3" not 3), and the
-          // embedding computed store-side (`:143-147`) through the
-          // pluggable embedder seam (default: hashed tokens)
-          map_from_arrays(
-            array(metaCols.map(lit): _*),
-            array(metaCols.map(c => col(c).cast("string")): _*)).as("metadata"),
-          embedder.embed(col("text")).as("embedding"))
-        .write.mode(SaveMode.Append).parquet(storePath)
+      commit(spark, storePath, embedderName(embedder), embType.catalogString) { dir =>
+        val (withIds, sorted) = positionalIds(chunks, orderCols)
+        // the one write is the last read of the sorted rows: free them
+        // now, not when a GC finds the frame unreachable (Spark can keep
+        // a finished plan reachable for the rest of the session)
+        try withIds.select(
+            col("id"),
+            col("text"),
+            // FIXTURES §1.2 entry shape: EVERY metadata value stringified
+            // (`src/vector_store.py:132-140` — "3" not 3), and the
+            // embedding computed store-side (`:143-147`) through the
+            // pluggable embedder seam (default: hashed tokens)
+            map_from_arrays(
+              array(metaCols.map(lit): _*),
+              array(metaCols.map(c => col(c).cast("string")): _*)).as("metadata"),
+            embedder.embed(col("text")).as("embedding"))
+          .write.parquet(dir)
+        finally sorted.unpersist(blocking = false)
+      }
       true
     }
   }
@@ -137,17 +220,33 @@ object ChunkStore {
   /** V3/V4 — top-k cosine similarity search over a vector store written
     * by [[addDocuments]]: embed the query text with the SAME function
     * the store used, score every row with the native codegen'd cosine,
-    * TakeOrderedAndProject the top-k. The query embedding is an
+    * TakeOrderedAndProject the top-k — one scan of the committed
+    * snapshot.
+    *
+    * It first reads the store's `_COMMIT` token and raises if there is
+    * none (no committed store at `storePath`) or if it names another
+    * embedder than `embedder`. When the token names a version other than
+    * the snapshot held for this (session, path), the new version's rows
+    * are pinned (materialized inside this search's own job) and the old
+    * snapshot's blocks are released. The query embedding is an
     * expression over a literal, so the optimizer folds it to one
     * literal vector: the plan is TakeOrderedAndProject ← Project ←
-    * FileScan, one job, no join and no exchange. Output shape = the
-    * reference's search result (`src/vector_store.py:167-175`): text,
-    * all-string metadata, similarity ∈ [-1, 1] (may be negative).
+    * Scan ExistingRDD, one job, no file listing, no parquet decode, no
+    * join and no exchange. A search racing a commit may fail; it never
+    * mixes rows of two versions. Output shape = the reference's search
+    * result (`src/vector_store.py:167-175`): text, all-string metadata,
+    * similarity ∈ [-1, 1] (may be negative).
     */
   def similaritySearch(spark: SparkSession, storePath: String, query: String,
                        topK: Int = 5,
                        embedder: graft.Embedder = graft.HashedTokenEmbedder): DataFrame = {
-    readStore(spark, storePath)
+    val token = readCommit(spark, storePath).getOrElse(
+      throw new IllegalStateException(s"no committed store at $storePath: its _COMMIT token is missing"))
+    val used = embedderName(embedder)
+    require(token.embedder == used,
+      s"the store at $storePath was embedded by ${token.embedder}, the query by $used")
+    if (snapshots(spark, storePath)._1 != token.version) snapshots.reset(spark, storePath)
+    snapshots(spark, storePath)._2
       .select(col("id"), col("text"), col("metadata"),
         call_function("cosine_f", col("embedding"), embedder.embed(lit(query))).as("similarity"))
       .orderBy(desc("similarity"), col("id"))
@@ -159,35 +258,51 @@ object ChunkStore {
     * (so order is global), then add per-partition offsets computed from
     * partition sizes — the standard scalable global-index pattern.
     */
-  def withPositionalIds(chunks: DataFrame, orderCols: Seq[String]): DataFrame = {
+  def withPositionalIds(chunks: DataFrame, orderCols: Seq[String]): DataFrame =
+    positionalIds(chunks, orderCols)._1
+
+  /** [[withPositionalIds]] and the persisted sorted rows it reads. */
+  private def positionalIds(chunks: DataFrame,
+                            orderCols: Seq[String]): (DataFrame, org.apache.spark.rdd.RDD[Row]) = {
     val spark = chunks.sparkSession
     // persisted before the two passes below (sizes, then id assignment):
     // recomputing the sort per pass could order orderCols-ties
     // differently across the two jobs and hand out nondeterministic ids.
-    // ContextCleaner unpersists the blocks once the RDD is unreachable.
-    val sorted = chunks.repartitionByRange(orderCols.map(col): _*)
+    // An RDD-level persist, not Dataset.persist: nothing enters the
+    // session's CacheManager. addDocuments frees the blocks after its
+    // write; for other callers ContextCleaner frees them once the
+    // returned frame is unreachable.
+    val sortedDf = chunks.repartitionByRange(orderCols.map(col): _*)
       .sortWithinPartitions(orderCols.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = sorted.rdd.mapPartitionsWithIndex {
+    val sorted = sortedDf.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sizes = sorted.mapPartitionsWithIndex {
       case (pid, it) => Iterator((pid, it.size.toLong))
     }.collect().sortBy(_._1)
     val offsets = sizes.map(_._2).scanLeft(0L)(_ + _)
     val offsetMap = sizes.map(_._1).zip(offsets).toMap
     val bc = spark.sparkContext.broadcast(offsetMap)
-    val schema = sorted.schema.add("id", StringType)
-    val rdd = sorted.rdd.mapPartitionsWithIndex { case (pid, it) =>
+    val schema = sortedDf.schema.add("id", StringType)
+    val rdd = sorted.mapPartitionsWithIndex { case (pid, it) =>
       val base = bc.value(pid)
       it.zipWithIndex.map { case (row, i) =>
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ s"chunk_${base + i}")
+        Row.fromSeq(row.toSeq :+ s"chunk_${base + i}")
       }
     }
-    spark.createDataFrame(rdd, schema)
+    (spark.createDataFrame(rdd, schema), sorted)
   }
 
-  /** S6 — reset: drop + recreate (overwrite with empty). */
-  def reset(spark: SparkSession, storePath: String, schema: StructType): Unit =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .write.mode(SaveMode.Overwrite).parquet(storePath)
+  /** S6 — reset: drop + recreate, committed as a new, empty store
+    * version. Like the reference's recreated collection it keeps the
+    * store's embedder: the one the dropped version's token names, or
+    * the default for a store that had none.
+    */
+  def reset(spark: SparkSession, storePath: String, schema: StructType): Unit = {
+    val embedder =
+      readCommit(spark, storePath).fold(embedderName(graft.HashedTokenEmbedder))(_.embedder)
+    commit(spark, storePath, embedder, storeSchema("embedding").dataType.catalogString) { dir =>
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema).write.parquet(dir)
+    }
+  }
 
   /** S7 — full-store JSON dump (id, text, metadata). */
   def dumpJson(store: DataFrame, path: String): Unit =

@@ -1309,6 +1309,20 @@ private[sources] object PdfCrypt {
     c.doFinal(data)
   }
 
+  /** §7.6.2 Algorithm 1: object `num`/`gen`'s key = MD5(file key ∥
+    * objnum LE24 ∥ gennum LE16 [∥ "sAlT" for AES]), truncated to
+    * min(keyLen + 5, 16). The reader decrypts and the fixture writer
+    * seals with it.
+    */
+  private[sources] def objectKey(key: Array[Byte], num: Int, gen: Int,
+                                 aes: Boolean): Array[Byte] = {
+    val ext = Array[Byte](
+      (num & 0xFF).toByte, ((num >> 8) & 0xFF).toByte, ((num >> 16) & 0xFF).toByte,
+      (gen & 0xFF).toByte, ((gen >> 8) & 0xFF).toByte)
+    val salt = if (aes) Array[Byte](0x73, 0x41, 0x6C, 0x54) else Array.empty[Byte]
+    md5(key, ext, salt).take(math.min(key.length + 5, 16))
+  }
+
   /** One opened file's decryption state. `encNum` is the /Encrypt
     * dictionary's own object number (its strings are plaintext, §7.6.2).
     * `v5`: the AES-256 handlers (R5/R6) use the FILE key directly for
@@ -1316,22 +1330,12 @@ private[sources] object PdfCrypt {
     */
   private[sources] final case class Decryptor(key: Array[Byte], aes: Boolean, encNum: Int,
                                               v5: Boolean = false) {
-    /** §7.6.2 Algorithm 1: per-object key = MD5(file key ∥ objnum LE24
-      * ∥ gennum LE16 [∥ "sAlT" for AES]), truncated to
-      * min(keyLen + 5, 16); then RC4, or AES-CBC with the stream's
-      * first 16 bytes as IV. V5 skips the derivation and feeds the
-      * 32-byte file key straight to AES-CBC.
+    /** The [[objectKey]], then RC4, or AES-CBC with the stream's first
+      * 16 bytes as IV. V5 skips the derivation and feeds the 32-byte
+      * file key straight to AES-CBC.
       */
     def decrypt(num: Int, gen: Int, data: Array[Byte]): Array[Byte] = {
-      val objKey =
-        if (v5) key
-        else {
-          val ext = Array[Byte](
-            (num & 0xFF).toByte, ((num >> 8) & 0xFF).toByte, ((num >> 16) & 0xFF).toByte,
-            (gen & 0xFF).toByte, ((gen >> 8) & 0xFF).toByte)
-          val salt = if (aes) Array[Byte](0x73, 0x41, 0x6C, 0x54) else Array.empty[Byte]
-          md5(key, ext, salt).take(math.min(key.length + 5, 16))
-        }
+      val objKey = if (v5) key else objectKey(key, num, gen, aes)
       if (!aes) rc4(objKey, data)
       else if (data.length < 32 || data.length % 16 != 0) Array.empty[Byte]
       else {
@@ -2221,7 +2225,7 @@ private[graft] object PdfFixtures {
     * self-certify.
     */
   private final class EmptyPasswordHandler(mode: String, idMul: Int, idAdd: Int) {
-    import PdfCrypt.{Pad, computeU, fileKey, md5, rc4}
+    import PdfCrypt.{Pad, computeU, fileKey, md5, objectKey, rc4}
     private val (v, r, keyBits, aes) = mode match {
       case "rc4-40" => (1, 2, 40, false)
       case "rc4-128" => (2, 3, 128, false)
@@ -2253,10 +2257,7 @@ private[graft] object PdfFixtures {
 
     /** Object `num`'s stream encrypted under its §7.6.2 Algorithm 1 key. */
     def seal(num: Int, data: Array[Byte], gen: Int = 0): Array[Byte] = {
-      val ext = Array[Byte]((num & 0xFF).toByte, ((num >> 8) & 0xFF).toByte,
-        ((num >> 16) & 0xFF).toByte, (gen & 0xFF).toByte, ((gen >> 8) & 0xFF).toByte)
-      val salt = if (aes) Array[Byte](0x73, 0x41, 0x6C, 0x54) else Array.empty[Byte]
-      val objKey = md5(key, ext, salt).take(math.min(keyLen + 5, 16))
+      val objKey = objectKey(key, num, gen, aes)
       if (aes) aesSeal(objKey, ramp(16, 29, 11), data) else rc4(objKey, data)
     }
   }

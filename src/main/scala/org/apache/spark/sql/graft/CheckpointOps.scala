@@ -151,6 +151,20 @@ object CheckpointOps {
     def fenced: org.apache.spark.sql.Dataset[T] = fence(ds)
   }
 
+  /** `df`'s rows behind a `LogicalRDD`, persisted MEMORY_AND_DISK by
+    * the first job that reads them: a pin for data that never changes,
+    * such as a committed store version. Unlike `Dataset.persist` it
+    * enters no CacheManager, so other readers of `df`'s files are never
+    * served these blocks; unlike a fence, a lost block is recomputed
+    * from `df`'s plan. Free it with [[release]].
+    */
+  def pin(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession.asInstanceOf[SparkSession]
+    val qe = df.queryExecution
+    val rdd = qe.toRdd.map(_.copy()).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Dataset.ofRows(spark, LogicalRDD(qe.analyzed.output, rdd)(spark))
+  }
+
   /** Hash-partition `df` by `keys` into `numParts` partitions,
     * eagerly checkpoint the result (local blocks, or reliable files
     * under `spark.graft.checkpoint.reliable=true`), and return a
@@ -198,7 +212,8 @@ object CheckpointOps {
   /** Unpersist the checkpoint blocks behind a DataFrame produced by
     * [[checkpointHashPartitioned]] or `localCheckpoint` — for the
     * INTERMEDIATE tables of an iterative operator (superseded fences,
-    * the edge layout once the result is materialized). Without this,
+    * the edge layout once the result is materialized) — or the blocks
+    * of a superseded [[pin]]. Without this,
     * every invocation leaks its checkpoint blocks into the block
     * manager for the session's lifetime: repeated bench passes over
     * the graph lane accumulated gigabytes of dead fence/edge blocks,

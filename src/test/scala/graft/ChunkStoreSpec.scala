@@ -3,6 +3,7 @@ package graft
 import graft.sources.ChunkStore
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** S3–S8 quirk-ledger tests (SURVEY.md §2.1): CSV round-trip drops
   * chunk_number, add is idempotent, positional ids are deterministic.
@@ -263,6 +264,134 @@ class ChunkStoreSpec extends SparkSpec {
     intercept[Exception](
       ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text")))
     assert(listing() == before, "an unreadable store was written to")
+  }
+
+  /** Every file under `dir`, hidden ones included, with its bytes. */
+  private def tree(dir: String): Seq[(String, Seq[Byte])] = {
+    val root = java.nio.file.Paths.get(dir)
+    scala.util.Using.resource(java.nio.file.Files.walk(root)) { w =>
+      w.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_)).toSeq
+        .map(f => root.relativize(f).toString -> java.nio.file.Files.readAllBytes(f).toSeq)
+        .sortBy(_._1)
+    }
+  }
+
+  private def hits(store: String, q: String, embedder: Embedder = HashedTokenEmbedder) =
+    ChunkStore.similaritySearch(spark, store, q, topK = 10, embedder = embedder)
+      .collect().map(_.getAs[String]("text")).toSet
+
+  test("S5/S6: a build that fails mid-way leaves no store, or the reset store byte-identical") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    // the third row raises: in the chunk frame (before the write), and
+    // in the embedder (inside the write job)
+    val failingChunks = sampleChunks().withColumn("text",
+      when(col("text") === "gamma chunk text", raise_error(lit("third row"))).otherwise(col("text")))
+    object FailingEmbedder extends Embedder {
+      override val dim: Int = 64
+      override def embed(text: Column): Column =
+        when(text === "gamma chunk text", raise_error(lit("third row")))
+          .otherwise(HashedTokenEmbedder.embed(text))
+    }
+    val failures = Seq[String => Unit](
+      store => ChunkStore.addDocuments(spark, failingChunks, store, Seq("source", "text")),
+      store => ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text"),
+        embedder = FailingEmbedder))
+    for (fail <- failures) {
+      val fresh = tmp()
+      intercept[Exception](fail(s"$fresh/store"))
+      assert(new java.io.File(fresh).list().isEmpty, "a failed build left a store or its staging dir")
+
+      val base = tmp()
+      val store = s"$base/store"
+      assert(ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text")))
+      ChunkStore.reset(spark, store, ChunkStore.storeSchema)
+      val before = tree(base)
+      intercept[Exception](fail(store))
+      assert(tree(base) == before, "a failed build changed the reset store")
+    }
+  }
+
+  test("S5/S6: add → search → reset → search finds nothing → add → search finds the new rows") {
+    import spark.implicits._
+    val store = tmp() + "/store"
+    ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text"))
+    assert(hits(store, "alpha chunk text") == sampleChunks().select("text").as[String].collect().toSet)
+    ChunkStore.reset(spark, store, ChunkStore.storeSchema)
+    assert(hits(store, "alpha chunk text").isEmpty)
+    val other = Seq(("epsilon words here", "c.pdf"), ("zeta words there", "c.pdf")).toDF("text", "source")
+    assert(ChunkStore.addDocuments(spark, other, store, Seq("source", "text")))
+    assert(hits(store, "zeta words") == Set("epsilon words here", "zeta words there"))
+  }
+
+  test("V3: a superseded snapshot's blocks leave getPersistentRDDs once the new version is searched") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val store = tmp() + "/store"
+    ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text"))
+    val beforeFirst = sc.getPersistentRDDs.keySet
+    hits(store, "alpha")
+    val pinned = sc.getPersistentRDDs.keySet -- beforeFirst
+    assert(pinned.size == 1, "the first search pins one snapshot")
+    hits(store, "beta")
+    assert(sc.getPersistentRDDs.keySet -- beforeFirst == pinned, "the same version is re-pinned")
+    ChunkStore.reset(spark, store, ChunkStore.storeSchema)
+    ChunkStore.addDocuments(spark, Seq(("eta", "d.pdf")).toDF("text", "source"), store, Seq("source"))
+    val beforeSecond = sc.getPersistentRDDs.keySet
+    assert(hits(store, "eta") == Set("eta"))
+    val now = sc.getPersistentRDDs.keySet
+    assert(!now.contains(pinned.head), "the superseded snapshot is still persisted")
+    assert((now -- beforeSecond).size == 1)
+  }
+
+  test("V3: a store without _COMMIT raises; so does a search with another embedder, naming both") {
+    val bare = tmp() + "/bare"
+    spark.createDataFrame(java.util.List.of(
+      Row("chunk_0", "alpha", Map("source" -> "a.pdf"), Seq.fill(64)(0.125))), ChunkStore.storeSchema)
+      .write.parquet(bare)
+    val missing = intercept[IllegalStateException](ChunkStore.similaritySearch(spark, bare, "alpha"))
+    assert(missing.getMessage.contains("_COMMIT"))
+
+    import org.apache.spark.sql.Column
+    object OtherEmbedder extends Embedder {
+      override val dim: Int = 64
+      override def embed(text: Column): Column = HashedTokenEmbedder.embed(text)
+    }
+    val store = tmp() + "/store"
+    ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text"))
+    val e = intercept[IllegalArgumentException](hits(store, "alpha", OtherEmbedder))
+    assert(e.getMessage.contains("graft.HashedTokenEmbedder"), e.getMessage)
+    assert(e.getMessage.contains(OtherEmbedder.getClass.getName.stripSuffix("$")), e.getMessage)
+  }
+
+  test("V3: the first search of a new store version runs exactly one Spark job") {
+    import spark.implicits._
+    val store = tmp() + "/store"
+    ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text"))
+    assert(jobsRunBy(hits(store, "alpha"): Unit) == 1)
+    ChunkStore.reset(spark, store, ChunkStore.storeSchema)
+    ChunkStore.addDocuments(spark, Seq(("theta", "e.pdf")).toDF("text", "source"), store, Seq("source"))
+    var got = Set.empty[String]
+    assert(jobsRunBy { got = hits(store, "theta") } == 1)
+    assert(got == Set("theta"))
+  }
+
+  test("S5: forced rebuilds leave nothing in the CacheManager and no persisted RDD") {
+    import org.apache.spark.sql.functions.col
+    val work = tmp()
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Pipeline.setupKnowledgeBase(spark, docs, work, forceRebuild = true)
+    Pipeline.setupKnowledgeBase(spark, docs, work, forceRebuild = true)
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before == Set.empty[Int])
+    // the sorted chunk table withPositionalIds builds for Pipeline's add
+    val order = Seq("source", "page_number", "text").map(col)
+    val sorted = ChunkStore.readCsv(spark, s"$work/extracted_csv")
+      .repartitionByRange(order: _*).sortWithinPartitions(order: _*)
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cacheManager.lookupCachedData(
+      sorted.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty)
   }
 
   test("S7/S8: JSON dump writes id/text rows; stats counts them") {

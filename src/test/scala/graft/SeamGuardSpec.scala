@@ -8,8 +8,10 @@ import scala.util.Using
 /** Source guards for the shared seams: temp dirs go through
   * [[TmpDirs]], per-session memos through [[SessionMemo]], the
   * streaming twins start their sinks only through the drain seam in
-  * `Streaming.scala`, chunking's constants stay in `Chunker.scala`, and
-  * the PDF fixtures serialize only through their one writer.
+  * `Streaming.scala`, chunking's constants stay in `Chunker.scala`, the
+  * PDF fixtures serialize only through their one writer, and the vector
+  * store is renamed into place and its token written and read only by
+  * `ChunkStore`'s commit and token reader.
   */
 class SeamGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -71,5 +73,20 @@ class SeamGuardSpec extends AnyFunSuite {
     val file = root.resolve("graft/sources/PdfText.scala")
     assert(hits(file, "endobj\\n").map(_._2) == List("obj"))
     assert(hits(file, "startxref\\n").map(_._2) == List("finish"))
+  }
+
+  test("the vector store commits by one rename, and only its commit and token reader name _COMMIT") {
+    val store = root.resolve("graft/sources/ChunkStore.scala")
+    assert(hits(store, "rename(").map(_._2) == List("commit"))
+    assert(filesWith("rename(") == Set("ChunkStore.scala", "Lake.scala"))
+    val token = sources.flatMap(p => hits(p, "\"_COMMIT\""))
+    assert(token.map { case (at, owner) => at.takeWhile(_ != ':') -> owner }.sorted ==
+      List("ChunkStore.scala" -> "commit", "ChunkStore.scala" -> "readCommit"), token)
+  }
+
+  test("answers never re-read the store: readStore is not called from similaritySearch or Qa") {
+    val store = root.resolve("graft/sources/ChunkStore.scala")
+    assert(!hits(store, "readStore(").map(_._2).contains("similaritySearch"))
+    assert(!filesWith("readStore(").contains("Qa.scala"))
   }
 }
