@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   *         discards the in-memory list and re-reads, dropping
   *         `chunk_number`, `src/main.py:44-68`), then add to the vector
   *         store with positional ids + stringified metadata (S5),
-  *         guarded to a no-op when the store is non-empty (P2);
+  *         guarded to a no-op when the store is non-empty (P2); a
+  *         store with rows but no `_COMMIT` token (built before
+  *         stores were committed) raises: rebuild with `forceRebuild`;
   *   [3/3] qa init: nothing to do engine-side (the answerer is a
   *         function, Qa.answer).
   *

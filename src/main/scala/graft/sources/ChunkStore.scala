@@ -49,10 +49,10 @@ object ChunkStore {
     spark.read.schema(storeSchema).parquet(storePath)
 
   /** A committed store version's token: a `version` id fresh per
-    * commit, the `embedder` class its rows were embedded with, and the
-    * `embedding` type.
+    * commit and the `embedder` class its rows were embedded with (the
+    * token also records the `embedding` type, for readers of the files).
     */
-  private final case class Commit(version: String, embedder: String, embedding: String)
+  private final case class Commit(version: String, embedder: String)
 
   private def embedderName(e: graft.Embedder): String = e.getClass.getName.stripSuffix("$")
 
@@ -71,16 +71,19 @@ object ChunkStore {
       val kv = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
         .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
       finally in.close()
-      Some(Commit(kv("version"), kv("embedder"), kv("embedding")))
+      Some(Commit(kv("version"), kv("embedder")))
     }
   }
 
   /** Commit one store version: `write` fills a hidden sibling staging
     * directory, the `_COMMIT` token is written last, then whatever
     * store `storePath` held (empty, or the version a reset drops) is
-    * deleted and one rename puts the staging directory in its place. A
-    * failed write deletes the staging directory and leaves `storePath`
-    * as it was.
+    * renamed aside, one rename puts the staging directory in its place,
+    * and the set-aside store is deleted. A failed write or rename
+    * deletes the staging directory and leaves `storePath` as it was.
+    * A process killed mid-commit leaves its hidden `.<name>.staging-*`
+    * (and, between the two renames, `.<name>.superseded-*`) sibling
+    * behind; nothing sweeps them.
     */
   private def commit(spark: SparkSession, storePath: String, embedder: String,
                      embedding: String)(write: String => Unit): Unit = {
@@ -88,15 +91,24 @@ object ChunkStore {
     val fs = fsOf(spark, target)
     val version = java.util.UUID.randomUUID().toString
     val staging = new Path(target.getParent, s".${target.getName}.staging-$version")
+    val aside = new Path(target.getParent, s".${target.getName}.superseded-$version")
+    val move = (from: Path, to: Path) =>
+      if (!fs.rename(from, to)) throw new java.io.IOException(s"could not rename $from to $to")
     try {
       write(staging.toString)
       val out = fs.create(new Path(staging, "_COMMIT"), false)
       try out.write(s"version=$version\nembedder=$embedder\nembedding=$embedding\n"
         .getBytes("UTF-8"))
       finally out.close()
-      fs.delete(target, true)
-      if (!fs.rename(staging, target))
-        throw new java.io.IOException(s"could not rename $staging to $target")
+      val had = fs.exists(target)
+      if (had) move(target, aside)
+      try move(staging, target)
+      catch {
+        case e: Throwable =>
+          if (had) move(aside, target)
+          throw e
+      }
+      if (had) fs.delete(aside, true)
     } catch {
       case e: Throwable =>
         fs.delete(staging, true)
@@ -172,7 +184,9 @@ object ChunkStore {
     *
     * The rows are committed as one new store version (a staging
     * directory, its `_COMMIT` token naming `embedder`, one rename): a
-    * failed add leaves no store behind, or the empty one it found.
+    * failed add leaves no store behind, or the empty one it found. A
+    * store with rows but no token raises instead of passing for
+    * indexed, since no answer could be served from it.
     *
     * Scale note: `row_number` over a global window is a single-partition
     * sort; fine for the reference-fidelity path. The scale path is
@@ -190,9 +204,15 @@ object ChunkStore {
     // fails (corrupt or half-written files) raises instead of passing
     // for empty and being replaced
     val path = new Path(storePath)
-    if (fsOf(spark, path).exists(path) && readStore(spark, storePath).limit(1).count() > 0)
+    if (fsOf(spark, path).exists(path) && readStore(spark, storePath).limit(1).count() > 0) {
+      // a store with rows but no token was not written by a commit (an
+      // older build, a hand-written directory): answers would refuse it,
+      // so the guard must not pass it off as already indexed
+      if (readCommit(spark, storePath).isEmpty)
+        throw new IllegalStateException(s"the store at $storePath has rows but no _COMMIT " +
+          "token; reset it (or rebuild with forceRebuild) before adding")
       false // reference: add is a no-op when non-empty
-    else {
+    } else {
       val metaCols = chunks.columns.filterNot(_ == "text").toSeq
       commit(spark, storePath, embedderName(embedder), embType.catalogString) { dir =>
         val (withIds, sorted) = positionalIds(chunks, orderCols)
@@ -211,7 +231,7 @@ object ChunkStore {
               array(metaCols.map(c => col(c).cast("string")): _*)).as("metadata"),
             embedder.embed(col("text")).as("embedding"))
           .write.parquet(dir)
-        finally sorted.unpersist(blocking = false)
+        finally CheckpointOps.release(sorted)
       }
       true
     }
@@ -261,28 +281,26 @@ object ChunkStore {
   def withPositionalIds(chunks: DataFrame, orderCols: Seq[String]): DataFrame =
     positionalIds(chunks, orderCols)._1
 
-  /** [[withPositionalIds]] and the persisted sorted rows it reads. */
-  private def positionalIds(chunks: DataFrame,
-                            orderCols: Seq[String]): (DataFrame, org.apache.spark.rdd.RDD[Row]) = {
+  /** [[withPositionalIds]] and the pinned sorted rows it reads. */
+  private def positionalIds(chunks: DataFrame, orderCols: Seq[String]): (DataFrame, DataFrame) = {
     val spark = chunks.sparkSession
-    // persisted before the two passes below (sizes, then id assignment):
+    // pinned before the two passes below (sizes, then id assignment):
     // recomputing the sort per pass could order orderCols-ties
     // differently across the two jobs and hand out nondeterministic ids.
-    // An RDD-level persist, not Dataset.persist: nothing enters the
-    // session's CacheManager. addDocuments frees the blocks after its
+    // CheckpointOps.pin, not Dataset.persist: nothing enters the
+    // session's CacheManager. addDocuments releases the blocks after its
     // write; for other callers ContextCleaner frees them once the
     // returned frame is unreachable.
-    val sortedDf = chunks.repartitionByRange(orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-    val sorted = sortedDf.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = sorted.mapPartitionsWithIndex {
+    val sorted = CheckpointOps.pin(chunks.repartitionByRange(orderCols.map(col): _*)
+      .sortWithinPartitions(orderCols.map(col): _*))
+    val sizes = sorted.rdd.mapPartitionsWithIndex {
       case (pid, it) => Iterator((pid, it.size.toLong))
     }.collect().sortBy(_._1)
     val offsets = sizes.map(_._2).scanLeft(0L)(_ + _)
     val offsetMap = sizes.map(_._1).zip(offsets).toMap
     val bc = spark.sparkContext.broadcast(offsetMap)
-    val schema = sortedDf.schema.add("id", StringType)
-    val rdd = sorted.mapPartitionsWithIndex { case (pid, it) =>
+    val schema = sorted.schema.add("id", StringType)
+    val rdd = sorted.rdd.mapPartitionsWithIndex { case (pid, it) =>
       val base = bc.value(pid)
       it.zipWithIndex.map { case (row, i) =>
         Row.fromSeq(row.toSeq :+ s"chunk_${base + i}")

@@ -344,13 +344,42 @@ class ChunkStoreSpec extends SparkSpec {
     assert((now -- beforeSecond).size == 1)
   }
 
-  test("V3: a store without _COMMIT raises; so does a search with another embedder, naming both") {
+  test("S5/S6: a commit whose final rename fails puts the prior store back, byte-identical") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.failrename.impl", classOf[ChunkStoreSpec.FailingRenameFs].getName)
+    val base = tmp()
+    val store = s"$base/store"
+    assert(ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text")))
+    val failures = Seq[() => Unit](
+      // the version a reset drops
+      () => ChunkStore.reset(spark, s"failrename://$store", ChunkStore.storeSchema),
+      // the empty store a reset left
+      () => ChunkStore.addDocuments(spark, sampleChunks(), s"failrename://$store",
+        Seq("source", "text")))
+    for (fail <- failures) {
+      val before = tree(base)
+      intercept[java.io.IOException](fail())
+      assert(tree(base) == before, "a failed rename lost the prior store or left a sibling")
+      ChunkStore.reset(spark, store, ChunkStore.storeSchema)
+    }
+  }
+
+  test("V3/S5: a store without _COMMIT raises on search and on add; so does a search with another embedder, naming both") {
     val bare = tmp() + "/bare"
     spark.createDataFrame(java.util.List.of(
       Row("chunk_0", "alpha", Map("source" -> "a.pdf"), Seq.fill(64)(0.125))), ChunkStore.storeSchema)
       .write.parquet(bare)
     val missing = intercept[IllegalStateException](ChunkStore.similaritySearch(spark, bare, "alpha"))
     assert(missing.getMessage.contains("_COMMIT"))
+    // the add guard sees what search sees: rows without a token are not
+    // "already indexed"; the add raises and writes nothing
+    val before = tree(bare)
+    val unindexed = intercept[IllegalStateException](
+      ChunkStore.addDocuments(spark, sampleChunks(), bare, Seq("source", "text")))
+    assert(unindexed.getMessage.contains("_COMMIT"), unindexed.getMessage)
+    assert(tree(bare) == before, "an uncommitted store was written to")
+    ChunkStore.reset(spark, bare, ChunkStore.storeSchema)
+    assert(ChunkStore.addDocuments(spark, sampleChunks(), bare, Seq("source", "text")))
 
     import org.apache.spark.sql.Column
     object OtherEmbedder extends Embedder {
@@ -421,5 +450,17 @@ class ChunkStoreSpec extends SparkSpec {
     val b = spark.read.parquet(s"$base/compact").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sortBy(_._1)
     assert(a.sameElements(b))
+  }
+}
+
+object ChunkStoreSpec {
+  /** The local file system under a `failrename://` scheme, whose rename
+    * of a store's staging directory into place fails.
+    */
+  class FailingRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("failrename:///")
+    override def getScheme: String = "failrename"
+    override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+      !src.getName.contains(".staging-") && super.rename(src, dst)
   }
 }

@@ -2,10 +2,10 @@
 """Paired A/B of two revisions on one perfbench workload.
 
     python3 tools/ab.py --workload rag_serve --pairs 10 --seed 1301 \\
-        --base HEAD~1 [--change .] [--seconds 10] [--trace 0] [--out ab.jsonl]
+        --base HEAD~1 [--seconds 10] [--trace 0] [--out ab.jsonl]
 
-Each side that is a revision is exported with `git archive` into a
-fresh directory under /tmp; `--change .` (the default) runs the
+The base revision is exported with `git archive` into a fresh directory
+under /tmp, removed again when the script exits; the change side is the
 checkout this script sits in, uncommitted edits included. Pair i runs
 `perfbench/run.py` once per side with seed `--seed + i`; the side that
 goes first flips every pair, so a drift in machine load falls on both
@@ -120,27 +120,18 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, required=True, help="seed of the first pair")
     ap.add_argument("--base", default="HEAD", help="revision to compare against")
-    ap.add_argument("--change", default=".", help="revision, or . for this checkout")
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--out", help="append every run's result here, one JSON line each")
-    ap.add_argument("--keep", action="store_true", help="keep the exported checkouts")
     a = ap.parse_args()
 
-    made = []
+    base_sha, base_dir = export(a.base)
     try:
-        base_sha, base_dir = export(a.base)
-        made.append(base_dir)
-        if a.change == ".":
-            change_sha, change_dir = "worktree", ROOT
-        else:
-            change_sha, change_dir = export(a.change)
-            made.append(change_dir)
-        print(f"base {base_sha[:10]} in {base_dir}; change {change_sha[:10]} in {change_dir}")
+        print(f"base {base_sha[:10]} in {base_dir}; change: this checkout")
         pairs, failed = [], 0
         for i in range(a.pairs):
             seed = a.seed + i
-            sides = [("base", base_dir), ("change", change_dir)]
+            sides = [("base", base_dir), ("change", ROOT)]
             if i % 2:
                 sides.reverse()
             got = {}
@@ -152,7 +143,7 @@ def main():
                         fh.write(json.dumps(dict(res, side=side, pair=i, seed=seed,
                                                  workload=a.workload, trace=a.trace,
                                                  revision=base_sha if side == "base"
-                                                 else change_sha)) + "\n")
+                                                 else "worktree")) + "\n")
                 brief = ("FAILED" if res is None else
                          " ".join(f"{k}={v['value']:.4g}" for k, v in res["metrics"].items()
                                   if isinstance(v["value"], (int, float))))
@@ -166,11 +157,9 @@ def main():
               f"operations failed: base {sum(b['failed'] for b, _ in pairs)}, "
               f"change {sum(c['failed'] for _, c in pairs)}")
         if pairs:
-            report(pairs, directions(change_dir))
+            report(pairs, directions(ROOT))
     finally:
-        if not a.keep:
-            for d in made:
-                shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(base_dir, ignore_errors=True)
 
 
 if __name__ == "__main__":
