@@ -79,13 +79,13 @@ object Explain {
   /** Per-round inner-plan seams for the fenced iterative operators —
     * each builds ONE round exactly the way the operator's loop does
     * (shared round-body functions) and returns its executed-plan
-    * string.
+    * string, or for the PageRank kernel the round's RDD lineage.
     */
   private val innerSeams: Map[String, (SparkSession, String) => String] = Map(
     "gr_pagerank" -> ((s, d) =>
-      operators.Graph.oneRoundPlanForSpec(operators.Graph.purchaseEdges(s, d))),
+      operators.Graph.rankRoundLineageForSpec(operators.Graph.purchaseEdges(s, d))),
     "gr_pagerank_conv" -> ((s, d) =>
-      operators.Graph.prcRoundPlanForSpec(operators.Graph.purchaseEdges(s, d))),
+      operators.Graph.rankCheckLineageForSpec(operators.Graph.purchaseEdges(s, d))),
     "gr_hits" -> ((s, d) =>
       operators.Graph.hitsRoundPlanForSpec(operators.Graph.purchaseEdges(s, d))),
     "gr_kcore" -> ((s, d) =>

@@ -1,18 +1,51 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
-  * All loads are plain `spark.read.parquet` — schema comes from the
-  * parquet footer, Catalyst prunes columns and pushes filters into the
-  * vectorized parquet reader (verify with `.explain`: `ReadSchema` /
-  * `PushedFilters`). At 100 TB these would be partitioned tables behind
-  * a catalog; the access pattern (scan + prune + push) is identical.
+  * All loads are `spark.read.parquet` — Catalyst prunes columns and
+  * pushes filters into the vectorized parquet reader (verify with
+  * `.explain`: `ReadSchema` / `PushedFilters`). The schema is Spark's
+  * own inference from the parquet footers, resolved once per session
+  * and table path ([[load]]): inference is a one-task Spark job per
+  * read, and the schema of an unchanged file does not change. At 100 TB
+  * these would be partitioned tables behind a catalog; the access
+  * pattern (scan + prune + push) is identical.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** The Hadoop length and modification time of a path. */
+  private def fingerprint(spark: SparkSession, path: String): (Long, Long) = {
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    (st.getLen, st.getModificationTime)
+  }
+
+  /** Per (session, table path): the path's fingerprint, taken BEFORE
+    * the schema is inferred, and the inferred schema. A file rewritten
+    * after the fingerprint was taken fails the check in [[load]] and is
+    * inferred again, so a stale schema is never served.
+    */
+  private val schemas = new SessionMemo[((Long, Long), StructType)](
+    (spark, path) => (fingerprint(spark, path), spark.read.parquet(path).schema), _ => ())
+
+  /** `name`'s table under `dir`, read with its memoized schema: no
+    * inference job while the path's length and modification time are
+    * those the schema was inferred under. A missing path reads as
+    * `spark.read.parquet` reads it (and raises the same way).
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    scala.util.Try(fingerprint(spark, path)).toOption match {
+      case None => spark.read.parquet(path)
+      case Some(now) =>
+        if (schemas(spark, path)._1 != now) schemas.reset(spark, path)
+        spark.read.schema(schemas(spark, path)._2).parquet(path)
+    }
+  }
 
   /** Spread a NARROW scan across the session's shuffle parallelism
     * before expensive row-local work (md5 hashing, unpivot fan-out,

@@ -15,18 +15,18 @@ import org.apache.spark.sql.graft.CheckpointOps.{checkpointHashPartitioned, rele
   * outdeg per vertex per round); rankings are unaffected and the gate
   * hashes exact values.
   *
-  * Scale shape per iteration: one join of the edge list against the
-  * score table (co-partitioned on the source key after the first
-  * round), one partial-aggregated groupBy on the destination, one left
-  * join back onto the vertex set. O(iterations) rounds of linear work —
-  * the classic Pregel schedule expressed relationally. Scores are
-  * localCheckpoint-fenced so the logical plan stays O(1) per round
-  * (the same lineage-truncation lesson as connectedComponents).
+  * PageRank's rounds run in [[RankKernel]]: partition-local code over
+  * per-partition CSR arrays of the edge list, one O(V) shuffle per
+  * round, no per-round query plan. The other loops (HITS, label
+  * propagation, k-core, BFS) are relational Pregel schedules: per round,
+  * joins of the stationary edge fence against an O(V) state table,
+  * fenced so the logical plan stays O(1) per round (the same
+  * lineage-truncation lesson as connectedComponents).
   */
 object Graph {
 
-  private val Damping = 85L // ×/100 — 0.85 in integer per-cent arithmetic
-  private val BasePpm = 150000L // (1 - 0.85) × 1e6
+  private[operators] val Damping = 85L // ×/100 — 0.85 in integer per-cent arithmetic
+  private[operators] val BasePpm = 150000L // (1 - 0.85) × 1e6
   private val Iters = 5
 
   /** Partition width for the once-checkpointed iteration tables. An
@@ -44,75 +44,19 @@ object Graph {
   private def iterWidth(df: DataFrame): Int =
     df.sparkSession.sessionState.conf.numShufflePartitions
 
-  /** One lazy PageRank round over the stationary fences (shared by
-    * [[pageRank]], [[personalizedPageRank]], [[pageRankConverged]], and
-    * the plan-evidence seams). The score table CARRIES outdeg, so the
-    * per-round quotient is a row-local projection — no join against a
-    * degree table at all (r17; the r16 shape paid a V-sized
-    * shuffled-hash quotient join per round, and the pre-r16 shape
-    * carried outdeg on the E-sized edge fence and divided per edge).
-    * `sum(q)` with q = r div outdeg is bit-identical to the per-edge
-    * `sum(r div outdeg)`: every edge out of `src` contributes the same
-    * floored quotient. The score side keeps the shuffle_hash hint: the
-    * stationary edge fence streams against a per-partition hash map of
-    * the O(V/n) (id, outdeg, r) rows, never an E-sized sort. The new
-    * score is `teleport` plus the damped contributions; every other
-    * column of `verts` rides along.
-    */
-  private def prRound(eFence: DataFrame, verts: DataFrame, r: DataFrame,
-                      teleport: String = s"$BasePpm"): DataFrame = {
-    val q = r.selectExpr("id AS src", "r div outdeg AS q")
-    val contrib = eFence
-      .join(q.hint("shuffle_hash"), "src")
-      .groupBy("dst").agg(expr("cast(sum(q) AS bigint) AS c"))
-    verts.join(contrib.selectExpr("dst AS id", "c").hint("shuffle_hash"),
-        Seq("id"), "left")
-      .selectExpr(verts.columns.toIndexedSeq :+
-        s"$teleport + ($Damping * coalesce(c, 0L)) div 100 AS r": _*)
-  }
-
-  /** The stationary PageRank fences over a fenced `(src, dst)` edge
-    * list. The edge table is hash-partitioned on src ONCE and
-    * checkpointed with the partitioning ADVERTISED (a plain
-    * localCheckpoint forgets it under AQE and every round re-shuffled
-    * the E-sized table), so every round's edge⋈score join reuses this
-    * layout and only the O(V) score table moves — the edge list (the
-    * 100 TB side) never re-shuffles. The fence is (src, dst) ONLY: it is
-    * re-scanned once PER ROUND, so it stays as narrow as the algorithm
-    * allows (guide §2.3; profiled before the r16 split: 10.9 GB of
-    * fence-block re-reads per run at sf0.1, a third of it outdeg).
-    * outdeg lives on the V-sized vertex table and rides the score rows
-    * (see [[prRound]]). That one table serves as both the vertex set and
-    * the degree table: group-by-src IS distinct-src here (every vertex
-    * appears as a source in the both-directions edge list). `verts`
-    * adds per-vertex columns before the vertex table is fenced.
-    */
-  private def prFences(fs: Rounds, e: DataFrame,
-                       verts: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
-    val w = iterWidth(e)
-    (fs.fence(e, w, "src"),
-      fs.fence(verts(e.groupBy("src").agg(expr("cast(count(*) AS bigint) AS outdeg"))
-        .selectExpr("src AS id", "outdeg")), w, "id"))
-  }
-
-  /** Integer PageRank over a directed edge list `(src, dst)`. Every
-    * vertex must appear as a source (undirected graphs: union both
-    * directions); init score = 1e6 ppm.
-    *
-    * A FIXED iteration count needs no per-round convergence action, so
-    * lineage stays lazy — one job plans all rounds (materializing every
-    * round tripled wall-clock); a fence only kicks in every 6 rounds, on
-    * walks deep enough for plan analysis to grow noticeable. The result
-    * is materialized INSIDE the iteration confs, so the rounds execute
-    * under them (returned lazily, they would plan at the caller's action
-    * with codegen+AQE back on).
+  /** Integer PageRank over a directed edge list `(src, dst)` of integral
+    * ids: `iters` rounds from 1e6 ppm on every vertex, each vertex's new
+    * score `150000 + (85 · Σ r div outdeg) div 100` over its in-edges.
+    * Every vertex must appear as a source (undirected graphs: union both
+    * directions); a contribution to an id that is not a source is
+    * dropped, and a null id raises. Returns `(id, r, outdeg)` as bigints,
+    * fenced: one job builds the CSR and runs every round
+    * ([[RankKernel]]).
     */
   def pageRank(edges: DataFrame, iters: Int = Iters): DataFrame =
-    Rounds.iterate(edges.toDF("src", "dst")) { (fs, e) =>
-      val (eFence, vertsDeg) = prFences(fs, e)
-      val r = fs.fixed(vertsDeg.withColumn("r", lit(1000000L)), iters, every = 6)(
-        prRound(eFence, vertsDeg, _))(fs.fence(_))
-      fs.fence(r.select("id", "r"), iterWidth(e), "id")
+    Rounds.scope { fs =>
+      val k = RankKernel(fs, edges.toDF("src", "dst"))
+      k.result(k.after(iters))
     }
 
   private val HitsIters = 8
@@ -186,7 +130,8 @@ object Graph {
           val hm = obsH.get("hm").asInstanceOf[Long]
           (hraw.selectExpr("src AS id", s"hrw * 1000000 div ${hm}L AS h"), a)
       }
-      // materialize INSIDE the iteration confs (the pageRank lesson)
+      // materialize INSIDE the iteration confs: returned lazily, the
+      // rounds would plan at the caller's action with codegen+AQE back on
       fs.fence(h.selectExpr("id", "'customer' AS kind", "id div 2 AS key",
           "h AS score_ppm")
         .unionByName(a.selectExpr("id", "'supplier' AS kind", "id div 2 AS key",
@@ -222,58 +167,32 @@ object Graph {
   private[graft] val propagatedLabels = new graft.SessionMemo[DataFrame](
     (spark, dir) => labelPropagation(purchaseEdges(spark, dir), rounds = 5), release)
 
-  /** One un-materialized PageRank round's executed-plan string, built
-    * exactly the way the loop builds it — for PlanShapeSpec to pin the
-    * round shape (1 contribution exchange, 2 shuffled-hash joins, no
-    * sort) without reaching into the guarded loop.
+  /** The lineage of one [[RankKernel]] round after the CSR build — the
+    * plan evidence of gr_pagerank's loop, whose result plan is a fence
+    * scan. Builds the lineage only; no job runs.
     */
-  private[graft] def oneRoundPlanForSpec(edges: DataFrame): String =
-    Rounds.iterate(edges.toDF("src", "dst")) { (fs, e) =>
-      val (eFence, vertsDeg) = prFences(fs, e)
-      prRound(eFence, vertsDeg, vertsDeg.withColumn("r", lit(1000000L)))
-        .queryExecution.executedPlan.toString
+  private[graft] def rankRoundLineageForSpec(edges: DataFrame): String =
+    Rounds.scope { fs =>
+      val k = RankKernel(fs, edges.toDF("src", "dst"))
+      k.round(k.init).toDebugString
     }
 
   /** Rounds between two cycle checks of [[pageRankConverged]]. Any EVEN
     * k that divides 120 is semantics-identical (the realized period is
-    * 2; odd k would never detect it). k = 6 is the measured sweet spot
-    * of the block-depth-vs-fence-count trade (r13, sf0.1 solo, idle:
-    * k = 2 → 37.4 s, 4 → 37.1 s, 6 → 35.1 s, 10 → 40.2 s — deeper lazy
-    * blocks pay per-stage lineage-serialization, shallower ones pay
-    * fence+cycle-check jobs; the r17 re-grid found no win beyond 6–8).
+    * 2; odd k would never detect it). k = 6 was the measured sweet spot
+    * of the SQL round's block-depth-vs-fence-count trade (r13, sf0.1
+    * solo, idle: k = 2 → 37.4 s, 4 → 37.1 s, 6 → 35.1 s, 10 → 40.2 s).
     */
   private val CheckEvery = 6
 
-  /** The block-ending cycle check of [[pageRankConverged]]: fence the
-    * state WITH the id-layout advertised, so the next block's rounds
-    * start from a co-partitioned state table, and count the rows that
-    * differ from the previous fence while the fence materializes. Both
-    * sides advertise hash(id, w), so the join is exchange-free, and
-    * shuffle_hash keeps it sort-free; both hold exactly one row per
-    * vertex id, so the inner join is row-preserving and d == 0 ⟺ no
-    * row differs. The count RIDES the fence job as an observed metric
-    * (the gr_hits/k-core r16 discipline) instead of a separate isEmpty
-    * JOB per block (~17 extra scheduler barriers over a 102-round run).
+  /** The lineage of [[pageRankConverged]]'s block-ending cycle check
+    * after one round: the round, and the per-partition count of scores
+    * that differ from the block's start. Builds the lineage only.
     */
-  private def prcCheck(r: DataFrame, prev: DataFrame, obs: org.apache.spark.sql.Observation): DataFrame =
-    r.join(prev.selectExpr("id", "r AS rp").hint("shuffle_hash"), "id")
-      .observe(obs, expr("count_if(r != rp) AS d"))
-      .select("id", "outdeg", "r")
-
-  /** One pageRankConverged round PLUS the block-ending cycle-check
-    * join, executed-plan string — the plan-evidence seam for the
-    * fenced loop (the outer dump collapses to a checkpoint scan).
-    * Built exactly the way the loop builds it: stationary fences, one
-    * shared [[prRound]] (quotient is a row-local projection — outdeg
-    * rides the score rows), then the exchange-free [[prcCheck]].
-    */
-  private[graft] def prcRoundPlanForSpec(edges: DataFrame): String =
-    Rounds.iterate(edges.toDF("src", "dst")) { (fs, e) =>
-      val (eFence, vertsDeg) = prFences(fs, e)
-      val r0 = fs.fence(vertsDeg.withColumn("r", lit(1000000L)), iterWidth(e), "id")
-      prcCheck(prRound(eFence, vertsDeg, r0), r0,
-          org.apache.spark.sql.Observation("prc_diff_spec"))
-        .queryExecution.executedPlan.toString
+  private[graft] def rankCheckLineageForSpec(edges: DataFrame): String =
+    Rounds.scope { fs =>
+      val k = RankKernel(fs, edges.toDF("src", "dst"))
+      k.diffs(k.round(k.init), k.init).toDebugString
     }
 
   /** PageRank iterated to the exact integer FIXPOINT CYCLE instead of a
@@ -287,14 +206,15 @@ object Graph {
     * period-≤2 fixpoint.
     *
     * Determinism across engines without agreeing on the detection
-    * round: scores are fenced every [[CheckEvery]] rounds (lazy
-    * composition in between — materializing each round tripled
-    * wall-clock) and compared to the previous fence. `r_t == r_{t-k}`
-    * proves a cycle of period dividing k; detection lands on a
-    * multiple of k, and 120 − t is then also a multiple of k, so the
-    * detected fence carries EXACTLY the scores of the oracle's fixed
-    * 120th round. The last block is clamped, so a `maxIters` that is
-    * not a multiple of k still runs exactly `maxIters` rounds.
+    * round: every [[CheckEvery]] rounds the kernel's scores are
+    * persisted, and the job that fills them also counts the vertices
+    * whose score differs from the previous block's (one job per block;
+    * the superseded block is released). `r_t == r_{t-k}` proves a cycle
+    * of period dividing k; detection lands on a multiple of k, and
+    * 120 − t is then also a multiple of k, so the detected block carries
+    * EXACTLY the scores of the oracle's fixed 120th round. The last
+    * block is clamped, so a `maxIters` that is not a multiple of k still
+    * runs exactly `maxIters` rounds. Returns `(id, r, outdeg)`, fenced.
     *
     * Reaching `maxIters` with no cycle detected raises
     * IllegalStateException: a graph with a longer period (or genuine
@@ -303,20 +223,14 @@ object Graph {
     * oracle.
     */
   def pageRankConverged(edges: DataFrame, maxIters: Int = 190): DataFrame =
-    Rounds.iterate(edges.toDF("src", "dst")) { (fs, e) =>
-      val w = iterWidth(e)
-      val (eFence, vertsDeg) = prFences(fs, e)
-      val r0 = fs.fence(vertsDeg.withColumn("r", lit(1000000L)), w, "id")
-      // state: (scores, last fence, cycled)
-      val ((r, _, _), out) = fs.loop((r0, r0, false), maxIters)(_._3) {
+    Rounds.scope { fs =>
+      val k = RankKernel(fs, edges.toDF("src", "dst"))
+      // state: (scores, last block, cycled)
+      val ((r, _, _), out) = fs.loop((k.init, k.init, false), maxIters)(_._3) {
         case (i, (r, prev, _)) =>
-          val next = prRound(eFence, vertsDeg, r)
+          val next = k.round(r)
           if (i % CheckEvery != 0 && i < maxIters) (next, prev, false)
-          else {
-            val obs = org.apache.spark.sql.Observation(s"prc_diff_$i")
-            val fenced = fs.fence(prcCheck(next, prev, obs), w, "id")
-            (fenced, fenced, obs.get("d").asInstanceOf[Long] == 0L)
-          }
+          else (fs.persist(next), next, k.changed(next, prev) == 0L)
       }
       if (!out.converged)
         throw new IllegalStateException(
@@ -330,58 +244,34 @@ object Graph {
       // 2026-08-13 testdata vintage moved sf0.1 detection 84 -> ~132)
       System.err.println(
         s"[graft] pageRankConverged: period-$CheckEvery cycle detected at round ${out.rounds}")
-      r.select("id", "r")
+      k.result(r)
     }
 
   /** Personalized PageRank: teleport mass returns only to the SEED set
     * (seeds start with the full unit mass, non-seeds with 0), so the
     * fixpoint measures proximity to the seeds rather than global
-    * centrality. Same integer-ppm arithmetic and per-round shape as
-    * [[pageRank]]: the seed flag rides the V-sized vertex/score rows
-    * beside outdeg.
+    * centrality. Same integer-ppm arithmetic and kernel as [[pageRank]]:
+    * the seed ids are laid out beside the CSR's sources, and an id
+    * that is not a source (or a null one) seeds nothing. Returns
+    * `(id, r, outdeg)`, fenced.
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            iters: Int = Iters): DataFrame =
-    Rounds.iterate(edges.toDF("src", "dst")) { (fs, e) =>
-      val (eFence, vertsDeg) = prFences(fs, e,
-        _.join(seeds.toDF("id").withColumn("seed", lit(true)), Seq("id"), "left")
-          .selectExpr("id", "outdeg", "coalesce(seed, false) AS seed"))
-      val r = fs.fixed(vertsDeg.selectExpr("id", "outdeg", "seed",
-          "CASE WHEN seed THEN 1000000L ELSE 0L END AS r"), iters, every = 6)(
-        prRound(eFence, vertsDeg, _, s"CASE WHEN seed THEN $BasePpm ELSE 0L END"))(
-        fs.fence(_))
-      fs.fence(r.select("id", "r"), iterWidth(e), "id")
+    Rounds.scope { fs =>
+      val k = RankKernel(fs, edges.toDF("src", "dst"), Some(seeds))
+      k.result(k.after(iters))
     }
 
   /** Weighted integer PageRank: each edge carries an integer weight and
     * a source's mass splits proportionally — contribution = (r · w) div
     * Σw(src) per edge, still exact int64 arithmetic (one floor division
-    * per edge per round).
+    * per edge per round), the per-source total held beside the CSR.
+    * Returns `(id, r, outdeg)`, fenced.
     */
   def pageRankWeighted(edges: DataFrame, iters: Int = Iters): DataFrame =
-    Rounds.iterate(edges.toDF("src", "dst", "w")) { (fs, e) =>
-      val wdt = iterWidth(e)
-      // the pageRank r17 shape, weighted flavor: the stationary fence is
-      // (src, dst, w) — the per-source weight TOTAL rides the V-sized
-      // vertex/score rows instead of being duplicated onto every edge
-      // row (guide §2.3: one bigint column off the E-sized re-scanned-
-      // per-round payload). The per-edge contribution (rs · w) div sw is
-      // unchanged arithmetic; rs and sw arrive on the score side of the
-      // join instead of sw sitting on the edge side.
-      val eFence = fs.fence(e, wdt, "src")
-      val vertsSw = fs.fence(
-        e.groupBy("src").agg(expr("cast(sum(w) AS bigint) AS sw"))
-          .selectExpr("src AS id", "sw"), wdt, "id")
-      val r = fs.fixed(vertsSw.withColumn("r", lit(1000000L)), iters, every = 6) { r =>
-        val contrib = eFence
-          .join(r.selectExpr("id AS src", "r AS rs", "sw").hint("shuffle_hash"), "src")
-          .groupBy("dst").agg(expr("cast(sum((rs * w) div sw) AS bigint) AS c"))
-        vertsSw.join(contrib.selectExpr("dst AS id", "c").hint("shuffle_hash"),
-            Seq("id"), "left")
-          .selectExpr("id", "sw",
-            s"$BasePpm + ($Damping * coalesce(c, 0L)) div 100 AS r")
-      }(fs.fence(_))
-      fs.fence(r.select("id", "r"), wdt, "id")
+    Rounds.scope { fs =>
+      val k = RankKernel(fs, edges.toDF("src", "dst", "w"))
+      k.result(k.after(iters))
     }
 
   /** Synchronous label propagation: `rounds` fixed rounds, each vertex
@@ -504,12 +394,9 @@ object Graph {
     QueryDef(
       "gr_pagerank",
       (spark, dir) => {
-        val edges = purchaseEdges(spark, dir)
-        val deg = edges.groupBy("src").agg(expr("cast(count(*) AS bigint) AS degree"))
-        pageRank(edges)
-          .join(deg.selectExpr("src AS id", "degree"), "id")
+        pageRank(purchaseEdges(spark, dir))
           .selectExpr("id", "CASE WHEN id % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind",
-            "id div 2 AS key", "degree", "r AS score_ppm")
+            "id div 2 AS key", "outdeg AS degree", "r AS score_ppm")
       },
       Some {
         val iter = (i: Int) => s"""
@@ -1038,7 +925,7 @@ object Graph {
     // cross-engine (the PageRank ppm discipline; per-round sums stay
     // under 10¹⁷ for in-degrees ≲ 10⁵ per mille-scaled step — re-range
     // before the multiply if a deployment's hubs exceed that). Scale
-    // shape: the pageRank loop machinery verbatim — the E-sized edge
+    // shape: the relational Pregel loop machinery — the E-sized edge
     // table is checkpointHashPartitioned ONCE per join side (src for
     // the authority step, dst for the hub step) and never re-shuffles;
     // each round moves only the O(V) score tables (shuffle_hash
@@ -1405,7 +1292,7 @@ object Graph {
     * Frontier-expansion BSP: per hop, ONE equi-join of the (shrinking)
     * frontier against the once-partitioned edge list plus one anti-join
     * against the known set; the edge side never re-shuffles (the
-    * pageRank discipline), every round is localCheckpoint-fenced so
+    * stationary-edge discipline), every round is localCheckpoint-fenced so
     * lineage stays O(1), and an empty frontier exits early (the fixed
     * `maxHops` keeps the output deterministic either way — hop counts
     * are exact integers, nothing to converge).
@@ -1417,7 +1304,7 @@ object Graph {
       // forgot the partitioning, so every hop re-exchanged the O(E)
       // edge table to join the frontier (profiled at sf0.1: one 9 MB
       // edge shuffle per hop). With the layout advertised only the
-      // O(frontier) side moves per hop — the pageRank discipline,
+      // O(frontier) side moves per hop — the stationary-edge discipline,
       // actually enforced.
       val e = fs.fence(edges.toDF("src", "dst"), w, "src")
       val known0 = fs.fence(seeds.toDF("id").distinct()
@@ -1456,7 +1343,7 @@ object Graph {
     // re-computes the whole subtree INCLUDING its broadcast builds —
     // profiled at sf0.1 as a 14-sequential-broadcast-job chain where
     // wall (3.1 s) ran 3× the actual task work (0.9 s). localCheckpoint
-    // is the same lineage discipline pageRank/kCore already apply:
+    // is the same lineage discipline kCore/BFS already apply:
     // deg is O(V); oriented is O(E), the price every multi-pass
     // consumer of an edge list pays once instead of per pass.
     val deg = edges.selectExpr("a AS v").unionByName(edges.selectExpr("b AS v"))

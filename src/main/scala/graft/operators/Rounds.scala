@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.graft.CheckpointOps.{checkpointHashPartitioned, fenceRdds, release, FenceSyntax}
+import org.apache.spark.storage.StorageLevel
 
 /** How a round loop ended: the rounds it ran, and whether it stopped
   * because it converged (false: it ran out of rounds).
@@ -9,27 +11,60 @@ import org.apache.spark.sql.graft.CheckpointOps.{checkpointHashPartitioned, fenc
 final case class RoundOutcome(rounds: Int, converged: Boolean)
 
 /** The fence scope of one iterative operator. Every fence the operator
-  * issues goes out through [[fence]], and the scope releases it: as
-  * soon as a later round's state no longer reads it (see [[loop]]), and
-  * at the latest when the scope exits, on success and on a throw. The
-  * fences the operator's result reads are the one exception — they live
-  * as long as the result does.
+  * issues goes out through [[fence]], and every RDD it persists through
+  * [[persist]]; the scope releases each: as soon as a later round's
+  * state no longer reads it (see [[loop]]), and at the latest when the
+  * scope exits, on success and on a throw. The fences the operator's
+  * result reads are the one exception — they live as long as the result
+  * does.
   */
 final class Rounds private () {
 
-  // fences issued and not yet released, by fence RDD id
-  private val held = scala.collection.mutable.LinkedHashMap.empty[Int, DataFrame]
+  // fences (DataFrames) and persisted RDDs not yet released, by RDD id
+  private val held = scala.collection.mutable.LinkedHashMap.empty[Int, AnyRef]
 
   private def issue(df: DataFrame): DataFrame = {
     held(fenceRdds(df).head) = df
     df
   }
 
-  /** Release every fence in `ids` that `live` does not read. */
+  /** Release every fence or persisted RDD in `ids` that `live` does not
+    * read.
+    */
   private def releaseUnread(ids: Iterable[Int], live: Any): Unit = {
-    val read = Rounds.frames(live).flatMap(fenceRdds).toSet
-    ids.filterNot(read).foreach(id => held.remove(id).foreach(release))
+    val read = reads(live)
+    ids.filterNot(read).foreach(id => held.remove(id).foreach {
+      case df: Dataset[Row @unchecked] => release(df)
+      case rdd: RDD[_] => rdd.unpersist(blocking = false)
+    })
   }
+
+  /** The ids of what `x` reads: the fences under a DataFrame's plan, and
+    * the held RDDs an RDD's lineage reaches without passing another held
+    * one (a persisted RDD is read in place of its ancestors).
+    */
+  private def reads(x: Any): Set[Int] = Rounds.members(x).flatMap {
+    case ds: Dataset[_] => fenceRdds(ds)
+    case rdd: RDD[_] =>
+      val seen = scala.collection.mutable.Set.empty[Int]
+      def walk(r: RDD[_]): Iterator[Int] =
+        if (!seen.add(r.id)) Iterator.empty
+        else if (held.contains(r.id)) Iterator(r.id)
+        else r.dependencies.iterator.flatMap(d => walk(d.rdd))
+      walk(rdd).toList
+  }.toSet
+
+  /** Unpersist every RDD persisted outside this scope's own issue whose
+    * lineage reaches what the scope holds: after a throw, nothing can
+    * read it.
+    */
+  private def releaseFailed(): Unit =
+    held.valuesIterator.map {
+      case ds: Dataset[_] => ds.sparkSession.sparkContext
+      case rdd: RDD[_] => rdd.sparkContext
+    }.nextOption().foreach(_.getPersistentRDDs.valuesIterator
+      .filter(r => !held.contains(r.id) && reads(r).nonEmpty).toList
+      .foreach(_.unpersist(blocking = false)))
 
   /** A plain lineage fence (`CheckpointOps.fence`); it advertises no
     * layout.
@@ -43,21 +78,32 @@ final class Rounds private () {
   def fence(df: DataFrame, width: Int, key: String): DataFrame =
     issue(checkpointHashPartitioned(df, width, key))
 
+  /** `rdd` persisted MEMORY_AND_DISK by the first job that reads it, and
+    * released like a fence. Unlike a fence it keeps its lineage, so a
+    * lost block is recomputed.
+    */
+  def persist[T](rdd: RDD[T]): RDD[T] = {
+    held(rdd.id) = rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    rdd
+  }
+
   /** Run `round` for rounds 1, 2, … from `init` until `done` holds for
     * the state or `maxRounds` rounds have run. A state is a DataFrame or
-    * a tuple or collection of them; other members are ignored.
+    * an RDD, or a tuple or collection of them; other members are
+    * ignored.
     *
-    * The round fences are the fences the rounds issue plus any fence
-    * that `init` holds as a member. After each round, every round fence
-    * the new state no longer reads is released: the state it was part
-    * of has been superseded by fences that have already materialized.
-    * Fences issued before the loop and only read through a lazy plan
-    * (the stationary edge tables) stay until the scope exits.
+    * The round fences are the fences and persisted RDDs the rounds
+    * issue, plus any that `init` holds as a member. After each round,
+    * every round fence the new state no longer reads is released: the
+    * state it was part of has been superseded by fences that have
+    * already materialized. Fences issued before the loop and only read
+    * through a lazy plan (the stationary edge tables) stay until the
+    * scope exits.
     */
   def loop[S](init: S, maxRounds: Int)(done: S => Boolean)(
       round: (Int, S) => S): (S, RoundOutcome) = {
-    var roundFences = Rounds.frames(init)
-      .filter(df => held.valuesIterator.exists(_ eq df)).flatMap(fenceRdds).toSet
+    val members = Rounds.members(init).toList
+    var roundFences = held.collect { case (id, v) if members.exists(_ eq v) => id }.toSet
     var s = init
     var i = 0
     while (i < maxRounds && !done(s)) {
@@ -87,7 +133,9 @@ object Rounds {
 
   /** Run `body` in a fresh fence scope. Every fence it issued is
     * released when it returns, except those its result reads; when it
-    * throws, every one is.
+    * throws, every one is, and so is every other persisted RDD whose
+    * lineage reaches them: a fence whose job failed, which Spark leaves
+    * registered as persisted.
     */
   def scope[T](body: Rounds => T): T = {
     val rs = new Rounds
@@ -96,7 +144,10 @@ object Rounds {
       val out = body(rs)
       result = Some(out)
       out
-    } finally rs.releaseUnread(rs.held.keys.toList, result)
+    } finally {
+      if (result.isEmpty) rs.releaseFailed()
+      rs.releaseUnread(rs.held.keys.toList, result)
+    }
   }
 
   /** [[scope]] for a Pregel-style loop: `input` is fenced first, under
@@ -152,11 +203,12 @@ object Rounds {
     }
   }
 
-  /** The Datasets in a loop state or result. */
-  private def frames(x: Any): Iterator[Dataset[_]] = x match {
+  /** The Datasets and RDDs in a loop state or result. */
+  private def members(x: Any): Iterator[AnyRef] = x match {
     case ds: Dataset[_] => Iterator(ds)
-    case it: Iterable[_] => it.iterator.flatMap(frames)
-    case p: Product => p.productIterator.flatMap(frames)
+    case rdd: RDD[_] => Iterator(rdd)
+    case it: Iterable[_] => it.iterator.flatMap(members)
+    case p: Product => p.productIterator.flatMap(members)
     case _ => Iterator.empty
   }
 }

@@ -266,14 +266,30 @@ class ChunkStoreSpec extends SparkSpec {
     assert(listing() == before, "an unreadable store was written to")
   }
 
-  /** Every file under `dir`, hidden ones included, with its bytes. */
-  private def tree(dir: String): Seq[(String, Seq[Byte])] = {
+  /** Every file under `dir`, hidden ones included, with the SHA-256 of
+    * its bytes.
+    */
+  private def tree(dir: String): Map[String, String] = {
     val root = java.nio.file.Paths.get(dir)
+    def sha(f: java.nio.file.Path) = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(java.nio.file.Files.readAllBytes(f)).map("%02x".format(_)).mkString
     scala.util.Using.resource(java.nio.file.Files.walk(root)) { w =>
-      w.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_)).toSeq
-        .map(f => root.relativize(f).toString -> java.nio.file.Files.readAllBytes(f).toSeq)
-        .sortBy(_._1)
+      w.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString -> sha(f)).toMap
     }
+  }
+
+  /** `after` holds the files of `before`, byte for byte: the same names,
+    * then the same SHA-256 per file; a failure names what differs.
+    */
+  private def assertSameTree(before: Map[String, String], after: Map[String, String],
+                             what: String): Unit = {
+    val (added, lost) = (after.keySet -- before.keySet, before.keySet -- after.keySet)
+    assert(added.isEmpty && lost.isEmpty,
+      s"$what: files added ${added.toSeq.sorted.mkString(", ")}; lost ${lost.toSeq.sorted.mkString(", ")}")
+    val changed = before.keys.toSeq.sorted.filter(f => before(f) != after(f))
+      .map(f => s"$f ${before(f)} -> ${after(f)}")
+    assert(changed.isEmpty, s"$what: ${changed.mkString("; ")}")
   }
 
   private def hits(store: String, q: String, embedder: Embedder = HashedTokenEmbedder) =
@@ -308,7 +324,7 @@ class ChunkStoreSpec extends SparkSpec {
       ChunkStore.reset(spark, store, ChunkStore.storeSchema)
       val before = tree(base)
       intercept[Exception](fail(store))
-      assert(tree(base) == before, "a failed build changed the reset store")
+      assertSameTree(before, tree(base), "a failed build changed the reset store")
     }
   }
 
@@ -359,7 +375,7 @@ class ChunkStoreSpec extends SparkSpec {
     for (fail <- failures) {
       val before = tree(base)
       intercept[java.io.IOException](fail())
-      assert(tree(base) == before, "a failed rename lost the prior store or left a sibling")
+      assertSameTree(before, tree(base), "a failed rename lost the prior store or left a sibling")
       ChunkStore.reset(spark, store, ChunkStore.storeSchema)
     }
   }
@@ -377,7 +393,7 @@ class ChunkStoreSpec extends SparkSpec {
     val unindexed = intercept[IllegalStateException](
       ChunkStore.addDocuments(spark, sampleChunks(), bare, Seq("source", "text")))
     assert(unindexed.getMessage.contains("_COMMIT"), unindexed.getMessage)
-    assert(tree(bare) == before, "an uncommitted store was written to")
+    assertSameTree(before, tree(bare), "an uncommitted store was written to")
     ChunkStore.reset(spark, bare, ChunkStore.storeSchema)
     assert(ChunkStore.addDocuments(spark, sampleChunks(), bare, Seq("source", "text")))
 

@@ -289,4 +289,42 @@ class GraphSpec extends SparkSpec {
     } finally spark.conf.set("spark.graft.checkpoint.reliable", "false")
   }
 
+  /** Integer PageRank written out on the driver: `iters` rounds over
+    * the weighted edge rows `(src, dst, w)` (w = 1 everywhere: the
+    * unweighted `r div outdeg`), teleport and start mass on `seeds`
+    * (every source when empty).
+    */
+  private def reference(e: Seq[(Long, Long, Long)], iters: Int,
+                        seeds: Set[Long] = Set.empty): Map[Long, Long] = {
+    val out = e.groupBy(_._1)
+    val total = out.map { case (v, es) => v -> es.map(_._3).sum }
+    def tele(v: Long) = seeds.isEmpty || seeds(v)
+    var r = out.keys.map(v => v -> (if (tele(v)) 1000000L else 0L)).toMap
+    for (_ <- 1 to iters) {
+      val c = e.groupMapReduce(_._2) { case (s, _, w) => r(s) * w / total(s) }(_ + _)
+      r = r.map { case (v, _) => v -> ((if (tele(v)) 150000L else 0L) + 85 * c.getOrElse(v, 0L) / 100) }
+    }
+    r
+  }
+
+  test("the kernel matches a driver-side reference on the sf0.001 and sf0.01 purchase graphs") {
+    import spark.implicits._
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
+      val pairs = Graph.purchaseEdges(spark, sf).collect().map(r => (r.getLong(0), r.getLong(1)))
+      val unit = pairs.map { case (a, b) => (a, b, 1L) }.toSeq
+      val weighted = pairs.map { case (a, b) => (a, b, (a + b) % 5 + 1) }.toSeq
+      val seeds = pairs.map(_._1).filter(_ % 6 == 0).distinct.toSeq
+      val edges = pairs.toSeq.toDF("src", "dst")
+      assert(ranks(Graph.pageRank(edges, 5)) == reference(unit, 5), sf)
+      assert(ranks(Graph.pageRank(edges, 13)) == reference(unit, 13), sf)
+      assert(ranks(Graph.personalizedPageRank(edges, seeds.toDF("id"), 5)) ==
+        reference(unit, 5, seeds.toSet), sf)
+      assert(ranks(Graph.pageRankWeighted(weighted.toDF("src", "dst", "w"), 5)) ==
+        reference(weighted, 5), sf)
+      // the period-2 cycle: the detected block carries round 120's scores
+      assert(ranks(Graph.pageRankConverged(edges)) == reference(unit, 120), sf)
+    }
+  }
 }

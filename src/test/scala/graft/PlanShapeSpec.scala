@@ -586,29 +586,48 @@ class PlanShapeSpec extends SparkSpec {
       s"expected exactly one user_id exchange:\n${p.take(900)}")
   }
 
-  test("pageRank: one O(V) exchange per round, edge table stationary") {
+  test("pageRank kernel: one O(V) shuffle per round, CSR stationary") {
+    import graft.operators.{Graph, RankKernel, Rounds}
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
     import spark.implicits._
     val edges = (0L until 200L).flatMap(i => Seq((i, (i + 1) % 200), ((i + 1) % 200, i)))
       .toDF("src", "dst")
-    // pageRank materializes inside its iteration-conf guard, so the
-    // RETURNED plan is a checkpoint scan — pin the plan of one round
-    // built the way the loop builds it: stationary advertised-
-    // partitioning checkpoints + shuffle_hash score joins. The ONLY
-    // exchange a round may contain is the partial-aggregated
-    // contribution shuffle (O(V) after map-side combine); the edge
-    // checkpoint must feed its join with no exchange and no sort.
-    val r = graft.operators.Graph.pageRank(edges, 1)
+    // pageRank fences its result, so the RETURNED plan is a checkpoint
+    // scan; the rounds are RDD code, pinned on their lineage instead
+    val r = Graph.pageRank(edges, 1)
     val scan = r.queryExecution.executedPlan.toString
     assert(scan.contains("Scan ExistingRDD"),
       s"expected a checkpoint-scan result plan:\n${scan.take(400)}")
-    val round = graft.operators.Graph.oneRoundPlanForSpec(edges)
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(round).length
-    assert(exchanges == 1,
-      s"expected exactly 1 exchange per round (the contribution shuffle), got $exchanges:\n$round")
-    assert(!round.contains("SortMergeJoin"),
-      s"per-round SMJ would sort the edge table every round:\n$round")
-    assert("ShuffledHashJoin".r.findAllIn(round).length == 2,
-      s"expected both round joins to be shuffled-hash against the stationary checkpoints:\n$round")
+    // the distinct shuffles a lineage reads
+    def shuffles(rdd: RDD[_]): Set[Int] = rdd.dependencies.flatMap {
+      case d: ShuffleDependency[_, _, _] => shuffles(d.rdd) + d.shuffleId
+      case d => shuffles(d.rdd)
+    }.toSet
+    Rounds.scope { fs =>
+      val k = RankKernel(fs, edges)
+      // the CSR's one shuffle ancestor is its build: the edge side never
+      // moves again
+      assert(shuffles(k.csr).size == 1, k.csr.toDebugString)
+      val r1 = k.round(k.init)
+      val r2 = k.round(r1)
+      // each round adds exactly one shuffle, the combined contributions
+      assert(shuffles(k.init) == shuffles(k.csr))
+      assert(shuffles(r1).size == 2 && shuffles(r2).size == 3 &&
+        shuffles(k.csr).subsetOf(shuffles(r1)) && shuffles(r1).subsetOf(shuffles(r2)),
+        r2.toDebugString)
+    }
+  }
+
+  test("gr_kcore round seam: the wave plans as the loop runs it, AQE off at the adaptive width") {
+    import graft.operators.Graph
+    val p = Graph.kcoreRoundPlanForSpec(Graph.partEdges(spark, sf), 3)
+    assert(!p.contains("AdaptiveSparkPlan"), s"the waves run with AQE off:\n$p")
+    // sf0.001's part graph is far below 250k edge rows per task: at
+    // width 1 the frontier's one exchange is SinglePartition, never the
+    // session's hash width
+    assert(p.contains("Exchange SinglePartition") && !p.contains("hashpartitioning("),
+      s"expected the wave's exchange at the adaptive width 1:\n$p")
   }
 
   test("q23_basket_pairs: a-priori prune is a broadcast join; pair explode never cartesian") {

@@ -105,6 +105,25 @@ class RoundsSpec extends SparkSpec {
     assert((persisted() -- before).isEmpty)
   }
 
+  test("the PageRank kernel raises on a null id or an overflow, leaving nothing persisted") {
+    import spark.implicits._
+    def causes(t: Throwable) = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toList
+    val before = persisted()
+    val nullDst = Seq((1L, Option(2L)), (2L, Option.empty[Long])).toDF("src", "dst")
+    val missing = intercept[Exception](Graph.pageRank(nullDst))
+    assert(causes(missing).exists(t => String.valueOf(t.getMessage).contains("null dst")), missing)
+    assert((persisted() -- before).isEmpty, s"left persisted: ${persisted() -- before}")
+    // w = 5e12 against Σw = 1: sources 0 and 3 each send 5e18 ppm to
+    // vertex 1, and the sum of the two overflows a long
+    val big = 5000000000000L
+    val weighted = Seq((0L, 1L, big), (0L, 2L, 1 - big), (3L, 1L, big), (3L, 2L, 1 - big),
+      (1L, 0L, 1L), (2L, 3L, 1L)).toDF("src", "dst", "w")
+    val overflow = intercept[Exception](Graph.pageRankWeighted(weighted, 1))
+    assert(causes(overflow).exists(t => t.isInstanceOf[ArithmeticException] &&
+      t.getStackTrace.exists(_.getMethodName == "addExact")), overflow)
+    assert((persisted() -- before).isEmpty, s"left persisted: ${persisted() -- before}")
+  }
+
   test("a round that throws leaves no fence persisted and restores the iteration confs") {
     val confs = IterConfs.map(spark.conf.get)
     val before = persisted()
