@@ -19,14 +19,15 @@ import org.apache.spark.sql.Column
   * `_COMMIT` token names the embedder class it was built with, and a
   * search with another embedder raises.
   *
-  * Query side: the search scores `cosine_f(embedding, embed(lit(query)))`
-  * in one scan of the committed snapshot's projection, so `embed` must
-  * be DETERMINISTIC. Built of foldable expressions (as the default
-  * is), the query vector is computed once, folded to a literal by the
-  * optimizer; an embedder that does not fold (e.g. built on
-  * higher-order functions) gets the same value recomputed per row. Its
-  * type must be `array<double>`, the store's declared embedding type
-  * ([[sources.ChunkStore.storeSchema]]).
+  * Query side: the search computes the query vector on the driver, by
+  * evaluating `embed` over the query string: the expression is
+  * resolved, optimized and bound once per (session, embedder class),
+  * so `embed` must be DETERMINISTIC and its type must be
+  * `array<double>`, the store's declared embedding type
+  * ([[sources.ChunkStore.storeSchema]]); an embedder that does not
+  * resolve, or has another type, raises naming it. The search kernel
+  * then scores the committed snapshot's vectors against it
+  * ([[sources.SearchKernel]]).
   */
 trait Embedder extends Serializable {
   /** text column → array<double> vector column. */

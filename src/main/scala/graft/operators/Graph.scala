@@ -143,9 +143,9 @@ object Graph {
     * per (session, dir) and shared: the graph queries re-derive the
     * identical orders⋈lineitem distinct — the most expensive part of
     * the cheap graph queries — and repeated bench passes multiply it.
-    * gr_pagerank_w and gr_kcore stay out: the weighted relation keeps
-    * the per-order multiplicity this distinct collapses, and kcore
-    * peels a different (part co-purchase) graph.
+    * gr_pagerank_w reads its own memo ([[weightedPurchaseEdges]]): the
+    * weighted relation keeps the per-order multiplicity this distinct
+    * collapses. gr_kcore peels a different (part co-purchase) graph.
     */
   private[graft] val purchaseEdges = new graft.SessionMemo[DataFrame]((spark, dir) => {
     val cs = Tables.orders(spark, dir).selectExpr("o_orderkey", "o_custkey")
@@ -155,6 +155,24 @@ object Graph {
       .distinct()
     cs.selectExpr("cv AS src", "sv AS dst")
       .unionByName(cs.selectExpr("sv AS src", "cv AS dst"))
+      .fenced
+  }, release)
+
+  /** The purchase graph with each customer⇄supplier edge weighted by
+    * the number of DISTINCT orders connecting the pair, walked in both
+    * directions: `(src, dst, w)`, built once per (session, dir) like
+    * [[purchaseEdges]].
+    */
+  private[graft] val weightedPurchaseEdges = new graft.SessionMemo[DataFrame]((spark, dir) => {
+    val cs = Tables.orders(spark, dir).selectExpr("o_orderkey", "o_custkey")
+      .join(Tables.lineitem(spark, dir).selectExpr("l_orderkey", "l_suppkey"),
+        expr("o_orderkey = l_orderkey"))
+      .selectExpr("o_custkey * 2 AS cv", "l_suppkey * 2 + 1 AS sv", "o_orderkey")
+      .distinct()
+      .groupBy("cv", "sv")
+      .agg(expr("cast(count(*) AS bigint) AS w"))
+    cs.selectExpr("cv AS src", "sv AS dst", "w")
+      .unionByName(cs.selectExpr("sv AS src", "cv AS dst", "w"))
       .fenced
   }, release)
 
@@ -481,20 +499,10 @@ object Graph {
     // matches gr_pagerank.
     QueryDef(
       "gr_pagerank_w",
-      (spark, dir) => {
-        val cs = Tables.orders(spark, dir).selectExpr("o_orderkey", "o_custkey")
-          .join(Tables.lineitem(spark, dir).selectExpr("l_orderkey", "l_suppkey"),
-            expr("o_orderkey = l_orderkey"))
-          .selectExpr("o_custkey * 2 AS cv", "l_suppkey * 2 + 1 AS sv", "o_orderkey")
-          .distinct()
-          .groupBy("cv", "sv")
-          .agg(expr("cast(count(*) AS bigint) AS w"))
-        val edges = cs.selectExpr("cv AS src", "sv AS dst", "w")
-          .unionByName(cs.selectExpr("sv AS src", "cv AS dst", "w"))
-        pageRankWeighted(edges)
+      (spark, dir) =>
+        pageRankWeighted(weightedPurchaseEdges(spark, dir))
           .selectExpr("id", "CASE WHEN id % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind",
-            "id div 2 AS key", "r AS score_ppm")
-      },
+            "id div 2 AS key", "r AS score_ppm"),
       Some {
         val iter = (i: Int) => s"""
         r$i AS (

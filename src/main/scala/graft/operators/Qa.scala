@@ -163,21 +163,20 @@ object Qa {
       .getOrElse("抱歉，没有检索到相关资料。")
 
   /** Q4 — the reference's whole query lifecycle over a graft vector
-    * store: kNN retrieval (one scan of the committed snapshot, one job:
-    * folded query vector + TakeOrdered, after the store's `_COMMIT`
-    * token is read and its embedder checked, see
-    * [[graft.sources.ChunkStore.similaritySearch]]), Q1 context, Q2
-    * prompt, Q3 answer (stub by default, any generator pluggable),
-    * assembled response.
+    * store: kNN retrieval (after the store's `_COMMIT` token is read and
+    * its embedder checked, one job of the search kernel over the
+    * committed snapshot, see [[graft.sources.ChunkStore.search]]), Q1
+    * context, Q2 prompt, Q3 answer (stub by default, any generator
+    * pluggable), assembled response.
     */
   def answerWithSources(spark: org.apache.spark.sql.SparkSession, storePath: String,
                         query: String, topK: Int = 5,
                         generate: Option[String => String] = None): Response = {
-    val rows = graft.sources.ChunkStore.similaritySearch(spark, storePath, query, topK).collect()
+    val rows = graft.sources.ChunkStore.search(spark, storePath, query, topK)
     val sources = rows.map { r =>
       Source(r.getAs[String]("text"), r.getAs[Map[String, String]]("metadata"),
         r.getAs[Double]("similarity"))
-    }.toSeq
+    }
     val prompt = buildPrompt(formatContext(sources), query)
     val ans = generate match {
       case Some(g) => answer(g)(prompt)

@@ -54,18 +54,6 @@ final class Rounds private () {
       walk(rdd).toList
   }.toSet
 
-  /** Unpersist every RDD persisted outside this scope's own issue whose
-    * lineage reaches what the scope holds: after a throw, nothing can
-    * read it.
-    */
-  private def releaseFailed(): Unit =
-    held.valuesIterator.map {
-      case ds: Dataset[_] => ds.sparkSession.sparkContext
-      case rdd: RDD[_] => rdd.sparkContext
-    }.nextOption().foreach(_.getPersistentRDDs.valuesIterator
-      .filter(r => !held.contains(r.id) && reads(r).nonEmpty).toList
-      .foreach(_.unpersist(blocking = false)))
-
   /** A plain lineage fence (`CheckpointOps.fence`); it advertises no
     * layout.
     */
@@ -133,9 +121,8 @@ object Rounds {
 
   /** Run `body` in a fresh fence scope. Every fence it issued is
     * released when it returns, except those its result reads; when it
-    * throws, every one is, and so is every other persisted RDD whose
-    * lineage reaches them: a fence whose job failed, which Spark leaves
-    * registered as persisted.
+    * throws, every one is (a fence whose own job failed has already
+    * released itself, see `CheckpointOps.fence`).
     */
   def scope[T](body: Rounds => T): T = {
     val rs = new Rounds
@@ -144,10 +131,7 @@ object Rounds {
       val out = body(rs)
       result = Some(out)
       out
-    } finally {
-      if (result.isEmpty) rs.releaseFailed()
-      rs.releaseUnread(rs.held.keys.toList, result)
-    }
+    } finally rs.releaseUnread(rs.held.keys.toList, result)
   }
 
   /** [[scope]] for a Pregel-style loop: `input` is fenced first, under

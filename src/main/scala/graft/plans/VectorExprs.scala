@@ -97,18 +97,11 @@ case class CosineSim(left: Expression, right: Expression) extends VectorFoldExpr
   override def prettyName: String = "cosine_f"
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var xy = 0.0; var xx = 0.0; var yy = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = elemGetEval(x, i, left.dataType)
-      val yv = elemGetEval(y, i, right.dataType)
-      xy += xv * yv; xx += xv * xv; yy += yv * yv
-      i += 1
-    }
-    xy / (math.sqrt(xx) * math.sqrt(yy))
+    def doubles(arr: ArrayData, t: DataType) =
+      Array.tabulate(arr.numElements())(elemGetEval(arr, _, t))
+    val x = doubles(a.asInstanceOf[ArrayData], left.dataType)
+    val y = doubles(b.asInstanceOf[ArrayData], right.dataType)
+    CosineSim.fold(x, 0, y, 0, math.min(x.length, y.length))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -134,6 +127,26 @@ case class CosineSim(left: Expression, right: Expression) extends VectorFoldExpr
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object CosineSim {
+  /** The cosine of `x(xOff until xOff + n)` and `y(yOff until yOff + n)`:
+    * dot and both squared norms accumulated left to right in double,
+    * then `xy / (sqrt(xx) * sqrt(yy))`. The interpreted [[CosineSim]]
+    * and the vector store's search kernel both call it; the generated
+    * code writes the same loop.
+    */
+  def fold(x: Array[Double], xOff: Int, y: Array[Double], yOff: Int, n: Int): Double = {
+    var xy = 0.0; var xx = 0.0; var yy = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = x(xOff + i)
+      val yv = y(yOff + i)
+      xy += xv * yv; xx += xv * xv; yy += yv * yv
+      i += 1
+    }
+    xy / (math.sqrt(xx) * math.sqrt(yy))
+  }
 }
 
 /** argmax_cos(q, cands) — 0-based index of the candidate vector (in an

@@ -3,10 +3,12 @@ package graft.sources
 import graft.{Fns, QueryDef, SessionMemo, Tables}
 import graft.operators.Chunker
 import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointOps
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Sources & sinks (SURVEY.md §2.1 S1–S8) — the reference's interchange
   * surface, with its quirk ledger preserved:
@@ -116,18 +118,28 @@ object ChunkStore {
     }
   }
 
-  /** Per (session, store path): the committed version answers are
-    * served from, as its version id and its rows pinned in executor
-    * blocks ([[CheckpointOps.pin]]). [[similaritySearch]] swaps in a
-    * new snapshot when the token names a new version; the superseded
-    * one's blocks are released.
+  /** A committed store version as searches read it: its version id and
+    * its rows as one [[SearchKernel.Part]] per store partition.
     */
-  private val snapshots = new SessionMemo[(String, DataFrame)](
-    (spark, storePath) => {
-      val version = readCommit(spark, storePath).map(_.version).orNull
-      (version, CheckpointOps.pin(readStore(spark, storePath)))
-    },
-    held => CheckpointOps.release(held._2))
+  private final case class Snapshot(version: String, parts: RDD[SearchKernel.Part])
+
+  /** Per (session, store path): the committed version answers are
+    * served from. Its parts are persisted MEMORY_AND_DISK, filled by the
+    * first search's own job and recomputable from the committed files.
+    * [[search]] swaps in a new snapshot when the token names a new
+    * version; the superseded one's blocks are released.
+    */
+  private val snapshots = new SessionMemo[Snapshot](
+    (spark, storePath) => Snapshot(readCommit(spark, storePath).map(_.version).orNull,
+      SearchKernel.parts(readStore(spark, storePath))),
+    _.parts.unpersist(blocking = false))
+
+  /** Per (session, embedder class name): the embedder's query-side
+    * expression, bound once. The class name is the embedder's identity
+    * in `_COMMIT` too.
+    */
+  private val queryEmbedders = new SessionMemo[SearchKernel.QueryEmbedder](
+    (spark, name) => new SearchKernel.QueryEmbedder(spark, name), _ => ())
 
   /** S1/S2 — PDF directory scan (reference
     * `src/pdf_extractor.py:246-265`): list a directory, keep files whose
@@ -238,40 +250,48 @@ object ChunkStore {
   }
 
   /** V3/V4 — top-k cosine similarity search over a vector store written
-    * by [[addDocuments]]: embed the query text with the SAME function
-    * the store used, score every row with the native codegen'd cosine,
-    * TakeOrderedAndProject the top-k — one scan of the committed
-    * snapshot.
+    * by [[addDocuments]]: embed the query text with the SAME embedder
+    * the store used, score every row of the committed snapshot with the
+    * cosine fold, keep the top k — best first, as rows of
+    * [[SearchKernel.Result]].
     *
     * It first reads the store's `_COMMIT` token and raises if there is
     * none (no committed store at `storePath`) or if it names another
     * embedder than `embedder`. When the token names a version other than
     * the snapshot held for this (session, path), the new version's rows
-    * are pinned (materialized inside this search's own job) and the old
-    * snapshot's blocks are released. The query embedding is an
-    * expression over a literal, so the optimizer folds it to one
-    * literal vector: the plan is TakeOrderedAndProject ← Project ←
-    * Scan ExistingRDD, one job, no file listing, no parquet decode, no
-    * join and no exchange. A search racing a commit may fail; it never
-    * mixes rows of two versions. Output shape = the reference's search
-    * result (`src/vector_store.py:167-175`): text, all-string metadata,
+    * are read into the snapshot (inside this search's own job) and the
+    * old snapshot's blocks are released. The query vector is computed
+    * on the driver by the embedder's bound expression; then one job over
+    * the snapshot's parts ([[SearchKernel.top]]) scores and ranks, with
+    * no query plan, no file listing, no parquet decode and no shuffle. A
+    * search racing a commit may fail; it never mixes rows of two
+    * versions. Output shape = the reference's search result
+    * (`src/vector_store.py:167-175`): text, all-string metadata,
     * similarity ∈ [-1, 1] (may be negative).
     */
-  def similaritySearch(spark: SparkSession, storePath: String, query: String,
-                       topK: Int = 5,
-                       embedder: graft.Embedder = graft.HashedTokenEmbedder): DataFrame = {
+  def search(spark: SparkSession, storePath: String, query: String, topK: Int = 5,
+             embedder: graft.Embedder = graft.HashedTokenEmbedder): Seq[Row] = {
     val token = readCommit(spark, storePath).getOrElse(
       throw new IllegalStateException(s"no committed store at $storePath: its _COMMIT token is missing"))
     val used = embedderName(embedder)
     require(token.embedder == used,
       s"the store at $storePath was embedded by ${token.embedder}, the query by $used")
-    if (snapshots(spark, storePath)._1 != token.version) snapshots.reset(spark, storePath)
-    snapshots(spark, storePath)._2
-      .select(col("id"), col("text"), col("metadata"),
-        call_function("cosine_f", col("embedding"), embedder.embed(lit(query))).as("similarity"))
-      .orderBy(desc("similarity"), col("id"))
-      .limit(topK)
+    val held = snapshots(spark, storePath)
+    val snapshot = if (held.version == token.version) held else {
+      snapshots.reset(spark, storePath)
+      snapshots(spark, storePath)
+    }
+    SearchKernel.top(snapshot.parts, queryEmbedders(spark, used)(embedder, query), topK)
   }
+
+  /** [[search]]'s hits as a local DataFrame (`id`, `text`, `metadata`,
+    * `similarity`): the search runs when this is called.
+    */
+  def similaritySearch(spark: SparkSession, storePath: String, query: String,
+                       topK: Int = 5,
+                       embedder: graft.Embedder = graft.HashedTokenEmbedder): DataFrame =
+    spark.createDataFrame(search(spark, storePath, query, topK, embedder).asJava,
+      SearchKernel.Result)
 
   /** Positional `chunk_{i}` ids without a global single-partition sort:
     * sort within partitions after a range-partitioned repartitionByRange

@@ -107,11 +107,19 @@ object CheckpointOps {
     * its `Observation` promise uncompleted — `obs.get` then blocks
     * forever. Spark's `ExecutionListenerBus` converts the
     * execution-end event into `onSuccess(name, qe, ..)` only when the
-    * execution carries a name, hence `Some(name)`.
+    * execution carries a name, hence `Some(name)`. When the job fails,
+    * `rdd` is unpersisted before the error propagates: Spark keeps a
+    * failed job's persisted RDD registered, and no caller holds it to
+    * release it.
     */
   private def materializeAsAction(qe: QueryExecution, name: String,
                                   rdd: RDD[InternalRow]): Unit =
-    SQLExecution.withNewExecutionId(qe, Some(name)) { rdd.count(); () }
+    try SQLExecution.withNewExecutionId(qe, Some(name)) { rdd.count(); () }
+    catch {
+      case e: Throwable =>
+        rdd.unpersist(blocking = false)
+        throw e
+    }
 
   /** The conf-gated lineage fence every iterative operator uses:
     * `localCheckpoint(eager)` by default; under
@@ -120,28 +128,36 @@ object CheckpointOps {
     * checkpoint to reliable files (recovery path) — NOT plain
     * `Dataset.checkpoint`, whose healthy-path reads would re-read the
     * checkpoint files from the object store on every downstream use.
-    * Both flavors advertise `UnknownPartitioning` (use
-    * [[checkpointHashPartitioned]] when a downstream join/agg must
-    * reuse the layout) and both are releasable via [[release]].
+    * The reliable flavor advertises `UnknownPartitioning`, the local
+    * one what `localCheckpoint` would (use [[checkpointHashPartitioned]]
+    * when a downstream join/agg must reuse the layout); both are
+    * releasable via [[release]], and a fence whose job fails leaves
+    * nothing persisted.
     * [[fenceLevelOverride]] applies to both flavors.
     */
-  def fence[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] =
-    if (reliableMode(ds.sparkSession)) {
-      ensureCheckpointDir(ds.sparkSession)
-      val cds = ds.asInstanceOf[Dataset[T]]
-      val spark = cds.sparkSession
-      val qe = cds.queryExecution
-      val rdd: RDD[InternalRow] = qe.toRdd.map(_.copy())
+  def fence[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] = {
+    val cds = ds.asInstanceOf[Dataset[T]]
+    val spark = cds.sparkSession
+    val reliable = reliableMode(spark)
+    if (reliable) ensureCheckpointDir(spark)
+    val qe = cds.queryExecution
+    val rdd: RDD[InternalRow] = qe.toRdd.map(_.copy())
+    val plan = if (reliable) {
       rdd.persist(fenceLevelOverride(spark)
         .getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       rdd.checkpoint()
       materializeAsAction(qe, "fence", rdd)
-      Dataset.ofRows(spark, LogicalRDD(qe.analyzed.output, rdd)(spark))
-        .as[T](cds.encoder)
-    } else fenceLevelOverride(ds.sparkSession) match {
-      case Some(lvl) => ds.localCheckpoint(eager = true, storageLevel = lvl)
-      case None => ds.localCheckpoint(eager = true)
+      LogicalRDD(qe.analyzed.output, rdd)(spark)
+    } else {
+      // what Dataset.localCheckpoint(eager = true) does, with the RDD
+      // in hand to release when its job fails
+      fenceLevelOverride(spark).foreach(rdd.persist(_))
+      rdd.localCheckpoint()
+      materializeAsAction(qe, "localCheckpoint", rdd)
+      LogicalRDD.fromDataset(rdd, cds, cds.isStreaming)
     }
+    Dataset.ofRows(spark, plan).as[T](cds.encoder)
+  }
 
   /** Postfix syntax for [[fence]]: `df.fenced` reads like the
     * `df.localCheckpoint(true)` it replaces at 60+ call sites.
@@ -152,8 +168,9 @@ object CheckpointOps {
   }
 
   /** `df`'s rows behind a `LogicalRDD`, persisted MEMORY_AND_DISK by
-    * the first job that reads them: a pin for data that never changes,
-    * such as a committed store version. Unlike `Dataset.persist` it
+    * the first job that reads them: a pin for rows read more than once
+    * that must not change between reads, such as the sorted chunks
+    * positional ids are numbered from. Unlike `Dataset.persist` it
     * enters no CacheManager, so other readers of `df`'s files are never
     * served these blocks; unlike a fence, a lost block is recomputed
     * from `df`'s plan. Free it with [[release]].
@@ -213,7 +230,7 @@ object CheckpointOps {
     * [[checkpointHashPartitioned]] or `localCheckpoint` — for the
     * INTERMEDIATE tables of an iterative operator (superseded fences,
     * the edge layout once the result is materialized) — or the blocks
-    * of a superseded [[pin]]. Without this,
+    * of a [[pin]] after its last read. Without this,
     * every invocation leaks its checkpoint blocks into the block
     * manager for the session's lifetime: repeated bench passes over
     * the graph lane accumulated gigabytes of dead fence/edge blocks,

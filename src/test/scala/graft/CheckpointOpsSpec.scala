@@ -261,6 +261,21 @@ class CheckpointOpsSpec extends SparkSpec {
     release(f)
   }
 
+  test("a fence whose job fails leaves getPersistentRDDs unchanged, in both modes") {
+    import org.apache.spark.sql.graft.CheckpointOps.FenceSyntax
+    val failing = spark.range(8).select(
+      when(col("id") === 5, raise_error(lit("row 5"))).otherwise(col("id")).as("id"))
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted()
+    intercept[Exception](failing.fenced)
+    assert(persisted() == before, s"local fence left ${persisted() -- before}")
+    withReliable { _ =>
+      intercept[Exception](failing.fenced)
+      intercept[Exception](checkpointHashPartitioned(failing, 4, "id"))
+    }
+    assert(persisted() == before, s"reliable fences left ${persisted() -- before}")
+  }
+
   test("unknown key is rejected") {
     import spark.implicits._
     val df = Seq((1L, 2L)).toDF("k", "v")

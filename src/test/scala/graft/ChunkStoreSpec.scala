@@ -188,13 +188,14 @@ class ChunkStoreSpec extends SparkSpec {
     assert(ctx.contains("[来源1: 文档《b.pdf》第1页第1段]")) // delta is b.pdf page 1
   }
 
-  /** The search as formulated before the query vector was folded into
-    * the scan: a one-row query relation, broadcast and cross-joined.
-    * Kept here only as the reference the folded plan must match.
+  /** The search as a SQL plan: a one-row query relation, broadcast and
+    * cross-joined with the store's files, ordered by similarity then id.
+    * Kept here only as the reference the search kernel must match.
     */
-  private def crossJoinSearch(store: String, query: String, topK: Int) = {
+  private def crossJoinSearch(store: String, query: String, topK: Int,
+                              embedder: Embedder = HashedTokenEmbedder) = {
     import org.apache.spark.sql.functions._
-    val q = spark.range(1).select(HashedTokenEmbedder.embed(lit(query)).as("q_emb"))
+    val q = spark.range(1).select(embedder.embed(lit(query)).as("q_emb"))
     spark.read.parquet(store).crossJoin(broadcast(q))
       .selectExpr("id", "text", "metadata", "cosine_f(embedding, q_emb) AS similarity")
       .orderBy(desc("similarity"), col("id"))
@@ -204,8 +205,8 @@ class ChunkStoreSpec extends SparkSpec {
   test("V3/V4: similaritySearch(...).collect() runs exactly one Spark job") {
     val store = tmp() + "/store"
     ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "page_number", "text"))
-    val df = ChunkStore.similaritySearch(spark, store, "beta chunk text", topK = 3)
-    assert(jobsRunBy(df.collect(): Unit) == 1)
+    assert(jobsRunBy(ChunkStore.similaritySearch(spark, store, "beta chunk text", topK = 3)
+      .collect(): Unit) == 1)
   }
 
   test("V3/V4: folded-query search is bit-identical to the broadcast cross-join search") {
@@ -231,6 +232,99 @@ class ChunkStoreSpec extends SparkSpec {
       assert(got.nonEmpty)
       assert(got == rows(crossJoinSearch(store, q, k)), s"question '$q', top-$k")
     }
+  }
+
+  /** A search's rows with the similarity's raw bits. */
+  private def bits(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map { r =>
+    (r.getAs[String]("id"), r.getAs[String]("text"), r.getAs[Map[String, String]]("metadata"),
+      Option(r.getAs[java.lang.Double]("similarity")).map(d => java.lang.Double.doubleToRawLongBits(d)))
+  }
+
+  test("V3/V4: the search kernel is bit-identical to the cross-join search across partitions, " +
+    "ties, null and NaN similarities, k beyond the rows, and an empty store") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // no vector for one stored text and for one question, a zero vector
+    // (whose cosine is NaN, which ranks first) for another; the default
+    // space otherwise
+    object NullingEmbedder extends Embedder {
+      override val dim: Int = 64
+      override def embed(text: Column): Column =
+        when(text.isin("gamma chunk text", "no vector"), lit(null).cast("array<double>"))
+          .when(text === "zero vector", array_repeat(lit(0.0), dim))
+          .otherwise(HashedTokenEmbedder.embed(text))
+    }
+    val words = Seq("alpha", "beta", "gamma", "delta", "chunk", "text", "store", "query")
+    val extra = (0 until 30).map { i =>
+      (Seq(words(i % 8), words((i * 3 + 1) % 8)).mkString(" "), s"c${i % 5}.pdf", i % 7, 1, 7,
+        None: Option[Int])
+    } ++ Seq(
+      // exact ties: the same text, so the same vector, under three ids
+      ("beta chunk text", "t1.pdf", 1, 1, 1, None), ("beta chunk text", "t2.pdf", 1, 1, 1, None),
+      ("beta chunk text", "t3.pdf", 1, 1, 1, None),
+      ("zero vector", "z.pdf", 1, 1, 1, None))
+    val chunks = sampleChunks().unionByName(extra.toDF("text", "source", "page_number",
+      "paragraph_number", "total_pages", "chunk_number"))
+    val store = tmp() + "/store"
+    // one store file per range partition
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try ChunkStore.addDocuments(spark, chunks, store, Seq("source", "page_number", "text"),
+      embedder = NullingEmbedder)
+    finally spark.conf.set(coalesce, was)
+    val files = new java.io.File(store).list().count(f => f.startsWith("part-") && f.endsWith(".parquet"))
+    assert(files >= 3, s"$files store files")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val questions = Seq("beta chunk text", "alpha chunk text", "no vector", "zero vector",
+      "delta query", "gamma chunk text")
+    for (q <- questions; k <- Seq(0, 1, 3, 5, 100)) {
+      val got = bits(ChunkStore.similaritySearch(spark, store, q, topK = k, embedder = NullingEmbedder))
+      assert(got.size == math.min(k, 4 + extra.size), s"question '$q', top-$k")
+      assert(got == bits(crossJoinSearch(store, q, k, NullingEmbedder)), s"question '$q', top-$k")
+      // with a query vector and a non-zero one, the zero row's NaN leads
+      if (k > 0 && !Set("no vector", "gamma chunk text", "zero vector")(q))
+        assert(got.head._2 == "zero vector", s"NaN does not rank first for '$q'")
+    }
+    val snapshot = sc.getPersistentRDDs.keySet -- before
+    assert(snapshot.size == 1 && sc.getPersistentRDDs(snapshot.head).getNumPartitions >= 3,
+      snapshot.map(sc.getPersistentRDDs(_).getNumPartitions))
+    ChunkStore.reset(spark, store, ChunkStore.storeSchema)
+    for (k <- Seq(1, 5)) {
+      val got = bits(ChunkStore.similaritySearch(spark, store, "beta", topK = k, embedder = NullingEmbedder))
+      assert(got.isEmpty && got == bits(crossJoinSearch(store, "beta", k, NullingEmbedder)))
+    }
+  }
+
+  test("V3: a query embedder that does not resolve, or is not array<double>, raises naming it") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    // builds the store in the default space, then turns
+    object TurningEmbedder extends Embedder {
+      @volatile var mode = "double"
+      override val dim: Int = 64
+      override def embed(text: Column): Column = mode match {
+        case "double" => HashedTokenEmbedder.embed(text)
+        case "float" => array(length(text).cast("float"))
+        case _ => col("no_such_column")
+      }
+    }
+    val store = tmp() + "/store"
+    ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text"),
+      embedder = TurningEmbedder)
+    val name = TurningEmbedder.getClass.getName.stripSuffix("$")
+    TurningEmbedder.mode = "float"
+    val float = intercept[IllegalArgumentException](hits(store, "alpha", TurningEmbedder))
+    assert(float.getMessage.contains(name) && float.getMessage.contains("array<float>"), float.getMessage)
+    TurningEmbedder.mode = "unresolved"
+    val unresolved = intercept[IllegalArgumentException](hits(store, "alpha", TurningEmbedder))
+    assert(unresolved.getMessage.contains(name) && unresolved.getMessage.contains("no_such_column"),
+      unresolved.getMessage)
+    TurningEmbedder.mode = "double"
+    assert(hits(store, "alpha", TurningEmbedder) == Set("alpha chunk text", "beta chunk text",
+      "gamma chunk text", "delta chunk text"))
   }
 
   test("V3/V4: searching a missing store path throws, not an empty answer") {

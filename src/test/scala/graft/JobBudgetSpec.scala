@@ -3,7 +3,8 @@ package graft
 /** The Spark jobs a warm run of each budgeted query starts, held under a
   * committed ceiling: a job-count regression fails here instead of
   * hiding in timing noise. The queries are the perfbench catalog mix and
-  * the PageRank family, at sf0.001 on the shared test session; each runs
+  * the PageRank family, at sf0.001 on the shared test session, plus a
+  * warm `Qa.answerWithSources`; each query runs
   * once to warm up (memos, schemas), then once counted, both through a
   * noop write as the benchmark runs them, with its result memo reset
   * before each run. A change that cuts a query's jobs lowers its
@@ -21,7 +22,7 @@ class JobBudgetSpec extends SparkSpec {
     "v3_knn_topk" -> 2,
     "tp_bpe_train" -> 3,
     "gr_pagerank" -> 2,
-    "gr_pagerank_w" -> 5,
+    "gr_pagerank_w" -> 2,
     "gr_ppr_segment" -> 2,
     "gr_pagerank_conv" -> 15)
 
@@ -38,5 +39,16 @@ class JobBudgetSpec extends SparkSpec {
     // the PageRank kernel releases its CSR and block states
     val kernel = spark.sparkContext.getRDDStorageInfo.filter(_.callSite.contains("RankKernel"))
     assert(kernel.isEmpty, kernel.mkString("; "))
+  }
+
+  test("Qa.answerWithSources runs at most 1 job warm") {
+    import spark.implicits._
+    val store = SparkSpec.tmpDir("graft_store").toString + "/store"
+    sources.ChunkStore.addDocuments(spark,
+      Seq(("alpha chunk text", "a.pdf"), ("beta chunk text", "b.pdf")).toDF("text", "source"),
+      store, Seq("source", "text"))
+    operators.Qa.answerWithSources(spark, store, "alpha")
+    val jobs = jobsRunBy(operators.Qa.answerWithSources(spark, store, "beta chunk"): Unit)
+    assert(jobs <= 1, s"answerWithSources ran $jobs jobs; its ceiling is 1")
   }
 }

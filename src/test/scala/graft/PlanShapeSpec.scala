@@ -38,25 +38,39 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("cosine_f"))
   }
 
-  test("similaritySearch: one scan, no join or exchange; the query vector is a literal") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
+  test("similaritySearch: one single-stage job, no shuffle, no SQL, snapshot only") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
+    val sc = spark.sparkContext
     val store = SparkSpec.tmpDir("graft_store").toString + "/store"
     val chunks = Seq(("alpha chunk text", "a.pdf"), ("beta chunk text", "b.pdf"))
       .toDF("text", "source")
     graft.sources.ChunkStore.addDocuments(spark, chunks, store, Seq("source", "text"))
-    val qe = graft.sources.ChunkStore.similaritySearch(spark, store, "alpha", topK = 5)
-      .queryExecution
-    val opt = qe.optimizedPlan
-    assert(opt.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty)
-    val queryVectors = opt.flatMap(_.expressions.flatMap(_.collect {
-      case graft.plans.CosineSim(_, q) => q
-    }))
-    assert(queryVectors.nonEmpty)
-    assert(queryVectors.forall(_.isInstanceOf[Literal]), s"query vector not folded: $queryVectors")
-    val p = qe.executedPlan.toString
-    assert(p.contains("TakeOrderedAndProject"))
-    assert(!p.contains("Join") && !p.contains("Exchange"), p) // no BroadcastExchange either
+    val before = sc.getPersistentRDDs.keySet
+    graft.sources.ChunkStore.similaritySearch(spark, store, "alpha", topK = 5)
+    val snapshot = sc.getPersistentRDDs.keySet -- before
+    assert(snapshot.size == 1, s"the first search persisted $snapshot")
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { starts.add(e); () }
+    }
+    val jobs = jobsRunBy {
+      sc.addSparkListener(l)
+      try graft.sources.ChunkStore.similaritySearch(spark, store, "beta", topK = 5).collect()
+      finally sc.removeSparkListener(l)
+    }
+    assert(jobs == 1 && starts.size == 1, s"$jobs jobs")
+    val job = starts.peek
+    assert(job.properties.getProperty("spark.sql.execution.id") == null,
+      "the search job runs inside a SQL execution")
+    val stage = job.stageInfos match {
+      case Seq(one) => one
+      case more => fail(s"${more.size} stages")
+    }
+    // no shuffle dependency: one stage, and no shuffled RDD in its lineage
+    assert(!stage.rddInfos.exists(_.name.startsWith("Shuffled")), stage.rddInfos.map(_.name))
+    val persisted = stage.rddInfos.filter(_.storageLevel.isValid).map(_.id).toSet
+    assert(persisted == snapshot, s"persisted ancestors $persisted; the snapshot is $snapshot")
   }
 
   test("q1_agg: partial aggregation before the exchange (map-side combine)") {

@@ -86,7 +86,8 @@ class SeamGuardSpec extends AnyFunSuite {
 
   test("answers never re-read the store: readStore is not called from similaritySearch or Qa") {
     val store = root.resolve("graft/sources/ChunkStore.scala")
-    assert(!hits(store, "readStore(").map(_._2).contains("similaritySearch"))
+    val owners = hits(store, "readStore(").map(_._2)
+    assert(!owners.contains("similaritySearch") && !owners.contains("search"), owners)
     assert(!filesWith("readStore(").contains("Qa.scala"))
   }
 }
