@@ -522,10 +522,10 @@ object Curation {
     // distinct benchmark shingle set BROADCASTS and the corpus-side
     // plan is scan → explode → broadcast hash join → partial-aggregated
     // groupBy(doc_id) — the corpus shuffles only (doc_id, count)
-    // partials, never the shingle sets. Shingles reuse the SAME persisted
-    // `shingleHashes` fold as the dedup family (CacheManager shares the
-    // entry), and the df-cap problem doesn't arise: the join is against
-    // the benchmark set, not a postings self-join.
+    // partials, never the shingle sets. Shingles reuse the SAME pinned
+    // `shingleHashes` fold as the dedup family (one session memo), and
+    // the df-cap problem doesn't arise: the join is against the
+    // benchmark set, not a postings self-join.
     QueryDef(
       "tp_contamination",
       (spark, dir) => {
@@ -1088,7 +1088,7 @@ object Curation {
     // ids are sparse or shifted, not a density assumption. Accidental
     // positives are removed by an anti-join against the near-dup edge
     // set (both orientations) and self-draws dropped. Scale shape:
-    // positives reuse the persisted pair set; the rank table comes
+    // positives reuse the pinned pair set; the rank table comes
     // from [[rankedDocIds]] (bucketed two-phase ranking, no global
     // window), and the draw resolves by broadcasting the (tiny,
     // near-dup-bounded) draw set against it — nothing corpus².

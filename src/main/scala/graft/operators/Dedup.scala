@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.graft.CheckpointOps.FenceSyntax
-import graft.{Fns, QueryDef, Tables}
+import org.apache.spark.sql.graft.CheckpointOps.{pin, release, FenceSyntax}
+import graft.{Fns, QueryDef, SessionMemo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Deduplication suite — the training-data-pipeline extension family:
   * exact dedup, MinHash+LSH, SimHash, n-gram Jaccard verification, and
@@ -94,9 +93,17 @@ object Dedup {
     * Shingling runs through the native `word_shingles` kernel
     * (graft.plans.TextHash) — one codegen'd static call per document
     * instead of an interpreted md5 lambda per shingle.
+    *
+    * The fold feeds at least two DAG branches in every consumer (band
+    * join + Jaccard verify) and a dozen queries read it, so it is
+    * pinned once per (session, dir), filled when built, and shared: the
+    * pin is also the barrier that keeps projection collapse from
+    * re-inlining the fold into every consumer, and its measured size
+    * lets joins broadcast it when small. Its blocks live until the
+    * memo's `reset`.
     */
-  private[operators] def shingleHashes(spark: SparkSession, dir: String): DataFrame = {
-    Tables.documents(spark, dir)
+  private[graft] val shingleHashes = new SessionMemo[DataFrame]((spark, dir) =>
+    pin(Tables.documents(spark, dir)
       .select("doc_id", "lang", "text")
       // single-file tables scan as ONE task; fan out before the hash
       // folds so they use every core (at real scale row-group splits
@@ -105,19 +112,9 @@ object Dedup {
       .selectExpr("doc_id", "lang",
         s"${Fns.cleanTextSql("text")} AS tc")
       .selectExpr("doc_id", "lang", "split(tc, ' ') AS toks")
-      .selectExpr("doc_id", "lang", "size(toks) AS n_toks", "word_shingles(toks, 4) AS hs")
-      // second barrier: materialize hs so projection collapse cannot
-      // re-inline the shingle fold into every downstream consumer
-      .repartition(Par, col("doc_id"))
-      // the shingle fold feeds at least two DAG branches in every
-      // consumer (band join + Jaccard verify); a repartition fences
-      // projection collapse but does NOT stop Spark recomputing the
-      // fold per branch — persist so it runs once. CacheManager keys
-      // on the canonicalized plan, so every query over the same dir
-      // shares one entry; MEMORY_AND_DISK spills instead of OOMing at
-      // real scale.
-      .persist(StorageLevel.MEMORY_AND_DISK)
-  }
+      .selectExpr("doc_id", "lang", "size(toks) AS n_toks", "word_shingles(toks, 4) AS hs"),
+      fill = true),
+    release)
 
   private[graft] val shingleHashesSql: String =
     s"""SELECT doc_id, lang, len(toks) AS n_toks,
@@ -154,15 +151,17 @@ object Dedup {
     * dd_edit_distance, and the curation queries: shingle hashes → 16
     * native minhashes → 4 bands × 4 rows → bucket self-join on
     * (band, key) only → distinct candidates → exact Jaccard ≥ 0.5.
+    *
+    * A dozen consumers (dd_minhash_lsh, dd_edit_distance, dd_cluster,
+    * the tp_curate family) read this tiny verified-pair set, so the
+    * RESULT is pinned once per (session, dir), filled when built, and
+    * shared: the band join and the verify run once, and its measured
+    * size lets joins broadcast it. Its blocks live until the memo's
+    * `reset`.
     */
-  def minhashPairs(spark: SparkSession, dir: String): DataFrame =
-    // four consumers (dd_minhash_lsh, dd_edit_distance, dd_cluster, the
-    // tp_curate pair) re-derive this tiny verified-pair set; persisting
-    // the RESULT (not just the folds feeding it) makes the band join +
-    // verify run once per dir — CacheManager shares the entry across
-    // queries because the canonicalized plan is identical
-    verifyJaccard(minhashCandidates(spark, dir), shingleHashes(spark, dir))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  val minhashPairs = new SessionMemo[DataFrame]((spark, dir) =>
+    pin(verifyJaccard(minhashCandidates(spark, dir), shingleHashes(spark, dir)), fill = true),
+    release)
 
   /** The pre-verification LSH candidate pair set — exposed so
     * PruningSpec can assert the banding actually prunes (candidates ≪
@@ -172,11 +171,10 @@ object Dedup {
     val sh = shingleHashes(spark, dir)
     // native one-pass 16-permutation minhash (graft.plans.TextHash);
     // coefficients identical to the literal arrays in the oracle SQL
+    // both sides of the band self-join read this one exchange (the
+    // plan reuses it), so the 16-permutation fold runs once
     val sig = sh.selectExpr("doc_id", "minhash16(hs) AS mh")
       .repartition(Par, col("doc_id"))
-      // mh explodes into Bands band-key rows; persist keeps the
-      // 16-permutation fold from re-running per band branch
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val bands = sig.selectExpr(
         "doc_id",
         s"""explode(transform(sequence(0, ${Bands - 1}, 1),
@@ -367,7 +365,7 @@ object Dedup {
     // / 16) against the exact set Jaccard the verifier computed — the
     // measurement that justifies trusting 16 permutations before
     // scaling the banding to a 100 TB corpus (E[est] = J, σ =
-    // √(J(1−J)/16) ≈ 0.125 at J = 0.5). Reuses the persisted verified
+    // √(J(1−J)/16) ≈ 0.125 at J = 0.5). Reuses the pinned verified
     // pair set and the native minhash16 kernel; the oracle re-derives
     // both sides independently.
     QueryDef(
@@ -1328,71 +1326,8 @@ object Dedup {
     // path at fixture scale.
     QueryDef(
       "dd_dup_profile",
-      (spark, dir) => {
-        import org.apache.spark.sql.graft.CheckpointOps.{checkpointHashPartitioned, release}
-        // the tokenized corpus is consumed SIX times (one posting per
-        // ladder level + the final n_tokens scan); fence it once so
-        // the parquet scan + regex cleanup + split run once, not per
-        // level (r16; measured solo at sf0.1 below). Plain fence — no
-        // repartition: every consumer either re-exchanges on h anyway
-        // (the level postings) or is doc-bounded (the join-back), so
-        // an advertised layout would add an exchange of the tokenized
-        // corpus for nothing. Peak footprint becomes toks + ONE
-        // level's posting — still bounded, unlike the rejected
-        // stacked-levels form (levels×tokens, OOM at sf10).
-        val toks = exactSubstrCorpus(spark, dir)
-          .selectExpr("doc_id", "split(tc, ' ') AS toks")
-          .fenced
-        // levels are independent; submit their fence jobs from TWO
-        // driver threads (guide §2.6 — overlap independent jobs so the
-        // next level's stages back-fill the straggler tail of the
-        // previous one; the r16 level-sequential form serialized five
-        // full barriers). Concurrency is capped at 2 to KEEP the
-        // bounded-footprint guarantee the level-sequential form bought:
-        // at most two levels' postings live at once (each level still
-        // releases its posting before completing), vs the rejected
-        // stacked form's levels×tokens. FIFO scheduling runs the
-        // biggest level (4) first; ladder order is preserved by
-        // awaiting futures in order.
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        // resolved here: `Par` reads the thread's active session, and
-        // the futures below run on pool threads
-        val par = Par
-        val futs = DupProfileLadder.map { l =>
-          scala.concurrent.Future {
-            val post = checkpointHashPartitioned(
-              toks.selectExpr("doc_id", s"explode(shingle_hashes(toks, $l)) AS h"),
-              par, "h")
-            // cross-doc flag per h — min ≠ max over doc_id ⟺ held by
-            // ≥ 2 distinct docs; runs on the existing partitioning
-            val dup = post.groupBy("h")
-              .agg(expr("min(doc_id) AS mn"), expr("max(doc_id) AS mx"))
-              .where("mn != mx").select("h")
-            // only duplicated occurrences survive; the fold is doc-bounded
-            val flagged = post.join(dup, Seq("h"))
-              .groupBy("doc_id")
-              .agg(expr("cast(count(*) AS bigint) AS dup_windows"))
-              .selectExpr("doc_id", s"${l}L AS L", "dup_windows")
-              .fenced
-            release(post)
-            flagged
-          }(ec)
-        }
-        val perLevel = try
-          futs.map(f => scala.concurrent.Await.result(
-            f, scala.concurrent.duration.Duration.Inf))
-        finally pool.shutdown()
-        val best = perLevel.reduce(_ unionByName _)
-          .withColumn("rk", expr("row_number() OVER (PARTITION BY doc_id ORDER BY L DESC)"))
-          .where("rk = 1")
-          .selectExpr("doc_id", "L AS max_dup_len", "dup_windows")
-        toks.selectExpr("doc_id", "cast(size(toks) AS bigint) AS n_tokens")
-          .join(best, Seq("doc_id"), "left")
-          .selectExpr("doc_id", "n_tokens",
-            "coalesce(max_dup_len, 0L) AS max_dup_len",
-            "coalesce(dup_windows, 0L) AS dup_windows")
-      },
+      (spark, dir) => dupProfile(exactSubstrCorpus(spark, dir)
+        .selectExpr("doc_id", "split(tc, ' ') AS toks")),
       Some(s"""
         WITH c AS (
           SELECT doc_id,
@@ -1426,6 +1361,75 @@ object Dedup {
   )
 
   /** dd_dup_profile's doubling ladder of window lengths (tokens). */
+  /** dd_dup_profile over `tokens`, the `(doc_id, toks)` corpus. The
+    * tokens feed six consumers (five level postings + the n_tokens
+    * scan), so they are fenced once; plain fence, no layout: the
+    * postings re-exchange on h anyway and the join-back is doc-bounded.
+    * The independent levels run from TWO driver threads (guide §2.6:
+    * the next level back-fills the previous one's straggler tail), at
+    * most two postings live at once, each released before its level
+    * completes; the futures are collected in ladder order.
+    *
+    * Each level runs in its own [[Rounds]] scope (a scope is one
+    * thread's), all in one job group per call. The first level to fail
+    * cancels the group's running and future jobs; every level is then
+    * waited for, every fence any level made is released with the
+    * tokens, and the first error is rethrown.
+    */
+  private[graft] def dupProfile(tokens: DataFrame): DataFrame = Rounds.scope { rs =>
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val sc = tokens.sparkSession.sparkContext
+    val toks = rs.fence(tokens)
+    // resolved here: `Par` reads the thread's active session, and the
+    // futures below run on pool threads
+    val par = Par
+    val group = s"dd_dup_profile-${java.util.UUID.randomUUID}"
+    val firstError = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val ec = ExecutionContext.fromExecutorService(pool)
+    val futs = DupProfileLadder.map { l =>
+      Future {
+        sc.setJobGroup(group, s"dd_dup_profile level $l")
+        try Rounds.scope { ls =>
+          val post = ls.fence(
+            toks.selectExpr("doc_id", s"explode(shingle_hashes(toks, $l)) AS h"), par, "h")
+          // cross-doc flag per h — min ≠ max over doc_id ⟺ held by
+          // ≥ 2 distinct docs; runs on the existing partitioning
+          val dup = post.groupBy("h")
+            .agg(expr("min(doc_id) AS mn"), expr("max(doc_id) AS mx"))
+            .where("mn != mx").select("h")
+          // only duplicated occurrences survive; the fold is doc-bounded
+          // (the scope releases the posting: the fenced counts no
+          // longer read it)
+          ls.fence(post.join(dup, Seq("h"))
+            .groupBy("doc_id")
+            .agg(expr("cast(count(*) AS bigint) AS dup_windows"))
+            .selectExpr("doc_id", s"${l}L AS L", "dup_windows"))
+        } catch {
+          case e: Throwable =>
+            if (firstError.compareAndSet(null, e)) sc.cancelJobGroupAndFutureJobs(group)
+            throw e
+        } finally sc.clearJobGroup()
+      }(ec)
+    }
+    val levels = try futs.map(f => Await.ready(f, Duration.Inf).value.get)
+    finally pool.shutdown()
+    Option(firstError.get).foreach { e =>
+      levels.foreach(_.foreach(release(_)))
+      throw e
+    }
+    val best = levels.map(_.get).reduce(_ unionByName _)
+      .withColumn("rk", expr("row_number() OVER (PARTITION BY doc_id ORDER BY L DESC)"))
+      .where("rk = 1")
+      .selectExpr("doc_id", "L AS max_dup_len", "dup_windows")
+    toks.selectExpr("doc_id", "cast(size(toks) AS bigint) AS n_tokens")
+      .join(best, Seq("doc_id"), "left")
+      .selectExpr("doc_id", "n_tokens",
+        "coalesce(max_dup_len, 0L) AS max_dup_len",
+        "coalesce(dup_windows, 0L) AS dup_windows")
+  }
+
   private[graft] val DupProfileLadder = Seq(4, 8, 16, 32, 64)
 
   // dd_paragraph: 12-token paragraph folds; the planted boilerplate is

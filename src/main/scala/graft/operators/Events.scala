@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.graft.CheckpointOps.FenceSyntax
+import org.apache.spark.sql.graft.CheckpointOps.{pin, FenceSyntax}
 import graft.{QueryDef, Tables}
 
 /** Event-time analytics over the `events` table — the batch analogs of
@@ -564,19 +564,19 @@ object Events {
     // the end. Scale shape: ONE pass reduces the corpus to distinct
     // (week, day, user) triples — bounded by users × active days, the
     // only exchange that sees event-sized input — and both DAU and WAU
-    // derive from that tiny PERSISTED table. The persist is load-
-    // bearing: without it Catalyst's RemoveRedundantAggregates
-    // correctly collapses distinct-over-distinct and each branch would
-    // re-scan + re-shuffle the raw corpus (the r8 shape); with it the
-    // 100 TB events table is read and exchanged exactly once, and the
-    // two downstream aggregates shuffle only user×day-bounded rows.
+    // derive from that tiny PINNED table. The pin is load-bearing:
+    // without it Catalyst's RemoveRedundantAggregates correctly
+    // collapses distinct-over-distinct and each branch would re-scan +
+    // re-shuffle the raw corpus (the r8 shape); with it the 100 TB
+    // events table is read and exchanged exactly once, and the two
+    // downstream aggregates shuffle only user×day-bounded rows. The
+    // result reads the pin, so it lives as long as the result does.
     QueryDef(
       "ev_stickiness",
       (spark, dir) => {
-        val days = Tables.events(spark, dir)
+        val days = pin(Tables.events(spark, dir)
           .selectExpr("date_trunc('week', ts) AS w", "date_trunc('day', ts) AS d", "user_id")
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .distinct())
         val dau = days.groupBy("w", "d")
           .agg(org.apache.spark.sql.functions.expr("cast(count(*) AS bigint) AS dau"))
         val wau = days.select("w", "user_id").distinct()
@@ -2222,7 +2222,10 @@ object Events {
   private[graft] def heavyHitters(
       items: org.apache.spark.sql.Dataset[Long], k: Int): org.apache.spark.sql.DataFrame = {
     import items.sparkSession.implicits._
-    val summary = items
+    // ≤ (k+1)·P rows — the pin keeps the corpus scan single-pass for
+    // BOTH consumers below (total and candidates); the result reads it,
+    // so it lives as long as the result does
+    val summary = pin(items
       .mapPartitions { it =>
         val m = scala.collection.mutable.HashMap.empty[Long, Long]
         var n = 0L
@@ -2242,10 +2245,7 @@ object Events {
         }
         Iterator.single((-1L, n)) ++ m.keysIterator.map(t => (t, 0L))
       }
-      .toDF("item", "n_part")
-      // ≤ (k+1)·P rows — persisting keeps the corpus scan single-pass
-      // for BOTH consumers below (total and candidates)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .toDF("item", "n_part"))
     val total = summary.where("item = -1")
       .groupBy().agg(org.apache.spark.sql.functions.expr("sum(n_part) AS n_total"))
     val cands = summary.where("item != -1").select("item").distinct()

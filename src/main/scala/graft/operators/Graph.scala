@@ -225,7 +225,7 @@ object Graph {
     *
     * Determinism across engines without agreeing on the detection
     * round: every [[CheckEvery]] rounds the kernel's scores are
-    * persisted, and the job that fills them also counts the vertices
+    * pinned, and the job that fills them also counts the vertices
     * whose score differs from the previous block's (one job per block;
     * the superseded block is released). `r_t == r_{t-k}` proves a cycle
     * of period dividing k; detection lands on a multiple of k, and
@@ -248,7 +248,7 @@ object Graph {
         case (i, (r, prev, _)) =>
           val next = k.round(r)
           if (i % CheckEvery != 0 && i < maxIters) (next, prev, false)
-          else (fs.persist(next), next, k.changed(next, prev) == 0L)
+          else (fs.pin(next), next, k.changed(next, prev) == 0L)
       }
       if (!out.converged)
         throw new IllegalStateException(

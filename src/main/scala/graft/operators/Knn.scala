@@ -559,9 +559,10 @@ object Knn {
     // the exact top-20 candidates, greedily pick the item maximizing
     // λ·sim(c, q) − (1−λ)·max_{s∈selected} sim(c, s) — relevance
     // traded against redundancy, the re-rank layer RAG retrieval runs
-    // after kNN. The candidate pool and its pairwise similarity matrix
-    // are computed DISTRIBUTED (broadcast query, 20×20 pair grid);
-    // only the O(k²) greedy walks on the driver — the same bounded
+    // after kNN. The candidate pool is selected DISTRIBUTED (broadcast
+    // query, top-20 by cosine); its MmrPool rows are collected, and the
+    // 20×20 pairwise cosines (the `cosine_f` fold, `CosineSim.fold`)
+    // and the O(k²) greedy run on the driver — the same bounded
     // collect contract as ivfSearch's probe selection. The oracle
     // unrolls the identical greedy as five SQL pick-layers — an
     // independent implementation, not a re-expression.
@@ -572,22 +573,22 @@ object Knn {
         val e = Tables.embeddings(spark, dir)
         val q = e.where("vec_id = 10").select(col("embedding").as("q_emb"))
         val cand = e.crossJoin(broadcast(q))
-          .selectExpr("vec_id", "embedding", s"${cosExpr("embedding", "q_emb")} AS sim")
+          .selectExpr("vec_id", "cast(embedding AS array<double>) AS v",
+            s"${cosExpr("embedding", "q_emb")} AS sim")
           .orderBy(desc("sim"), col("vec_id"))
           .limit(MmrPool)
-          .persist()
-        val sims = cand.selectExpr("vec_id AS va", "embedding AS ea", "sim")
-          .crossJoin(cand.selectExpr("vec_id AS vb", "embedding AS eb"))
-          .selectExpr("va", "vb", "sim", s"${cosExpr("ea", "eb")} AS s")
           .collect()
-        cand.unpersist()
-        val simToQ = sims.map(r => r.getAs[Long]("va") -> r.getAs[Double]("sim")).toMap
-        val pair = sims.map(r => (r.getAs[Long]("va"), r.getAs[Long]("vb")) -> r.getAs[Double]("s")).toMap
+        val simToQ = cand.map(r => r.getLong(0) -> r.getDouble(2)).toMap
+        val vec = cand.map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+        def pair(a: Long, b: Long): Double = {
+          val (x, y) = (vec(a), vec(b))
+          graft.plans.CosineSim.fold(x, 0, y, 0, math.min(x.length, y.length))
+        }
         val ids = simToQ.keys.toSeq.sorted
         val selected = scala.collection.mutable.ArrayBuffer.empty[Long]
         (1 to K).foreach { _ =>
           val best = ids.filterNot(selected.contains).map { c =>
-            val red = if (selected.isEmpty) 0.0 else selected.map(s => pair((c, s))).max
+            val red = if (selected.isEmpty) 0.0 else selected.map(pair(c, _)).max
             (c, 0.5 * simToQ(c) - 0.5 * red)
           }.minBy { case (c, score) => (-score, c) }._1
           selected += best

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.graft.CheckpointOps.{release, FenceSyntax}
+import org.apache.spark.sql.graft.CheckpointOps.{pin, release, FenceSyntax}
 import graft.{Fns, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -76,7 +76,7 @@ object Ml {
                    ELSE cast(array() AS array<bigint>) END,
               array(-1L)) AS hs""")
 
-  /** The shared training chain: persisted feature table, the trained
+  /** The shared training chain: pinned feature table, the trained
     * weight table after [[Epochs]] integer perceptron updates, and the
     * per-epoch margin tables (epoch t's margins are measured with the
     * weights BEFORE update t; the list carries Epochs+1 entries so the
@@ -88,18 +88,17 @@ object Ml {
     *
     * Four queries (ml_train_linear, ml_score_docs, tp_curate_clf,
     * st_ml_score) plus repeated bench passes read the chain, so it is
-    * built once per (session, dir): localCheckpoint produces fresh RDDs
-    * the CacheManager cannot unify by canonicalized plan. It is
-    * ml_train_linear's OUTPUT-level memo: that query's `resetMemo` is
-    * this memo's `reset`, which unpersists the features and releases
-    * the weight and margin fences, so a timed bench pass measures the
+    * built once per (session, dir). It is ml_train_linear's
+    * OUTPUT-level memo: that query's `resetMemo` is this memo's
+    * `reset`, which releases the feature pin and the weight and margin
+    * fences, so a timed bench pass measures the
     * epoch loop (the other three keep reading the memo — the trained
     * model is their INPUT).
     */
   private[graft] val trainChain =
     new graft.SessionMemo[(DataFrame, DataFrame, Seq[DataFrame])](trainChainUncached, {
       case (f, w, margins) =>
-        f.unpersist(false)
+        release(f)
         release(w)
         margins.foreach(release)
     })
@@ -107,8 +106,7 @@ object Ml {
   private def trainChainUncached(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, Seq[DataFrame]) = {
     import spark.implicits._
-    val f = features(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val f = pin(features(spark, dir))
     // the weight tables are tiny (≤ Buckets + 1 rows): the superseded
     // ones are released when training ends, the final one and the
     // margins live on as the result
@@ -135,7 +133,7 @@ object Ml {
     // Output = the training trace: for epoch t, the error measured with
     // the weights BEFORE update t (epoch 1 sees the zero model — every
     // doc misclassifies), plus a final row (epoch Epochs+1) evaluating
-    // the trained model. Scale shape per epoch: F (persisted, one
+    // the trained model. Scale shape per epoch: F (pinned, one
     // corpus-derived exchange total) joins the ≤ 4097-row weight table
     // broadcast, margins reduce per doc, the gradient reduces per
     // feature — model state is O(Buckets) regardless of corpus size,
@@ -557,8 +555,7 @@ object Ml {
     * previous centroid.
     */
   private[graft] def kmTrain(spark: SparkSession, dir: String): Array[Array[Long]] = {
-    val q = kmQuantized(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val q = pin(kmQuantized(spark, dir))
     try {
       var cents: Array[Array[Long]] =
         q.where(s"vec_id < $KmK").orderBy("vec_id").select("qv")
@@ -579,7 +576,7 @@ object Ml {
         cents = next
       }
       cents
-    } finally q.unpersist(false)
+    } finally release(q)
   }
 
   /** The shared DuckDB CTE chain replaying [[kmTrain]] + the final

@@ -12,7 +12,7 @@ import scala.collection.mutable.ArrayBuilder
   *
   * The edge list is read once and laid out as per-partition CSR arrays
   * ([[RankKernel.Part]]), hash-partitioned on `src` in `width`
-  * partitions; the CSR is persisted in the caller's [[Rounds]] scope and
+  * partitions; the CSR is pinned in the caller's [[Rounds]] scope and
   * never moves again. A score state is one `Array[Long]` per partition,
   * aligned with that partition's sorted source ids, so a round is:
   *  - a `zipPartitions` of the CSR with the state: each partition sums
@@ -25,7 +25,7 @@ import scala.collection.mutable.ArrayBuilder
   *    to its id's slot, found by binary search, and the new score is
   *    `teleport + (85 · c) div 100`.
   * No round plans, analyses or compiles anything, and the edge side is
-  * read only from the persisted CSR. Every addition is `Math.addExact`
+  * read only from the pinned CSR. Every addition is `Math.addExact`
   * and every product `Math.multiplyExact`, so an overflow raises as the
   * ANSI SQL round did; the sums do not depend on order, so the scores
   * are bit-identical to the SQL round's. Duplicate edge rows count once
@@ -61,7 +61,7 @@ private[graft] final class RankKernel private (fs: Rounds, spark: SparkSession,
     }
 
   /** The number of vertices whose score differs between `r` and `prev`:
-    * one job, which also fills `r`'s blocks when `r` is persisted.
+    * one job, which also fills `r`'s blocks when `r` is pinned.
     */
   def changed(r: RDD[Array[Long]], prev: RDD[Array[Long]]): Long = diffs(r, prev).reduce(_ + _)
 
@@ -83,7 +83,7 @@ private[graft] object RankKernel {
     * weighted contributions `(r · w) div Σw(src)` — at the session's
     * shuffle width. With `seeds` (a one-column id table), only the seeds
     * start with and teleport mass; without, every vertex does. The CSR
-    * is persisted in `fs`, built by the first job that reads it.
+    * is pinned in `fs`, built by the first job that reads it.
     */
   def apply(fs: Rounds, edges: DataFrame, seeds: Option[DataFrame] = None): RankKernel = {
     val width = edges.sparkSession.sessionState.conf.numShufflePartitions
@@ -97,7 +97,7 @@ private[graft] object RankKernel {
           (in, ss) => Iterator(Part(concat(in, n), concat(ss, 1)(0)))
         }
     }
-    new RankKernel(fs, edges.sparkSession, fs.persist(csr), part)
+    new RankKernel(fs, edges.sparkSession, fs.pin(csr), part)
   }
 
   /** `df`'s integral columns as bigint arrays, one record per partition

@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.graft.CheckpointOps
 import org.apache.spark.sql.graft.CheckpointOps.{checkpointHashPartitioned, fenceRdds, release, FenceSyntax}
-import org.apache.spark.storage.StorageLevel
 
 /** How a round loop ended: the rounds it ran, and whether it stopped
   * because it converged (false: it ran out of rounds).
@@ -11,16 +11,18 @@ import org.apache.spark.storage.StorageLevel
 final case class RoundOutcome(rounds: Int, converged: Boolean)
 
 /** The fence scope of one iterative operator. Every fence the operator
-  * issues goes out through [[fence]], and every RDD it persists through
-  * [[persist]]; the scope releases each: as soon as a later round's
-  * state no longer reads it (see [[loop]]), and at the latest when the
-  * scope exits, on success and on a throw. The fences the operator's
-  * result reads are the one exception — they live as long as the result
-  * does.
+  * issues goes out through [[fence]], and every RDD it pins through
+  * [[pin]] (both `CheckpointOps` materializations: a fence cuts lineage,
+  * a pin keeps it); the scope releases each through
+  * `CheckpointOps.release`: as soon as a later round's state no longer
+  * reads it (see [[loop]]), and at the latest when the scope exits, on
+  * success and on a throw. The fences and pins the operator's result
+  * reads are the one exception — they live as long as the result does.
+  * A scope is not thread-safe: one scope per thread.
   */
 final class Rounds private () {
 
-  // fences (DataFrames) and persisted RDDs not yet released, by RDD id
+  // fences (DataFrames) and pinned RDDs not yet released, by RDD id
   private val held = scala.collection.mutable.LinkedHashMap.empty[Int, AnyRef]
 
   private def issue(df: DataFrame): DataFrame = {
@@ -28,20 +30,20 @@ final class Rounds private () {
     df
   }
 
-  /** Release every fence or persisted RDD in `ids` that `live` does not
+  /** Release every fence or pinned RDD in `ids` that `live` does not
     * read.
     */
   private def releaseUnread(ids: Iterable[Int], live: Any): Unit = {
     val read = reads(live)
     ids.filterNot(read).foreach(id => held.remove(id).foreach {
       case df: Dataset[Row @unchecked] => release(df)
-      case rdd: RDD[_] => rdd.unpersist(blocking = false)
+      case rdd: RDD[_] => release(rdd)
     })
   }
 
   /** The ids of what `x` reads: the fences under a DataFrame's plan, and
     * the held RDDs an RDD's lineage reaches without passing another held
-    * one (a persisted RDD is read in place of its ancestors).
+    * one (a pinned RDD is read in place of its ancestors).
     */
   private def reads(x: Any): Set[Int] = Rounds.members(x).flatMap {
     case ds: Dataset[_] => fenceRdds(ds)
@@ -66,12 +68,12 @@ final class Rounds private () {
   def fence(df: DataFrame, width: Int, key: String): DataFrame =
     issue(checkpointHashPartitioned(df, width, key))
 
-  /** `rdd` persisted MEMORY_AND_DISK by the first job that reads it, and
-    * released like a fence. Unlike a fence it keeps its lineage, so a
-    * lost block is recomputed.
+  /** `rdd` pinned (`CheckpointOps.pin`: persisted by the first job that
+    * reads it), and released like a fence. Unlike a fence it keeps its
+    * lineage, so a lost block is recomputed.
     */
-  def persist[T](rdd: RDD[T]): RDD[T] = {
-    held(rdd.id) = rdd.persist(StorageLevel.MEMORY_AND_DISK)
+  def pin[T](rdd: RDD[T]): RDD[T] = {
+    held(rdd.id) = CheckpointOps.pin(rdd)
     rdd
   }
 
@@ -80,7 +82,7 @@ final class Rounds private () {
     * an RDD, or a tuple or collection of them; other members are
     * ignored.
     *
-    * The round fences are the fences and persisted RDDs the rounds
+    * The round fences are the fences and pinned RDDs the rounds
     * issue, plus any that `init` holds as a member. After each round,
     * every round fence the new state no longer reads is released: the
     * state it was part of has been superseded by fences that have

@@ -124,15 +124,15 @@ object ChunkStore {
   private final case class Snapshot(version: String, parts: RDD[SearchKernel.Part])
 
   /** Per (session, store path): the committed version answers are
-    * served from. Its parts are persisted MEMORY_AND_DISK, filled by the
-    * first search's own job and recomputable from the committed files.
+    * served from. Its parts are pinned, filled by the first search's own
+    * job and recomputable from the committed files.
     * [[search]] swaps in a new snapshot when the token names a new
     * version; the superseded one's blocks are released.
     */
   private val snapshots = new SessionMemo[Snapshot](
     (spark, storePath) => Snapshot(readCommit(spark, storePath).map(_.version).orNull,
       SearchKernel.parts(readStore(spark, storePath))),
-    _.parts.unpersist(blocking = false))
+    s => CheckpointOps.release(s.parts))
 
   /** Per (session, embedder class name): the embedder's query-side
     * expression, bound once. The class name is the embedder's identity

@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Express
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.CheckpointOps
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 import scala.jdk.CollectionConverters._
@@ -88,10 +88,11 @@ private[graft] object SearchKernel {
   }
 
   /** The store rows `store` (read by [[ChunkStore.storeSchema]]) as one
-    * [[Part]] per partition, persisted MEMORY_AND_DISK by the first job
-    * that reads them; a lost block is recomputed from the files.
+    * [[Part]] per partition, pinned (`CheckpointOps.pin`: persisted by
+    * the first job that reads them); a lost block is recomputed from the
+    * files.
     */
-  def parts(store: DataFrame): RDD[Part] =
+  def parts(store: DataFrame): RDD[Part] = CheckpointOps.pin(
     store.queryExecution.toRdd.mapPartitions { rows =>
       val project = UnsafeProjection.create(Payload.fields.map(_.dataType))
       val payload = ArrayBuffer.empty[UnsafeRow]
@@ -112,7 +113,7 @@ private[graft] object SearchKernel {
         off += end
       }
       Iterator(new Part(payload.toArray, off.result(), vecs.result(), noVec.result()))
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+    })
 
   /** The best `k` rows of `parts` for the query vector `q` (null: every
     * similarity is null), best first, as [[Result]] rows: one job.

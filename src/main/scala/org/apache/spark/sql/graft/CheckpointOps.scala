@@ -3,34 +3,35 @@ package org.apache.spark.sql.graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution}
+import org.apache.spark.storage.StorageLevel
 
-/** Checkpointing that KEEPS the partitioning contract.
+/** The one materialization seam: every table the engine keeps goes
+  * through here, which decides its storage level and its lifetime.
+  * Two kinds, one vocabulary:
+  *  - a *fence* ([[fence]], [[checkpointHashPartitioned]]) cuts
+  *    lineage: its rows are checkpointed eagerly, so later rounds never
+  *    re-expand the plan that built them;
+  *  - a *pin* ([[pin]]) keeps lineage: its rows are persisted by the
+  *    first job that reads them, and a lost block is recomputed.
+  * Both are freed with [[release]]. Neither enters the session
+  * CacheManager, so no other query is ever served their blocks by plan
+  * match, and no other query's release can drop them.
   *
-  * `Dataset.localCheckpoint` is the lineage fence every iterative
-  * operator here leans on, but under AQE it silently drops
-  * `outputPartitioning`: the checkpointed plan is an
-  * `AdaptiveSparkPlanExec` whose partitioning is unknown until
-  * execution, so the `LogicalRDD` the checkpoint wraps reports
-  * `UnknownPartitioning` — and every downstream round re-exchanges the
-  * "once-partitioned" table. Profiled on gr_pagerank_conv (sf0.1):
-  * the ~90 rounds re-shuffled the 1.2M-row edge table every round
-  * (102 MB scanned + 13 MB shuffle-written per round, 338 s summed
-  * task time for a 67 s wall) even though the table was repartitioned
-  * on the join key ONCE, by design, before the checkpoint.
-  *
-  * [[checkpointHashPartitioned]] restores the design: repartition by
-  * the keys with an EXPLICIT partition count (REPARTITION_BY_NUM —
-  * AQE never coalesces a user-numbered exchange, so the physical
-  * layout is exactly `murmur3(keys) pmod n`), materialize the rows
-  * into local checkpoint blocks, and rebuild the `LogicalRDD` with a
-  * truthful `HashPartitioning(keys, n)`. Downstream joins and
-  * aggregations keyed on the same columns then satisfy their
-  * distribution requirement from the checkpoint — the big side stays
-  * stationary across every round and only the O(V) state table moves,
-  * which is the whole scale story of the Pregel-style operators.
+  * Fences keep the partitioning contract: under AQE,
+  * `Dataset.localCheckpoint` wraps its rows in a `LogicalRDD` that
+  * reports `UnknownPartitioning`, so every downstream round re-exchanges
+  * a table repartitioned on the join key once, by design (profiled on
+  * gr_pagerank_conv sf0.1: the 1.2M-row edge table re-shuffled every
+  * round, 338 s of task time for a 67 s wall). [[checkpointHashPartitioned]]
+  * repartitions with an EXPLICIT count (AQE never coalesces a
+  * user-numbered exchange, so the layout is exactly
+  * `murmur3(keys) pmod n`) and advertises that `HashPartitioning`, so
+  * joins and aggregations on the keys reuse it in place: the big side
+  * stays stationary and only the O(V) state moves.
   *
   * This lives under `org.apache.spark.sql` (the extension-library
   * convention) because `Dataset.ofRows` and `LogicalRDD` are
@@ -78,9 +79,9 @@ object CheckpointOps {
 
   /** `spark.graft.fence.storageLevel=DISK_ONLY` (any
     * `StorageLevel.fromString` name) overrides the block storage level
-    * of every fence in the engine. Unset — the default — keeps Spark's
-    * own localCheckpoint level (MEMORY_AND_DISK), byte-identical to
-    * the pre-conf behavior. The override exists for the
+    * of every fence in the engine (pins keep [[Level]]). Unset — the
+    * default — fences use [[Level]], the level `localCheckpoint` would
+    * pick itself. The override exists for the
     * memory-constrained regime PLANS.md's sf10 decade rows surfaced:
     * a 16 GiB driver heap shared by 32 executor threads put the graph
     * family's O(E) edge checkpoints and per-round O(V) fences into
@@ -92,72 +93,87 @@ object CheckpointOps {
     * same knob sizes down executor storage pressure when the fenced
     * state per executor approaches its heap share.
     */
-  private def fenceLevelOverride(
-      spark: org.apache.spark.sql.SparkSession): Option[org.apache.spark.storage.StorageLevel] =
+  private def fenceLevel(spark: org.apache.spark.sql.SparkSession): StorageLevel =
     spark.conf.getOption("spark.graft.fence.storageLevel")
       .filter(_.nonEmpty)
-      .map(org.apache.spark.storage.StorageLevel.fromString)
+      .fold(Level)(StorageLevel.fromString)
 
-  /** Materialize a manually-built fence RDD under a REGISTERED SQL
-    * execution, the way `Dataset.withAction` does — a bare
-    * `rdd.count()` never posts `SparkListenerSQLExecutionEnd`, so no
-    * `QueryExecutionListener` fires for the plan and any
-    * `Dataset.observe` metric riding the fenced frame (the per-round
-    * scalars of gr_hits/k-core/BFS/connected components) would leave
-    * its `Observation` promise uncompleted — `obs.get` then blocks
-    * forever. Spark's `ExecutionListenerBus` converts the
-    * execution-end event into `onSuccess(name, qe, ..)` only when the
-    * execution carries a name, hence `Some(name)`. When the job fails,
-    * `rdd` is unpersisted before the error propagates: Spark keeps a
-    * failed job's persisted RDD registered, and no caller holds it to
-    * release it.
+  /** The storage level of every pin, and of every fence that
+    * `spark.graft.fence.storageLevel` does not override: rows spill to
+    * local disk under memory pressure instead of failing.
+    */
+  private val Level = StorageLevel.MEMORY_AND_DISK
+
+  /** Count `rdd` (filling its blocks) under a REGISTERED, named SQL
+    * execution, as `Dataset.withAction` does: a bare `rdd.count()`
+    * posts no execution-end event, so a `Dataset.observe` metric riding
+    * the frame (the per-round scalars of gr_hits/k-core/BFS/connected
+    * components) would never complete and `obs.get` would block forever.
+    * When the job fails, `rdd` is unpersisted before the error
+    * propagates: Spark keeps a failed job's persisted RDD registered,
+    * and no caller holds it to release it. Returns the row count.
     */
   private def materializeAsAction(qe: QueryExecution, name: String,
-                                  rdd: RDD[InternalRow]): Unit =
-    try SQLExecution.withNewExecutionId(qe, Some(name)) { rdd.count(); () }
+                                  rdd: RDD[InternalRow]): Long =
+    try SQLExecution.withNewExecutionId(qe, Some(name))(rdd.count())
     catch {
       case e: Throwable =>
-        rdd.unpersist(blocking = false)
+        release(rdd)
         throw e
     }
 
-  /** The conf-gated lineage fence every iterative operator uses:
-    * `localCheckpoint(eager)` by default; under
-    * `spark.graft.checkpoint.reliable=true` the rows persist
-    * MEMORY_AND_DISK (healthy-path reads stay block-speed) AND
-    * checkpoint to reliable files (recovery path) — NOT plain
-    * `Dataset.checkpoint`, whose healthy-path reads would re-read the
-    * checkpoint files from the object store on every downstream use.
-    * The reliable flavor advertises `UnknownPartitioning`, the local
-    * one what `localCheckpoint` would (use [[checkpointHashPartitioned]]
-    * when a downstream join/agg must reuse the layout); both are
-    * releasable via [[release]], and a fence whose job fails leaves
-    * nothing persisted.
-    * [[fenceLevelOverride]] applies to both flavors.
+  /** The one body of every fence and pin: `ds`'s rows copied (UnsafeRow
+    * buffers are reused per task) into an RDD persisted at the fence
+    * level, or [[Level]] for a pin, behind a `LogicalRDD` that
+    * advertises `partitioning` (`None`: what `localCheckpoint` would).
+    * A fence is marked for checkpointing (local blocks, or reliable
+    * files) and filled now; a pin is filled by the first job that reads
+    * it, or now when `fill`, and then reports the filled blocks' rows
+    * and bytes as its statistics.
     */
-  def fence[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] = {
+  private def materialize[T](ds: org.apache.spark.sql.Dataset[T], fence: Boolean,
+                             fill: Boolean = false,
+                             partitioning: Option[(Int, Seq[String])] = None)
+      : org.apache.spark.sql.Dataset[T] = {
     val cds = ds.asInstanceOf[Dataset[T]]
     val spark = cds.sparkSession
-    val reliable = reliableMode(spark)
+    val reliable = fence && reliableMode(spark)
     if (reliable) ensureCheckpointDir(spark)
     val qe = cds.queryExecution
-    val rdd: RDD[InternalRow] = qe.toRdd.map(_.copy())
-    val plan = if (reliable) {
-      rdd.persist(fenceLevelOverride(spark)
-        .getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      rdd.checkpoint()
-      materializeAsAction(qe, "fence", rdd)
-      LogicalRDD(qe.analyzed.output, rdd)(spark)
-    } else {
-      // what Dataset.localCheckpoint(eager = true) does, with the RDD
-      // in hand to release when its job fails
-      fenceLevelOverride(spark).foreach(rdd.persist(_))
-      rdd.localCheckpoint()
-      materializeAsAction(qe, "localCheckpoint", rdd)
-      LogicalRDD.fromDataset(rdd, cds, cds.isStreaming)
+    val rdd = qe.toRdd.map(_.copy()).persist(if (fence) fenceLevel(spark) else Level)
+    // persist-before-mark: localCheckpoint keeps a pre-set level (adding
+    // the disk flag it requires), and the reliable checkpoint write and
+    // healthy-path reads use the blocks
+    if (reliable) rdd.checkpoint() else if (fence) rdd.localCheckpoint()
+    val rows = if (fence || fill) Some(materializeAsAction(qe, if (fence) "fence" else "pin", rdd))
+      else None
+    val output = qe.analyzed.output
+    val plan = partitioning match {
+      case Some((numParts, keys)) =>
+        val keyAttrs = keys.map { k =>
+          output.find(_.name == k).getOrElse(
+            throw new IllegalArgumentException(
+              s"partition key '$k' not in ${output.map(_.name).mkString(", ")}"))
+        }
+        LogicalRDD(output, rdd, HashPartitioning(keyAttrs, numParts))(spark)
+      case None if fill =>
+        val bytes = spark.sparkContext.getRDDStorageInfo(_.id == rdd.id)
+          .map(i => i.memSize + i.diskSize).sum
+        LogicalRDD(output, rdd)(spark, Some(Statistics(bytes, rows.map(BigInt(_)))))
+      case None => LogicalRDD.fromDataset(rdd, cds, cds.isStreaming)
     }
     Dataset.ofRows(spark, plan).as[T](cds.encoder)
   }
+
+  /** The conf-gated lineage fence every iterative operator uses: what
+    * `localCheckpoint(eager = true)` does by default; under
+    * `spark.graft.checkpoint.reliable=true` the rows persist AND
+    * checkpoint to reliable files — NOT plain `Dataset.checkpoint`,
+    * whose healthy-path reads would re-read the files on every
+    * downstream use. A fence whose job fails leaves nothing persisted.
+    */
+  def fence[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] =
+    materialize(ds, fence = true)
 
   /** Postfix syntax for [[fence]]: `df.fenced` reads like the
     * `df.localCheckpoint(true)` it replaces at 60+ call sites.
@@ -167,70 +183,40 @@ object CheckpointOps {
     def fenced: org.apache.spark.sql.Dataset[T] = fence(ds)
   }
 
-  /** `df`'s rows behind a `LogicalRDD`, persisted MEMORY_AND_DISK by
-    * the first job that reads them: a pin for rows read more than once
-    * that must not change between reads, such as the sorted chunks
-    * positional ids are numbered from. Unlike `Dataset.persist` it
-    * enters no CacheManager, so other readers of `df`'s files are never
-    * served these blocks; unlike a fence, a lost block is recomputed
-    * from `df`'s plan. Free it with [[release]].
+  /** A pin: `df`'s rows behind a `LogicalRDD`, persisted by the first
+    * job that reads them — for rows read more than once, or by several
+    * queries, that must not be recomputed or change between reads. A
+    * lost block is recomputed from `df`'s plan. Free it with [[release]],
+    * or leave it to the frame that reads it: ContextCleaner unpersists
+    * it once that frame is unreachable.
+    *
+    * `fill = true` fills it now, by one job, and the frame reports the
+    * blocks' rows and bytes as its statistics, as a filled cached table
+    * does: for a table many later queries read (a session memo's), whose
+    * joins should broadcast it when it turned out small.
     */
-  def pin(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[SparkSession]
-    val qe = df.queryExecution
-    val rdd = qe.toRdd.map(_.copy()).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Dataset.ofRows(spark, LogicalRDD(qe.analyzed.output, rdd)(spark))
-  }
+  def pin(df: DataFrame, fill: Boolean = false): DataFrame = materialize(df, fence = false, fill)
 
-  /** Hash-partition `df` by `keys` into `numParts` partitions,
-    * eagerly checkpoint the result (local blocks, or reliable files
-    * under `spark.graft.checkpoint.reliable=true`), and return a
-    * DataFrame whose plan ADVERTISES that partitioning (what
-    * `localCheckpoint(true)` would do if AQE did not erase it). Rows
-    * are copied before caching (UnsafeRow buffers are reused
-    * per-task) — the same discipline as `Dataset.checkpoint`.
+  /** [[pin]] for an RDD: `rdd` itself, persisted at [[Level]] by the
+    * first job that reads it. Free it with [[release]].
+    */
+  def pin[T](rdd: RDD[T]): RDD[T] = rdd.persist(Level)
+
+  /** Hash-partition `df` by `keys` into `numParts` partitions and fence
+    * the result, advertising that partitioning (what
+    * `localCheckpoint(true)` would do if AQE did not erase it).
     */
   def checkpointHashPartitioned(df: DataFrame, numParts: Int,
                                 keys: String*): DataFrame = {
     require(keys.nonEmpty, "need at least one partitioning key")
-    val parted = df.repartition(numParts, keys.map(df.col): _*)
-    val spark = parted.sparkSession.asInstanceOf[SparkSession]
-    val qe = parted.queryExecution
-    val rdd: RDD[InternalRow] = qe.toRdd.map(_.copy())
-    if (reliableMode(spark)) {
-      ensureCheckpointDir(spark)
-      // persist BEFORE checkpointing: the post-job checkpoint write
-      // then reads the cached blocks instead of recomputing the
-      // repartition, and healthy-path consumers keep block-speed reads
-      rdd.persist(fenceLevelOverride(spark)
-        .getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      rdd.checkpoint()
-    } else {
-      // persist-before-mark: localCheckpoint() keeps a pre-set level
-      // (adding the disk flag it requires), so the override flows
-      // through; unset, localCheckpoint applies its own default
-      fenceLevelOverride(spark).foreach(rdd.persist(_))
-      rdd.localCheckpoint()
-    }
-    // materialize NOW so every consumer reuses the blocks — as a named
-    // SQL execution so observations on `df` complete (see
-    // materializeAsAction)
-    materializeAsAction(qe, "checkpointHashPartitioned", rdd)
-    val output = qe.analyzed.output
-    val keyAttrs = keys.map { k =>
-      output.find(_.name == k).getOrElse(
-        throw new IllegalArgumentException(
-          s"partition key '$k' not in ${output.map(_.name).mkString(", ")}"))
-    }
-    Dataset.ofRows(spark,
-      LogicalRDD(output, rdd, HashPartitioning(keyAttrs, numParts))(spark))
+    materialize(df.repartition(numParts, keys.map(df.col): _*), fence = true,
+      partitioning = Some((numParts, keys)))
   }
 
-  /** Unpersist the checkpoint blocks behind a DataFrame produced by
-    * [[checkpointHashPartitioned]] or `localCheckpoint` — for the
-    * INTERMEDIATE tables of an iterative operator (superseded fences,
-    * the edge layout once the result is materialized) — or the blocks
-    * of a [[pin]] after its last read. Without this,
+  /** Unpersist the blocks behind a fence — for the INTERMEDIATE
+    * tables of an iterative operator (superseded fences, the edge
+    * layout once the result is materialized) — or behind a [[pin]]
+    * after its last read. Without this,
     * every invocation leaks its checkpoint blocks into the block
     * manager for the session's lifetime: repeated bench passes over
     * the graph lane accumulated gigabytes of dead fence/edge blocks,
@@ -240,7 +226,7 @@ object CheckpointOps {
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case l: LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
+        release(l.rdd)
         // reliable fences also leave checkpoint FILES; a superseded
         // iteration fence must delete them or a 100-round loop leaves
         // 100 corpus-sized file sets under the checkpoint dir
@@ -250,6 +236,9 @@ object CheckpointOps {
         }
       case _ => ()
     }
+
+  /** Unpersist a pinned RDD ([[pin]]), or the blocks of a fence's RDD. */
+  def release(rdd: RDD[_]): Unit = rdd.unpersist(blocking = false)
 
   /** The RDD ids of the fences `ds` reads: a fence's own id, or every
     * fence under a lazy plan built on fences.

@@ -222,4 +222,25 @@ class DedupSpec extends SparkSpec {
     assert(rows.values.exists(_._2 == 0L), "every doc duplicated? fixture broken")
   }
 
+  test("dd_dup_profile: a failing level cancels the others and releases every fence") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // doc 2's null token lies only in level-4 windows (it has 5 tokens,
+    // fewer than 8): level 4 fails, levels 8-64 would succeed
+    val long = Seq.tabulate(80)(i => s"w${i % 9}")
+    val tokens = Seq((1L, long), (2L, Seq("a", "b", null, "d", "e")), (3L, long))
+      .toDF("doc_id", "toks")
+    def persisted() = sc.getPersistentRDDs.keySet.toSet
+    val before = persisted()
+    val e = intercept[Exception](Dedup.dupProfile(tokens))
+    assert(!e.getMessage.toLowerCase.contains("cancel"), s"not the first error: ${e.getMessage}")
+    drainListenerBus()
+    assert(sc.statusTracker.getActiveJobIds.isEmpty, "a level's job outlived the failure")
+    assert(persisted() == before, s"left persisted: ${persisted() -- before}")
+    // a level still running after the throw would fence later
+    Thread.sleep(1000)
+    drainListenerBus()
+    assert(sc.statusTracker.getActiveJobIds.isEmpty && persisted() == before,
+      s"left persisted: ${persisted() -- before}")
+  }
 }

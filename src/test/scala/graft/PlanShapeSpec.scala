@@ -100,13 +100,17 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("native text-hash kernels run inside WholeStageCodegen") {
+    // dd_minhash_lsh reads the pinned verified pairs: its minhashes run
+    // in the candidate plan that fills the pin
     Seq("dd_minhash_lsh" -> "minhash16", "dd_simhash" -> "simhash60").foreach {
       case (q, fn) =>
-        val df = Registry.byName(q).run(spark, sf)
+        val df =
+          if (q == "dd_minhash_lsh") graft.operators.Dedup.minhashCandidates(spark, sf)
+          else Registry.byName(q).run(spark, sf)
         val codegen = df.queryExecution.explainString(
           org.apache.spark.sql.execution.CodegenMode)
         assert(codegen.contains("WholeStageCodegen"), s"$q has no codegen stage")
-        assert(plan(q).contains(fn), s"$q does not use $fn")
+        assert(df.queryExecution.executedPlan.toString.contains(fn), s"$q does not use $fn")
     }
   }
 
@@ -532,16 +536,33 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("embed64"))
   }
 
-  test("ev_stickiness: one corpus pass — both counts read the cached distinct triples") {
-    val p = plan("ev_stickiness")
-    // DAU and WAU must both consume the persisted (week, day, user)
-    // distinct — two InMemoryTableScans over ONE InMemoryRelation — so
-    // the raw events table is scanned and exchanged exactly once; the
-    // r8 shape (each branch re-deriving its own count-distinct from the
-    // scan) doubles the corpus shuffle at 100 TB
-    assert(p.split("InMemoryTableScan").length - 1 >= 2,
-      s"branches not reading the cached triples:\n${p.take(900)}")
-    spark.sharedState.cacheManager.clearCache() // don't leak into other pins
+  test("ev_stickiness: one corpus pass — DAU and WAU read one pinned relation") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    // DAU and WAU must both consume the pinned (week, day, user)
+    // distinct — two reads of ONE pinned RDD — so the raw events table
+    // is scanned and exchanged exactly once; the r8 shape (each branch
+    // re-deriving its own count-distinct from the scan) doubles the
+    // corpus shuffle at 100 TB
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) { scans.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val df = try {
+      val df = Registry.byName("ev_stickiness").run(spark, sf)
+      df.write.mode("overwrite").format("noop").save()
+      drainListenerBus()
+      df
+    } finally spark.sparkContext.removeSparkListener(l)
+    val pins = df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(pins.size == 2 && pins.distinct.size == 1,
+      s"branches not reading one pinned relation: $pins\n${df.queryExecution.analyzed}")
+    assert(!df.queryExecution.executedPlan.toString.contains("FileScan"),
+      "a branch scans the events file itself")
+    assert(scans.get == 1, s"the events file was scanned in ${scans.get} stages")
   }
 
   test("q7/q8: every dimension broadcasts — only the fact edge shuffles") {

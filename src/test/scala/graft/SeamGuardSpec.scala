@@ -9,9 +9,10 @@ import scala.util.Using
   * [[TmpDirs]], per-session memos through [[SessionMemo]], the
   * streaming twins start their sinks only through the drain seam in
   * `Streaming.scala`, chunking's constants stay in `Chunker.scala`, the
-  * PDF fixtures serialize only through their one writer, and the vector
+  * PDF fixtures serialize only through their one writer, the vector
   * store is renamed into place and its token written and read only by
-  * `ChunkStore`'s commit and token reader.
+  * `ChunkStore`'s commit and token reader, and every materialization
+  * (fence or pin) goes through `CheckpointOps`.
   */
 class SeamGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -89,5 +90,11 @@ class SeamGuardSpec extends AnyFunSuite {
     val owners = hits(store, "readStore(").map(_._2)
     assert(!owners.contains("similaritySearch") && !owners.contains("search"), owners)
     assert(!filesWith("readStore(").contains("Qa.scala"))
+  }
+
+  test("persist/unpersist/StorageLevel only in CheckpointOps; cacheManager nowhere") {
+    for (needle <- Seq(".persist(", ".unpersist(", "StorageLevel"))
+      assert(filesWith(needle) == Set("CheckpointOps.scala"), needle)
+    assert(filesWith("cacheManager").isEmpty)
   }
 }

@@ -12,22 +12,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = () // shared session, never stopped per-suite
 
+  /** Wait until every listener event posted so far has been delivered:
+    * the listener bus is asynchronous, and its drain is spark-private.
+    */
+  protected def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
   /** Spark jobs started while `body` runs. */
   protected def jobsRunBy(body: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    // the listener bus is asynchronous; its drain is spark-private
-    def drain(): Unit = {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     }
-    drain()
+    drainListenerBus()
     sc.addSparkListener(l)
-    try { body; drain() } finally sc.removeSparkListener(l)
+    try { body; drainListenerBus() } finally sc.removeSparkListener(l)
     jobs.get
   }
 }
