@@ -55,23 +55,6 @@ object Fns {
   /** Whitespace word tokens of already-cleaned (single-spaced) text. */
   def tokens(cleaned: Column): Column = split(cleaned, " ")
 
-  /** Dot product with explicit left-to-right double accumulation —
-    * bit-identical to the DuckDB oracle's
-    * `list_sum(list_transform(generate_series(1, n), i -> a[i]::DOUBLE * b[i]::DOUBLE))`.
-    */
-  def dotD(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, v) => acc + v)
-
-  def normD(a: Column): Column = sqrt(dotD(a, a))
-
-  /** Cosine similarity in [-1, 1] (reference `src/vector_store.py:172`:
-    * similarity = 1 - cosine_distance, i.e. plain cosine).
-    */
-  def cosine(a: Column, b: Column): Column = dotD(a, b) / (normD(a) * normD(b))
-
   /** V1 — deterministic hashed-token embedding (64-dim, L2-normalized):
     * the store-side embedding function (reference computes embeddings
     * inside the store, `src/vector_store.py:143-147`). Same bucket
@@ -86,14 +69,4 @@ object Fns {
     val nrm = sqrt(aggregate(transform(counts, x => x * x), lit(0.0), (acc, v) => acc + v))
     when(nrm === 0.0, counts).otherwise(transform(counts, x => x / nrm))
   }
-
-  /** Exact decimal(18,2) sum surfaced as double: order-independent
-    * (decimal addition is associative), so Spark's partial/shuffle
-    * aggregation order vs DuckDB's single-threaded order cannot cause
-    * hash mismatches — unlike a raw double sum.
-    */
-  def moneySum(c: Column): Column = sum(c.cast("decimal(18,2)")).cast("double")
-
-  /** Same idea at 6 fractional digits for already-multiplied amounts. */
-  def moneySum6(c: Column): Column = sum(c.cast("decimal(18,6)")).cast("double")
 }

@@ -1360,7 +1360,6 @@ object Dedup {
         FROM t LEFT JOIN (SELECT * FROM b WHERE rk = 1) b USING (doc_id)"""))
   )
 
-  /** dd_dup_profile's doubling ladder of window lengths (tokens). */
   /** dd_dup_profile over `tokens`, the `(doc_id, toks)` corpus. The
     * tokens feed six consumers (five level postings + the n_tokens
     * scan), so they are fenced once; plain fence, no layout: the
@@ -1430,6 +1429,7 @@ object Dedup {
         "coalesce(dup_windows, 0L) AS dup_windows")
   }
 
+  /** dd_dup_profile's doubling ladder of window lengths (tokens). */
   private[graft] val DupProfileLadder = Seq(4, 8, 16, 32, 64)
 
   // dd_paragraph: 12-token paragraph folds; the planted boilerplate is

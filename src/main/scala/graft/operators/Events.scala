@@ -139,6 +139,137 @@ object Events {
                mu AS mu_micros, sp AS sp_micros, sm AS sm_micros, alarm
         FROM r"""
 
+  // ---- per-key ordered recurrences. Each is written once, as a step
+  // from a key's state before a row (None on the key's first row) to
+  // its state after it, and every use runs through one of two drivers:
+  // [[foldSorted]] for the batch folds below, Streaming's state-store
+  // fold for their streaming twins. A twin therefore cannot drift from
+  // its batch operator. All integer micros; the trend differences can
+  // be NEGATIVE, where DuckDB's `//` truncates toward zero (measured:
+  // (-7)//2 = -3) exactly like Scala's Long `/` — floorDiv would
+  // diverge on every downward-trending key.
+
+  /** α = 0.3 smoothing of `x` into the running level `level`. */
+  private def smooth(x: Long, level: Long): Long = (300L * x + 700L * level) / 1000L
+
+  /** EWMA level `s` and the row's one-step-ahead residual v − s_{t−1}
+    * (0 on a key's first row).
+    */
+  private[graft] final case class Ewma(s: Long, resid: Long)
+
+  private[graft] def ewmaStep(prev: Option[Ewma], v: Long): Ewma = prev match {
+    case None => Ewma(v, 0L)
+    case Some(p) => Ewma(smooth(v, p.s), v - p.s)
+  }
+
+  /** Holt's linear smoothing: level `l` (α = 0.3) and trend `b` (β = 0.2). */
+  private[graft] final case class Holt(l: Long, b: Long)
+
+  private[graft] def holtStep(prev: Option[Holt], v: Long): Holt = prev match {
+    case None => Holt(v, 0L)
+    case Some(p) =>
+      val l = smooth(v, p.l + p.b)
+      Holt(l, (200L * (l - p.l) + 800L * p.b) / 1000L)
+  }
+
+  /** Holt-Winters additive: Holt over the deseasonalized value, plus a
+    * ring of the last m = 24 seasonal indices (γ = 0.1), oldest first —
+    * `ring(0)` is s_{t+1−m}, the index the next step consumes, and
+    * `ring(23)` the one this step wrote. Cold start: an all-zero ring.
+    */
+  private[graft] final case class HoltWinters(holt: Holt, ring: Array[Long])
+
+  private[graft] def holtWintersStep(prev: Option[HoltWinters], v: Long): HoltWinters = {
+    val ring = prev.fold(new Array[Long](24))(_.ring)
+    val h = holtStep(prev.map(_.holt), v - ring(0))
+    val next = java.util.Arrays.copyOfRange(ring, 1, 25)
+    next(23) = (100L * (v - h.l) + 900L * ring(0)) / 1000L
+    HoltWinters(h, next)
+  }
+
+  /** One CUSUM row: the emitted sums and verdict, and the carries the
+    * next step starts from.
+    */
+  private[graft] final case class Cusum(sp: Long, sm: Long, alarm: Boolean, spc: Long, smc: Long)
+
+  private[graft] def cusumNext(prev: Option[Cusum], mu: Long, v: Long): Cusum = {
+    val (sp, sm, alarm, spc, smc) = cusumStep(mu, v, prev.fold(0L)(_.spc), prev.fold(0L)(_.smc))
+    Cusum(sp, sm, alarm, spc, smc)
+  }
+
+  /** SCD2's open dimension row: the current event type, since when, and
+    * its version. A step that changes the version has closed the
+    * previous row at the new row's `from_us`.
+    */
+  private[graft] final case class Scd2Open(event_type: String, from_us: Long, version: Long)
+
+  private[graft] def scd2Step(prev: Option[Scd2Open], eventType: String, tsUs: Long): Scd2Open =
+    prev match {
+      case Some(p) if p.event_type == eventType => p
+      case _ => Scd2Open(eventType, tsUs, prev.fold(1L)(_.version + 1L))
+    }
+
+  /** The batch driver of a per-key recurrence, a SECONDARY-SORT fold:
+    * `in` arrives hash-partitioned on `key` (the caller owns that
+    * exchange), each partition sorts by (key, order…) — the shuffle's
+    * external sort spills, never a heap — and one mapPartitions pass
+    * restarts the state and rn at each key boundary. Unlike a
+    * groupByKey → flatMapGroups fold, which buffers one key's whole
+    * history to sort it, the fold holds O(1) state per key. `emit`
+    * gets the row, its 1-based rn within the key and the state after it.
+    */
+  private[graft] def foldSorted[T, S, U: org.apache.spark.sql.Encoder](
+      in: org.apache.spark.sql.Dataset[T], key: String, order: String*)(keyOf: T => Any)(
+      step: (Option[S], T) => S)(emit: (T, Long, S) => U): org.apache.spark.sql.Dataset[U] =
+    in.sortWithinPartitions(key, order: _*).mapPartitions { it =>
+      var cur: Any = null; var rn = 0L; var st: Option[S] = None
+      it.map { r =>
+        val k = keyOf(r)
+        if (rn == 0L || k != cur) { cur = k; rn = 0L; st = None }
+        val next = step(st, r)
+        st = Some(next); rn += 1L
+        emit(r, rn, next)
+      }
+    }
+
+  /** Integer micros of the events' `value`. */
+  private[graft] val ValueMicros = "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint)"
+
+  /** Events as `(user_id, event_id, ts_us, v)` points, the input of
+    * every per-user fold.
+    */
+  private[graft] def eventPoints(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    events.selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us", s"$ValueMicros AS v")
+
+  /** An event point as the batch folds read it: (user_id, event_id, ts_us, v). */
+  private type Point = (Long, Long, Long, Long)
+
+  /** The events table's points, hash-partitioned on user_id: the
+    * exchange a per-user [[foldSorted]] sorts within.
+    */
+  private def userPoints(spark: org.apache.spark.sql.SparkSession,
+                         dir: String): org.apache.spark.sql.Dataset[Point] = {
+    import spark.implicits._
+    eventPoints(Tables.events(spark, dir)).as[Point]
+      .repartition(org.apache.spark.sql.functions.col("user_id"))
+  }
+
+  /** ev_anomaly's flag over a residual log `(user_id, event_id, rn,
+    * v_micros, resid_micros)`: from each user's second row on, a row
+    * flags when 2|r| > 3·m2, m2 being twice the user's median absolute
+    * residual. 2·median of integers is itself an integer (a+b of the
+    * middle pair), so no float boundary can flip a row cross-engine.
+    */
+  private[graft] def anomalyFlags(resid: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val ew = resid.where("rn >= 2")
+    val scale = ew.groupBy("user_id")
+      .agg(org.apache.spark.sql.functions.expr(
+        "cast(round(2 * percentile(abs(resid_micros), 0.5), 0) AS bigint) AS m2"))
+    ew.join(scale, "user_id")
+      .where("2 * abs(resid_micros) > 3 * m2")
+      .selectExpr("user_id", "event_id", "rn", "v_micros", "resid_micros", "m2")
+  }
+
   /** The hourly per-series bucket table shared by ev_seasonal and
     * ev_acf (series key = event_type, values = integer-micros bucket
     * means): one partial-aggregated corpus scan folding to a
@@ -148,8 +279,7 @@ object Events {
   private[graft] def hourlySeries(spark: org.apache.spark.sql.SparkSession,
                                   dir: String): org.apache.spark.sql.DataFrame =
     Tables.events(spark, dir)
-      .selectExpr("event_type", "unix_micros(ts) div 3600000000L AS hr",
-        "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v")
+      .selectExpr("event_type", "unix_micros(ts) div 3600000000L AS hr", s"$ValueMicros AS v")
       .groupBy("event_type", "hr")
       .agg(
         org.apache.spark.sql.functions.expr("cast(count(*) AS bigint) AS n_events"),
@@ -1088,7 +1218,7 @@ object Events {
         val week = 604800000000L
         val purchases = ev.where("event_type = 'purchase'")
           .selectExpr("user_id AS pu", "event_id AS p_id", "unix_micros(ts) AS p_us",
-            "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v_micros",
+            s"$ValueMicros AS v_micros",
             s"explode(array(unix_micros(ts) div ${week}L - 1L, unix_micros(ts) div ${week}L)) AS wk")
         val touches = ev.where("event_type <> 'purchase'")
           .selectExpr("user_id AS tu", "event_id AS t_id", "event_type AS t_type",
@@ -1156,39 +1286,20 @@ object Events {
     // --------------------------- integer EWMA (per-user smoothing)
     // Exponential smoothing over each user's value series — the
     // baseline forecasting/anomaly primitive. The recurrence
-    // s_t = (300·v_t + 700·s_{t−1}) div 1000 (α = 0.3) is inherently
-    // sequential, so it runs as a SECONDARY-SORT streaming fold:
-    // repartition on user_id, sortWithinPartitions by
-    // (user_id, ts_us, event_id), then a single-pass mapPartitions
-    // that resets the accumulator at each user boundary. Unlike a
-    // groupByKey → flatMapGroups fold (which must buffer one user's
-    // whole history on the heap to sort it), the shuffle's external
-    // sort spills to disk, and the fold holds O(1) state — a
-    // hyper-active user at 100 TB streams through instead of
-    // materializing. All arithmetic is integer micros — the
-    // fixed-order recurrence is bit-identical to the oracle's
-    // sequential replay, which recomputes it as a DuckDB RECURSIVE CTE
-    // stepping rn → rn+1 per user: an independent implementation of
-    // the same recurrence.
+    // s_t = (300·v_t + 700·s_{t−1}) div 1000 (α = 0.3, [[ewmaStep]]) is
+    // inherently sequential, so it runs through the secondary-sort
+    // driver [[foldSorted]] over a user_id exchange, ordered by
+    // (ts_us, event_id): a hyper-active user at 100 TB streams through
+    // the spilling shuffle sort instead of materializing. The oracle
+    // replays the recurrence as a DuckDB RECURSIVE CTE stepping
+    // rn → rn+1 per user: an independent implementation of it.
     QueryDef(
       "ev_ewma",
       (spark, dir) => {
         import spark.implicits._
-        Tables.events(spark, dir)
-          .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
-            "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v")
-          .as[(Long, Long, Long, Long)]
-          .repartition(org.apache.spark.sql.functions.col("user_id"))
-          .sortWithinPartitions("user_id", "ts_us", "event_id")
-          .mapPartitions { it =>
-            var cur = Long.MinValue; var s = 0L; var rn = 0L
-            var first = true
-            it.map { case (uid, eid, _, v) =>
-              if (first || uid != cur) { cur = uid; s = v; rn = 1L; first = false }
-              else { s = (300L * v + 700L * s) / 1000L; rn += 1L }
-              (uid, eid, rn, v, s)
-            }
-          }
+        foldSorted(userPoints(spark, dir), "user_id", "ts_us", "event_id")(_._1)(
+          (p: Option[Ewma], r: Point) => ewmaStep(p, r._4))(
+          (r, rn, e) => (r._1, r._2, rn, r._4, e.s))
           .toDF("user_id", "event_id", "rn", "v_micros", "ewma_micros")
       },
       Some(ewmaOracleSql)),
@@ -1198,38 +1309,17 @@ object Events {
     // carries a TREND term: l_t = α·v + (1−α)(l+b),
     // b_t = β·(l_t − l_{t−1}) + (1−β)·b, forecast = l_t + b_t — the
     // double-exponential smoother capacity planners run per entity.
-    // Integer micros with α = 0.3, β = 0.2; the trend difference can
-    // be NEGATIVE, where division semantics BITE: DuckDB's `//`
-    // truncates toward zero (measured: (-7)//2 = -3), exactly like
-    // Scala's Long `/` — so the fold uses plain `/`, and floorDiv
-    // (which rounds toward -inf) would diverge on every
-    // downward-trending user. Same scale shape as ev_ewma: one
-    // user-keyed repartition + secondary sort, O(1) state per user in
-    // a streaming partition fold — no window buffers, spill-safe; the
-    // oracle replays the recurrence as a recursive CTE.
+    // Integer micros with α = 0.3, β = 0.2 ([[holtStep]]; the trend
+    // difference can be negative, where its truncating division
+    // matters). Same driver and exchange as ev_ewma; the oracle
+    // replays the recurrence as a recursive CTE.
     QueryDef(
       "ev_holt",
       (spark, dir) => {
         import spark.implicits._
-        Tables.events(spark, dir)
-          .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
-            "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v")
-          .as[(Long, Long, Long, Long)]
-          .repartition(org.apache.spark.sql.functions.col("user_id"))
-          .sortWithinPartitions("user_id", "ts_us", "event_id")
-          .mapPartitions { it =>
-            var cur = Long.MinValue; var l = 0L; var b = 0L; var rn = 0L
-            var first = true
-            it.map { case (uid, eid, _, v) =>
-              if (first || uid != cur) { cur = uid; l = v; b = 0L; rn = 1L; first = false }
-              else {
-                val lNew = (300L * v + 700L * (l + b)) / 1000L
-                b = (200L * (lNew - l) + 800L * b) / 1000L
-                l = lNew; rn += 1L
-              }
-              (uid, eid, rn, v, l, b, l + b)
-            }
-          }
+        foldSorted(userPoints(spark, dir), "user_id", "ts_us", "event_id")(_._1)(
+          (p: Option[Holt], r: Point) => holtStep(p, r._4))(
+          (r, rn, h) => (r._1, r._2, rn, r._4, h.l, h.b, h.l + h.b))
           .toDF("user_id", "event_id", "rn", "v_micros",
             "level_micros", "trend_micros", "forecast_micros")
       },
@@ -1248,43 +1338,25 @@ object Events {
     // seasonal ring all-zero — the first day's indices learn from 0,
     // exactly what the oracle's anchor list replays. One-step-ahead
     // forecast = l + b + s_{t+1−m} (the ring slot the NEXT step will
-    // consume). Runs per event_type over the shared hourly reduction:
-    // the corpus folds to (type, hour) rows in one partial-aggregated
-    // exchange, then the recurrence is an O(1)-state partition fold —
-    // 26 longs of state (l, b, 24-slot ring) per type regardless of
-    // series length, spill-safe because ordering comes from the
-    // exchange's sortWithinPartitions, never a heap. The oracle
+    // consume; [[holtWintersStep]]). Runs per event_type over the
+    // shared hourly reduction: the corpus folds to (type, hour) rows in
+    // one partial-aggregated exchange, then [[foldSorted]] folds each
+    // type's series — 26 longs of state (l, b, 24-slot ring) per type
+    // regardless of series length. The oracle
     // replays the recurrence as a recursive CTE carrying the ring as
     // a LIST column (s[1] = s_{t−m}; append-shift per step).
     QueryDef(
       "ev_holt_winters",
       (spark, dir) => {
         import spark.implicits._
-        hourlySeries(spark, dir)
+        val series = hourlySeries(spark, dir)
           .select("event_type", "hr", "vb")
           .as[(String, Long, Long)]
           .repartition(org.apache.spark.sql.functions.col("event_type"))
-          .sortWithinPartitions("event_type", "hr")
-          .mapPartitions { it =>
-            var cur: String = null
-            var l = 0L; var b = 0L; var rn = 0L
-            var ring: Array[Long] = null
-            it.map { case (et, hr, v) =>
-              if (cur == null || et != cur) {
-                cur = et; ring = new Array[Long](24); l = v; b = 0L; rn = 1L
-              } else {
-                rn += 1L
-                val sOld = ring(((rn - 1L) % 24L).toInt)
-                val lNew = (300L * (v - sOld) + 700L * (l + b)) / 1000L
-                b = (200L * (lNew - l) + 800L * b) / 1000L
-                l = lNew
-              }
-              val idx = ((rn - 1L) % 24L).toInt
-              val sNew = (100L * (v - l) + 900L * ring(idx)) / 1000L
-              ring(idx) = sNew
-              (et, hr, rn, v, l, b, sNew, l + b + ring((rn % 24L).toInt))
-            }
-          }
+        foldSorted(series, "event_type", "hr")(_._1)(
+          (p: Option[HoltWinters], r: (String, Long, Long)) => holtWintersStep(p, r._3))(
+          (r, rn, w) => (r._1, r._2, rn, r._3, w.holt.l, w.holt.b, w.ring(23),
+            w.holt.l + w.holt.b + w.ring(0)))
           .toDF("event_type", "hr", "rn", "vb_micros", "level_micros",
             "trend_micros", "season_micros", "forecast_micros")
       },
@@ -1345,47 +1417,20 @@ object Events {
     // v_t − s_{t−1} measures surprise. A row flags when its absolute
     // residual exceeds 3× the user's own median absolute residual —
     // per-user robust scale, so one user's volatility never sets
-    // another's threshold. All integer-exact: residuals are micros,
-    // and the 3×median compare is 2|r| > 3·(2·median) where 2·median
-    // of integers is itself an integer (a+b of the middle pair), so
-    // no float boundary can flip a row cross-engine.
-    // Scale shape: the same secondary-sort streaming fold as ev_ewma
-    // (O(1) state, spill-safe shuffle sort) emits residuals; the
-    // per-user median is a user-bounded percentile aggregate joined
-    // back on the fold's own user_id key; only the flagged tail
-    // leaves the executor.
+    // another's threshold ([[anomalyFlags]], shared with st_anomaly).
+    // Scale shape: ev_ewma's fold (the same [[ewmaStep]] state carries
+    // the residual) emits residuals; the per-user median is a
+    // user-bounded percentile aggregate joined back on the fold's own
+    // user_id key; only the flagged tail leaves the executor.
     QueryDef(
       "ev_anomaly",
       (spark, dir) => {
         import spark.implicits._
-        val ew = Tables.events(spark, dir)
-          .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
-            "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v")
-          .as[(Long, Long, Long, Long)]
-          .repartition(org.apache.spark.sql.functions.col("user_id"))
-          .sortWithinPartitions("user_id", "ts_us", "event_id")
-          .mapPartitions { it =>
-            var cur = Long.MinValue; var s = 0L; var rn = 0L
-            var first = true
-            it.map { case (uid, eid, _, v) =>
-              if (first || uid != cur) {
-                cur = uid; s = v; rn = 1L; first = false
-                (uid, eid, rn, v, 0L)
-              } else {
-                val resid = v - s
-                s = (300L * v + 700L * s) / 1000L; rn += 1L
-                (uid, eid, rn, v, resid)
-              }
-            }
-          }
-          .toDF("user_id", "event_id", "rn", "v_micros", "resid_micros")
-          .where("rn >= 2")
-        val scale = ew.groupBy("user_id")
-          .agg(org.apache.spark.sql.functions.expr(
-            "cast(round(2 * percentile(abs(resid_micros), 0.5), 0) AS bigint) AS m2"))
-        ew.join(scale, "user_id")
-          .where("2 * abs(resid_micros) > 3 * m2")
-          .selectExpr("user_id", "event_id", "rn", "v_micros", "resid_micros", "m2")
+        anomalyFlags(
+          foldSorted(userPoints(spark, dir), "user_id", "ts_us", "event_id")(_._1)(
+            (p: Option[Ewma], r: Point) => ewmaStep(p, r._4))(
+            (r, rn, e) => (r._1, r._2, rn, r._4, e.resid))
+            .toDF("user_id", "event_id", "rn", "v_micros", "resid_micros"))
       },
       Some(anomalyOracleSql)),
 
@@ -1552,35 +1597,22 @@ object Events {
     // another's threshold. Two-pass by construction (μ first, then
     // the fold) — the window computing μ rides the SAME user-keyed
     // exchange the fold sorts on, so the plan pays one shuffle total.
-    // Scale shape: the ev_ewma secondary-sort discipline — hash
-    // exchange on user_id, spill-safe sortWithinPartitions, O(1)
-    // state per user in a single mapPartitions pass; the recurrence
-    // is the shared cusumStep, replayed independently by the oracle's
-    // recursive CTE.
+    // Scale shape: the secondary-sort driver [[foldSorted]] over that
+    // exchange, stepping [[cusumNext]] (the st_cusum twin steps it
+    // through the state-store driver), replayed independently by the
+    // oracle's recursive CTE.
     QueryDef(
       "ev_cusum",
       (spark, dir) => {
         import spark.implicits._
-        Tables.events(spark, dir)
-          .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
-            "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v")
+        val withMu = eventPoints(Tables.events(spark, dir))
           .selectExpr("user_id", "event_id", "ts_us", "v",
             """(sum(v) OVER (PARTITION BY user_id))
                div (count(v) OVER (PARTITION BY user_id)) AS mu""")
           .as[(Long, Long, Long, Long, Long)]
-          .sortWithinPartitions("user_id", "ts_us", "event_id")
-          .mapPartitions { it =>
-            var cur = Long.MinValue; var spc = 0L; var smc = 0L; var rn = 0L
-            var first = true
-            it.map { case (uid, eid, _, v, mu) =>
-              if (first || uid != cur) {
-                cur = uid; spc = 0L; smc = 0L; rn = 0L; first = false
-              }
-              val (sp, sm, alarm, sp2, sm2) = cusumStep(mu, v, spc, smc)
-              spc = sp2; smc = sm2; rn += 1L
-              (uid, eid, rn, v, mu, sp, sm, alarm)
-            }
-          }
+        foldSorted(withMu, "user_id", "ts_us", "event_id")(_._1)(
+          (p: Option[Cusum], r: (Long, Long, Long, Long, Long)) => cusumNext(p, r._5, r._4))(
+          (r, rn, c) => (r._1, r._2, rn, r._4, r._5, c.sp, c.sm, c.alarm))
           .toDF("user_id", "event_id", "rn", "v_micros", "mu_micros",
             "sp_micros", "sm_micros", "alarm")
       },
@@ -1820,8 +1852,7 @@ object Events {
       "ev_ab_mannwhitney",
       (spark, dir) =>
         Tables.events(spark, dir)
-          .selectExpr("event_type",
-            "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v",
+          .selectExpr("event_type", s"$ValueMicros AS v",
             "CASE WHEN user_id % 2 = 0 THEN 1L ELSE 0L END AS ia")
           .groupBy("event_type", "v")
           .agg(

@@ -1,11 +1,14 @@
 package graft.streaming
 
 import graft.Fns
+import graft.operators.Events.{anomalyFlags, cusumNext, eventPoints, ewmaStep, holtStep, scd2Step,
+  Cusum, Ewma, Holt, Scd2Open}
 import org.apache.spark.sql.graft.CheckpointOps.FenceSyntax
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import scala.reflect.ClassTag
 
 /** Structured Streaming surface — the scale-native analog of the
   * reference's resumable batch ingest (SURVEY.md §2.6 P1/P2: the
@@ -373,58 +376,78 @@ object Streaming {
 
   case class SemVec(vec_id: Long, cluster_id: Long, embedding: Seq[Float])
   case class SemVerdict(vec_id: Long, cluster_id: Long, kept: Boolean)
-  case class EwmaPoint(user_id: Long, event_id: Long, ts_us: Long, v: Long)
+  /** The key and order fields a per-user state-store fold reads. */
+  trait UserPoint { def user_id: Long; def event_id: Long; def ts_us: Long }
+  case class EwmaPoint(user_id: Long, event_id: Long, ts_us: Long, v: Long) extends UserPoint
   case class EwmaScore(user_id: Long, event_id: Long, rn: Long,
                        v_micros: Long, ewma_micros: Long)
   case class HoltScore(user_id: Long, event_id: Long, rn: Long,
                        v_micros: Long, level_micros: Long,
                        trend_micros: Long, forecast_micros: Long)
   case class CusumPoint(user_id: Long, event_id: Long, ts_us: Long,
-                        v: Long, mu: Long)
+                        v: Long, mu: Long) extends UserPoint
   case class CusumRow(user_id: Long, event_id: Long, rn: Long,
                       v_micros: Long, mu_micros: Long, sp_micros: Long,
                       sm_micros: Long, alarm: Boolean)
   case class Scd2Point(user_id: Long, event_id: Long, event_type: String,
-                       ts_us: Long)
+                       ts_us: Long) extends UserPoint
   case class Scd2Row(user_id: Long, event_type: String, valid_from_us: Long,
                      valid_to_us: Long, version: Long)
 
-  /** Streaming EWMA: each user's smoothing state is TWO longs (count,
-    * current s) in the state store — the recurrence carries across
-    * microbatches, so a forecasting baseline stays live over an
-    * unbounded stream with O(users) state. Same ordered-arrival
-    * contract as [[semanticDedupStream]]: batches sort by
-    * (ts_us, event_id) inside each group, so the verdict stream equals
-    * the batch ev_ewma when events arrive time-ordered per user across
-    * batches (AvailableNow over one staged file trivially satisfies
-    * it; a production deployment gets it from per-key ordered sources
-    * or a watermarked pre-sort).
+  /** One group's micro-batch rows, sorted in place by `order`: the one
+    * in-function sort of the state-store folds. Streaming forbids a Sort
+    * operator before groupByKey (UnsupportedOperationChecker), so the
+    * batch folds' secondary-sort shuffle is not available here. The
+    * buffer is one key's rows in ONE micro-batch (bounded by the
+    * trigger, never the stream's history, which lives in the state).
+    */
+  private def sortedBatch[P <: AnyRef : ClassTag, K: Ordering](batch: Iterator[P])(
+      order: P => K): Array[P] = {
+    val buf = batch.toArray
+    java.util.Arrays.sort(buf, Ordering.by(order))
+    buf
+  }
+
+  /** The state-store driver of a per-user recurrence, the streaming
+    * side of [[graft.operators.Events.foldSorted]]: groupByKey(user_id)
+    * → flatMapGroupsWithState(Append, NoTimeout). Each micro-batch of a
+    * user sorts by (ts_us, event_id); the (rn, state) pair is read
+    * once, every row steps it, and it is written once, so a user costs
+    * one rn plus one state however long the stream runs. `emit` gets
+    * the row, its 1-based rn and the state before and after it.
+    *
+    * CONTRACT — ordered arrival: the drained output equals the batch
+    * fold when events arrive time-ordered per user across micro-batches
+    * (AvailableNow over one staged file trivially satisfies it; a
+    * production deployment gets it from per-key ordered sources or a
+    * watermarked pre-sort).
+    */
+  private def foldGroups[P <: UserPoint : ClassTag, S, O: Encoder](src: Dataset[P])(
+      step: (Option[S], P) => S)(emit: (P, Long, Option[S], S) => IterableOnce[O])(
+      implicit stateEncoder: Encoder[(Long, S)]): Dataset[O] =
+    src.groupByKey(_.user_id)(Encoders.scalaLong)
+      .flatMapGroupsWithState[(Long, S), O](OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_, batch, state) =>
+          var (rn, st) = state.getOption.fold((0L, Option.empty[S]))(p => (p._1, Some(p._2)))
+          val out = sortedBatch(batch)(r => (r.ts_us, r.event_id)).iterator.flatMap { r =>
+            val next = step(st, r)
+            rn += 1L
+            val rows = emit(r, rn, st, next)
+            st = Some(next)
+            rows
+          }.toVector
+          state.update((rn, st.get))
+          out.iterator
+      }
+
+  /** Streaming EWMA ([[graft.operators.Events.ewmaStep]]): the state is
+    * an rn, a level and a residual per user, so a forecasting baseline
+    * stays live over an unbounded stream with O(users) state.
     */
   def ewmaStream(spark: SparkSession, src: DataFrame): Dataset[EwmaScore] = {
     import spark.implicits._
-    src.as[EwmaPoint]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long), EwmaScore](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid, batch, state) =>
-          var (n, s) = state.getOption.getOrElse((0L, 0L))
-          // The in-function sort buffers ONE user's rows in ONE
-          // micro-batch (bounded by the trigger, never the stream's
-          // history — that lives in the two-long state). Streaming
-          // forbids a Sort operator pre-groupByKey
-          // (UnsupportedOperationChecker), so the batch ev_ewma's
-          // secondary-sort shuffle is not available here; an in-place
-          // array sort keeps the unavoidable buffer to a single copy.
-          val buf = batch.toArray
-          java.util.Arrays.sort(buf, Ordering.by((r: EwmaPoint) => (r.ts_us, r.event_id)))
-          val out = buf.map { r =>
-            s = if (n == 0L) r.v else (300L * r.v + 700L * s) / 1000L
-            n += 1L
-            EwmaScore(uid, r.event_id, n, r.v, s)
-          }
-          state.update((n, s))
-          out.iterator
-      }
+    foldGroups(src.as[EwmaPoint])((p: Option[Ewma], r: EwmaPoint) => ewmaStep(p, r.v))(
+      (r, rn, _, e) => Some(EwmaScore(r.user_id, r.event_id, rn, r.v, e.s)))
   }
 
   final case class FunnelEvent(user_id: Long, event_type: String, ts: java.sql.Timestamp)
@@ -465,9 +488,7 @@ object Streaming {
           } else {
             var st = state.getOption.getOrElse(FunnelState(0L, 0L, 0L, closed = false))
             val out = List.newBuilder[FunnelHit]
-            val buf = batch.toArray
-            java.util.Arrays.sort(buf, Ordering.by((e: FunnelEvent) => micros(e.ts)))
-            for (e <- buf if !st.closed) {
+            for (e <- sortedBatch(batch)(e => micros(e.ts)) if !st.closed) {
               val ts = micros(e.ts)
               e.event_type match {
                 case "signup" if st.t1 == 0L =>
@@ -495,98 +516,44 @@ object Streaming {
   final case class EwmaResid(user_id: Long, event_id: Long, rn: Long,
                              v_micros: Long, resid_micros: Long)
 
-  /** [[ewmaStream]]'s residual twin: same (count, s) two-long state,
-    * but each row emits the ONE-STEP-AHEAD forecast residual
-    * v_t − s_{t−1} (0 for a user's first row) instead of the smoothed
-    * value — the live input to anomaly flagging. Kept separate from
-    * EwmaScore so the st_ewma gate schema stays frozen.
+  /** [[ewmaStream]]'s residual twin: the same state, but each row emits
+    * the ONE-STEP-AHEAD forecast residual v_t − s_{t−1} (0 for a user's
+    * first row) instead of the smoothed value — the live input to
+    * anomaly flagging. Kept separate from EwmaScore so the st_ewma gate
+    * schema stays frozen.
     */
   def ewmaResidStream(spark: SparkSession, src: DataFrame): Dataset[EwmaResid] = {
     import spark.implicits._
-    src.as[EwmaPoint]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long), EwmaResid](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid, batch, state) =>
-          var (n, s) = state.getOption.getOrElse((0L, 0L))
-          val buf = batch.toArray
-          java.util.Arrays.sort(buf, Ordering.by((r: EwmaPoint) => (r.ts_us, r.event_id)))
-          val out = buf.map { r =>
-            val resid = if (n == 0L) 0L else r.v - s
-            s = if (n == 0L) r.v else (300L * r.v + 700L * s) / 1000L
-            n += 1L
-            EwmaResid(uid, r.event_id, n, r.v, resid)
-          }
-          state.update((n, s))
-          out.iterator
-      }
+    foldGroups(src.as[EwmaPoint])((p: Option[Ewma], r: EwmaPoint) => ewmaStep(p, r.v))(
+      (r, rn, _, e) => Some(EwmaResid(r.user_id, r.event_id, rn, r.v, e.resid)))
   }
 
-  /** Streaming Holt: level + trend per user — THREE longs of state
-    * (count, level, trend) in the state store, the trend-aware sibling
-    * of [[ewmaStream]] with the identical ordered-arrival contract and
-    * the identical truncating integer division as the batch ev_holt
-    * (DuckDB `//` truncates toward zero, matching Long `/`).
+  /** Streaming Holt ([[graft.operators.Events.holtStep]]): level +
+    * trend per user, the trend-aware sibling of [[ewmaStream]].
     */
   def holtStream(spark: SparkSession, src: DataFrame): Dataset[HoltScore] = {
     import spark.implicits._
-    src.as[EwmaPoint]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long, Long), HoltScore](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid, batch, state) =>
-          var (n, l, b) = state.getOption.getOrElse((0L, 0L, 0L))
-          val buf = batch.toArray
-          java.util.Arrays.sort(buf, Ordering.by((r: EwmaPoint) => (r.ts_us, r.event_id)))
-          val out = buf.map { r =>
-            if (n == 0L) { l = r.v; b = 0L }
-            else {
-              val lNew = (300L * r.v + 700L * (l + b)) / 1000L
-              b = (200L * (lNew - l) + 800L * b) / 1000L
-              l = lNew
-            }
-            n += 1L
-            HoltScore(uid, r.event_id, n, r.v, l, b, l + b)
-          }
-          state.update((n, l, b))
-          out.iterator
-      }
+    foldGroups(src.as[EwmaPoint])((p: Option[Holt], r: EwmaPoint) => holtStep(p, r.v))(
+      (r, rn, _, h) => Some(HoltScore(r.user_id, r.event_id, rn, r.v, h.l, h.b, h.l + h.b)))
   }
 
-  /** Streaming CUSUM change-point monitor: per-user state is THREE
-    * longs (count, S⁺ carry, S⁻ carry) in the state store; the μ each
-    * step needs rides IN THE ROW (a stream-static join against the
-    * user-mean table — the reference-profile side of a monitoring
-    * deployment, recomputed offline and joined to the live feed). The
-    * recurrence itself is the batch operator's [[graft.operators
-    * .Events.cusumStep]], shared so the twins cannot diverge. Same
-    * ordered-arrival contract as [[ewmaStream]].
+  /** Streaming CUSUM change-point monitor
+    * ([[graft.operators.Events.cusumNext]], the batch ev_cusum's step):
+    * the state is the S⁺/S⁻ carries per user; the μ each step needs
+    * rides IN THE ROW (a stream-static join against the user-mean table
+    * — the reference-profile side of a monitoring deployment,
+    * recomputed offline and joined to the live feed).
     */
   def cusumStream(spark: SparkSession, src: Dataset[CusumPoint]): Dataset[CusumRow] = {
     import spark.implicits._
-    src
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long, Long), CusumRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid, batch, state) =>
-          var (n, spc, smc) = state.getOption.getOrElse((0L, 0L, 0L))
-          val buf = batch.toArray
-          java.util.Arrays.sort(buf, Ordering.by((r: CusumPoint) => (r.ts_us, r.event_id)))
-          val out = buf.map { r =>
-            val (sp, sm, alarm, sp2, sm2) =
-              graft.operators.Events.cusumStep(r.mu, r.v, spc, smc)
-            spc = sp2; smc = sm2; n += 1L
-            CusumRow(uid, r.event_id, n, r.v, r.mu, sp, sm, alarm)
-          }
-          state.update((n, spc, smc))
-          out.iterator
-      }
+    foldGroups(src)((p: Option[Cusum], r: CusumPoint) => cusumNext(p, r.mu, r.v))(
+      (r, rn, _, c) => Some(CusumRow(r.user_id, r.event_id, rn, r.v, r.mu, c.sp, c.sm, c.alarm)))
   }
 
   /** Streaming SemDeDup (see the st_semdedup QueryDef): per-cluster
     * keep/drop state over a centroid-assigned embedding stream. The
-    * cosine mirrors the native CosineSim fold exactly (per-element
-    * float→double, one xy/xx/yy accumulation pass) so the streaming
+    * cosine is the native CosineSim fold itself, over each vector
+    * widened to doubles once as it enters the state, so the streaming
     * verdict can never disagree with the batch expression at θ.
     *
     * CONTRACT — ordered arrival across microbatches: verdicts are
@@ -608,69 +575,44 @@ object Streaming {
                           centroids: DataFrame): Dataset[SemVerdict] = {
     import spark.implicits._
     val theta = graft.operators.Curation.SemTheta.toDouble
-    def cos(a: Seq[Float], b: Seq[Float]): Double = {
-      val n = math.min(a.length, b.length)
-      var xy = 0.0; var xx = 0.0; var yy = 0.0
-      var i = 0
-      while (i < n) {
-        val xv = a(i).toDouble; val yv = b(i).toDouble
-        xy += xv * yv; xx += xv * xv; yy += yv * yv
-        i += 1
-      }
-      xy / (math.sqrt(xx) * math.sqrt(yy))
-    }
     graft.operators.Knn.assignToCentroids(assignedSrc, centroids)
       .select("vec_id", "cluster_id", "embedding")
       .as[SemVec]
       .groupByKey(_.cluster_id)
-      .flatMapGroupsWithState[List[(Long, Seq[Float])], SemVerdict](
+      .flatMapGroupsWithState[List[(Long, Array[Double])], SemVerdict](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (cluster, batch, state) =>
           var seen = state.getOption.getOrElse(Nil)
           val out = scala.collection.mutable.ListBuffer.empty[SemVerdict]
           batch.toSeq.sortBy(_.vec_id).foreach { v =>
+            val x = v.embedding.iterator.map(_.toDouble).toArray
             val dropped = seen.exists { case (id, e) =>
-              id < v.vec_id && cos(e, v.embedding) >= theta
+              id < v.vec_id &&
+                graft.plans.CosineSim.fold(e, 0, x, 0, math.min(e.length, x.length)) >= theta
             }
             out += SemVerdict(v.vec_id, cluster, !dropped)
-            seen = (v.vec_id, v.embedding) :: seen
+            seen = (v.vec_id, x) :: seen
           }
           state.update(seen)
           out.iterator
       }
   }
 
-  /** Streaming SCD Type-2 maintenance: per-user state is the OPEN
+  /** Streaming SCD Type-2 maintenance
+    * ([[graft.operators.Events.scd2Step]]): per-user state is the OPEN
     * dimension row — (current type, valid_from, version), one string +
     * two longs however long the stream runs. A version row is emitted
     * exactly when the NEXT change closes it, so Append mode never
     * revises; the still-open tail is closed by a per-user far-future
     * sentinel event (the st_sessionize watermark-drag trick, pointed
     * at group state instead of a session window) whose close rows the
-    * batch side rewrites to the NULL-terminated open row. Same
-    * ordered-arrival contract as [[ewmaStream]].
+    * batch side rewrites to the NULL-terminated open row.
     */
   def scd2Stream(spark: SparkSession, src: Dataset[Scd2Point]): Dataset[Scd2Row] = {
     import spark.implicits._
-    src
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(String, Long, Long), Scd2Row](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid, batch, state) =>
-          var (cur, from, ver) = state.getOption.getOrElse(("", 0L, 0L))
-          val buf = batch.toArray
-          java.util.Arrays.sort(buf, Ordering.by((r: Scd2Point) => (r.ts_us, r.event_id)))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Scd2Row]
-          buf.foreach { r =>
-            if (ver == 0L) { cur = r.event_type; from = r.ts_us; ver = 1L }
-            else if (r.event_type != cur) {
-              out += Scd2Row(uid, cur, from, r.ts_us, ver)
-              cur = r.event_type; from = r.ts_us; ver += 1L
-            }
-          }
-          state.update((cur, from, ver))
-          out.iterator
-      }
+    foldGroups(src)((p: Option[Scd2Open], r: Scd2Point) => scd2Step(p, r.event_type, r.ts_us))(
+      (r, _, prev, next) => prev.filter(_.version != next.version)
+        .map(p => Scd2Row(r.user_id, p.event_type, p.from_us, next.from_us, p.version)))
   }
 
   /** The file-stream source requires a DIRECTORY (basePath); the test
@@ -1027,16 +969,14 @@ object Streaming {
 
     // ----------------------------- streaming EWMA (live forecasting)
     // ev_ewma's recurrence running against the stream: per-user state
-    // is (count, s) — two longs per user however long the stream runs.
+    // is (rn, level, residual) — three longs per user however long it runs.
     // The drained Append output under AvailableNow equals the batch
     // fold row for row, which is what the oracle (the same RECURSIVE
     // CTE as ev_ewma) recomputes.
     graft.QueryDef(
       "st_ewma",
       (spark, dir) => {
-        val src = eventsStream(spark, dir)
-          .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
-            "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v")
+        val src = eventPoints(eventsStream(spark, dir))
         drain(ewmaStream(spark, src),
           "user_id BIGINT, event_id BIGINT, rn BIGINT, v_micros BIGINT, ewma_micros BIGINT")
       },
@@ -1052,9 +992,7 @@ object Streaming {
     graft.QueryDef(
       "st_holt",
       (spark, dir) => {
-        val src = eventsStream(spark, dir)
-          .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
-            "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v")
+        val src = eventPoints(eventsStream(spark, dir))
         drain(holtStream(spark, src),
           "user_id BIGINT, event_id BIGINT, rn BIGINT, v_micros BIGINT, " +
             "level_micros BIGINT, trend_micros BIGINT, forecast_micros BIGINT")
@@ -1066,8 +1004,8 @@ object Streaming {
     // ev_cusum's sequential audit running against the stream: the
     // per-user reference mean comes from a STREAM-STATIC join (the
     // offline profile side of a monitoring deployment), the S⁺/S⁻
-    // carries live in three longs of state per user, and the shared
-    // cusumStep keeps the twins bit-equal — the drained Append output
+    // carries live in the state store, and the shared cusumNext step
+    // keeps the twins bit-equal — the drained Append output
     // is row-for-row the batch fold, which the shared recursive-CTE
     // oracle replays independently.
     graft.QueryDef(
@@ -1075,13 +1013,10 @@ object Streaming {
       (spark, dir) => {
         import spark.implicits._
         val mu = graft.Tables.events(spark, dir)
-          .selectExpr("user_id",
-            "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v")
+          .selectExpr("user_id", s"${graft.operators.Events.ValueMicros} AS v")
           .groupBy("user_id")
           .agg(expr("sum(v) div count(v) AS mu"))
-        val src = eventsStream(spark, dir)
-          .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
-            "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v")
+        val src = eventPoints(eventsStream(spark, dir))
           .join(mu, "user_id")
           .selectExpr("user_id", "event_id", "ts_us", "v", "mu")
           .as[CusumPoint]
@@ -1151,7 +1086,7 @@ object Streaming {
 
     // ------------------ streaming anomaly residuals (live alerting)
     // ev_anomaly's sequential half running against the stream: the
-    // cross-batch (count, s) state emits one-step-ahead forecast
+    // cross-batch (rn, level, residual) state emits one-step-ahead forecast
     // residuals live; the drained residual log then folds through the
     // SAME per-user robust scale + integer-exact 2|r| > 3·(2·median)
     // flag the batch query applies — the bounded non-sequential part,
@@ -1160,17 +1095,9 @@ object Streaming {
     graft.QueryDef(
       "st_anomaly",
       (spark, dir) => {
-        val src = eventsStream(spark, dir)
-          .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us",
-            "cast(cast(value AS decimal(18,6)) * 1000000 AS bigint) AS v")
-        val ew = drain(ewmaResidStream(spark, src),
-          "user_id BIGINT, event_id BIGINT, rn BIGINT, v_micros BIGINT, resid_micros BIGINT")
-          .where("rn >= 2")
-        val scale = ew.groupBy("user_id")
-          .agg(expr("cast(round(2 * percentile(abs(resid_micros), 0.5), 0) AS bigint) AS m2"))
-        ew.join(scale, "user_id")
-          .where("2 * abs(resid_micros) > 3 * m2")
-          .selectExpr("user_id", "event_id", "rn", "v_micros", "resid_micros", "m2")
+        val src = eventPoints(eventsStream(spark, dir))
+        anomalyFlags(drain(ewmaResidStream(spark, src),
+          "user_id BIGINT, event_id BIGINT, rn BIGINT, v_micros BIGINT, resid_micros BIGINT"))
       },
       Some(graft.operators.Events.anomalyOracleSql),
       bench = false),

@@ -3,8 +3,8 @@ package graft
 /** The Spark jobs a warm run of each budgeted query starts, held under a
   * committed ceiling: a job-count regression fails here instead of
   * hiding in timing noise. The queries are the perfbench catalog mix,
-  * the PageRank family and the queries that pin a table, at sf0.001 on
-  * the shared test session, plus a warm `Qa.answerWithSources`; each
+  * the PageRank family, the queries that pin a table and the per-key
+  * recurrence folds, at sf0.001 on the shared test session, plus a warm `Qa.answerWithSources`; each
   * query runs once to warm up (memos, schemas), then once counted, both
   * through a noop write as the benchmark runs them, with its result memo
   * reset before each run. A change that cuts a query's jobs lowers its
@@ -33,7 +33,13 @@ class JobBudgetSpec extends SparkSpec {
     "dd_minhash_lsh" -> 1,
     "dd_cluster" -> 13,
     "ml_kmeans" -> 9,
-    "v10_mmr" -> 3)
+    "v10_mmr" -> 3,
+    // the per-key recurrence folds (one batch driver)
+    "ev_ewma" -> 2,
+    "ev_holt" -> 2,
+    "ev_holt_winters" -> 3,
+    "ev_anomaly" -> 4,
+    "ev_cusum" -> 2)
 
   private def noop(d: QueryDef): Unit = {
     d.resetMemo.foreach(_(spark, sf))

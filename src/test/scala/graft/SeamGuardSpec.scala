@@ -11,8 +11,9 @@ import scala.util.Using
   * `Streaming.scala`, chunking's constants stay in `Chunker.scala`, the
   * PDF fixtures serialize only through their one writer, the vector
   * store is renamed into place and its token written and read only by
-  * `ChunkStore`'s commit and token reader, and every materialization
-  * (fence or pin) goes through `CheckpointOps`.
+  * `ChunkStore`'s commit and token reader, every materialization
+  * (fence or pin) goes through `CheckpointOps`, and the EWMA/Holt
+  * smoothing arithmetic is written once, in the per-key recurrence steps.
   */
 class SeamGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -96,5 +97,13 @@ class SeamGuardSpec extends AnyFunSuite {
     for (needle <- Seq(".persist(", ".unpersist(", "StorageLevel"))
       assert(filesWith(needle) == Set("CheckpointOps.scala"), needle)
     assert(filesWith("cacheManager").isEmpty)
+  }
+
+  test("the smoothing constants live only in the recurrence steps; one in-function batch sort") {
+    val smoothing = sources.flatMap(p => hits(p, "700L *") ++ hits(p, "800L *"))
+    assert(smoothing.map { case (at, owner) => at.takeWhile(_ != ':') -> owner }.sorted ==
+      List("Events.scala" -> "holtStep", "Events.scala" -> "smooth"), smoothing)
+    val sorts = hits(root.resolve("graft/streaming/Streaming.scala"), "Arrays.sort(buf")
+    assert(sorts.map(_._2) == List("sortedBatch"), sorts)
   }
 }

@@ -270,6 +270,73 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("holtStream: level and trend carry across batches") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // one user, a falling series split 3/3: batch 2 must continue from
+    // batch 1's (l, b), and the negative trend exercises truncation
+    val pts = Seq(4000000L, 3500001L, 3000003L, 2400007L, 1900011L, 1200013L)
+      .zipWithIndex.map { case (v, i) => (8L, 150L + i, 1000L * i, v) }
+    val input = MemoryStream[(Long, Long, Long, Long)]
+    val scored = Streaming.holtStream(
+      spark, input.toDF().toDF("user_id", "event_id", "ts_us", "v"))
+    val q = scored.writeStream.format("memory").queryName("holt_stream")
+      .outputMode("append").start()
+    try {
+      val (b1, b2) = pts.splitAt(3)
+      input.addData(b1); q.processAllAvailable()
+      input.addData(b2); q.processAllAvailable()
+      val got = spark.table("holt_stream").collect()
+        .map(r => r.getAs[Long]("event_id") ->
+          (r.getAs[Long]("rn"), r.getAs[Long]("level_micros"), r.getAs[Long]("trend_micros")))
+        .toMap
+      // sequential reference fold over the full ordered series
+      var l = 0L; var b = 0L
+      val want = pts.zipWithIndex.map { case ((_, eid, _, v), i) =>
+        if (i == 0) { l = v; b = 0L }
+        else {
+          val lNew = (300L * v + 700L * (l + b)) / 1000L
+          b = (200L * (lNew - l) + 800L * b) / 1000L
+          l = lNew
+        }
+        eid -> (i + 1L, l, b)
+      }.toMap
+      assert(got == want, s"streamed Holt diverged: got $got want $want")
+      assert(want.values.exists(_._3 < 0L), "the series must drive the trend negative")
+    } finally q.stop()
+  }
+
+  test("ewmaResidStream: the residual state carries across batches") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // one user split 2/4: batch 2's first residual is against batch 1's
+    // last level, not a restarted 0
+    val pts = Seq(1000000L, 2000000L, 500000L, 3000000L, 250000L, 4000000L)
+      .zipWithIndex.map { case (v, i) => (6L, 400L + i, 1000L * i, v) }
+    val input = MemoryStream[(Long, Long, Long, Long)]
+    val resid = Streaming.ewmaResidStream(
+      spark, input.toDF().toDF("user_id", "event_id", "ts_us", "v"))
+    val q = resid.writeStream.format("memory").queryName("ewma_resid_stream")
+      .outputMode("append").start()
+    try {
+      val (b1, b2) = pts.splitAt(2)
+      input.addData(b1); q.processAllAvailable()
+      input.addData(b2); q.processAllAvailable()
+      val got = spark.table("ewma_resid_stream").collect()
+        .map(r => r.getAs[Long]("event_id") -> (r.getAs[Long]("rn"), r.getAs[Long]("resid_micros")))
+        .toMap
+      var s = 0L
+      val want = pts.zipWithIndex.map { case ((_, eid, _, v), i) =>
+        val r = if (i == 0) 0L else v - s
+        s = if (i == 0) v else (300L * v + 700L * s) / 1000L
+        eid -> (i + 1L, r)
+      }.toMap
+      assert(got == want, s"streamed residuals diverged: got $got want $want")
+    } finally q.stop()
+  }
+
   test("cusumStream: S+/S- carry across batches and reset after an alarm") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
