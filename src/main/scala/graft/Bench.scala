@@ -33,6 +33,16 @@ object Bench {
       spark.stop()
       return
     }
+    // SPARK_GRAFT_ONLY=q1,q2: one subset filter for the main, stream
+    // and sink lanes, for local profiling and A/B runs. A lane writes
+    // bench/<name>_<sf>.json, a subset run bench/only_<name>_<sf>.json,
+    // never over the lane's artifact. Unset (the driver's invocation)
+    // benches every query of the lane.
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    def lane(metric: String, member: QueryDef => Boolean, passes: Int, name: String): Unit =
+      timeLane(spark, sfDir, metric,
+        Registry.all.filter(d => member(d) && only.forall(_.contains(d.name))), passes,
+        if (only.isDefined) s"bench/only_$name" else s"bench/$name")
     // SPARK_GRAFT_STREAM_BENCH=1: the timed lane for the stateful
     // streaming twins. They are bench=false in the main lane (an
     // AvailableNow drain measures trigger/checkpoint overhead, not
@@ -41,9 +51,12 @@ object Bench {
     // flatMapGroupsWithState funnel would land invisibly. This lane
     // times the drains separately into bench/stream_<sf>.json, which
     // tools/bench_diff.py gates round-over-round exactly like the main
-    // artifact.
+    // artifact. Membership is the registry's streamBench flag, NOT a
+    // name list: a newly registered twin is timed by construction (a
+    // hardcoded 9-name list once left st_holt and 10 other state-store
+    // paths without any timed row).
     sys.env.get("SPARK_GRAFT_STREAM_BENCH").foreach { _ =>
-      streamBench(spark, sfDir)
+      lane("stream_total", _.streamBench, 3, "stream")
       spark.stop()
       return
     }
@@ -58,7 +71,7 @@ object Bench {
     // separately into bench/sink_<sf>.json, gated round-over-round by
     // tools/bench_diff.py like the other artifacts.
     sys.env.get("SPARK_GRAFT_SINK_BENCH").foreach { _ =>
-      sinkBench(spark, sfDir)
+      lane("sink_total", _.sinkBench, 3, "sink")
       spark.stop()
       return
     }
@@ -74,11 +87,6 @@ object Bench {
       spark.stop()
       return
     }
-    // optional comma-separated subset filter for local profiling runs;
-    // unset (the driver's invocation) benches every registered query
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val benched = Registry.all.filter(_.bench)
-      .filter(d => only.forall(_.contains(d.name)))
     // SPARK_GRAFT_PASSES: probe lanes only (e.g. the sf3 core-scaling
     // grid, where 3 passes × 2 core counts would cost hours for a
     // RATIO measurement). Unset — every driver invocation — keeps the
@@ -90,8 +98,7 @@ object Bench {
     // explicitly — so neither a subset probe nor a routine per-round
     // (load-contaminated) run can overwrite the idle baseline and dirty
     // the tree (the recurring r13/r14 hygiene item)
-    timeLane(spark, sfDir, "total", benched, passes,
-      if (only.isDefined) "bench/only" else "bench/last")
+    lane("total", _.bench, passes, "last")
     spark.stop()
   }
 
@@ -119,34 +126,6 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench/bpe_depth_$sfName.json"))
     Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
     java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
-  }
-
-  /** The stateful streaming twins (state stores: dropDuplicates,
-    * flatMapGroupsWithState machines, mapGroupsWithState EWMA, the
-    * native session_window, the sharded Misra-Gries heavy-hitter
-    * sketch) timed as full AvailableNow drains —
-    * stage + checkpoint + drain + readback, min of 3 interleaved
-    * passes after the two-step warmup: the main lane's [[timeLane]].
-    */
-  private def streamBench(spark: SparkSession, sfDir: String): Unit = {
-    // membership is the registry's streamBench flag, NOT a name list:
-    // a newly registered twin is timed by construction (the r13 gap —
-    // a hardcoded 9-name list silently left st_holt and 10 other
-    // state-store paths without any timed row)
-    timeLane(spark, sfDir, "stream_total", Registry.all.filter(_.streamBench), 3,
-      "bench/stream")
-  }
-
-  /** The side-effecting sink/source round trips (registry sinkBench
-    * flag: PdfText fixture pipeline, CSV/ORC/JSONL round trips, zorder
-    * rewrite + banded scans, small-file compaction, store lifecycle,
-    * layout segmentation) timed as full write-then-read-back runs —
-    * min of 3 interleaved passes after the two-step warmup: the main
-    * lane's [[timeLane]].
-    */
-  private def sinkBench(spark: SparkSession, sfDir: String): Unit = {
-    timeLane(spark, sfDir, "sink_total", Registry.all.filter(_.sinkBench), 3,
-      "bench/sink")
   }
 
   /** Runs `d` on `dir` into a noop sink: forces FULL evaluation of every

@@ -26,8 +26,8 @@ import org.apache.spark.sql.Column
   * `array<double>`, the store's declared embedding type
   * ([[sources.ChunkStore.storeSchema]]); an embedder that does not
   * resolve, or has another type, raises naming it. The search kernel
-  * then scores the committed snapshot's vectors against it
-  * ([[sources.SearchKernel]]).
+  * then scores the committed snapshot's vectors against it on the
+  * driver, with no Spark job ([[sources.SearchKernel]]).
   */
 trait Embedder extends Serializable {
   /** text column → array<double> vector column. */

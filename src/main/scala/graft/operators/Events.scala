@@ -259,16 +259,16 @@ object Events {
     * flags when 2|r| > 3·m2, m2 being twice the user's median absolute
     * residual. 2·median of integers is itself an integer (a+b of the
     * middle pair), so no float boundary can flip a row cross-engine.
+    * The median is a window over each user's rows, so `resid` is read
+    * once: a memory-sink table, which a self-join cannot deduplicate,
+    * is a valid input.
     */
-  private[graft] def anomalyFlags(resid: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val ew = resid.where("rn >= 2")
-    val scale = ew.groupBy("user_id")
-      .agg(org.apache.spark.sql.functions.expr(
-        "cast(round(2 * percentile(abs(resid_micros), 0.5), 0) AS bigint) AS m2"))
-    ew.join(scale, "user_id")
+  private[graft] def anomalyFlags(resid: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    resid.where("rn >= 2")
+      .selectExpr("user_id", "event_id", "rn", "v_micros", "resid_micros",
+        "cast(round(2 * percentile(abs(resid_micros), 0.5) OVER (PARTITION BY user_id), 0) " +
+          "AS bigint) AS m2")
       .where("2 * abs(resid_micros) > 3 * m2")
-      .selectExpr("user_id", "event_id", "rn", "v_micros", "resid_micros", "m2")
-  }
 
   /** The hourly per-series bucket table shared by ev_seasonal and
     * ev_acf (series key = event_type, values = integer-micros bucket
@@ -1420,8 +1420,8 @@ object Events {
     // another's threshold ([[anomalyFlags]], shared with st_anomaly).
     // Scale shape: ev_ewma's fold (the same [[ewmaStep]] state carries
     // the residual) emits residuals; the per-user median is a
-    // user-bounded percentile aggregate joined back on the fold's own
-    // user_id key; only the flagged tail leaves the executor.
+    // percentile window partitioned on the fold's own user_id key;
+    // only the flagged tail leaves the executor.
     QueryDef(
       "ev_anomaly",
       (spark, dir) => {

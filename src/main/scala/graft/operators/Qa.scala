@@ -164,8 +164,9 @@ object Qa {
 
   /** Q4 — the reference's whole query lifecycle over a graft vector
     * store: kNN retrieval (after the store's `_COMMIT` token is read and
-    * its embedder checked, one job of the search kernel over the
-    * committed snapshot, see [[graft.sources.ChunkStore.search]]), Q1
+    * its embedder checked, the search kernel scores the committed
+    * snapshot on the calling thread: no Spark job once the version is
+    * collected, see [[graft.sources.ChunkStore.search]]), Q1
     * context, Q2 prompt, Q3 answer (stub by default, any generator
     * pluggable), assembled response.
     */

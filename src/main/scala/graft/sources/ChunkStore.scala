@@ -3,7 +3,6 @@ package graft.sources
 import graft.{Fns, QueryDef, SessionMemo, Tables}
 import graft.operators.Chunker
 import org.apache.hadoop.fs.Path
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointOps
@@ -119,20 +118,21 @@ object ChunkStore {
   }
 
   /** A committed store version as searches read it: its version id and
-    * its rows as one [[SearchKernel.Part]] per store partition.
+    * its rows as one [[SearchKernel.Part]] per store partition, held in
+    * driver heap.
     */
-  private final case class Snapshot(version: String, parts: RDD[SearchKernel.Part])
+  private final case class Snapshot(version: String, parts: Array[SearchKernel.Part])
 
   /** Per (session, store path): the committed version answers are
-    * served from. Its parts are pinned, filled by the first search's own
-    * job and recomputable from the committed files.
-    * [[search]] swaps in a new snapshot when the token names a new
-    * version; the superseded one's blocks are released.
+    * served from, collected by the first search of that version (one
+    * job; a failed collect leaves no snapshot, and the next search
+    * collects again). [[search]] swaps in a new snapshot when the token
+    * names a new version; the superseded one is left to the GC.
     */
   private val snapshots = new SessionMemo[Snapshot](
     (spark, storePath) => Snapshot(readCommit(spark, storePath).map(_.version).orNull,
       SearchKernel.parts(readStore(spark, storePath))),
-    s => CheckpointOps.release(s.parts))
+    _ => ())
 
   /** Per (session, embedder class name): the embedder's query-side
     * expression, bound once. The class name is the embedder's identity
@@ -259,15 +259,14 @@ object ChunkStore {
     * none (no committed store at `storePath`) or if it names another
     * embedder than `embedder`. When the token names a version other than
     * the snapshot held for this (session, path), the new version's rows
-    * are read into the snapshot (inside this search's own job) and the
-    * old snapshot's blocks are released. The query vector is computed
-    * on the driver by the embedder's bound expression; then one job over
-    * the snapshot's parts ([[SearchKernel.top]]) scores and ranks, with
-    * no query plan, no file listing, no parquet decode and no shuffle. A
-    * search racing a commit may fail; it never mixes rows of two
-    * versions. Output shape = the reference's search result
-    * (`src/vector_store.py:167-175`): text, all-string metadata,
-    * similarity ∈ [-1, 1] (may be negative).
+    * are collected to the driver (one job) and replace the old snapshot.
+    * The query vector is computed on the driver by the embedder's bound
+    * expression; then [[SearchKernel.top]] scores and ranks the
+    * snapshot's parts on the calling thread, with no Spark job, no query
+    * plan, no file listing and no parquet decode. A search racing a
+    * commit may fail; it never mixes rows of two versions. Output
+    * shape = the reference's search result (`src/vector_store.py:167-175`):
+    * text, all-string metadata, similarity ∈ [-1, 1] (may be negative).
     */
   def search(spark: SparkSession, storePath: String, query: String, topK: Int = 5,
              embedder: graft.Embedder = graft.HashedTokenEmbedder): Seq[Row] = {

@@ -1,31 +1,30 @@
 package graft.sources
 
 import graft.plans.CosineSim
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, GenericRowWithSchema, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graft.CheckpointOps
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 import scala.jdk.CollectionConverters._
 
-/** Top-k cosine search as partition-local code over primitive arrays:
+/** Top-k cosine search as code over primitive arrays on the driver:
   * the one kernel behind [[ChunkStore.search]].
   *
-  * A committed store version is held as one [[SearchKernel.Part]] per
-  * store partition: the rows' embeddings in one flat `Array[Double]`,
-  * and their `(id, text, metadata)` as compact `UnsafeRow` copies. A
-  * search is one job and no query plan: each partition scores every
-  * row with [[CosineSim.fold]] and keeps its best k in a bounded heap;
-  * the driver merges the partitions' winners and decodes only the k it
-  * keeps. The order is that of `ORDER BY similarity DESC, id`: Spark's
-  * double order, descending (NaN first), a null similarity last, ties
-  * by id in UTF-8 binary order (a null id first).
+  * A committed store version is collected to the driver once, as one
+  * [[SearchKernel.Part]] per store partition: the rows' embeddings in
+  * one flat `Array[Double]`, and their `(id, text, metadata)` as compact
+  * `UnsafeRow` copies. A search then runs no job and no query plan: on
+  * the calling thread, each part scores every row with
+  * [[CosineSim.fold]] and keeps its best k in a bounded heap; the parts'
+  * winners are merged and only the k kept are decoded. The order is
+  * that of `ORDER BY similarity DESC, id`: Spark's double order,
+  * descending (NaN first), a null similarity last, ties by id in UTF-8
+  * binary order (a null id first).
   */
 private[graft] object SearchKernel {
 
@@ -52,9 +51,8 @@ private[graft] object SearchKernel {
         HitOrder.reverse)
       for (i <- payload.indices) {
         val hit =
-          if (q == null || noVec(i)) Hit(0L, isNull = true, payload(i))
-          else Hit(java.lang.Double.doubleToRawLongBits(
-            CosineSim.fold(vecs, off(i), q, 0, math.min(off(i + 1) - off(i), q.length))),
+          if (q == null || noVec(i)) Hit(0.0, isNull = true, payload(i))
+          else Hit(CosineSim.fold(vecs, off(i), q, 0, math.min(off(i + 1) - off(i), q.length)),
             isNull = false, payload(i))
         if (heap.size < k) heap.add(hit)
         else if (k > 0 && HitOrder.lt(hit, heap.peek)) { heap.poll(); heap.add(hit) }
@@ -63,13 +61,8 @@ private[graft] object SearchKernel {
     }
   }
 
-  /** A partition's candidate: its similarity (`isNull`: none) and row.
-    * The similarity travels as its raw bits: serializing a double
-    * canonicalizes a NaN's bits, which the SQL search kept.
-    */
-  final case class Hit(simBits: Long, isNull: Boolean, row: UnsafeRow) {
-    def sim: Double = java.lang.Double.longBitsToDouble(simBits)
-  }
+  /** A partition's candidate: its similarity (`isNull`: none) and row. */
+  final case class Hit(sim: Double, isNull: Boolean, row: UnsafeRow)
 
   /** Higher similarity first in Spark's double order, a null last; ties
     * by id in UTF-8 binary order, a null first.
@@ -88,11 +81,10 @@ private[graft] object SearchKernel {
   }
 
   /** The store rows `store` (read by [[ChunkStore.storeSchema]]) as one
-    * [[Part]] per partition, pinned (`CheckpointOps.pin`: persisted by
-    * the first job that reads them); a lost block is recomputed from the
-    * files.
+    * [[Part]] per partition, collected to the driver by one job; parts
+    * larger than `spark.driver.maxResultSize` fail it with Spark's error.
     */
-  def parts(store: DataFrame): RDD[Part] = CheckpointOps.pin(
+  def parts(store: DataFrame): Array[Part] =
     store.queryExecution.toRdd.mapPartitions { rows =>
       val project = UnsafeProjection.create(Payload.fields.map(_.dataType))
       val payload = ArrayBuffer.empty[UnsafeRow]
@@ -113,14 +105,15 @@ private[graft] object SearchKernel {
         off += end
       }
       Iterator(new Part(payload.toArray, off.result(), vecs.result(), noVec.result()))
-    })
+    }.collect()
 
   /** The best `k` rows of `parts` for the query vector `q` (null: every
-    * similarity is null), best first, as [[Result]] rows: one job.
+    * similarity is null), best first, as [[Result]] rows, scored on the
+    * calling thread: no job.
     */
-  def top(parts: RDD[Part], q: Array[Double], k: Int): Seq[Row] = {
+  def top(parts: Array[Part], q: Array[Double], k: Int): Seq[Row] = {
     require(k >= 0, s"top-k needs k >= 0, got $k")
-    val hits = parts.mapPartitions(_.flatMap(_.top(q, k))).collect().sorted(HitOrder).take(k)
+    val hits = parts.flatMap(_.top(q, k)).sorted(HitOrder).take(k)
     val decode = CatalystTypeConverters.createToScalaConverter(Payload)
     hits.toSeq.map { h =>
       val fields = decode(h.row).asInstanceOf[Row].toSeq :+ (if (h.isNull) null else h.sim)

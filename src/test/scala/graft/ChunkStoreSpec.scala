@@ -202,11 +202,12 @@ class ChunkStoreSpec extends SparkSpec {
       .limit(topK)
   }
 
-  test("V3/V4: similaritySearch(...).collect() runs exactly one Spark job") {
+  test("V3/V4: a warm similaritySearch(...).collect() runs no Spark job") {
     val store = tmp() + "/store"
     ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "page_number", "text"))
+    ChunkStore.similaritySearch(spark, store, "alpha", topK = 3)
     assert(jobsRunBy(ChunkStore.similaritySearch(spark, store, "beta chunk text", topK = 3)
-      .collect(): Unit) == 1)
+      .collect(): Unit) == 0)
   }
 
   test("V3/V4: folded-query search is bit-identical to the broadcast cross-join search") {
@@ -278,6 +279,19 @@ class ChunkStoreSpec extends SparkSpec {
     assert(files >= 3, s"$files store files")
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
+    // the snapshot is collected from one task per store partition
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet(); ()
+      }
+    }
+    assert(jobsRunBy {
+      sc.addSparkListener(l)
+      try ChunkStore.search(spark, store, "beta", embedder = NullingEmbedder)
+      finally sc.removeSparkListener(l)
+    } == 1)
+    assert(tasks.get >= 3, s"the snapshot was collected by ${tasks.get} tasks")
     val questions = Seq("beta chunk text", "alpha chunk text", "no vector", "zero vector",
       "delta query", "gamma chunk text")
     for (q <- questions; k <- Seq(0, 1, 3, 5, 100)) {
@@ -288,9 +302,7 @@ class ChunkStoreSpec extends SparkSpec {
       if (k > 0 && !Set("no vector", "gamma chunk text", "zero vector")(q))
         assert(got.head._2 == "zero vector", s"NaN does not rank first for '$q'")
     }
-    val snapshot = sc.getPersistentRDDs.keySet -- before
-    assert(snapshot.size == 1 && sc.getPersistentRDDs(snapshot.head).getNumPartitions >= 3,
-      snapshot.map(sc.getPersistentRDDs(_).getNumPartitions))
+    assert(sc.getPersistentRDDs.keySet == before, "a search persisted an RDD")
     ChunkStore.reset(spark, store, ChunkStore.storeSchema)
     for (k <- Seq(1, 5)) {
       val got = bits(ChunkStore.similaritySearch(spark, store, "beta", topK = k, embedder = NullingEmbedder))
@@ -325,6 +337,27 @@ class ChunkStoreSpec extends SparkSpec {
     TurningEmbedder.mode = "double"
     assert(hits(store, "alpha", TurningEmbedder) == Set("alpha chunk text", "beta chunk text",
       "gamma chunk text", "delta chunk text"))
+  }
+
+  test("Q4: concurrent answers over one store equal the sequential ones and run no job warm") {
+    val store = tmp() + "/store"
+    ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "page_number", "text"))
+    val questions = Seq("alpha chunk text", "beta", "gamma chunk", "delta chunk text", "text",
+      "nothing in common", "chunk")
+    def ask(i: Int) = operators.Qa.answerWithSources(spark, store, questions(i % questions.size),
+      topK = 1 + i % 4)
+    val want = (0 until 200).map(ask)
+    val got = new java.util.concurrent.ConcurrentHashMap[Int, operators.Qa.Response]
+    val jobs = jobsRunBy {
+      val threads = (0 until 4).map { t =>
+        new Thread(() => (t * 50 until (t + 1) * 50).foreach(i => got.put(i, ask(i))))
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+    }
+    assert(got.size == 200, s"${200 - got.size} answers missing")
+    assert((0 until 200).map(got.get) == want)
+    assert(jobs == 0, s"warm concurrent answers ran $jobs jobs")
   }
 
   test("V3/V4: searching a missing store path throws, not an empty answer") {
@@ -434,24 +467,42 @@ class ChunkStoreSpec extends SparkSpec {
     assert(hits(store, "zeta words") == Set("epsilon words here", "zeta words there"))
   }
 
-  test("V3: a superseded snapshot's blocks leave getPersistentRDDs once the new version is searched") {
+  test("V3: no search persists an RDD; after reset and add it serves only the new rows") {
     import spark.implicits._
     val sc = spark.sparkContext
     val store = tmp() + "/store"
     ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text"))
-    val beforeFirst = sc.getPersistentRDDs.keySet
-    hits(store, "alpha")
-    val pinned = sc.getPersistentRDDs.keySet -- beforeFirst
-    assert(pinned.size == 1, "the first search pins one snapshot")
+    val persisted = () => sc.getPersistentRDDs.keySet.toSet
+    val before = persisted()
+    assert(hits(store, "alpha") == sampleChunks().select("text").as[String].collect().toSet)
+    assert(persisted() == before, "the first search persisted an RDD")
     hits(store, "beta")
-    assert(sc.getPersistentRDDs.keySet -- beforeFirst == pinned, "the same version is re-pinned")
+    assert(persisted() == before, "a warm search persisted an RDD")
     ChunkStore.reset(spark, store, ChunkStore.storeSchema)
     ChunkStore.addDocuments(spark, Seq(("eta", "d.pdf")).toDF("text", "source"), store, Seq("source"))
-    val beforeSecond = sc.getPersistentRDDs.keySet
+    val reset = persisted()
     assert(hits(store, "eta") == Set("eta"))
-    val now = sc.getPersistentRDDs.keySet
-    assert(!now.contains(pinned.head), "the superseded snapshot is still persisted")
-    assert((now -- beforeSecond).size == 1)
+    assert(persisted() == reset, "the new version's search persisted an RDD")
+  }
+
+  test("V3: a snapshot build that fails raises, persists nothing, and the rebuilt store answers") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val store = tmp() + "/store"
+    ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text"))
+    val part = new java.io.File(store).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    java.nio.file.Files.write(part.toPath, "this is not a parquet file".getBytes("UTF-8"))
+    val before = sc.getPersistentRDDs.keySet.toSet
+    for (_ <- 1 to 2) {
+      intercept[Exception](hits(store, "alpha"))
+      assert(sc.getPersistentRDDs.keySet == before, "a failed snapshot build left an RDD persisted")
+    }
+    ChunkStore.reset(spark, store, ChunkStore.storeSchema)
+    val other = Seq(("epsilon words here", "c.pdf"), ("zeta words there", "c.pdf")).toDF("text", "source")
+    assert(ChunkStore.addDocuments(spark, other, store, Seq("source", "text")))
+    assert(hits(store, "zeta words") == Set("epsilon words here", "zeta words there"))
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 
   test("S5/S6: a commit whose final rename fails puts the prior store back, byte-identical") {

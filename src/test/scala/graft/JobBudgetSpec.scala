@@ -4,12 +4,13 @@ package graft
   * committed ceiling: a job-count regression fails here instead of
   * hiding in timing noise. The queries are the perfbench catalog mix,
   * the PageRank family, the queries that pin a table and the per-key
-  * recurrence folds, at sf0.001 on the shared test session, plus a warm `Qa.answerWithSources`; each
-  * query runs once to warm up (memos, schemas), then once counted, both
-  * through a noop write as the benchmark runs them, with its result memo
-  * reset before each run. A change that cuts a query's jobs lowers its
-  * ceiling in the same diff. After each run, no RDD the PageRank kernel
-  * built holds storage blocks.
+  * recurrence folds, at sf0.001 on the shared test session, plus a
+  * warm `Qa.answerWithSources` (no job: it scores the driver-resident
+  * snapshot); each query runs once to warm up (memos, schemas), then
+  * once counted, both through a noop write as the benchmark runs them,
+  * with its result memo reset before each run. A change that cuts a
+  * query's jobs lowers its ceiling in the same diff. After each run, no
+  * RDD the PageRank kernel built holds storage blocks.
   */
 class JobBudgetSpec extends SparkSpec {
 
@@ -56,7 +57,7 @@ class JobBudgetSpec extends SparkSpec {
     assert(kernel.isEmpty, kernel.mkString("; "))
   }
 
-  test("Qa.answerWithSources runs at most 1 job warm") {
+  test("Qa.answerWithSources runs no job warm") {
     import spark.implicits._
     val store = SparkSpec.tmpDir("graft_store").toString + "/store"
     sources.ChunkStore.addDocuments(spark,
@@ -64,6 +65,6 @@ class JobBudgetSpec extends SparkSpec {
       store, Seq("source", "text"))
     operators.Qa.answerWithSources(spark, store, "alpha")
     val jobs = jobsRunBy(operators.Qa.answerWithSources(spark, store, "beta chunk"): Unit)
-    assert(jobs <= 1, s"answerWithSources ran $jobs jobs; its ceiling is 1")
+    assert(jobs == 0, s"answerWithSources ran $jobs jobs; its ceiling is 0")
   }
 }

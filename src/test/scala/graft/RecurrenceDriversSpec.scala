@@ -127,10 +127,7 @@ class RecurrenceDriversSpec extends SparkSpec {
       .writeStream.format("memory").queryName("recur_resid").outputMode("append").start()
     try {
       pointBatches.foreach { b => input.addData(b); q.processAllAvailable() }
-      val sink = spark.table("recur_resid")
-      // a local copy: the flag self-joins its input, which a memory
-      // sink's plan cannot be deduplicated for
-      val resid = spark.createDataFrame(java.util.Arrays.asList(sink.collect(): _*), sink.schema)
+      val resid = spark.table("recur_resid")
       assert(sorted(resid.collect()) == want)
       val flags = sorted(Events.anomalyFlags(resid).collect())
       assert(flags.nonEmpty, "the crafted jump must flag")
