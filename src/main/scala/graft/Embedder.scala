@@ -27,7 +27,10 @@ import org.apache.spark.sql.Column
   * ([[sources.ChunkStore.storeSchema]]); an embedder that does not
   * resolve, or has another type, raises naming it. The search kernel
   * then scores the committed snapshot's vectors against it on the
-  * driver, with no Spark job ([[sources.SearchKernel]]).
+  * driver, with no Spark job ([[sources.SearchKernel]]): only the query
+  * vector's non-zero dimensions are read, so a sparse embedding (the
+  * hashed tokens of a short question touch a few of 64 buckets) costs
+  * a fraction of a dense one, with the same similarities to the bit.
   */
 trait Embedder extends Serializable {
   /** text column → array<double> vector column. */

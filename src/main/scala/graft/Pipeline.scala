@@ -66,7 +66,10 @@ object Pipeline {
     val indexed = ChunkStore.addDocuments(spark, reloaded, storeDir,
       orderCols = Seq("source", "page_number", "text"))
 
-    val count = ChunkStore.readStore(spark, storeDir).count()
+    // the commit recorded its row count; a store committed before
+    // tokens carried one is counted
+    val count = ChunkStore.committedRows(spark, storeDir)
+      .getOrElse(ChunkStore.readStore(spark, storeDir).count())
     Result(extractedNow, indexed, count)
   }
 }

@@ -133,8 +133,11 @@ object CosineSim {
   /** The cosine of `x(xOff until xOff + n)` and `y(yOff until yOff + n)`:
     * dot and both squared norms accumulated left to right in double,
     * then `xy / (sqrt(xx) * sqrt(yy))`. The interpreted [[CosineSim]]
-    * and the vector store's search kernel both call it; the generated
-    * code writes the same loop.
+    * calls it and the generated code writes the same loop. The vector
+    * store's search kernel ([[graft.sources.SearchKernel]]) calls it for
+    * a row it holds row-major, or a query of another length than its
+    * rows; otherwise it computes the same bits column-wise, from norms
+    * precomputed by this sum of squares.
     */
   def fold(x: Array[Double], xOff: Int, y: Array[Double], yOff: Int, n: Int): Double = {
     var xy = 0.0; var xx = 0.0; var yy = 0.0

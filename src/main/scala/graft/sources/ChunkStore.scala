@@ -50,10 +50,11 @@ object ChunkStore {
     spark.read.schema(storeSchema).parquet(storePath)
 
   /** A committed store version's token: a `version` id fresh per
-    * commit and the `embedder` class its rows were embedded with (the
-    * token also records the `embedding` type, for readers of the files).
+    * commit, the `embedder` class its rows were embedded with and, for a
+    * store committed with its count, its number of `rows` (the token
+    * also records the `embedding` type, for readers of the files).
     */
-  private final case class Commit(version: String, embedder: String)
+  private final case class Commit(version: String, embedder: String, rows: Option[Long])
 
   private def embedderName(e: graft.Embedder): String = e.getClass.getName.stripSuffix("$")
 
@@ -61,23 +62,30 @@ object ChunkStore {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The `_COMMIT` token of the store at `storePath`, or None when the
-    * path holds no committed store. One small file read.
+    * path holds no committed store. One file open, no existence check.
     */
   private def readCommit(spark: SparkSession, storePath: String): Option[Commit] = {
     val token = new Path(storePath, "_COMMIT")
-    val fs = fsOf(spark, token)
-    if (!fs.exists(token)) None
-    else {
-      val in = fs.open(token)
+    val opened = try Some(fsOf(spark, token).open(token))
+    catch { case _: java.io.FileNotFoundException => None }
+    opened.map { in =>
       val kv = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
         .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
       finally in.close()
-      Some(Commit(kv("version"), kv("embedder")))
+      Commit(kv("version"), kv("embedder"), kv.get("rows").map(_.toLong))
     }
   }
 
+  /** The number of rows the `_COMMIT` token of the store at `storePath`
+    * records, read without a Spark job; None for a path with no token,
+    * or a token written before commits recorded it.
+    */
+  def committedRows(spark: SparkSession, storePath: String): Option[Long] =
+    readCommit(spark, storePath).flatMap(_.rows)
+
   /** Commit one store version: `write` fills a hidden sibling staging
-    * directory, the `_COMMIT` token is written last, then whatever
+    * directory and returns how many rows it wrote, the `_COMMIT` token
+    * (which records that count) is written last, then whatever
     * store `storePath` held (empty, or the version a reset drops) is
     * renamed aside, one rename puts the staging directory in its place,
     * and the set-aside store is deleted. A failed write or rename
@@ -87,7 +95,7 @@ object ChunkStore {
     * behind; nothing sweeps them.
     */
   private def commit(spark: SparkSession, storePath: String, embedder: String,
-                     embedding: String)(write: String => Unit): Unit = {
+                     embedding: String)(write: String => Long): Unit = {
     val target = new Path(storePath)
     val fs = fsOf(spark, target)
     val version = java.util.UUID.randomUUID().toString
@@ -96,9 +104,9 @@ object ChunkStore {
     val move = (from: Path, to: Path) =>
       if (!fs.rename(from, to)) throw new java.io.IOException(s"could not rename $from to $to")
     try {
-      write(staging.toString)
+      val rows = write(staging.toString)
       val out = fs.create(new Path(staging, "_COMMIT"), false)
-      try out.write(s"version=$version\nembedder=$embedder\nembedding=$embedding\n"
+      try out.write(s"version=$version\nembedder=$embedder\nembedding=$embedding\nrows=$rows\n"
         .getBytes("UTF-8"))
       finally out.close()
       val had = fs.exists(target)
@@ -227,7 +235,7 @@ object ChunkStore {
     } else {
       val metaCols = chunks.columns.filterNot(_ == "text").toSeq
       commit(spark, storePath, embedderName(embedder), embType.catalogString) { dir =>
-        val (withIds, sorted) = positionalIds(chunks, orderCols)
+        val (withIds, sorted, rows) = positionalIds(chunks, orderCols)
         // the one write is the last read of the sorted rows: free them
         // now, not when a GC finds the frame unreachable (Spark can keep
         // a finished plan reachable for the rest of the session)
@@ -244,6 +252,7 @@ object ChunkStore {
             embedder.embed(col("text")).as("embedding"))
           .write.parquet(dir)
         finally CheckpointOps.release(sorted)
+        rows
       }
       true
     }
@@ -251,8 +260,8 @@ object ChunkStore {
 
   /** V3/V4 — top-k cosine similarity search over a vector store written
     * by [[addDocuments]]: embed the query text with the SAME embedder
-    * the store used, score every row of the committed snapshot with the
-    * cosine fold, keep the top k — best first, as rows of
+    * the store used, score every row of the committed snapshot by its
+    * cosine, keep the top k — best first, as rows of
     * [[SearchKernel.Result]].
     *
     * It first reads the store's `_COMMIT` token and raises if there is
@@ -300,8 +309,10 @@ object ChunkStore {
   def withPositionalIds(chunks: DataFrame, orderCols: Seq[String]): DataFrame =
     positionalIds(chunks, orderCols)._1
 
-  /** [[withPositionalIds]] and the pinned sorted rows it reads. */
-  private def positionalIds(chunks: DataFrame, orderCols: Seq[String]): (DataFrame, DataFrame) = {
+  /** [[withPositionalIds]], the pinned sorted rows it reads and their
+    * count.
+    */
+  private def positionalIds(chunks: DataFrame, orderCols: Seq[String]): (DataFrame, DataFrame, Long) = {
     val spark = chunks.sparkSession
     // pinned before the two passes below (sizes, then id assignment):
     // recomputing the sort per pass could order orderCols-ties
@@ -325,7 +336,7 @@ object ChunkStore {
         Row.fromSeq(row.toSeq :+ s"chunk_${base + i}")
       }
     }
-    (spark.createDataFrame(rdd, schema), sorted)
+    (spark.createDataFrame(rdd, schema), sorted, offsets.last)
   }
 
   /** S6 — reset: drop + recreate, committed as a new, empty store
@@ -338,6 +349,7 @@ object ChunkStore {
       readCommit(spark, storePath).fold(embedderName(graft.HashedTokenEmbedder))(_.embedder)
     commit(spark, storePath, embedder, storeSchema("embedding").dataType.catalogString) { dir =>
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema).write.parquet(dir)
+      0L
     }
   }
 

@@ -6,11 +6,12 @@ package graft
   * the PageRank family, the queries that pin a table and the per-key
   * recurrence folds, at sf0.001 on the shared test session, plus a
   * warm `Qa.answerWithSources` (no job: it scores the driver-resident
-  * snapshot); each query runs once to warm up (memos, schemas), then
-  * once counted, both through a noop write as the benchmark runs them,
-  * with its result memo reset before each run. A change that cuts a
-  * query's jobs lowers its ceiling in the same diff. After each run, no
-  * RDD the PageRank kernel built holds storage blocks.
+  * snapshot) and a forced knowledge-base rebuild; each query runs once
+  * to warm up (memos, schemas), then once counted, both through a noop
+  * write as the benchmark runs them, with its result memo reset before
+  * each run. A change that cuts a query's jobs lowers its ceiling in the
+  * same diff. After each run, no RDD the PageRank kernel built holds
+  * storage blocks.
   */
 class JobBudgetSpec extends SparkSpec {
 
@@ -55,6 +56,15 @@ class JobBudgetSpec extends SparkSpec {
     // the PageRank kernel releases its CSR and block states
     val kernel = spark.sparkContext.getRDDStorageInfo.filter(_.callSite.contains("RankKernel"))
     assert(kernel.isEmpty, kernel.mkString("; "))
+  }
+
+  test("a forced Pipeline.setupKnowledgeBase rebuild runs at most 5 jobs") {
+    // the chunk count comes from the store's _COMMIT token, not a count job
+    val work = SparkSpec.tmpDir("graft_kb").toString
+    val docs = Tables.documents(spark, sf)
+    Pipeline.setupKnowledgeBase(spark, docs, work, forceRebuild = true)
+    val jobs = jobsRunBy(Pipeline.setupKnowledgeBase(spark, docs, work, forceRebuild = true): Unit)
+    assert(jobs <= 5, s"a forced rebuild ran $jobs jobs; its ceiling is 5")
   }
 
   test("Qa.answerWithSources runs no job warm") {

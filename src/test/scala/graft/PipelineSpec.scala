@@ -36,6 +36,23 @@ class PipelineSpec extends SparkSpec {
     assert(rebuilt.chunkCount == 4)
   }
 
+  test("the chunk count is the one the store's _COMMIT token records; a token without it is counted") {
+    val work = SparkSpec.tmpDir("graft_pipe")
+    Pipeline.setupKnowledgeBase(spark, docs(), work.toString)
+    val token = work.resolve("vector_store/_COMMIT")
+    val lines = Files.readAllLines(token).toArray.map(_.toString).toSeq
+    assert(lines.contains("rows=4"), lines)
+    assert(sources.ChunkStore.committedRows(spark, s"$work/vector_store").contains(4L))
+    // a token written before commits recorded the count (and its stale
+    // checksum file gone)
+    Files.delete(work.resolve("vector_store/._COMMIT.crc"))
+    Files.write(token, lines.filterNot(_.startsWith("rows=")).mkString("", "\n", "\n").getBytes("UTF-8"))
+    assert(sources.ChunkStore.committedRows(spark, s"$work/vector_store").isEmpty)
+    assert(Pipeline.setupKnowledgeBase(spark, docs(), work.toString).chunkCount == 4)
+    sources.ChunkStore.reset(spark, s"$work/vector_store", sources.ChunkStore.storeSchema)
+    assert(sources.ChunkStore.committedRows(spark, s"$work/vector_store").contains(0L))
+  }
+
   test("store rows carry positional ids and NO chunk_number (P4/S4 quirk)") {
     val work = SparkSpec.tmpDir("graft_pipe").toString
     Pipeline.setupKnowledgeBase(spark, docs(), work)
